@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): times every SparkEntry query on
-  * $SPARK_GRAFT_SF_DIR and prints ONE JSON line.
+  * $SPARK_GRAFT_SF_DIR; stdout ends with ONE `"metric":"total"` JSON line.
   *
   * Forcing: `.write.format("noop")` executes the FULL plan including every
   * projected column — a bare `.count()` would let Catalyst prune the
@@ -14,26 +12,18 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.expressions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+    val spark = Tables.session("graft-bench", cpus)
     // extra confs for experiments (e.g. the AQE skew-join pass in
-    // SCALING.md): SPARK_GRAFT_CONF="k=v;k=v". Driver never sets it.
+    // SCALING.md): SPARK_GRAFT_CONF="k=v;k=v", runtime SQL confs only.
+    // Unset for the full-suite run of record.
     sys.env.get("SPARK_GRAFT_CONF").toSeq
       .flatMap(_.split(';')).map(_.trim).filter(_.contains('='))
       .foreach { kv =>
         // trim around '=' too: "k = v" must set k, not the silent no-op
         // key "k " (Spark stores unknown keys verbatim)
         val Array(k, v) = kv.split("=", 2).map(_.trim)
-        if (k.nonEmpty) builder.config(k, v)
+        if (k.nonEmpty) spark.conf.set(k, v)
       }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
 
     def force(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
@@ -102,22 +92,16 @@ object Bench {
     // capture and truncated the first (alphabetically: q01) entry
     def r3(v: Double): String =
       if (v < 0) "-1" else (math.round(v * 1000) / 1000.0).toString
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + r3(v) }
-      .mkString("{", ",", "}")
+    val entries = results.map { case (k, v) => "\"" + k + "\":" + r3(v) }
     val failed = results.count(_._2 < 0)
     val total = results.map(_._2).filter(_ >= 0).sum
+    // The full line is ~9 KB at 285 queries and a log collector may keep
+    // only a ~2 KB stdout TAIL, so it goes to a file (for
+    // tools/bench_oracle.py), not to stdout. Subset runs
+    // (SPARK_GRAFT_ONLY) must not clobber the full-suite artifact of
+    // record — they land in BENCH_SUBSET.json instead.
     val fullLine =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","failed":$failed,"overhead_s":${r3(overhead)},"queries":$qs,"sf":"$sfDir"}"""
-    println(fullLine)
-    // The full line above is ~8 KB at 240 queries and the round driver
-    // captures only a ~2 KB stdout TAIL — every BENCH_r*.json through r10
-    // shipped "parsed": null because the line was cut mid-JSON. So:
-    // (a) persist the full line to a file for tools/bench_oracle.py, and
-    // (b) end stdout with a COMPACT summary line (aggregates only — no
-    // per-query keys, so bench_oracle's `"qNN":sec` scan can't double-
-    // match) that fits whole inside any sane tail window.
-    // subset runs (SPARK_GRAFT_ONLY) must not clobber the full-suite
-    // artifact of record — they land in BENCH_SUBSET.json instead
+      s"""{"metric":"total","value":${r3(total)},"unit":"sec","failed":$failed,"overhead_s":${r3(overhead)},"queries":${entries.mkString("{", ",", "}")},"sf":"$sfDir"}"""
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       if (only.isDefined) "BENCH_SUBSET.json" else "BENCH_FULL.json")
     try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
@@ -125,14 +109,9 @@ object Bench {
     catch { case e: Throwable =>
       System.err.println(s"[bench] could not write $outPath: ${e.getMessage}")
     }
-    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","failed":$failed,"overhead_s":${r3(overhead)},"n_queries":${results.size},"queries_file":"$outPath","sf":"$sfDir"}""")
-    // r16 verdict item 2: the driver keeps only a small stdout TAIL, so the
-    // ~8 KB full line above never parses ("parsed": null since ~r10). Emit
-    // the per-query map AGAIN as the FINAL stdout lines in <= 2 KB chunks —
-    // each line a complete JSON object — so any tail window ends with whole
-    // objects a parser can use. Additions-only: the contract line and the
-    // compact summary above are unchanged.
-    val entries = results.map { case (k, v) => "\"" + k + "\":" + r3(v) }
+    // stdout: the per-query map in <= 2 KB chunks — each line a complete
+    // JSON object, so any tail window holds whole objects — then exactly
+    // one compact "total" record as the LAST line.
     val chunks = scala.collection.mutable.ArrayBuffer(
       scala.collection.mutable.ArrayBuffer[String]())
     var len = 0

@@ -1,13 +1,12 @@
 package graft
 
-import java.nio.file.{Files, Paths}
-
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.connect.{BasicAuthTokenProvider, ConnectionConfig, Dmp,
   FileTransfer, JavaNetTransport, SignatureAuthTokenProvider, Transport}
 import graft.etl.Stages
-import graft.ledger.{BucketedLedger, Ledger, LedgerStore, MongoLedger}
+import graft.ledger.{Ledger, LedgerStore, MongoLedger}
 import graft.sources.LookupCsv
 
 /** The runnable pipeline — what an Airflow `SparkSubmitOperator` schedules
@@ -22,9 +21,12 @@ import graft.sources.LookupCsv
   *   runMain graft.EtlJob --ledger <dir> --incoming <parquet>
   *     [--incoming <parquet> ...]
   *     --uid-serial <csv> --serial-id <csv> --assignments <parquet>
-  *     --workdir <dir> [--stage <task-id>] [--cutoff 12:00:00]
-  *     [--today 2024-02-15] [--limit N] [--upload-limit N]
-  *     [--ledger-bucket-width k] [--simulate-transfer]
+  *     --workdir <dir> --drm-base <url> --drm-jwt-url <url>
+  *     --dmp-url <url> --dmp-jwt-url <url> --dmp-dataset <id>
+  *     [--drm-user <login>] [--dmp-user <login>] [--stage <task-id>]
+  *     [--cutoff 12:00:00] [--today 2024-02-15] [--limit N]
+  *     [--upload-limit N] [--ledger-bucket-width k]
+  *     [--ledger-format parquet|mongodb [--mongo-uri <uri>] [--mongo-db <db>]]
   *
   * `--incoming` schema: manufacturer_ref, device_type, start, end, meta
   * (the S1 fetch output — see connect.PaginatedRestSource / the DSv2
@@ -34,16 +36,13 @@ import graft.sources.LookupCsv
   * into a single pipeline; here the per-site frames are unioned by name
   * before ingest, and the hash anti-join dedups ACROSS sites as well as
   * against the ledger.
-  * Transfer modes for task 6 (extract-prep-load):
-  *  - `--simulate-transfer`: local file writes standing in for the network
-  *    (this container has no egress);
-  *  - live: pass `--workdir` plus `--drm-base`, `--drm-jwt-url`,
-  *    `--drm-user`, `--drm-pass`, `--dmp-url`, `--dmp-jwt-url`,
-  *    `--dmp-user`, `--dmp-pass`, `--dmp-dataset` — downloads run through
-  *    `FileTransfer.chunkedFetch` (not-ready detection included) and
-  *    uploads through `Dmp.upload` (GraphQL multipart + signature auth),
-  *    i.e. the reference's DreemHook.download_file / DmpHook.upload
-  *    behaviors end-to-end. `transport` is injectable for testing.
+  * Task 6 (extract-prep-load) transfers through the live connectors:
+  * downloads run through `FileTransfer.chunkedFetch` (not-ready detection
+  * included) and uploads through `Dmp.upload` (GraphQL multipart +
+  * signature auth), i.e. the reference's DreemHook.download_file /
+  * DmpHook.upload behaviors end-to-end. The stage fails fast, naming the
+  * flags, when an endpoint or `--workdir` is missing. `transport` is
+  * injectable for testing.
   */
 object EtlJob {
 
@@ -168,45 +167,39 @@ object EtlJob {
   }
 
   /** One DAG task (see `stageNames`). Tasks 2-5 are single
-    * read→transform→merge steps and are inlined here; tasks 1 and 6 have
-    * their own methods below.
+    * read→transform→merge steps (`enrich`); tasks 1 and 6 have their own
+    * methods below.
     */
   def runStage(spark: org.apache.spark.sql.SparkSession, stage: String,
                opts: Map[String, String],
-               transport: Transport = new JavaNetTransport()): Seq[(String, Long)] =
+               transport: Transport = new JavaNetTransport()): Seq[(String, Long)] = {
+    // advance the ledger one resolution step, merge the new `field` values
+    // in (existing values win), report how many rows now carry one
+    def enrich(field: String, reportKey: String)(
+        advance: DataFrame => DataFrame): Seq[(String, Long)] = {
+      val ledger = openLedger(spark, opts)
+      ledger.mergeNoOverride(advance(ledger.read()).select("hash", field),
+        Seq(field))
+      Seq(reportKey -> ledger.read().filter(col(field).isNotNull).count())
+    }
     stage match {
       case "download_metadata" =>
         stageDownloadMetadata(spark, openLedger(spark, opts), opts)
       case "resolve_device_serials" => // task 2 (J2)
-        val ledger = openLedger(spark, opts)
         val uidSerial = LookupCsv.read(spark, opts("uid-serial"), "uid", "serial")
-        ledger.mergeNoOverride(Stages.resolveSerials(ledger.read(), uidSerial)
-          .select("hash", "device_serial"), Seq("device_serial"))
-        Seq("with_serial" ->
-          ledger.read().filter(col("device_serial").isNotNull).count())
+        enrich("device_serial", "with_serial")(Stages.resolveSerials(_, uidSerial))
       case "resolve_device_ids" => // task 3 (J3)
-        val ledger = openLedger(spark, opts)
         val serialToId =
           LookupCsv.read(spark, opts("serial-id"), "serial", "device_id")
-        ledger.mergeNoOverride(Stages.resolveDeviceIds(ledger.read(), serialToId)
-          .select("hash", "device_id"), Seq("device_id"))
-        Seq("with_device" ->
-          ledger.read().filter(col("device_id").isNotNull).count())
+        enrich("device_id", "with_device")(Stages.resolveDeviceIds(_, serialToId))
       case "resolve_patient_ids" => // task 4 (J4)
-        val ledger = openLedger(spark, opts)
         val today = opts.getOrElse("today", java.time.LocalDate.now().toString)
         val assignments = spark.read.parquet(opts("assignments"))
-        ledger.mergeNoOverride(
-          Stages.resolvePatients(ledger.read(), assignments, today)
-            .select("hash", "patient_id"), Seq("patient_id"))
-        Seq("with_patient" ->
-          ledger.read().filter(col("patient_id").isNotNull).count())
+        enrich("patient_id", "with_patient")(
+          Stages.resolvePatients(_, assignments, today))
       case "group_records" => // task 5 (A1, unlimited by design)
-        val ledger = openLedger(spark, opts)
         val cutOff = opts.getOrElse("cutoff", "12:00:00")
-        ledger.mergeNoOverride(Stages.groupRecords(ledger.read(), cutOff)
-          .select("hash", "dmp_id"), Seq("dmp_id"))
-        Seq("grouped" -> ledger.read().filter(col("dmp_id").isNotNull).count())
+        enrich("dmp_id", "grouped")(Stages.groupRecords(_, cutOff))
       case "extract_prep_load" =>
         stageExtractPrepLoad(spark, openLedger(spark, opts), opts, transport)
       case "cleanup" =>
@@ -215,14 +208,12 @@ object EtlJob {
         throw new IllegalArgumentException(
           s"unknown stage '$other' — expected one of: ${stageNames.mkString(", ")}")
     }
+  }
 
   // --ledger-format selects the storage strategy:
-  //  - "parquet" (default): hash-prefix-partitioned Parquet — the offline
-  //    default; --ledger-bucket-width picks 16^k buckets (k=3 → 4096 at
-  //    100 TB). Fixed per table — Ledger fail-fasts on a mismatch.
-  //  - "bucketed": catalog-bucketed table (--ledger names the table,
-  //    --ledger-buckets the bucket count) — merge joins run exchange-free
-  //    on the ledger side (BucketedLedger).
+  //  - "parquet" (default): hash-prefix-partitioned Parquet;
+  //    --ledger-bucket-width picks 16^k buckets (k=3 → 4096 at 100 TB).
+  //    Fixed per table — Ledger fail-fasts on a mismatch.
   //  - "mongodb": the reference's actual store (--ledger is the
   //    collection; --mongo-uri/--mongo-db configure the connection; needs
   //    the Mongo Spark connector jar on the classpath).
@@ -232,16 +223,13 @@ object EtlJob {
       case "parquet" =>
         new Ledger(spark, opts("ledger"),
           opts.getOrElse("ledger-bucket-width", "1").toInt)
-      case "bucketed" =>
-        new BucketedLedger(spark, opts("ledger"),
-          opts.getOrElse("ledger-buckets", "32").toInt)
       case "mongodb" =>
         new MongoLedger(spark,
           opts.getOrElse("mongo-uri", "mongodb://localhost:27017"),
           opts.getOrElse("mongo-db", "ideafast_etl"), opts("ledger"))
       case other =>
         throw new IllegalArgumentException(
-          s"unknown --ledger-format '$other' (parquet | bucketed | mongodb)")
+          s"unknown --ledger-format '$other' (parquet | mongodb)")
     }
 
   /** Task 1 — download_metadata: ingest-dedup + append (J1+L1+S7).
@@ -279,6 +267,12 @@ object EtlJob {
   private def stageExtractPrepLoad(spark: org.apache.spark.sql.SparkSession,
                                    ledger: LedgerStore, opts: Map[String, String],
                                    transport: Transport): Seq[(String, Long)] = {
+    // the DRM and DMP endpoints and the per-group download/zip scratch
+    // space: without them no group can move, so stop before any work
+    val missing = Seq("workdir", "drm-base", "drm-jwt-url", "dmp-url",
+      "dmp-jwt-url", "dmp-dataset").filterNot(opts.contains)
+    require(missing.isEmpty, "extract_prep_load needs " +
+      missing.map("--" + _).mkString(", ") + " to download and upload groups")
     // --upload-limit: per-run cap on transferred groups (the reference
     // slices its group list to 1 per run, dags/dreem.py:283-287). Defaulted
     // rather than optional so the driver-side collect of uploaded ids below
@@ -288,57 +282,32 @@ object EtlJob {
     val manifest = Stages.uploadManifest(ledger.read())
     val nGroups = manifest.count()
     val batch = manifest.orderBy(col("dmp_id")).limit(uploadLimit)
-    val transferFns: Option[((String, java.nio.file.Path) => Boolean,
-                             (String, java.nio.file.Path) => Boolean)] =
-      if (opts.contains("simulate-transfer")) {
-        val work = opts("workdir")
-        Some((
-          (ref: String, path: java.nio.file.Path) => {
-            Files.write(path, ref.getBytes); true
-          },
-          (dmpId: String, zip: java.nio.file.Path) => {
-            val landed = Paths.get(work, "landed")
-            Files.createDirectories(landed)
-            Files.copy(zip, landed.resolve(s"$dmpId.zip"))
-            true
-          }))
-      } else if (opts.contains("drm-base")) {
-        require(opts.contains("workdir"),
-          "live transfer needs --workdir (per-group download/zip scratch space)")
-        Some(liveTransfer(opts, transport))
-      } else None
-    val uploaded = transferFns.fold(0L) { case (fetch, push) =>
-      val results = FileTransfer.executePlan(spark, batch,
-        opts("workdir"), fetch, push)
-      // Materialize ONCE: the transfer dataset has side effects (each
-      // execution re-downloads/re-uploads), and markUploaded rewrites the
-      // very ledger files the manifest plan captured — a later
-      // re-execution would read deleted files. The id list is ≤ uploadLimit
-      // rows by construction (batch above), so driver-side is bounded.
-      import spark.implicits._
-      val okIds = results.filter(col("uploaded"))
-        .select("dmp_id").as[String].collect().toSeq
-      ledger.markUploaded(okIds.toDF("dmp_id"))
-      okIds.size.toLong
-    }
-    Seq("pending_groups" -> nGroups, "uploaded_groups" -> uploaded)
+    val (fetch, push) = liveTransfer(opts, transport)
+    val results = FileTransfer.executePlan(spark, batch,
+      opts("workdir"), fetch, push)
+    // Materialize ONCE: the transfer dataset has side effects (each
+    // execution re-downloads/re-uploads), and markUploaded rewrites the
+    // very ledger files the manifest plan captured — a later
+    // re-execution would read deleted files. The id list is ≤ uploadLimit
+    // rows by construction (batch above), so driver-side is bounded.
+    import spark.implicits._
+    val okIds = results.filter(col("uploaded"))
+      .select("dmp_id").as[String].collect().toSeq
+    ledger.markUploaded(okIds.toDF("dmp_id"))
+    Seq("pending_groups" -> nGroups, "uploaded_groups" -> okIds.size.toLong)
   }
 
   /** Task 7 — cleanup: the always-run finalizer (trigger rule ALL_DONE,
     * dags/dreem.py:293-295). A healthy extract run already removes its
     * per-group scratch (FileTransfer.executePlan's finally); this sweeps
-    * whatever a CRASHED run left under --workdir. `landed/` is the
-    * simulate-mode DMP stand-in — an external sink, not scratch — and is
-    * preserved (the reference's upload target is the remote DMP, outside
-    * its download folder entirely).
+    * whatever a CRASHED run left under --workdir.
     */
   private def stageCleanup(opts: Map[String, String]): Seq[(String, Long)] = {
     val removed = opts.get("workdir").fold(0L) { w =>
       val entries =
         Option(new java.io.File(w).listFiles()).getOrElse(Array.empty)
-      entries.filterNot(_.getName == "landed").map { f =>
-        FileTransfer.rmTree(f.toPath); 1L
-      }.sum
+      entries.foreach(f => FileTransfer.rmTree(f.toPath))
+      entries.length.toLong
     }
     Seq("cleaned_entries" -> removed)
   }
@@ -350,15 +319,12 @@ object EtlJob {
       val k = it.next()
       require(k.startsWith("--"), s"unexpected argument: $k")
       val key = k.stripPrefix("--")
-      if (key == "simulate-transfer") m(key) = "true"
-      else {
-        require(it.hasNext, s"--$key requires a value")
-        val v = it.next()
-        // --incoming repeats (one per site); NUL-joined so any legal path
-        // round-trips. Other flags keep last-wins semantics.
-        if (key == "incoming" && m.contains(key)) m(key) = m(key) + "\u0000" + v
-        else m(key) = v
-      }
+      require(it.hasNext, s"--$key requires a value")
+      val v = it.next()
+      // --incoming repeats (one per site); NUL-joined so any legal path
+      // round-trips. Other flags keep last-wins semantics.
+      if (key == "incoming" && m.contains(key)) m(key) = m(key) + "\u0000" + v
+      else m(key) = v
     }
     m.toMap
   }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,16 +11,8 @@ object Verify {
       val prefixes = args(2).split(",").toSeq
       name => prefixes.exists(name.startsWith)
     } else _ => true
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.expressions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.session("graft-verify",
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     TempDirs.sweepStale() // crashed earlier runs leave graft-* litter
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => only(kv._1)).foreach { case (name, fn) =>
@@ -30,8 +21,10 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // the parquet write above fully forced the query, so its scratch
-      // dirs (stage/out/checkpoint) are dead — delete them now, not at exit
+      // the parquet write above fully forced the query, so its cached
+      // relations and scratch dirs (stage/out/checkpoint) are dead — drop
+      // them now, not at exit
+      spark.catalog.clearCache()
       TempDirs.sweep()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

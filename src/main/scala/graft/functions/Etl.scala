@@ -23,10 +23,6 @@ object Etl {
   /** F4 — zero out time-of-day. Ref: ideafast_etl/hooks/ucam.py:190-193. */
   def normaliseDay(c: Column): Column = date_trunc("DAY", c)
 
-  /** F3 — UCAM weartime parse. Ref: ideafast_etl/hooks/ucam.py:58-61. */
-  val WeartimeFormat = "yyyy-MM-dd'T'HH:mm:ss"
-  def parseWeartime(c: Column): Column = to_timestamp(c, WeartimeFormat)
-
   /** F5 — `yyyyMMdd` day-string → epoch millis.
     * Ref: ideafast_etl/hooks/dmp.py:179-182. */
   def weartimeMs(c: Column): Column = unix_millis(to_timestamp(c, "yyyyMMdd"))
@@ -102,11 +98,5 @@ object Etl {
       .map(seg => if (seg.matches("""\[\d+\]""")) seg else seg)
       .reduce((a, b) => if (b.startsWith("[")) a + b else a + "." + b)
     get_json_object(c, jsonPath)
-  }
-
-  /** F12 — time-of-day comparison against an HH:mm:ss literal. */
-  def timeOfDayBefore(ts: Column, cutOff: String): Column = {
-    validateCutOff(cutOff)
-    date_format(ts, "HH:mm:ss") < lit(cutOff)
   }
 }

@@ -12,11 +12,9 @@ import org.apache.spark.sql.DataFrame
   *  - [[markUploaded]]: the one terminal flag flip (db.py:189-196);
   *  - no delete: quarantined in the reference (db.py:127-133), absent here.
   *
-  * Strategies: [[Ledger]] (hash-prefix-partitioned Parquet, the offline
-  * default), [[BucketedLedger]] (catalog-bucketed table — the merge join
-  * runs with NO shuffle on the ledger side), [[MongoLedger]] (the
-  * reference's actual store, usable when the Mongo Spark connector jar is
-  * on the classpath).
+  * Strategies: [[Ledger]] (hash-prefix-partitioned Parquet, the deployed
+  * default) and [[MongoLedger]] (the reference's actual store, usable when
+  * the Mongo Spark connector jar is on the classpath).
   */
 trait LedgerStore {
   def exists: Boolean

@@ -2,7 +2,7 @@ package graft.tools
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
@@ -53,19 +53,13 @@ object StreamBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // 8 state partitions, matching the Pipeline streaming gates: state
-      // partition count is pinned at checkpoint creation, and per-partition
-      // store open/commit I/O dominates bench-scale drains (9.2 s → 2.6 s
-      // on the stream join going 32 → 4). Production sizes this to state
-      // volume.
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Tables.session("graft-streambench", cpus)
+    // 8 state partitions, matching the Pipeline streaming gates: state
+    // partition count is pinned at checkpoint creation, and per-partition
+    // store open/commit I/O dominates bench-scale drains (9.2 s → 2.6 s
+    // on the stream join going 32 → 4). Production sizes this to state
+    // volume.
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
     graft.TempDirs.sweepStale() // litter from crashed earlier runs
 
     val results = scala.collection.mutable.LinkedHashMap.empty[String, Double]

@@ -34,9 +34,8 @@ class DagSpec extends AnyFunSuite {
   test("extract carries the transfer cap AND a live transfer mode") {
     val extract = DreemDag.tasks.find(_.id == "extract_prep_load").get
     assert(extract.extraArgs.containsSlice(Seq("--upload-limit", "1")))
-    // without a transfer mode the deployed stage silently uploads nothing
-    // (EtlJob resolves transferFns = None) — the DAG must wire the live
-    // endpoints (simulate-transfer is the test-only mode)
+    // EtlJob's extract stage fails fast without its endpoints, so the DAG
+    // must wire them
     assert(extract.extraArgs.contains("--drm-base"))
     assert(extract.extraArgs.contains("--dmp-url"))
     assert(extract.extraArgs.contains("--dmp-dataset"))

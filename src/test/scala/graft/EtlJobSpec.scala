@@ -25,18 +25,72 @@ class RecordingTransport(inner: graft.connect.MockTransport)
   }
 }
 
-/** Drives the runnable job end-to-end (the SparkSubmitOperator surface). */
+/** The shared live-transfer fixture: the connector flags EtlJob needs for
+  * task 6, and a scripted transport answering them — DRM and DMP tokens,
+  * record → data_url, CDN payload bytes, GraphQL upload — with every
+  * request recorded in EtlJobSpecLog. Top-level for the same reason as
+  * RecordingTransport.
+  */
+object EtlJobSpecLive {
+  import scala.jdk.CollectionConverters._
+
+  import graft.connect.{HttpRequest, HttpResponse, MockTransport}
+
+  val flags: Map[String, String] = Map(
+    "drm-base" -> "https://drm", "drm-jwt-url" -> "https://drm/token",
+    "dmp-url" -> "https://dmp/graphql", "dmp-jwt-url" -> "https://dmp/token",
+    "dmp-dataset" -> "STUDY1")
+
+  private def jwtTok(exp: Long): String = {
+    val enc = java.util.Base64.getUrlEncoder.withoutPadding()
+    enc.encodeToString("""{"alg":"none"}""".getBytes) + "." +
+      enc.encodeToString(s"""{"exp":$exp}""".getBytes) + ".s"
+  }
+
+  def transport(): RecordingTransport = {
+    val tok = jwtTok(System.currentTimeMillis() / 1000 + 3600)
+    new RecordingTransport(new MockTransport(Seq(
+      { case r if r.url == "https://drm/token" =>
+          HttpResponse(200, body = s"""{"token": "$tok"}""".getBytes) },
+      { case r if r.url == "https://dmp/token" =>
+          HttpResponse(200, body =
+            s"""{"data": {"issueAccessToken": {"accessToken": "$tok"}}}""".getBytes) },
+      { case r if r.url.matches("https://drm/dreem/algorythm/record/[^/]+/h5/") =>
+          val ref = r.url.split("/")(6)
+          HttpResponse(200, body = s"""{"data_url": "https://cdn/$ref"}""".getBytes) },
+      { case r if r.url.startsWith("https://cdn/") =>
+          HttpResponse(200, body = ("payload-" + r.url.split("/").last).getBytes) },
+      { case r if r.url == "https://dmp/graphql" && r.method == "POST" =>
+          HttpResponse(200, body = "{}".getBytes) })))
+  }
+
+  /** The refs whose payload was downloaded since the log was cleared. */
+  def fetchedRefs(): Set[String] =
+    EtlJobSpecLog.log.asScala.map(_.url).filter(_.startsWith("https://cdn/"))
+      .map(_.split("/").last).toSet
+
+  /** The upload POSTs since the log was cleared. */
+  def uploads(): Seq[HttpRequest] = EtlJobSpecLog.log.asScala
+    .filter(r => r.url == "https://dmp/graphql" && r.body.nonEmpty).toSeq
+}
+
+/** Drives the runnable job end-to-end (the SparkSubmitOperator surface).
+  * Task 6 always runs the live connectors, here against EtlJobSpecLive.
+  */
 class EtlJobSpec extends SparkSpec {
   import spark.implicits._
 
+  private def incoming(rows: Seq[(String, String, String)]) = rows
+    .toDF("manufacturer_ref", "uid", "s")
+    .select(col("manufacturer_ref"), lit("DRM").as("device_type"),
+      col("s").cast("timestamp").as("start"),
+      (col("s").cast("timestamp") + expr("INTERVAL 2 HOURS")).as("end"),
+      map(lit("dreem_uid"), col("uid")).as("meta"))
+
   test("EtlJob.run executes the whole chain and reports state counts") {
     val base = Files.createTempDirectory("graft-job").toString
-    Seq(("r1", "U1", "2021-11-10 13:00:00"), ("r2", "U2", "2021-11-10 14:00:00"))
-      .toDF("manufacturer_ref", "uid", "s")
-      .select(col("manufacturer_ref"), lit("DRM").as("device_type"),
-        col("s").cast("timestamp").as("start"),
-        (col("s").cast("timestamp") + expr("INTERVAL 2 HOURS")).as("end"),
-        map(lit("dreem_uid"), col("uid")).as("meta"))
+    incoming(Seq(("r1", "U1", "2021-11-10 13:00:00"),
+      ("r2", "U2", "2021-11-10 14:00:00")))
       .write.parquet(s"$base/incoming")
     Files.write(Paths.get(base, "uid_serial.csv"), "U1,S1\nU2,S2\n".getBytes)
     Files.write(Paths.get(base, "serial_id.csv"), "S1,DEV-1\nS2,DEV-2\n".getBytes)
@@ -53,18 +107,20 @@ class EtlJobSpec extends SparkSpec {
       "uid-serial" -> s"$base/uid_serial.csv",
       "serial-id" -> s"$base/serial_id.csv",
       "assignments" -> s"$base/assignments",
-      "workdir" -> s"$base/work", "today" -> "2021-12-01",
-      "simulate-transfer" -> "true")
-    val summary = EtlJob.run(spark, opts).toMap
+      "workdir" -> s"$base/work", "today" -> "2021-12-01") ++
+      EtlJobSpecLive.flags
+    val transport = EtlJobSpecLive.transport()
+    EtlJobSpecLog.log.clear()
+    val summary = EtlJob.run(spark, opts, transport).toMap
     assert(summary("ingested_new") == 2)
     assert(summary("ledger_rows") == 2)
     assert(summary("with_patient") == 2)
     assert(summary("grouped") == 2)
     assert(summary("uploaded_groups") == 2)
-    assert(Files.exists(Paths.get(s"$base/work/landed")))
+    assert(EtlJobSpecLive.uploads().size == 2) // both groups reached the DMP
 
     // second run: nothing new, nothing re-uploaded
-    val again = EtlJob.run(spark, opts).toMap
+    val again = EtlJob.run(spark, opts, transport).toMap
     assert(again("ingested_new") == 0)
     assert(again("ledger_rows") == 2)
     assert(again("pending_groups") == 0)
@@ -73,12 +129,8 @@ class EtlJobSpec extends SparkSpec {
 
   test("stage-per-submit parity: 7 runStage calls ≡ one run (DAG deployment mode)") {
     val base = Files.createTempDirectory("graft-job-stages").toString
-    Seq(("r1", "U1", "2021-11-10 13:00:00"), ("r2", "U2", "2021-11-10 14:00:00"))
-      .toDF("manufacturer_ref", "uid", "s")
-      .select(col("manufacturer_ref"), lit("DRM").as("device_type"),
-        col("s").cast("timestamp").as("start"),
-        (col("s").cast("timestamp") + expr("INTERVAL 2 HOURS")).as("end"),
-        map(lit("dreem_uid"), col("uid")).as("meta"))
+    incoming(Seq(("r1", "U1", "2021-11-10 13:00:00"),
+      ("r2", "U2", "2021-11-10 14:00:00")))
       .write.parquet(s"$base/incoming")
     Files.write(Paths.get(base, "uid_serial.csv"), "U1,S1\nU2,S2\n".getBytes)
     Files.write(Paths.get(base, "serial_id.csv"), "S1,DEV-1\nS2,DEV-2\n".getBytes)
@@ -94,28 +146,26 @@ class EtlJobSpec extends SparkSpec {
       "uid-serial" -> s"$base/uid_serial.csv",
       "serial-id" -> s"$base/serial_id.csv",
       "assignments" -> s"$base/assignments",
-      "workdir" -> s"$base/work", "today" -> "2021-12-01",
-      "simulate-transfer" -> "true")
+      "workdir" -> s"$base/work", "today" -> "2021-12-01") ++
+      EtlJobSpecLive.flags
 
     // seven separate submissions, state crossing only through the ledger —
     // the dags/graft_dreem.py deployment shape
+    val transport = EtlJobSpecLive.transport()
     val summary = EtlJob.stageNames
-      .flatMap(s => EtlJob.runStage(spark, s, opts)).toMap
+      .flatMap(s => EtlJob.runStage(spark, s, opts, transport)).toMap
     assert(summary("ingested_new") == 2)
     assert(summary("with_serial") == 2)
     assert(summary("with_device") == 2)
     assert(summary("with_patient") == 2)
     assert(summary("grouped") == 2)
     assert(summary("uploaded_groups") == 2)
-    assert(Files.exists(Paths.get(s"$base/work/landed")),
-      "cleanup must preserve the landed (external-sink stand-in) dir")
 
     // a crashed extract's scratch is swept by the cleanup task
     Files.createDirectories(Paths.get(s"$base/work/GROUP-crashed"))
     val cleaned = EtlJob.runStage(spark, "cleanup", opts).toMap
     assert(cleaned("cleaned_entries") == 1)
     assert(!Files.exists(Paths.get(s"$base/work/GROUP-crashed")))
-    assert(Files.exists(Paths.get(s"$base/work/landed")))
 
     // unknown stage fail-fasts with the valid ids listed
     val err = intercept[IllegalArgumentException] {
@@ -127,12 +177,8 @@ class EtlJobSpec extends SparkSpec {
   test("EtlJob.run --upload-limit bounds the per-run transfer batch (reference limit=1)") {
     val base = Files.createTempDirectory("graft-job-lim").toString
     // two distinct devices/days -> two upload groups
-    Seq(("r1", "U1", "2021-11-10 13:00:00"), ("r2", "U2", "2021-11-11 13:00:00"))
-      .toDF("manufacturer_ref", "uid", "s")
-      .select(col("manufacturer_ref"), lit("DRM").as("device_type"),
-        col("s").cast("timestamp").as("start"),
-        (col("s").cast("timestamp") + expr("INTERVAL 2 HOURS")).as("end"),
-        map(lit("dreem_uid"), col("uid")).as("meta"))
+    incoming(Seq(("r1", "U1", "2021-11-10 13:00:00"),
+      ("r2", "U2", "2021-11-11 13:00:00")))
       .write.parquet(s"$base/incoming")
     Files.write(Paths.get(base, "uid_serial.csv"), "U1,S1\nU2,S2\n".getBytes)
     Files.write(Paths.get(base, "serial_id.csv"), "S1,DEV-1\nS2,DEV-2\n".getBytes)
@@ -150,27 +196,22 @@ class EtlJobSpec extends SparkSpec {
       "assignments" -> s"$base/assignments",
       "workdir" -> s"$base/work", "today" -> "2021-12-01",
       "upload-limit" -> "1", // the reference's per-run group cap
-      "ledger-bucket-width" -> "2", // exercise the threaded width too
-      "simulate-transfer" -> "true")
-    val run1 = EtlJob.run(spark, opts).toMap
+      "ledger-bucket-width" -> "2") ++ // exercise the threaded width too
+      EtlJobSpecLive.flags
+    val transport = EtlJobSpecLive.transport()
+    val run1 = EtlJob.run(spark, opts, transport).toMap
     assert(run1("pending_groups") == 2)
     assert(run1("uploaded_groups") == 1) // capped, not 2
     // the un-transferred group drains on the next run (at-least-once)
-    val run2 = EtlJob.run(spark, opts).toMap
+    val run2 = EtlJob.run(spark, opts, transport).toMap
     assert(run2("pending_groups") == 1)
     assert(run2("uploaded_groups") == 1)
-    val run3 = EtlJob.run(spark, opts).toMap
+    val run3 = EtlJob.run(spark, opts, transport).toMap
     assert(run3("pending_groups") == 0 && run3("uploaded_groups") == 0)
   }
 
   test("EtlJob.run multi-site: unions per-site incoming, dedups across sites") {
     val base = Files.createTempDirectory("graft-job-sites").toString
-    def incoming(rows: Seq[(String, String, String)]) = rows
-      .toDF("manufacturer_ref", "uid", "s")
-      .select(col("manufacturer_ref"), lit("DRM").as("device_type"),
-        col("s").cast("timestamp").as("start"),
-        (col("s").cast("timestamp") + expr("INTERVAL 2 HOURS")).as("end"),
-        map(lit("dreem_uid"), col("uid")).as("meta"))
     // r2 appears at BOTH sites — and the sites DISAGREE on start (clock
     // skew): one ledger row, and the survivor must be the deterministic
     // minimum (earliest start), not whichever partition wins a race
@@ -195,9 +236,9 @@ class EtlJobSpec extends SparkSpec {
       "uid-serial" -> s"$base/uid_serial.csv",
       "serial-id" -> s"$base/serial_id.csv",
       "assignments" -> s"$base/assignments",
-      "workdir" -> s"$base/work", "today" -> "2021-12-01",
-      "simulate-transfer" -> "true")
-    val summary = EtlJob.run(spark, opts).toMap
+      "workdir" -> s"$base/work", "today" -> "2021-12-01") ++
+      EtlJobSpecLive.flags
+    val summary = EtlJob.run(spark, opts, EtlJobSpecLive.transport()).toMap
     assert(summary("ingested_new") == 3) // 4 site rows, r2 cross-site deduped
     assert(summary("ledger_rows") == 3)
     assert(summary("with_patient") == 3)
@@ -228,16 +269,10 @@ class EtlJobSpec extends SparkSpec {
       ("r8", "10:00:00"), ("r9", "11:00:00"))) // null-key rows untouched
   }
 
-  test("EtlJob.run live transfer: chunkedFetch + Dmp.upload against scripted endpoints") {
-    import graft.connect.{HttpResponse, MockTransport}
-    val base = Files.createTempDirectory("graft-job-live").toString
-    Seq(("r1", "U1", "2021-11-10 13:00:00"), ("r2", "U1", "2021-11-10 14:00:00"))
-      .toDF("manufacturer_ref", "uid", "s")
-      .select(col("manufacturer_ref"), lit("DRM").as("device_type"),
-        col("s").cast("timestamp").as("start"),
-        (col("s").cast("timestamp") + expr("INTERVAL 2 HOURS")).as("end"),
-        map(lit("dreem_uid"), col("uid")).as("meta"))
-      .write.parquet(s"$base/incoming")
+  /** One device (U1 → S1 → DEV-1, worn by P-A since 2021-11-01): every
+    * record of one day lands in one upload group.
+    */
+  private def oneDeviceOpts(base: String): Map[String, String] = {
     Files.write(Paths.get(base, "uid_serial.csv"), "U1,S1\n".getBytes)
     Files.write(Paths.get(base, "serial_id.csv"), "S1,DEV-1\n".getBytes)
     Seq(("DEV-1", "P-A", "2021-11-01 00:00:00", null: String))
@@ -246,44 +281,27 @@ class EtlJobSpec extends SparkSpec {
         col("sw").cast("timestamp").as("start_wear"),
         col("ew").cast("timestamp").as("end_wear"))
       .write.parquet(s"$base/assignments")
-
-    def jwtTok(exp: Long): String = {
-      val enc = java.util.Base64.getUrlEncoder.withoutPadding()
-      enc.encodeToString("""{"alg":"none"}""".getBytes) + "." +
-        enc.encodeToString(s"""{"exp":$exp}""".getBytes) + ".s"
-    }
-    val tok = jwtTok(System.currentTimeMillis() / 1000 + 3600)
-    val mock = new MockTransport(Seq(
-      { case r if r.url == "https://drm/token" =>
-          HttpResponse(200, body = s"""{"token": "$tok"}""".getBytes) },
-      { case r if r.url == "https://dmp/token" =>
-          HttpResponse(200, body =
-            s"""{"data": {"issueAccessToken": {"accessToken": "$tok"}}}""".getBytes) },
-      { case r if r.url.matches("https://drm/dreem/algorythm/record/r./h5/") =>
-          val ref = r.url.split("/")(5)
-          HttpResponse(200, body = s"""{"data_url": "https://cdn/$ref"}""".getBytes) },
-      { case r if r.url.startsWith("https://cdn/") =>
-          HttpResponse(200, body = ("payload-" + r.url.split("/").last).getBytes) },
-      { case r if r.url == "https://dmp/graphql" && r.method == "POST" =>
-          HttpResponse(200, body = "{}".getBytes) }))
-    val transport = new RecordingTransport(mock)
-
-    val opts = Map(
+    Map(
       "ledger" -> s"$base/ledger", "incoming" -> s"$base/incoming",
       "uid-serial" -> s"$base/uid_serial.csv",
       "serial-id" -> s"$base/serial_id.csv",
       "assignments" -> s"$base/assignments",
-      "workdir" -> s"$base/work", "today" -> "2021-12-01",
-      "drm-base" -> "https://drm", "drm-jwt-url" -> "https://drm/token",
-      "dmp-url" -> "https://dmp/graphql", "dmp-jwt-url" -> "https://dmp/token",
-      "dmp-dataset" -> "STUDY1")
+      "workdir" -> s"$base/work", "today" -> "2021-12-01") ++
+      EtlJobSpecLive.flags
+  }
+
+  test("EtlJob.run live transfer: chunkedFetch + Dmp.upload against scripted endpoints") {
+    val base = Files.createTempDirectory("graft-job-live").toString
+    incoming(Seq(("r1", "U1", "2021-11-10 13:00:00"),
+      ("r2", "U1", "2021-11-10 14:00:00")))
+      .write.parquet(s"$base/incoming")
+    val opts = oneDeviceOpts(base)
+    val transport = EtlJobSpecLive.transport()
     EtlJobSpecLog.log.clear()
     val summary = EtlJob.run(spark, opts, transport).toMap
     assert(summary("uploaded_groups") == 1) // one group (same uid/device/day)
     // the upload POST carried the GraphQL multipart payload with the dataset
-    import scala.jdk.CollectionConverters._
-    val upload = EtlJobSpecLog.log.asScala
-      .find(r => r.url == "https://dmp/graphql" && r.body.nonEmpty)
+    val upload = EtlJobSpecLive.uploads().headOption
     assert(upload.isDefined)
     assert(new String(upload.get.body, "UTF-8").contains(""""studyId":"STUDY1""""))
     // second run: group already uploaded, no further transfer requests
@@ -291,5 +309,64 @@ class EtlJobSpec extends SparkSpec {
     val again = EtlJob.run(spark, opts, transport).toMap
     assert(again("uploaded_groups") == 0)
     assert(EtlJobSpecLog.log.size == posts) // no new fetch/upload traffic
+  }
+
+  test("EtlJob.run: a late record re-opens its uploaded group; the next run re-sends and flags it") {
+    val base = Files.createTempDirectory("graft-job-late").toString
+    val day1 = Seq(("r1", "U1", "2021-11-10 13:00:00"))
+    incoming(day1).write.parquet(s"$base/day1")
+    // the next delivery repeats r1 and brings r2, recorded the same day on
+    // the same device: it joins r1's already-uploaded group
+    incoming(day1 :+ ("r2", "U1", "2021-11-10 15:00:00"))
+      .write.parquet(s"$base/day2")
+    val opts = oneDeviceOpts(base)
+    val transport = EtlJobSpecLive.transport()
+
+    EtlJobSpecLog.log.clear()
+    val run1 = EtlJob.run(spark, opts + ("incoming" -> s"$base/day1"), transport).toMap
+    assert(run1("uploaded_groups") == 1)
+    assert(EtlJobSpecLive.fetchedRefs() == Set("r1"))
+
+    EtlJobSpecLog.log.clear()
+    val run2 = EtlJob.run(spark, opts + ("incoming" -> s"$base/day2"), transport).toMap
+    assert(run2("ingested_new") == 1)
+    assert(run2("pending_groups") == 1) // the partial group is pending again
+    assert(run2("uploaded_groups") == 1)
+    // the whole group is re-sent: both members downloaded, one bundle up
+    assert(EtlJobSpecLive.fetchedRefs() == Set("r1", "r2"))
+    assert(EtlJobSpecLive.uploads().size == 1)
+    val flags = new graft.ledger.Ledger(spark, s"$base/ledger").read()
+      .select("manufacturer_ref", "dmp_id", "is_uploaded")
+      .as[(String, String, Boolean)].collect().sortBy(_._1).toSeq
+    assert(flags.map(_._1) == Seq("r1", "r2"))
+    assert(flags.map(_._2).distinct.size == 1) // one group
+    assert(flags.forall(_._3), s"every member must be flagged: $flags")
+
+    EtlJobSpecLog.log.clear()
+    val run3 = EtlJob.run(spark, opts + ("incoming" -> s"$base/day2"), transport).toMap
+    assert(run3("pending_groups") == 0 && run3("uploaded_groups") == 0)
+    assert(EtlJobSpecLog.log.isEmpty) // nothing left to send
+  }
+
+  test("extract_prep_load without transfer flags fails fast, naming them") {
+    val base = Files.createTempDirectory("graft-job-noflags").toString
+    incoming(Seq(("r1", "U1", "2021-11-10 13:00:00")))
+      .write.parquet(s"$base/incoming")
+    val opts = oneDeviceOpts(base) -- Seq("dmp-url", "dmp-dataset", "workdir")
+    val transport = EtlJobSpecLive.transport()
+    EtlJob.stageNames.takeWhile(_ != "extract_prep_load")
+      .foreach(EtlJob.runStage(spark, _, opts, transport))
+    EtlJobSpecLog.log.clear()
+    val err = intercept[IllegalArgumentException] {
+      EtlJob.runStage(spark, "extract_prep_load", opts, transport)
+    }
+    Seq("--dmp-url", "--dmp-dataset", "--workdir")
+      .foreach(f => assert(err.getMessage.contains(f), err.getMessage))
+    assert(!err.getMessage.contains("--drm-base")) // present flags not named
+    assert(EtlJobSpecLog.log.isEmpty) // failed before any request
+    // nothing was flagged: the group is still pending
+    val pending = new graft.ledger.Ledger(spark, s"$base/ledger").read()
+      .filter(!col("is_uploaded")).count()
+    assert(pending == 1)
   }
 }

@@ -5,16 +5,12 @@ import java.sql.Timestamp
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.ledger.{BucketedLedger, MongoLedger}
+import graft.ledger.MongoLedger
 
-/** The non-default ledger storage strategies:
-  *
-  *  - [[BucketedLedger]] — same contract as LedgerSpec pins for Parquet,
-  *    PLUS the scale property that motivates it: the merge JOIN plans with
-  *    ZERO Exchange operators (both sides bucket-aligned on hash).
-  *  - [[MongoLedger]] — the reference's actual store; the round-trip runs
-  *    only when a live Mongo + connector jar are present
-  *    (`GRAFT_MONGO_URI`), and cancels cleanly offline.
+/** The non-default ledger storage strategy, [[MongoLedger]] — the
+  * reference's actual store: the round-trip runs against a live Mongo +
+  * connector jar when `GRAFT_MONGO_URI` is set, else against an offline
+  * fake with Mongo's keyed-write semantics.
   */
 class LedgerStoreSpec extends SparkSpec {
   import spark.implicits._
@@ -38,58 +34,6 @@ class LedgerStoreSpec extends SparkSpec {
   private def updates(rows: DataFrame): DataFrame =
     rows.select($"hash", $"device_serial", $"device_id", $"patient_id",
       $"dmp_dataset", $"dmp_id")
-
-  test("BucketedLedger: append dedups, merge never overrides, flag flips") {
-    val led = new BucketedLedger(spark, "t_ledger_rt", buckets = 4)
-    try {
-      assert(!led.exists)
-      led.init(df(Seq(rec("a", serial = Some("KEEP")), rec("b"))))
-      assert(led.exists)
-      led.append(df(Seq(rec("b"), rec("c", dmpId = Some("G1")))))
-      assert(led.read().count() == 3)
-
-      led.mergeNoOverride(updates(df(Seq(
-        rec("a", serial = Some("NEW")), rec("b", serial = Some("S-B"))))))
-      def serials() = led.read().select($"manufacturer_ref", $"device_serial")
-        .as[(String, Option[String])].collect().toMap
-      val s1 = serials()
-      assert(s1("a").contains("KEEP")) // existing value wins
-      assert(s1("b").contains("S-B"))  // null advanced
-      assert(s1("c").isEmpty)          // unmatched untouched
-      led.mergeNoOverride(updates(df(Seq( // idempotent
-        rec("a", serial = Some("NEW")), rec("b", serial = Some("S-B"))))))
-      assert(serials() == s1 && led.read().count() == 3)
-
-      led.markUploaded(Seq("G1").toDF("dmp_id"))
-      val up = led.read().select($"manufacturer_ref", $"is_uploaded")
-        .as[(String, Boolean)].collect().toMap
-      assert(up == Map("a" -> false, "b" -> false, "c" -> true))
-    } finally {
-      Seq("t_ledger_rt", "t_ledger_rt__upd", "t_ledger_rt__next")
-        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-    }
-  }
-
-  test("BucketedLedger: the merge join plans with ZERO Exchange") {
-    val led = new BucketedLedger(spark, "t_ledger_plan", buckets = 4)
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      // forbid broadcast so the pin proves BUCKET alignment on both sides,
-      // not broadcast shuffle-avoidance
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      led.init(df((1 to 50).map(i => rec(s"r$i"))))
-      val plan = led.mergePlan(updates(df(Seq(
-          rec("r1", serial = Some("S-1")), rec("r2", serial = Some("S-2"))))))
-        .queryExecution.executedPlan.toString
-      assert(plan.contains("SortMergeJoin"), s"expected SMJ:\n$plan")
-      assert(!plan.contains("Exchange"),
-        s"bucketed ledger merge must not shuffle either side:\n$plan")
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-      Seq("t_ledger_plan", "t_ledger_plan__upd", "t_ledger_plan__next")
-        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-    }
-  }
 
   test("MongoLedger round-trip (live store when GRAFT_MONGO_URI, else offline fake)") {
     // Same assertions either way: against a live Mongo + connector when

@@ -251,29 +251,6 @@ class MiscOpsSpec extends SparkSpec {
     assert(leftSalted == leftPlain)
   }
 
-  test("bucketed tables join without a shuffle exchange") {
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ
-    try {
-      val li = Tables.table(spark, "/root/testdata/sf0.001", "lineitem")
-        .select($"l_orderkey", $"l_quantity")
-      val o = Tables.table(spark, "/root/testdata/sf0.001", "orders")
-        .select($"o_orderkey".as("l_orderkey"), $"o_totalprice")
-      graft.ops.Bucketing.writeBucketed(li, "b_lineitem", 4, Seq("l_orderkey"))
-      graft.ops.Bucketing.writeBucketed(o, "b_orders", 4, Seq("l_orderkey"))
-      val joined = graft.ops.Bucketing.colocatedJoin(spark,
-        "b_lineitem", "b_orders", Seq("l_orderkey"))
-      joined.collect()
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange"), s"expected shuffle-free join:\n$plan")
-      assert(joined.count() ==
-        li.join(o, "l_orderkey").count())
-    } finally {
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      spark.sql("DROP TABLE IF EXISTS b_lineitem")
-      spark.sql("DROP TABLE IF EXISTS b_orders")
-    }
-  }
-
   test("Fuzzy.editDistancePairs is complete vs brute force (subs AND indels)") {
     // strings engineered to need every edit kind: substitutions, inserts,
     // deletes, transposition-ish (lev 2), plus length-2 gaps that a naive

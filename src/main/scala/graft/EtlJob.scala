@@ -24,7 +24,7 @@ import graft.sources.LookupCsv
   *     --workdir <dir> --drm-base <url> --drm-jwt-url <url>
   *     --dmp-url <url> --dmp-jwt-url <url> --dmp-dataset <id>
   *     [--drm-user <login>] [--dmp-user <login>] [--stage <task-id>]
-  *     [--cutoff 12:00:00] [--today 2024-02-15] [--limit N]
+  *     [--cutoff 12:00:00] [--today 2024-02-15]
   *     [--upload-limit N] [--ledger-bucket-width k]
   *     [--ledger-format parquet|mongodb [--mongo-uri <uri>] [--mongo-db <db>]]
   *
@@ -74,8 +74,8 @@ object EtlJob {
     * identity the ledger keys on: the hash expression itself (recordHash
     * concats without a separator, a reference quirk, so distinct
     * (device_type, ref) pairs can share a hash — partitioning on the pair
-    * would under-dedup those). The hash is computed ONCE here and reused
-    * by Stages.ingestDedup downstream.
+    * would under-dedup those). The hash computed here is the key the
+    * ledger's append dedups on.
     *
     * Null-key records (recordHash is null-intolerant) BYPASS the dedup:
     * a null hash is not an identity — Window.partitionBy would pool every
@@ -234,30 +234,22 @@ object EtlJob {
 
   /** Task 1 — download_metadata: ingest-dedup + append (J1+L1+S7).
     * Multi-site fan-in: one frame per --incoming source, unioned by name
-    * (same S1 schema per site, init/connections.yaml.example:5-18). The
-    * ledger anti-join only removes ALREADY-SEEN records; duplicates
-    * WITHIN one run's batch are collapsed by dedupBatch (above).
-    */
+    * (same S1 schema per site, init/connections.yaml.example:5-18).
+    * Duplicates WITHIN one run's batch are collapsed by dedupBatch (above);
+    * the ledger's append drops ALREADY-SEEN records, counting the rest. */
   private def stageDownloadMetadata(spark: org.apache.spark.sql.SparkSession,
                                     ledger: LedgerStore,
                                     opts: Map[String, String]): Seq[(String, Long)] = {
-    val limit = opts.get("limit").map(_.toInt)
     val sites = opts("incoming").split('\u0000').toSeq
       .map(spark.read.parquet(_))
-    val incoming = dedupBatch(sites.reduce(_.unionByName(_)))
+    val batch = dedupBatch(sites.reduce(_.unionByName(_)))
       .withColumn("device_serial", lit(null).cast("string"))
       .withColumn("device_id", lit(null).cast("string"))
       .withColumn("patient_id", lit(null).cast("string"))
       .withColumn("dmp_dataset", lit(null).cast("string"))
       .withColumn("dmp_id", lit(null).cast("string"))
       .withColumn("is_uploaded", lit(false))
-    val fresh = Stages.ingestDedup(incoming,
-      if (ledger.exists) ledger.read()
-      else incoming.limit(0).withColumn("hash", lit("")).select("hash"),
-      limit)
-    val nNew = fresh.count()
-    if (!ledger.exists) ledger.init(fresh) else ledger.append(fresh)
-    Seq("ingested_new" -> nNew)
+    Seq("ingested_new" -> ledger.append(batch))
   }
 
   /** Task 6 — extract-prep-load (P6+J5+S2+S8-S10). The transferred batch

@@ -87,10 +87,9 @@ object DreemDag {
     Task("group_records", upstream = Seq("resolve_patient_ids")),
     Task("extract_prep_load", upstream = Seq("group_records"),
       // the transfer cap (reference slices to 1 group/run) plus the LIVE
-      // transfer endpoints — without these the stage resolves no transfer
-      // mode and silently uploads nothing (EtlJob falls back to
-      // transferFns = None). Endpoints/logins come from Airflow's
-      // connection store; the PASSWORDS go through envVars (never
+      // transfer endpoints — without these the stage throws before any
+      // work, naming the missing flags. Endpoints/logins come from
+      // Airflow's connection store; the PASSWORDS go through envVars (never
       // application args — those leak via ps / Spark UI / event logs)
       extraArgs = Seq(
         "--upload-limit", "1",

@@ -30,12 +30,8 @@ object Stages {
     */
   def ingestDedup(incoming: DataFrame, ledger: DataFrame,
                   limit: Option[Int] = None): DataFrame = {
-    // reuse a caller-computed hash (EtlJob.dedupBatch) — one sha256 per
-    // record, not two
-    val hashed =
-      if (incoming.columns.contains("hash")) incoming
-      else incoming.withColumn("hash",
-        Etl.recordHash(col("device_type"), col("manufacturer_ref")))
+    val hashed = incoming.withColumn("hash",
+      Etl.recordHash(col("device_type"), col("manufacturer_ref")))
     val fresh = hashed.join(ledger.select("hash"), Seq("hash"), "left_anti")
     limit.fold(fresh)(fresh.limit)
   }

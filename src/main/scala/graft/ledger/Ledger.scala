@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   *   3. join-rewrites them (coalesce per enrichable column — existing value
   *      wins, so updates can never override, matching
   *      tests/hooks/test_db.py:16-47),
-  *   4. dynamically overwrites just those partitions.
+  *   4. publishes just those partitions ([[rewrite]]).
   *
   * At 100 TB: pick bucketWidth=3 → 4096 buckets of ~25 GB each; a merge
   * touching m buckets rewrites m/4096 of the table, and the join inside a
@@ -30,9 +30,6 @@ final class Ledger(spark: SparkSession, path: String, bucketWidth: Int = 1)
     extends LedgerStore {
   require(bucketWidth >= 1 && bucketWidth <= 4,
     s"bucketWidth must be 1..4 (16..65536 buckets), got $bucketWidth")
-
-  /** 16^bucketWidth. */
-  val numBuckets: Int = 1 << (4 * bucketWidth)
 
   private val enrichable = LedgerStore.enrichable
 
@@ -140,14 +137,16 @@ final class Ledger(spark: SparkSession, path: String, bucketWidth: Int = 1)
     spark.catalog.refreshByPath(path)
   }
 
-  /** S7 — append records whose hash is not yet present (insert-only dedup,
-    * db.py:76-86 + the J1 anti-join).
+  /** S7 — [[LedgerStore.append]] as one hash anti-join (insert-only dedup,
+    * db.py:76-86 + the J1 anti-join); the first append creates the ledger.
     */
-  def append(records: DataFrame): Unit = withWriterLock("append") {
-    val fresh = records.join(read().select("hash"), Seq("hash"), "left_anti") // read() validates width
-    withBucket(fresh).write
-      .partitionBy("bucket").mode(SaveMode.Append).parquet(path)
-    spark.catalog.refreshByPath(path)
+  def append(records: DataFrame): Long = withWriterLock("append") {
+    val fresh = if (!exists) records
+      else records.join(read().select("hash"), Seq("hash"), "left_anti") // read() validates width
+    LedgerStore.countWritten(withBucket(fresh)) { df =>
+      df.write.partitionBy("bucket").mode(SaveMode.Append).parquet(path)
+      spark.catalog.refreshByPath(path)
+    }
   }
 
   /** No-override merge: for rows matched by hash, fill each `fields` column
@@ -155,23 +154,20 @@ final class Ledger(spark: SparkSession, path: String, bucketWidth: Int = 1)
     * read and rewritten.
     */
   def mergeNoOverride(updates: DataFrame,
-                      fields: Seq[String] = enrichable): Unit = withWriterLock("mergeNoOverride") {
-    recoverOrphans()
-    validateWidth()
-    require(fields.forall(enrichable.contains),
-      s"only $enrichable are enrichable; is_uploaded goes via markUploaded")
-    val upd = withBucket(updates
-      .select(col("hash") +: fields.map(f => col(f).as(s"_u_$f")): _*))
-    val buckets = upd.select("bucket").distinct()
-      .collect().map(_.getString(0)) // bounded: ≤16^k bucket ids, not data
-    if (buckets.isEmpty) return
-    val current = spark.read.parquet(path)
-      .filter(col("bucket").isin(buckets.toSeq: _*))
-    val merged = current.join(upd.drop("bucket"), Seq("hash"), "left")
-    val advanced = fields.foldLeft(merged) { (df, f) =>
-      df.withColumn(f, coalesce(col(f), col(s"_u_$f")))
-    }.drop(fields.map(f => s"_u_$f"): _*)
-    writeBuckets(advanced)
+                      fields: Seq[String] = enrichable): Unit = {
+    // lazy: the check runs inside the writer lock, first thing in rewrite
+    lazy val upd = {
+      require(fields.forall(enrichable.contains),
+        s"only $enrichable are enrichable; is_uploaded goes via markUploaded")
+      withBucket(updates
+        .select(col("hash") +: fields.map(f => col(f).as(s"_u_$f")): _*))
+    }
+    rewrite("mergeNoOverride", upd) { current =>
+      val merged = current.join(upd.drop("bucket"), Seq("hash"), "left")
+      fields.foldLeft(merged) { (df, f) =>
+        df.withColumn(f, coalesce(col(f), col(s"_u_$f")))
+      }.drop(fields.map(f => s"_u_$f"): _*)
+    }
   }
 
   /** Terminal flag for whole upload groups (db.py:189-196): set
@@ -182,35 +178,32 @@ final class Ledger(spark: SparkSession, path: String, bucketWidth: Int = 1)
     * the groups, and only those are rewritten — flagging one upload group
     * at 100 TB touches k/|buckets| of the table, not all of it.
     */
-  def markUploaded(dmpIds: DataFrame): Unit = withWriterLock("markUploaded") {
-    recoverOrphans()
-    validateWidth()
+  def markUploaded(dmpIds: DataFrame): Unit = {
     val ids = broadcast(dmpIds.select(col("dmp_id").as("_u_dmp_id")).distinct())
-    val buckets = spark.read.parquet(path)
-      .join(ids, col("dmp_id") === col("_u_dmp_id"), "left_semi")
-      .select("bucket").distinct()
-      .collect().map(_.getString(0)) // bounded: ≤16^k bucket ids, not data
-    if (buckets.isEmpty) return
-    val current = spark.read.parquet(path)
-      .filter(col("bucket").isin(buckets.toSeq: _*))
-    val merged = current
-      .join(ids, col("dmp_id") === col("_u_dmp_id"), "left")
-      .withColumn("is_uploaded",
-        col("is_uploaded") || col("_u_dmp_id").isNotNull)
-      .drop("_u_dmp_id")
-    writeBuckets(merged)
+    rewrite("markUploaded", spark.read.parquet(path)
+        .join(ids, col("dmp_id") === col("_u_dmp_id"), "left_semi")) { current =>
+      current
+        .join(ids, col("dmp_id") === col("_u_dmp_id"), "left")
+        .withColumn("is_uploaded",
+          col("is_uploaded") || col("_u_dmp_id").isNotNull)
+        .drop("_u_dmp_id")
+    }
   }
 
-  /** Compaction: every append adds files and every merge rewrites a bucket
-    * into shuffle-width pieces; periodic compaction coalesces each bucket
-    * back to `filesPerBucket` (small-file hygiene — the operational chore
-    * Delta/Iceberg schedule as OPTIMIZE).
+  /** The one rewrite path: under the writer lock, recover and validate the
+    * layout, collect the buckets `touched` (a frame with a `bucket` column)
+    * reaches, read just those and publish `f` of them. `touched` is
+    * evaluated inside the lock, after recovery.
     */
-  def compact(filesPerBucket: Int = 1): Unit = withWriterLock("compact") {
+  private def rewrite(op: String, touched: => DataFrame)(
+      f: DataFrame => DataFrame): Unit = withWriterLock(op) {
     recoverOrphans()
     validateWidth()
-    val current = spark.read.parquet(path).coalesce(filesPerBucket * numBuckets)
-    writeBuckets(current)
+    val buckets = touched.select("bucket").distinct()
+      .collect().map(_.getString(0)) // bounded: ≤16^k bucket ids, not data
+    if (buckets.nonEmpty)
+      writeBuckets(f(spark.read.parquet(path)
+        .filter(col("bucket").isin(buckets.toSeq: _*))))
   }
 
   private def deleteRecursively(f: java.io.File): Unit = {

@@ -62,9 +62,10 @@ final class MongoLedger private (spark: SparkSession,
 
   def init(records: DataFrame): Unit = t.overwrite(records)
 
-  def append(records: DataFrame): Unit = {
-    val fresh = records.join(read().select("hash"), Seq("hash"), "left_anti")
-    t.insert(fresh)
+  def append(records: DataFrame): Long = {
+    val fresh = if (!exists) records
+      else records.join(read().select("hash"), Seq("hash"), "left_anti")
+    LedgerStore.countWritten(fresh)(t.insert)
   }
 
   def mergeNoOverride(updates: DataFrame,

@@ -44,11 +44,12 @@ object IncrementalIngest {
   }
 
   /** Drain all currently-available files straight INTO the ledger: each
-    * micro-batch appends through [[graft.ledger.Ledger.append]], whose
-    * hash anti-join makes redelivered batches idempotent — so the
-    * at-least-once `foreachBatch` sink composes to exactly-once ledger
-    * state (the streaming twin of the reference's poll→dedup→insert loop,
-    * dags/dreem.py:44-67 + db.py:76-86).
+    * micro-batch appends through [[graft.ledger.Ledger.append]] (the first
+    * one creates the ledger), whose hash anti-join makes redelivered
+    * batches idempotent — so the at-least-once `foreachBatch` sink
+    * composes to exactly-once ledger state (the streaming twin of the
+    * reference's poll→dedup→insert loop, dags/dreem.py:44-67 +
+    * db.py:76-86).
     */
   def runIntoLedger(spark: SparkSession, srcDir: String, schema: StructType,
                     checkpointDir: String,
@@ -64,8 +65,8 @@ object IncrementalIngest {
         // against hashes already in the ledger, so an intra-batch repeat
         // (duplicate rows in one file, or two files delivering the same
         // record in one drain) would otherwise land twice
-        val d = batch.dropDuplicates("hash")
-        if (ledger.exists) ledger.append(d) else ledger.init(d)
+        ledger.append(batch.dropDuplicates("hash"))
+        ()
       }
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.connect.FileTransfer
 import graft.etl.Stages
+import graft.functions.Etl
 import graft.ledger.Ledger
 import graft.sources.LookupCsv
 
@@ -53,12 +54,10 @@ class EndToEndSpec extends SparkSpec {
         lit(null).cast("string").as("dmp_id"),
         lit(false).as("is_uploaded"))
 
-    def runPipeline(): Unit = {
+    def runPipeline(): Long = {
       // ingest (J1+S7): first run inserts 3; rerun inserts 0
-      val fresh = Stages.ingestDedup(incoming,
-        if (ledger.exists) ledger.read() else incoming.limit(0)
-          .withColumn("hash", lit("")).select("hash"))
-      if (!ledger.exists) ledger.init(fresh) else ledger.append(fresh)
+      val ingested = ledger.append(incoming.withColumn("hash",
+        Etl.recordHash(col("device_type"), col("manufacturer_ref"))))
       // enrich: each stage reads current state, merge-no-override writes back
       val s1 = Stages.resolveSerials(ledger.read(), uidSerial)
       ledger.mergeNoOverride(s1.select("hash", "device_serial"), Seq("device_serial"))
@@ -74,9 +73,10 @@ class EndToEndSpec extends SparkSpec {
         fetch = (ref, path) => { Files.write(path, ref.getBytes); true },
         push = (_, zip) => Files.size(zip) > 0)
       ledger.markUploaded(results.filter(col("uploaded")).select("dmp_id"))
+      ingested
     }
 
-    runPipeline()
+    assert(runPipeline() == 3)
     val after1 = ledger.read()
       .select($"manufacturer_ref", $"device_serial", $"device_id",
         $"patient_id", $"dmp_id", $"is_uploaded")
@@ -90,7 +90,7 @@ class EndToEndSpec extends SparkSpec {
     // unknown uid: never advanced, never uploaded
     assert(after1("r3") == (("r3", None, None, None, None, false)))
 
-    runPipeline() // incremental rerun: same inputs → identical state
+    assert(runPipeline() == 0) // incremental rerun: same inputs → identical state
     val after2 = ledger.read()
       .select($"manufacturer_ref", $"device_serial", $"device_id",
         $"patient_id", $"dmp_id", $"is_uploaded")

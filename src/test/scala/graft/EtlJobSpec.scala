@@ -2,7 +2,12 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** JVM-global request log: executePlan serializes the transport into
   * executor tasks (copies, even in local mode), so a per-instance log never
@@ -346,6 +351,55 @@ class EtlJobSpec extends SparkSpec {
     val run3 = EtlJob.run(spark, opts + ("incoming" -> s"$base/day2"), transport).toMap
     assert(run3("pending_groups") == 0 && run3("uploaded_groups") == 0)
     assert(EtlJobSpecLog.log.isEmpty) // nothing left to send
+  }
+
+  /** The executed plans of every query `body` runs, in order. */
+  private def executedPlans(body: => Unit): Seq[SparkPlan] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    // listener events arrive asynchronously but in order: once the marker
+    // query's event is in, so is every event of `body`
+    val marker = s"plans_marker_${System.nanoTime()}"
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.analyzed.output.exists(_.name == marker)) drained.countDown()
+        else plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      spark.range(1).toDF(marker).collect()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally spark.listenerManager.unregister(listener)
+    plans.asScala.toSeq
+  }
+
+  test("download_metadata scans the ledger once; ingested_new is the rows it added") {
+    val base = Files.createTempDirectory("graft-job-ingest").toString
+    val ledgerPath = s"$base/ledger"
+    incoming(Seq(("r1", "U1", "2021-11-10 13:00:00"),
+      ("r2", "U1", "2021-11-10 14:00:00"))).write.parquet(s"$base/day1")
+    // r1 is already ledgered, r3 arrives twice in the batch, r4 is new
+    incoming(Seq(("r1", "U1", "2021-11-10 13:00:00"),
+      ("r3", "U1", "2021-11-10 15:00:00"), ("r3", "U1", "2021-11-10 15:00:00"),
+      ("r4", "U1", "2021-11-10 16:00:00"))).write.parquet(s"$base/day2")
+    def ingest(day: String) = EtlJob.runStage(spark, "download_metadata",
+      Map("ledger" -> ledgerPath, "incoming" -> s"$base/$day")).toMap
+    assert(ingest("day1")("ingested_new") == 2)
+
+    val ledger = new graft.ledger.Ledger(spark, ledgerPath)
+    val before = ledger.read().count()
+    var summary = Map.empty[String, Long]
+    val plans = executedPlans { summary = ingest("day2") }
+    assert(summary("ingested_new") == ledger.read().count() - before)
+    assert(summary("ingested_new") == 2)
+    object Plans extends AdaptiveSparkPlanHelper
+    val ledgerScans = plans.flatMap(Plans.collectWithSubqueries(_) {
+      case s: FileSourceScanExec
+          if s.relation.location.rootPaths.exists(_.toUri.getPath == ledgerPath) => s
+    })
+    assert(ledgerScans.size == 1, plans.mkString("\n"))
   }
 
   test("extract_prep_load without transfer flags fails fast, naming them") {

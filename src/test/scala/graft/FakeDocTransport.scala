@@ -49,10 +49,11 @@ final class FakeDocTransport(spark: SparkSession, root: java.nio.file.Path)
     if (version == 0) { write(records); return }
     val existing = load()
     val keys = existing.select("hash")
-    val dups = records.join(keys, Seq("hash")).count()
     write(existing.unionByName(
       records.join(keys, Seq("hash"), "left_anti")))
     // ordered=False: the error raises AFTER the fresh documents landed
+    // (`keys` still reads the previous version)
+    val dups = records.join(keys, Seq("hash")).count()
     if (dups > 0) throw new DuplicateKeyException(dups)
   }
 

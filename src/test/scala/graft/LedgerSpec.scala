@@ -38,10 +38,22 @@ class LedgerSpec extends SparkSpec {
     val path = tmp()
     val led = new Ledger(spark, path)
     led.init(df(Seq(rec("a"), rec("b"))))
-    led.append(df(Seq(rec("b"), rec("c"))))
+    assert(led.append(df(Seq(rec("b"), rec("c")))) == 1)
     assert(led.read().count() == 3)
     assert(led.read().select("manufacturer_ref").as[String].collect().toSet
       == Set("a", "b", "c"))
+  }
+
+  test("append creates an absent ledger and returns the rows it wrote; a redelivered batch writes 0") {
+    val path = tmp()
+    val led = new Ledger(spark, path)
+    assert(!led.exists)
+    assert(led.append(df(Seq(rec("a"), rec("b"), rec("c")))) == 3)
+    assert(led.exists)
+    assert(led.read().count() == 3)
+    assert(led.append(df(Seq(rec("a"), rec("b"), rec("c")))) == 0)
+    assert(led.read().count() == 3)
+    assert(!new java.io.File(s"${path}_lock").exists())
   }
 
   test("mergeNoOverride fills nulls, preserves set values, is idempotent") {
@@ -53,6 +65,7 @@ class LedgerSpec extends SparkSpec {
       .select($"hash", $"device_serial", $"device_id", $"patient_id",
         $"dmp_dataset", $"dmp_id")
     led.mergeNoOverride(updates)
+    assert(stagingDirs(path).isEmpty) // the publish leaves no staging/trash
     def state() = led.read().select($"manufacturer_ref", $"device_serial")
       .as[(String, Option[String])].collect().toMap
     val s1 = state()
@@ -79,8 +92,7 @@ class LedgerSpec extends SparkSpec {
     for (op <- Seq(
       () => led.mergeNoOverride(updates),
       () => led.append(df(Seq(rec("z")))),
-      () => led.markUploaded(Seq("G-1").toDF("dmp_id")),
-      () => led.compact())) {
+      () => led.markUploaded(Seq("G-1").toDF("dmp_id")))) {
       val e = intercept[java.util.ConcurrentModificationException](op())
       assert(e.getMessage.contains("locked by another writer"))
     }
@@ -99,20 +111,6 @@ class LedgerSpec extends SparkSpec {
     val got = led.read().select($"manufacturer_ref", $"device_serial")
       .as[(String, Option[String])].collect().toMap
     assert(got("a").contains("S-A"))
-  }
-
-  test("compact preserves content and cleans the staging dir") {
-    val path = tmp()
-    val led = new Ledger(spark, path)
-    led.init(df(Seq(rec("a"), rec("b"))))
-    led.append(df(Seq(rec("c"))))
-    led.mergeNoOverride(df(Seq(rec("a", serial = Some("S"))))
-      .select($"hash", $"device_serial", $"device_id", $"patient_id",
-        $"dmp_dataset", $"dmp_id"))
-    val before = led.read().orderBy("manufacturer_ref").collect().toSeq
-    led.compact()
-    assert(led.read().orderBy("manufacturer_ref").collect().toSeq == before)
-    assert(stagingDirs(path).isEmpty)
   }
 
   private def stagingDirs(path: String): Seq[java.io.File] = {

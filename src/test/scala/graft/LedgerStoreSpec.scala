@@ -73,6 +73,18 @@ class LedgerStoreSpec extends SparkSpec {
     assert(up == Map("a" -> false, "b" -> false, "c" -> true))
   }
 
+  test("MongoLedger.append creates an absent collection and returns the rows it wrote; a redelivered batch writes 0") {
+    val led = MongoLedger.forTransport(spark, new FakeDocTransport(
+      spark, java.nio.file.Files.createTempDirectory("graft_mongo_append")))
+    assert(!led.exists)
+    assert(led.append(df(Seq(rec("a"), rec("b")))) == 2)
+    assert(led.exists)
+    assert(led.append(df(Seq(rec("a"), rec("b")))) == 0)
+    assert(led.read().count() == 2)
+    assert(led.append(df(Seq(rec("b"), rec("c")))) == 1)
+    assert(led.read().count() == 3)
+  }
+
   test("FakeDocTransport pins insert_many(ordered=False): non-duplicates land, then the duplicate-key error raises") {
     val t = new FakeDocTransport(spark,
       java.nio.file.Files.createTempDirectory("graft_mongo_dup"))

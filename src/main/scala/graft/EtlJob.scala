@@ -162,41 +162,34 @@ object EtlJob {
           if (upstreamFailure == null) throw e
           else if (upstreamFailure ne e) upstreamFailure.addSuppressed(e)
       }
-    val state = openLedger(spark, opts).read()
-    (parts :+ ("ledger_rows" -> state.count())).toSeq
+    val ledger = openLedger(spark, opts)
+    (parts :+ ("ledger_rows" ->
+      (if (ledger.exists) ledger.read().count() else 0L))).toSeq
   }
 
-  /** One DAG task (see `stageNames`). Tasks 2-5 are single
-    * read→transform→merge steps (`enrich`); tasks 1 and 6 have their own
-    * methods below.
+  /** One DAG task (see `stageNames`). Tasks 2-5 are single resolution
+    * steps over the ledger (`LedgerStore.enrich`, reporting the rows that
+    * carry the field afterwards); tasks 1 and 6 have their own methods below.
     */
   def runStage(spark: org.apache.spark.sql.SparkSession, stage: String,
                opts: Map[String, String],
                transport: Transport = new JavaNetTransport()): Seq[(String, Long)] = {
-    // advance the ledger one resolution step, merge the new `field` values
-    // in (existing values win), report how many rows now carry one
     def enrich(field: String, reportKey: String)(
-        advance: DataFrame => DataFrame): Seq[(String, Long)] = {
-      val ledger = openLedger(spark, opts)
-      ledger.mergeNoOverride(advance(ledger.read()).select("hash", field),
-        Seq(field))
-      Seq(reportKey -> ledger.read().filter(col(field).isNotNull).count())
-    }
+        advance: DataFrame => DataFrame): Seq[(String, Long)] =
+      Seq(reportKey -> openLedger(spark, opts).enrich(field)(advance))
     stage match {
       case "download_metadata" =>
         stageDownloadMetadata(spark, openLedger(spark, opts), opts)
       case "resolve_device_serials" => // task 2 (J2)
-        val uidSerial = LookupCsv.read(spark, opts("uid-serial"), "uid", "serial")
-        enrich("device_serial", "with_serial")(Stages.resolveSerials(_, uidSerial))
+        enrich("device_serial", "with_serial")(Stages.resolveSerials(_,
+          LookupCsv.read(spark, opts("uid-serial"), "uid", "serial")))
       case "resolve_device_ids" => // task 3 (J3)
-        val serialToId =
-          LookupCsv.read(spark, opts("serial-id"), "serial", "device_id")
-        enrich("device_id", "with_device")(Stages.resolveDeviceIds(_, serialToId))
+        enrich("device_id", "with_device")(Stages.resolveDeviceIds(_,
+          LookupCsv.read(spark, opts("serial-id"), "serial", "device_id")))
       case "resolve_patient_ids" => // task 4 (J4)
         val today = opts.getOrElse("today", java.time.LocalDate.now().toString)
-        val assignments = spark.read.parquet(opts("assignments"))
-        enrich("patient_id", "with_patient")(
-          Stages.resolvePatients(_, assignments, today))
+        enrich("patient_id", "with_patient")(Stages.resolvePatients(_,
+          spark.read.parquet(opts("assignments")), today))
       case "group_records" => // task 5 (A1, unlimited by design)
         val cutOff = opts.getOrElse("cutoff", "12:00:00")
         enrich("dmp_id", "grouped")(Stages.groupRecords(_, cutOff))
@@ -271,6 +264,7 @@ object EtlJob {
     // is bounded BY CONSTRUCTION — unuploaded groups simply go next run
     // (at-least-once + idempotent redelivery).
     val uploadLimit = opts.getOrElse("upload-limit", "100000").toInt
+    if (!ledger.exists) return Seq("pending_groups" -> 0L, "uploaded_groups" -> 0L)
     val manifest = Stages.uploadManifest(ledger.read())
     val nGroups = manifest.count()
     val batch = manifest.orderBy(col("dmp_id")).limit(uploadLimit)

@@ -66,8 +66,8 @@ object Stages {
 
   /** J2 — uid→serial broadcast lookup; only rows with a dreem uid and a null
     * serial advance (db.py:97-109,158-170; dags/dreem.py:75-115).
-    */
-  /** `stringNullIsMissing` replicates a reference quirk: its Mongo query
+    *
+    * `stringNullIsMissing` replicates a reference quirk: its Mongo query
     * compares `meta.dreem_uid` against the STRING "null" (db.py:164,
     * flagged in SURVEY.md §7.5.3) — uids that are literally the text "null"
     * are treated as absent. Off by default (the sane semantics); on to
@@ -146,8 +146,8 @@ object Stages {
     *     already-joined probe rows either way — measured at sf0.1 the
     *     struct form is strictly faster than the numeric-min + re-join
     *     pair it replaced: q70 7.6 s → 2.7 s, and scale-flat at 10×.)
-    */
-  /** `broadcastAssignments`: the assignment table is the reference's small
+    *
+    * `broadcastAssignments`: the assignment table is the reference's small
     * per-device UCAM payload — broadcast by default (the exploded day form
     * exceeds Spark's 10MB auto-threshold long before it stops fitting in
     * executor memory, which would force a duplicate-key-heavy sort-merge

@@ -3,24 +3,28 @@ package graft.ledger
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Parquet-backed mutable ledger with append + conditional no-override merge
-  * — the reference's MongoDB collection semantics (db.py:66-231) on
-  * immutable columnar storage, with no external table format available
-  * offline (SURVEY.md §7.5.1).
+/** Parquet-backed mutable ledger with append, no-override enrichment and
+  * the upload flag — the reference's MongoDB collection semantics
+  * (db.py:66-231) on immutable columnar storage, with no external table
+  * format available offline (SURVEY.md §7.5.1).
   *
   * Layout: hash-prefix bucketed partitions (`bucket=<first k hex chars>` of
-  * the sha256 key → 16^k buckets, `bucketWidth` = k). A merge:
-  *   1. bucketizes the updates,
-  *   2. reads ONLY the affected buckets (partition pruning),
-  *   3. join-rewrites them (coalesce per enrichable column — existing value
-  *      wins, so updates can never override, matching
-  *      tests/hooks/test_db.py:16-47),
-  *   4. publishes just those partitions ([[rewrite]]).
+  * the sha256 key → 16^k buckets, `bucketWidth` = k). Every rewrite takes
+  * the writer lock, recovers a crashed publish and checks the width, then:
+  *   1. [[enrich]] maps the live table in one pass — the resolution runs
+  *      over the stored rows, existing values win (coalesce against a copy
+  *      of the field taken before the resolution, matching
+  *      tests/hooks/test_db.py:16-47), and the rows carrying the field are
+  *      counted by an observation on that write;
+  *   2. [[markUploaded]] finds the buckets holding the flagged groups and
+  *      rewrites only those (partition pruning);
+  *   3. both publish the rewritten buckets through [[writeBuckets]]
+  *      (stage, check `_SUCCESS`, rename per bucket).
   *
-  * At 100 TB: pick bucketWidth=3 → 4096 buckets of ~25 GB each; a merge
-  * touching m buckets rewrites m/4096 of the table, and the join inside a
-  * bucket is co-partitioned on the uniform hash key (no skew). The width is
-  * fixed at table creation (it is the physical layout); widening is a
+  * At 100 TB: pick bucketWidth=3 → 4096 buckets of ~25 GB each; flagging
+  * groups that touch m buckets rewrites m/4096 of the table. An enrichment
+  * rewrites every bucket, as a resolution step can reach any row. The width
+  * is fixed at table creation (it is the physical layout); widening is a
   * one-off re-init, and a width mismatch against the on-disk layout
   * fail-fasts rather than silently missing every bucket in the prune
   * filter. Deletes stay quarantined, as in the reference (db.py:127-133):
@@ -31,23 +35,24 @@ final class Ledger(spark: SparkSession, path: String, bucketWidth: Int = 1)
   require(bucketWidth >= 1 && bucketWidth <= 4,
     s"bucketWidth must be 1..4 (16..65536 buckets), got $bucketWidth")
 
-  private val enrichable = LedgerStore.enrichable
-
   private def withBucket(df: DataFrame): DataFrame =
     df.withColumn("bucket", substring(col("hash"), 1, bucketWidth))
 
-  def exists: Boolean = new java.io.File(path).exists()
+  private def bucketDirs(): Array[java.io.File] =
+    Option(new java.io.File(path).listFiles()).getOrElse(Array.empty)
+      .filter(f => f.isDirectory && f.getName.startsWith("bucket="))
+
+  /** A bucket dir holds the rows: a zero-row first append leaves a bare
+    * `_SUCCESS`, which Spark cannot infer a schema from. */
+  def exists: Boolean = bucketDirs().nonEmpty
 
   /** The prune filters compare `bucket` partition values against prefixes of
     * the configured width — opening a table written at a different width
-    * would make every filter miss (a silently-dropped merge). Check the
+    * would make every filter miss (a silently-dropped rewrite). Check the
     * on-disk dir names once per mutating entry point.
     */
   private def validateWidth(): Unit = {
-    val dirs = Option(new java.io.File(path).listFiles())
-      .getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("bucket="))
-    dirs.headOption.foreach { d =>
+    bucketDirs().headOption.foreach { d =>
       val w = d.getName.stripPrefix("bucket=").length
       require(w == bucketWidth,
         s"ledger at $path is bucketed at width $w but Ledger was opened " +
@@ -93,7 +98,7 @@ final class Ledger(spark: SparkSession, path: String, bucketWidth: Int = 1)
   }
 
   /** The ledger is SINGLE-writer (as its Mongo counterpart was via document
-    * atomicity): two concurrent merges could interleave per-bucket renames
+    * atomicity): two concurrent rewrites could interleave per-bucket renames
     * and publish a mix of both runs. Every mutating entry point takes this
     * exclusive lock — an atomic O_EXCL create of `<path>_lock` — so the
     * second writer fails FAST (before any staging work) instead of
@@ -140,70 +145,58 @@ final class Ledger(spark: SparkSession, path: String, bucketWidth: Int = 1)
   /** S7 — [[LedgerStore.append]] as one hash anti-join (insert-only dedup,
     * db.py:76-86 + the J1 anti-join); the first append creates the ledger.
     */
-  def append(records: DataFrame): Long = withWriterLock("append") {
+  def append(records: DataFrame): Long = locked("append") {
     val fresh = if (!exists) records
-      else records.join(read().select("hash"), Seq("hash"), "left_anti") // read() validates width
-    LedgerStore.countWritten(withBucket(fresh)) { df =>
+      else records.join(live().select("hash"), Seq("hash"), "left_anti")
+    LedgerStore.countObserved(withBucket(fresh)) { df =>
       df.write.partitionBy("bucket").mode(SaveMode.Append).parquet(path)
       spark.catalog.refreshByPath(path)
     }
   }
 
-  /** No-override merge: for rows matched by hash, fill each `fields` column
-    * only where the ledger value is still null. Only affected buckets are
-    * read and rewritten.
+  /** [[LedgerStore.enrich]] as one mapped rewrite of every bucket: no join
+    * against the ledger itself, and the returned count is observed on the
+    * staging write.
     */
-  def mergeNoOverride(updates: DataFrame,
-                      fields: Seq[String] = enrichable): Unit = {
-    // lazy: the check runs inside the writer lock, first thing in rewrite
-    lazy val upd = {
-      require(fields.forall(enrichable.contains),
-        s"only $enrichable are enrichable; is_uploaded goes via markUploaded")
-      withBucket(updates
-        .select(col("hash") +: fields.map(f => col(f).as(s"_u_$f")): _*))
+  def enrich(field: String)(resolve: DataFrame => DataFrame): Long =
+    locked("enrich") {
+      val fill = LedgerStore.fillNulls(field)(resolve) // checks field
+      if (!exists) 0L
+      else LedgerStore.countObserved(fill(live().drop("bucket")), col(field)) {
+        df => writeBuckets(withBucket(df.drop(LedgerStore.prior)))
+      }
     }
-    rewrite("mergeNoOverride", upd) { current =>
-      val merged = current.join(upd.drop("bucket"), Seq("hash"), "left")
-      fields.foldLeft(merged) { (df, f) =>
-        df.withColumn(f, coalesce(col(f), col(s"_u_$f")))
-      }.drop(fields.map(f => s"_u_$f"): _*)
-    }
-  }
 
   /** Terminal flag for whole upload groups (db.py:189-196): set
     * is_uploaded=true for every record of the given dmp_ids.
     *
-    * Bucket-pruned like mergeNoOverride: a cheap semi-join scan (dmp_id +
-    * bucket columns only) finds which hash-prefix buckets actually contain
-    * the groups, and only those are rewritten — flagging one upload group
-    * at 100 TB touches k/|buckets| of the table, not all of it.
+    * Bucket-pruned: a cheap semi-join scan (dmp_id + bucket columns only)
+    * finds which hash-prefix buckets actually contain the groups, and only
+    * those are rewritten — flagging one upload group at 100 TB touches
+    * k/|buckets| of the table, not all of it. No touched bucket, no publish.
     */
-  def markUploaded(dmpIds: DataFrame): Unit = {
-    val ids = broadcast(dmpIds.select(col("dmp_id").as("_u_dmp_id")).distinct())
-    rewrite("markUploaded", spark.read.parquet(path)
-        .join(ids, col("dmp_id") === col("_u_dmp_id"), "left_semi")) { current =>
-      current
-        .join(ids, col("dmp_id") === col("_u_dmp_id"), "left")
+  def markUploaded(dmpIds: DataFrame): Unit = locked("markUploaded") {
+    val ids = broadcast(dmpIds.select(col("dmp_id").as("_flag_id")).distinct())
+    val hit = col("dmp_id") === col("_flag_id")
+    val buckets = live().join(ids, hit, "left_semi").select("bucket")
+      .distinct().collect().map(_.getString(0)) // bounded: ≤16^k bucket ids
+    if (buckets.nonEmpty)
+      writeBuckets(live().filter(col("bucket").isin(buckets.toSeq: _*))
+        .join(ids, hit, "left")
         .withColumn("is_uploaded",
-          col("is_uploaded") || col("_u_dmp_id").isNotNull)
-        .drop("_u_dmp_id")
-    }
+          col("is_uploaded") || col("_flag_id").isNotNull)
+        .drop("_flag_id"))
   }
 
-  /** The one rewrite path: under the writer lock, recover and validate the
-    * layout, collect the buckets `touched` (a frame with a `bucket` column)
-    * reaches, read just those and publish `f` of them. `touched` is
-    * evaluated inside the lock, after recovery.
-    */
-  private def rewrite(op: String, touched: => DataFrame)(
-      f: DataFrame => DataFrame): Unit = withWriterLock(op) {
+  /** The live table, with its `bucket` partition column. */
+  private def live(): DataFrame = spark.read.parquet(path)
+
+  /** Every mutation: under the writer lock, recover a crashed publish and
+    * validate the layout before `body` looks at the table. */
+  private def locked[T](op: String)(body: => T): T = withWriterLock(op) {
     recoverOrphans()
     validateWidth()
-    val buckets = touched.select("bucket").distinct()
-      .collect().map(_.getString(0)) // bounded: ≤16^k bucket ids, not data
-    if (buckets.nonEmpty)
-      writeBuckets(f(spark.read.parquet(path)
-        .filter(col("bucket").isin(buckets.toSeq: _*))))
+    body
   }
 
   private def deleteRecursively(f: java.io.File): Unit = {
@@ -214,7 +207,7 @@ final class Ledger(spark: SparkSession, path: String, bucketWidth: Int = 1)
 
   /** Overwrite the buckets present in `df` via stage-then-rename:
     *
-    *  1. write the merged buckets to a UNIQUE staging dir (a crashed
+    *  1. write the rewritten buckets to a UNIQUE staging dir (a crashed
     *     previous run can never leave stale partitions that a later call
     *     silently republishes — the failure mode of a fixed staging path);
     *  2. require Spark's `_SUCCESS` marker before publishing (a partial
@@ -224,7 +217,7 @@ final class Ledger(spark: SparkSession, path: String, bucketWidth: Int = 1)
     *     bucket fully old or fully new — never half-written).
     *
     * The parquet source cannot overwrite partitions it is concurrently
-    * reading, so the staging materialization is also what makes the merge
+    * reading, so the staging materialization is also what makes the rewrite
     * read-its-own-input safe; at scale it is the standard copy-on-write
     * cost (Delta/Iceberg rewrite the same files under the hood — this is
     * the no-table-format-offline stand-in, with the atomicity window

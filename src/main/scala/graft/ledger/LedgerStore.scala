@@ -1,7 +1,7 @@
 package graft.ledger
 
-import org.apache.spark.sql.{DataFrame, Observation}
-import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.functions.{coalesce, col, count, lit}
 
 /** The ledger contract every storage strategy implements — the reference's
   * MongoDB collection operations (db.py:66-231) as a storage-neutral
@@ -9,8 +9,9 @@ import org.apache.spark.sql.functions.{count, lit}
   *
   *  - [[append]]: insert-only ingest, deduped by hash ([[init]] seeds a
   *    store wholesale);
-  *  - [[mergeNoOverride]]: enrich matched rows, existing values win
-  *    (db.py:99,105-106,115,120-121 / tests/hooks/test_db.py:16-47);
+  *  - [[enrich]]: one resolution step over the stored rows, filling a field
+  *    only where it is still null (db.py:96-125, no-override guards at
+  *    db.py:99,105-106,115,120-121 / tests/hooks/test_db.py:16-47);
   *  - [[markUploaded]]: the one terminal flag flip (db.py:189-196);
   *  - no delete: quarantined in the reference (db.py:127-133), absent here.
   *
@@ -25,25 +26,43 @@ trait LedgerStore {
   /** Insert the records whose hash is not stored yet, creating the store
     * on first use; returns the rows written. */
   def append(records: DataFrame): Long
-  def mergeNoOverride(updates: DataFrame,
-                      fields: Seq[String] = LedgerStore.enrichable): Unit
+  /** Fill `field` where null with what `resolve` computes from the stored
+    * rows (one row out per row in, same columns); existing values win.
+    * Returns the rows carrying `field` afterwards, 0 on an absent store. */
+  def enrich(field: String)(resolve: DataFrame => DataFrame): Long
   def markUploaded(dmpIds: DataFrame): Unit
 }
 
 object LedgerStore {
-  /** The columns a merge may fill — everything else is identity or terminal
-    * state (is_uploaded goes through markUploaded only).
+  /** The columns an enrichment may fill — everything else is identity or
+    * terminal state (is_uploaded goes through markUploaded only).
     */
   val enrichable: Seq[String] =
     Seq("device_serial", "device_id", "patient_id", "dmp_dataset", "dmp_id")
 
-  /** Run `write` over `df`; return the rows it wrote, counted by an
-    * observation on the write itself, not by a second pass. The first
-    * query `write` runs must stream `df` (a broadcast side reports none). */
-  private[ledger] def countWritten(df: DataFrame)(
+  /** `field`'s value before an enrichment, kept beside the filled rows. */
+  private[ledger] val prior = "_prior"
+
+  /** The no-override step of both stores: `resolve` runs with `field`
+    * copied to [[prior]], which wins where set. Checks `field` when called.
+    */
+  private[ledger] def fillNulls(field: String)(
+      resolve: DataFrame => DataFrame): DataFrame => DataFrame = {
+    require(enrichable.contains(field),
+      s"only $enrichable are enrichable; is_uploaded goes via markUploaded")
+    rows => resolve(rows.withColumn(prior, col(field))).select(rows.columns
+      .map(c => if (c == field) coalesce(col(prior), col(c)).as(c) else col(c))
+      :+ col(prior): _*)
+  }
+
+  /** Run `write` over `df`; return the count of non-null `counted` over
+    * the rows of `df`, observed on the write itself, not by a second pass.
+    * The first query `write` runs must stream `df` (a broadcast side
+    * reports none). */
+  private[ledger] def countObserved(df: DataFrame, counted: Column = lit(1))(
       write: DataFrame => Unit): Long = {
-    val written = Observation()
-    write(df.observe(written, count(lit(1)).as("rows")))
-    written.get("rows").asInstanceOf[Long]
+    val observed = Observation()
+    write(df.observe(observed, count(counted).as("rows")))
+    observed.get("rows").asInstanceOf[Long]
   }
 }

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * reference deployment keeps its Mongo records collection and swaps only
   * the compute.
   *
-  * The ledger LOGIC (anti-join dedup, no-override coalesce merge, flag
+  * The ledger LOGIC (anti-join dedup, no-override enrichment, flag
   * flip) is written against [[MongoLedger.DocTransport]] — the four
   * primitive collection operations the reference's hook performs
   * (db.py:66-231: find/insert_many(ordered=False)/replace-upsert/drop-
@@ -29,8 +29,9 @@ import org.apache.spark.sql.functions._
   *
   * Semantics map 1:1 onto db.py:
   *  - [[append]]: anti-join dedup then insert (db.py:76-86);
-  *  - [[mergeNoOverride]]: compute the no-override coalesce IN SPARK on
-  *    just the matched rows, then replace-upsert keyed on `hash` — the
+  *  - [[enrich]]: run the resolution and the no-override coalesce IN
+  *    SPARK over the collection, then replace-upsert keyed on `hash` only
+  *    the documents whose field went from null to set — the
   *    whole-document update db.py does per record, batched;
   *  - [[markUploaded]]: same replace-upsert for the flag flip.
   *
@@ -49,8 +50,6 @@ final class MongoLedger private (spark: SparkSession,
     this(spark, new MongoLedger.ConnectorTransport(
       spark, uri, database, collection))
 
-  private val enrichable = LedgerStore.enrichable
-
   /** An absent collection reads as an empty frame; any connector/transport
     * failure surfaces as non-existence only for the `exists` probe.
     */
@@ -65,28 +64,22 @@ final class MongoLedger private (spark: SparkSession,
   def append(records: DataFrame): Long = {
     val fresh = if (!exists) records
       else records.join(read().select("hash"), Seq("hash"), "left_anti")
-    LedgerStore.countWritten(fresh)(t.insert)
+    LedgerStore.countObserved(fresh)(t.insert)
   }
 
-  def mergeNoOverride(updates: DataFrame,
-                      fields: Seq[String] = enrichable): Unit = {
-    require(fields.forall(enrichable.contains),
-      s"only $enrichable are enrichable; is_uploaded goes via markUploaded")
-    val upd = updates
-      .select(col("hash") +: fields.map(f => col(f).as(s"_u_$f")): _*)
-    // inner join: only matched documents rewrite (db.py updates by id);
-    // existing values win via coalesce, exactly the no-override contract
-    val merged = fields.foldLeft(
-        read().join(upd, Seq("hash"))) { (df, f) =>
-        df.withColumn(f, coalesce(col(f), col(s"_u_$f")))
-      }.drop(fields.map(f => s"_u_$f"): _*)
-    t.replaceUpsert(merged)
+  def enrich(field: String)(resolve: DataFrame => DataFrame): Long = {
+    val fill = LedgerStore.fillNulls(field)(resolve) // checks field
+    if (!exists) 0L
+    else LedgerStore.countObserved(fill(read()), col(field)) { df =>
+      t.replaceUpsert(df.filter(col(LedgerStore.prior).isNull &&
+        col(field).isNotNull).drop(LedgerStore.prior))
+    }
   }
 
   def markUploaded(dmpIds: DataFrame): Unit = {
-    val ids = broadcast(dmpIds.select(col("dmp_id").as("_u_dmp_id")).distinct())
+    val ids = broadcast(dmpIds.select(col("dmp_id").as("_flag_id")).distinct())
     val flagged = read()
-      .join(ids, col("dmp_id") === col("_u_dmp_id"), "left_semi")
+      .join(ids, col("dmp_id") === col("_flag_id"), "left_semi")
       .withColumn("is_uploaded", lit(true))
     t.replaceUpsert(flagged)
   }

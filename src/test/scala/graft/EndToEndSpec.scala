@@ -58,15 +58,12 @@ class EndToEndSpec extends SparkSpec {
       // ingest (J1+S7): first run inserts 3; rerun inserts 0
       val ingested = ledger.append(incoming.withColumn("hash",
         Etl.recordHash(col("device_type"), col("manufacturer_ref"))))
-      // enrich: each stage reads current state, merge-no-override writes back
-      val s1 = Stages.resolveSerials(ledger.read(), uidSerial)
-      ledger.mergeNoOverride(s1.select("hash", "device_serial"), Seq("device_serial"))
-      val s2 = Stages.resolveDeviceIds(ledger.read(), serialToId)
-      ledger.mergeNoOverride(s2.select("hash", "device_id"), Seq("device_id"))
-      val s3 = Stages.resolvePatients(ledger.read(), assignments, today = "2021-12-01")
-      ledger.mergeNoOverride(s3.select("hash", "patient_id"), Seq("patient_id"))
-      val s4 = Stages.groupRecords(ledger.read(), cutOff = "12:00:00")
-      ledger.mergeNoOverride(s4.select("hash", "dmp_id"), Seq("dmp_id"))
+      // enrich: each stage resolves over the ledger, existing values win
+      ledger.enrich("device_serial")(Stages.resolveSerials(_, uidSerial))
+      ledger.enrich("device_id")(Stages.resolveDeviceIds(_, serialToId))
+      ledger.enrich("patient_id")(
+        Stages.resolvePatients(_, assignments, today = "2021-12-01"))
+      ledger.enrich("dmp_id")(Stages.groupRecords(_, cutOff = "12:00:00"))
       // extract-prep-load over unfinished groups
       val manifest = Stages.uploadManifest(ledger.read())
       val results = FileTransfer.executePlan(spark, manifest, s"$base/work",

@@ -356,18 +356,23 @@ class EtlJobSpec extends SparkSpec {
   /** The executed plans of every query `body` runs, in order. */
   private def executedPlans(body: => Unit): Seq[SparkPlan] = {
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
-    // listener events arrive asynchronously but in order: once the marker
-    // query's event is in, so is every event of `body`
+    // listener events arrive asynchronously but in order, so `body`'s are
+    // exactly those between a start and an end marker query's: an event
+    // still queued from an earlier query must not count
+    val start = s"plans_start_${System.nanoTime()}"
     val marker = s"plans_marker_${System.nanoTime()}"
+    @volatile var started = false
     val drained = new java.util.concurrent.CountDownLatch(1)
     val listener = new QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        if (qe.analyzed.output.exists(_.name == marker)) drained.countDown()
-        else plans.add(qe.executedPlan)
+        if (qe.analyzed.output.exists(_.name == start)) started = true
+        else if (qe.analyzed.output.exists(_.name == marker)) drained.countDown()
+        else if (started) plans.add(qe.executedPlan)
       override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
     spark.listenerManager.register(listener)
     try {
+      spark.range(1).toDF(start).collect()
       body
       spark.range(1).toDF(marker).collect()
       assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
@@ -394,12 +399,60 @@ class EtlJobSpec extends SparkSpec {
     val plans = executedPlans { summary = ingest("day2") }
     assert(summary("ingested_new") == ledger.read().count() - before)
     assert(summary("ingested_new") == 2)
+    assert(ledgerScans(plans, ledgerPath) == 1, plans.mkString("\n"))
+  }
+
+  /** The file scans of `path` in `plans`, subqueries included. */
+  private def ledgerScans(plans: Seq[SparkPlan], path: String): Int = {
     object Plans extends AdaptiveSparkPlanHelper
-    val ledgerScans = plans.flatMap(Plans.collectWithSubqueries(_) {
+    plans.flatMap(Plans.collectWithSubqueries(_) {
       case s: FileSourceScanExec
-          if s.relation.location.rootPaths.exists(_.toUri.getPath == ledgerPath) => s
-    })
-    assert(ledgerScans.size == 1, plans.mkString("\n"))
+          if s.relation.location.rootPaths.exists(_.toUri.getPath == path) => s
+    }).size
+  }
+
+  test("each enrichment stage scans the ledger once (resolve_patient_ids twice); its report is the rows carrying the field") {
+    val base = Files.createTempDirectory("graft-job-enrich").toString
+    // r2's uid is unknown, so it never advances; r1 and r3 fill every field
+    incoming(Seq(("r1", "U1", "2021-11-10 13:00:00"),
+      ("r2", "U9", "2021-11-10 14:00:00"), ("r3", "U1", "2021-11-11 13:00:00")))
+      .write.parquet(s"$base/incoming")
+    val opts = oneDeviceOpts(base)
+    EtlJob.runStage(spark, "download_metadata", opts)
+    val ledger = new graft.ledger.Ledger(spark, opts("ledger"))
+    for ((stage, field, reportKey, scans) <- Seq(
+        ("resolve_device_serials", "device_serial", "with_serial", 1),
+        ("resolve_device_ids", "device_id", "with_device", 1),
+        ("resolve_patient_ids", "patient_id", "with_patient", 2),
+        ("group_records", "dmp_id", "grouped", 1))) {
+      var summary = Map.empty[String, Long]
+      val plans = executedPlans {
+        summary = EtlJob.runStage(spark, stage, opts).toMap
+      }
+      assert(ledgerScans(plans, opts("ledger")) == scans,
+        s"$stage:\n" + plans.mkString("\n"))
+      assert(summary(reportKey) ==
+        ledger.read().filter(col(field).isNotNull).count(), stage)
+      assert(summary(reportKey) == 2, stage)
+    }
+  }
+
+  test("EtlJob.run on a fresh ledger with an empty first batch reports zeros; the next batch ingests normally") {
+    val base = Files.createTempDirectory("graft-job-empty").toString
+    incoming(Seq.empty).write.parquet(s"$base/day0")
+    incoming(Seq(("r1", "U1", "2021-11-10 13:00:00"),
+      ("r2", "U1", "2021-11-10 14:00:00"))).write.parquet(s"$base/day1")
+    val opts = oneDeviceOpts(base)
+    val transport = EtlJobSpecLive.transport()
+    EtlJobSpecLog.log.clear()
+    val empty = EtlJob.run(spark, opts + ("incoming" -> s"$base/day0"), transport)
+    assert(empty.nonEmpty && empty.forall(_._2 == 0), empty)
+    assert(EtlJobSpecLog.log.isEmpty) // nothing to send
+    val run1 = EtlJob.run(spark, opts + ("incoming" -> s"$base/day1"), transport)
+    assert(run1.map(_._1) == empty.map(_._1))
+    val got = run1.toMap
+    assert(got("ingested_new") == 2 && got("ledger_rows") == 2)
+    assert(got("grouped") == 2 && got("uploaded_groups") == 1)
   }
 
   test("extract_prep_load without transfer flags fails fast, naming them") {

@@ -8,8 +8,8 @@ import org.apache.spark.sql.functions._
 
 import graft.ledger.Ledger
 
-/** Ledger semantics: append-dedup, no-override merge (idempotent), group
-  * upload flags — the reference's Mongo collection contract
+/** Ledger semantics: append-dedup, no-override enrichment (idempotent),
+  * group upload flags — the reference's Mongo collection contract
   * (db.py:66-231, tests/hooks/test_db.py) on bucketed parquet.
   */
 class LedgerSpec extends SparkSpec {
@@ -34,6 +34,14 @@ class LedgerSpec extends SparkSpec {
   private def df(rows: Seq[(String, String, String, Timestamp, Timestamp, Map[String, String], Option[String], Option[String], Option[String], Option[String], Option[String], Boolean)]): DataFrame =
     rows.toDF(cols: _*)
 
+  /** A resolver that overwrites `device_serial` unconditionally — the given
+    * refs get their serial, every other row gets null — so any value that
+    * survives an existing one is the store's no-override guard at work. */
+  private def setSerials(serials: (String, String)*)(rows: DataFrame): DataFrame =
+    rows.withColumn("device_serial", serials.foldLeft(lit(null).cast("string")) {
+      case (v, (ref, serial)) => when($"manufacturer_ref" === ref, serial).otherwise(v)
+    })
+
   test("append deduplicates by hash") {
     val path = tmp()
     val led = new Ledger(spark, path)
@@ -56,41 +64,37 @@ class LedgerSpec extends SparkSpec {
     assert(!new java.io.File(s"${path}_lock").exists())
   }
 
-  test("mergeNoOverride fills nulls, preserves set values, is idempotent") {
+  test("enrich fills nulls, existing values win, is idempotent; returns the rows carrying the field") {
     val path = tmp()
     val led = new Ledger(spark, path)
-    led.init(df(Seq(rec("a", serial = Some("KEEP")), rec("b"), rec("c"))))
-    val updates = df(Seq(rec("a", serial = Some("NEW")),
-      rec("b", serial = Some("S-B"))))
-      .select($"hash", $"device_serial", $"device_id", $"patient_id",
-        $"dmp_dataset", $"dmp_id")
-    led.mergeNoOverride(updates)
+    led.init(df(Seq(rec("a", serial = Some("KEEP")), rec("b"), rec("c"),
+      rec("d", serial = Some("KEEP-D")))))
+    // the resolver clobbers a, fills b, leaves c null and nulls d
+    val resolve = setSerials("a" -> "NEW", "b" -> "S-B") _
+    assert(led.enrich("device_serial")(resolve) == 3)
     assert(stagingDirs(path).isEmpty) // the publish leaves no staging/trash
     def state() = led.read().select($"manufacturer_ref", $"device_serial")
       .as[(String, Option[String])].collect().toMap
     val s1 = state()
-    assert(s1("a").contains("KEEP"))   // never overridden
-    assert(s1("b").contains("S-B"))    // advanced
-    assert(s1("c").isEmpty)            // untouched
-    led.mergeNoOverride(updates)       // merge is idempotent
+    assert(s1 == Map("a" -> Some("KEEP"), "b" -> Some("S-B"), "c" -> None,
+      "d" -> Some("KEEP-D")))
+    assert(led.enrich("device_serial")(resolve) == 3) // idempotent
     assert(state() == s1)
-    assert(led.read().count() == 3)
+    assert(led.read().count() == 4)
   }
 
   test("second concurrent writer fails fast; lock releases on completion and error") {
     val path = tmp()
     val led = new Ledger(spark, path)
     led.init(df(Seq(rec("a"), rec("b"))))
-    val updates = df(Seq(rec("a", serial = Some("S-A"))))
-      .select($"hash", $"device_serial", $"device_id", $"patient_id",
-        $"dmp_dataset", $"dmp_id")
-    // a writer holds the lock (as another process would mid-merge):
+    val resolve = setSerials("a" -> "S-A") _
+    // a writer holds the lock (as another process would mid-rewrite):
     // every mutating entry point must fail fast, before staging anything
     val lock = new java.io.File(s"${path}_lock")
     assert(lock.createNewFile())
     java.nio.file.Files.writeString(lock.toPath, "pid=999999 op=test")
     for (op <- Seq(
-      () => led.mergeNoOverride(updates),
+      () => led.enrich("device_serial")(resolve),
       () => led.append(df(Seq(rec("z")))),
       () => led.markUploaded(Seq("G-1").toDF("dmp_id")))) {
       val e = intercept[java.util.ConcurrentModificationException](op())
@@ -101,12 +105,10 @@ class LedgerSpec extends SparkSpec {
       "a lock-blocked writer must not have staged anything")
     // stale-lock remediation + normal release
     assert(led.forceReleaseLock())
-    led.mergeNoOverride(updates)
-    assert(!lock.exists(), "lock must release after a successful merge")
-    // lock releases even when the merge itself fails (bad field)
-    intercept[IllegalArgumentException](
-      led.mergeNoOverride(updates.withColumnRenamed("device_serial", "nope"),
-        fields = Seq("nope")))
+    led.enrich("device_serial")(resolve)
+    assert(!lock.exists(), "lock must release after a successful enrich")
+    // lock releases even when the enrich itself fails (bad field)
+    intercept[IllegalArgumentException](led.enrich("is_uploaded")(identity))
     assert(!lock.exists(), "lock must release when the guarded body throws")
     val got = led.read().select($"manufacturer_ref", $"device_serial")
       .as[(String, Option[String])].collect().toMap
@@ -160,10 +162,11 @@ class LedgerSpec extends SparkSpec {
     assert(got == Seq("r0"))
   }
 
-  test("bucketWidth=2 lays out 2-hex-char buckets and merge rewrites only touched ones") {
+  test("bucketWidth=2 lays out 2-hex-char buckets and markUploaded rewrites only touched ones") {
     val path = tmp()
     val led = new Ledger(spark, path, bucketWidth = 2)
-    val rows = (0 until 64).map(i => rec(s"r$i"))
+    val rows = (0 until 64).map(i =>
+      rec(s"r$i", dmpId = Some(if (i == 0) "G1" else "G2")))
     led.init(df(rows))
     val dirs = new java.io.File(path).listFiles()
       .filter(_.getName.startsWith("bucket=")).map(_.getName).toSeq
@@ -173,22 +176,18 @@ class LedgerSpec extends SparkSpec {
         .map(d => d.getName ->
           d.listFiles().toSeq.map(f => (f.getName, f.lastModified())).sorted)
         .toMap
-    val target = rows.head
-    val targetBucket = "bucket=" + target._1.substring(0, 2)
+    val targetBucket = "bucket=" + rows.head._1.substring(0, 2)
     val before = bucketFiles()
-    led.mergeNoOverride(df(Seq(rec("r0", serial = Some("S-0"))))
-      .select($"hash", $"device_serial", $"device_id", $"patient_id",
-        $"dmp_dataset", $"dmp_id"))
+    led.markUploaded(Seq("G1").toDF("dmp_id"))
     val after = bucketFiles()
     assert(before.keySet == after.keySet)
     before.keySet.filterNot(_ == targetBucket).foreach { b =>
       assert(before(b) == after(b), s"bucket $b was rewritten")
     }
     assert(before(targetBucket) != after(targetBucket))
-    val got = led.read().select($"manufacturer_ref", $"device_serial")
-      .as[(String, Option[String])].collect().toMap
-    assert(got("r0").contains("S-0"))
-    assert(got.count(_._2.nonEmpty) == 1)
+    val got = led.read().filter($"is_uploaded").select($"manufacturer_ref")
+      .as[String].collect().toSeq
+    assert(got == Seq("r0"))
   }
 
   test("opening a ledger at a mismatched bucketWidth fails fast, not silently") {
@@ -196,9 +195,7 @@ class LedgerSpec extends SparkSpec {
     new Ledger(spark, path, bucketWidth = 2).init(df(Seq(rec("a"), rec("b"))))
     val wrong = new Ledger(spark, path) // default width 1 vs on-disk 2
     val e = intercept[IllegalArgumentException](
-      wrong.mergeNoOverride(df(Seq(rec("a", serial = Some("X"))))
-        .select($"hash", $"device_serial", $"device_id", $"patient_id",
-          $"dmp_dataset", $"dmp_id")))
+      wrong.enrich("device_serial")(setSerials("a" -> "X")))
     assert(e.getMessage.contains("width"))
   }
 
@@ -231,9 +228,7 @@ class LedgerSpec extends SparkSpec {
       .withColumn("bucket", substring($"hash", 1, 1))
       .write.partitionBy("bucket").mode("overwrite").parquet(stale.getPath)
     val before = led.read().orderBy("manufacturer_ref").collect().toSeq
-    led.mergeNoOverride(df(Seq(rec("b", serial = Some("S-B"))))
-      .select($"hash", $"device_serial", $"device_id", $"patient_id",
-        $"dmp_dataset", $"dmp_id"))
+    led.enrich("device_serial")(setSerials("b" -> "S-B"))
     val got = led.read().select($"manufacturer_ref", $"device_serial")
       .as[(String, Option[String])].collect().toMap
     // only the intended update landed; nothing from the stale dir leaked

@@ -31,9 +31,13 @@ class LedgerStoreSpec extends SparkSpec {
   private def df(rows: Seq[(String, String, String, Timestamp, Timestamp, Map[String, String], Option[String], Option[String], Option[String], Option[String], Option[String], Boolean)]): DataFrame =
     rows.toDF(cols: _*)
 
-  private def updates(rows: DataFrame): DataFrame =
-    rows.select($"hash", $"device_serial", $"device_id", $"patient_id",
-      $"dmp_dataset", $"dmp_id")
+  /** A resolver that overwrites `device_serial` unconditionally — the given
+    * refs get their serial, every other row gets null — so any value that
+    * survives an existing one is the store's no-override guard at work. */
+  private def setSerials(serials: (String, String)*)(rows: DataFrame): DataFrame =
+    rows.withColumn("device_serial", serials.foldLeft(lit(null).cast("string")) {
+      case (v, (ref, serial)) => when($"manufacturer_ref" === ref, serial).otherwise(v)
+    })
 
   test("MongoLedger round-trip (live store when GRAFT_MONGO_URI, else offline fake)") {
     // Same assertions either way: against a live Mongo + connector when
@@ -52,19 +56,20 @@ class LedgerStoreSpec extends SparkSpec {
     led.append(df(Seq(rec("b"), rec("c", dmpId = Some("G1")))))
     assert(led.read().count() == 3)
 
-    led.mergeNoOverride(updates(df(Seq(
-      rec("a", serial = Some("NEW")), rec("b", serial = Some("S-B"))))))
+    assert(led.enrich("device_serial")(
+      setSerials("a" -> "NEW", "b" -> "S-B")) == 2)
     def serials() = led.read().select($"manufacturer_ref", $"device_serial")
       .as[(String, Option[String])].collect().toMap
     val s1 = serials()
-    assert(s1("a").isEmpty || s1("a").contains("NEW")) // see next line
-    // rec("a") carries no serial in init, so NEW advances the null; pin
-    // the no-override side with a second merge trying to overwrite it
-    led.mergeNoOverride(updates(df(Seq(rec("a", serial = Some("CLOBBER"))))))
+    assert(s1 == Map("a" -> Some("NEW"), "b" -> Some("S-B"), "c" -> None))
+    // a second resolver clobbers a, nulls b and fills c
+    assert(led.enrich("device_serial")(setSerials("a" -> "CLOBBER",
+      "c" -> "S-C")) == 3)
     val s2 = serials()
-    assert(s2("a").contains("NEW"))  // existing value wins
-    assert(s2("b").contains("S-B"))
-    assert(s2("c").isEmpty)          // unmatched untouched
+    assert(s2 == Map("a" -> Some("NEW"), "b" -> Some("S-B"), // existing wins
+      "c" -> Some("S-C")))
+    assert(led.enrich("device_serial")(setSerials()) == 3) // idempotent
+    assert(serials() == s2)
     assert(led.read().count() == 3)  // replace-upsert never duplicates
 
     led.markUploaded(Seq("G1").toDF("dmp_id"))

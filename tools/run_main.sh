@@ -1,8 +1,10 @@
 #!/bin/bash
 # Run a graft main via bare java (dodges the sbt lock). Usage:
 #   tools/run_main.sh graft.Bench [args...]
-# Env passthrough: SPARK_GRAFT_* work as with sbt runMain.
-CP="/root/repo/target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
+# Env passthrough: SPARK_GRAFT_* work as with sbt runMain. Runs the classes
+# `sbt compile` left in this clone, on the jars of the Spark at $SPARK_HOME.
+ROOT="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)"
+CP="$ROOT/target/scala-2.13/classes:$(ls "${SPARK_HOME:?set SPARK_HOME}"/jars/*.jar | tr '\n' ':')"
 ADD_OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
          java.util java.util.concurrent java.util.concurrent.atomic; do

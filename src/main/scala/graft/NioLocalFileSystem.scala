@@ -1,0 +1,54 @@
+package graft
+
+import java.nio.file.{FileSystems, Files}
+import java.nio.file.attribute.PosixFilePermission
+
+import org.apache.hadoop.fs.{LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
+
+/** The `file:` filesystem [[Tables.session]] installs
+  * (`spark.hadoop.fs.file.impl`): Hadoop's checksummed `LocalFileSystem`
+  * (`.crc` sidecars are still written and verified) over a raw filesystem
+  * that sets permissions in-process.
+  *
+  * Without the native libhadoop, `RawLocalFileSystem.setPermission` forks
+  * `chmod` for every file, `.crc` sidecar and directory a write creates —
+  * about 540 processes per EtlJob DAG run. [[NioLocalFileSystem.Raw]] applies
+  * the same mode bits with `Files.setPosixFilePermissions` instead.
+  */
+class NioLocalFileSystem extends LocalFileSystem(new NioLocalFileSystem.Raw)
+
+object NioLocalFileSystem {
+  private val unixAttrs =
+    FileSystems.getDefault.supportedFileAttributeViews.contains("unix")
+
+  /** `RawLocalFileSystem` whose `setPermission` runs in-process. It keeps
+    * Hadoop's own path wherever NIO would set a different mode than
+    * `chmod <%04o mode>` does: a sticky bit (NIO sets only the nine rwx
+    * bits), a directory carrying setuid/setgid (`chmod 0755` keeps those on
+    * a directory, chmod(2) clears them), and a non-POSIX default filesystem.
+    */
+  class Raw extends RawLocalFileSystem {
+    override def setPermission(p: Path, permission: FsPermission): Unit = {
+      val mode = permission.toShort.toInt // rwx bits, plus 01000 if sticky
+      val file = pathToFile(p).toPath
+      if (!unixAttrs || (mode & ~0x1ff) != 0 || setIdDir(file)) // 0x1ff = 0777
+        super.setPermission(p, permission)
+      else Files.setPosixFilePermissions(file, rwx(mode))
+    }
+  }
+
+  /** The nine rwx bits of `mode` (PosixFilePermission's ordinal 0 is 0400). */
+  private def rwx(mode: Int): java.util.Set[PosixFilePermission] = {
+    val s = java.util.EnumSet.noneOf(classOf[PosixFilePermission])
+    PosixFilePermission.values
+      .filter(b => (mode & (0x100 >> b.ordinal)) != 0).foreach(s.add)
+    s
+  }
+
+  private def setIdDir(file: java.nio.file.Path): Boolean = {
+    val st = Files.getAttribute(file, "unix:mode").asInstanceOf[Int]
+    // S_IFMT == S_IFDIR && (S_ISUID | S_ISGID)
+    (st & 0xf000) == 0x4000 && (st & 0xc00) != 0
+  }
+}

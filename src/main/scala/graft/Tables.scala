@@ -105,7 +105,9 @@ object Tables {
     else spark.read.parquet(s"$dir/$name.parquet")
 
   /** Session factory used by mains and tests: UTC (oracle parity), shuffle
-    * partitions sized to local cores (not the 200 default), AQE on.
+    * partitions sized to local cores (not the 200 default), AQE on, and
+    * `file:` paths through [[NioLocalFileSystem]] (no `chmod` fork per
+    * created file; `hdfs:`/`s3a:` paths are unaffected).
     */
   def session(appName: String, cores: String): SparkSession = {
     val spark = SparkSession.builder()
@@ -117,6 +119,7 @@ object Tables {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
       .getOrCreate()
     // SPARK_GRAFT_STATE_STORE=rocksdb — the 100 TB posture for unbounded
     // streaming state (see graft.streaming.StateStores for the trade-off)

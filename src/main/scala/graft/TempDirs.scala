@@ -26,7 +26,10 @@ object TempDirs {
 
   @volatile private var hookInstalled = false
 
-  /** Drop-in replacement for Files.createTempDirectory(prefix). */
+  /** Drop-in replacement for Files.createTempDirectory(prefix). The dir's
+    * name carries this JVM's PID (`<prefix>-pid<N>-<random>`), the owner
+    * marker [[sweepStale]] checks; in the name it survives a write that
+    * overwrites the dir's contents and adds no file to a dir Spark reads. */
   def create(prefix: String): Path = {
     if (!hookInstalled) synchronized {
       if (!hookInstalled) {
@@ -34,10 +37,19 @@ object TempDirs {
         hookInstalled = true
       }
     }
-    val p = Files.createTempDirectory(prefix)
+    val p = Files.createTempDirectory(s"$prefix-pid${ProcessHandle.current.pid}-")
     registered.add(p)
     p
   }
+
+  private val OwnerTag = "-pid(\\d+)-".r
+
+  /** The owner PID [[create]] put in `dir`'s name, if it has one. */
+  private[graft] def owner(dir: Path): Option[Long] =
+    OwnerTag.findFirstMatchIn(dir.getFileName.toString).map(_.group(1).toLong)
+
+  private def alive(pid: Long): Boolean =
+    ProcessHandle.of(pid).map[Boolean](_.isAlive).orElse(false)
 
   /** Best-effort recursive delete; never throws (a busy file at JVM exit
     * must not mask the query result). */
@@ -59,25 +71,26 @@ object TempDirs {
     while (p != null) { deleteRecursively(p); p = registered.poll() }
   }
 
-  /** Delete stale graft-* dirs a crashed earlier run left in
-    * java.io.tmpdir — call once at main startup, before any query runs.
-    * Only dirs whose mtime is over an hour old are touched (r16 ADVICE):
-    * a graft main running CONCURRENTLY (sbt test alongside Bench, Verify
-    * overlapping StreamBench) must not lose live checkpoints/staging —
-    * its dirs are minutes old; true crash litter is hours old by the
-    * next run.
+  /** Delete stale graft-* dirs a crashed earlier run left in `in`
+    * (java.io.tmpdir by default) — call once at main startup, before any
+    * query runs. A graft main running CONCURRENTLY (sbt test alongside
+    * Bench, Verify overlapping StreamBench) must not lose live
+    * checkpoints/staging, so a dir is deleted only when its mtime is over
+    * an hour old (r16 ADVICE) AND the owner PID in its name (see [[create]])
+    * is not alive: a live run older than an hour keeps its dirs. A graft-*
+    * dir with no owner in its name goes by age alone.
     */
-  def sweepStale(): Unit = {
-    val tmp = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir", "/tmp"))
+  def sweepStale(in: Path = java.nio.file.Paths.get(
+      System.getProperty("java.io.tmpdir", "/tmp"))): Unit = {
     val cutoff = System.currentTimeMillis() - 60L * 60L * 1000L
     try {
       import scala.jdk.CollectionConverters._
-      Files.list(tmp).iterator().asScala
+      Files.list(in).iterator().asScala
         .filter(_.getFileName.toString.startsWith("graft-"))
         .filter(p =>
           try Files.getLastModifiedTime(p).toMillis < cutoff
           catch { case _: Exception => false })
+        .filterNot(p => owner(p).exists(alive))
         .foreach(deleteRecursively)
     } catch { case _: Exception => () }
   }

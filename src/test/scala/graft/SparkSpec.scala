@@ -3,8 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session for all suites: one JVM-wide SparkSession (getOrCreate),
-  * UTC, small shuffle width for test speed.
+/** Shared session for all suites: one JVM-wide SparkSession built by the
+  * mains' own factory, [[Tables.session]], at 4 cores (small shuffle width
+  * for test speed).
   */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
@@ -12,20 +13,11 @@ trait SparkSpec extends AnyFunSuite {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .withExtensions(new graft.expressions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // catalog tables (BucketedSpec) land in a per-JVM scratch dir, never
-      // the repo's ./spark-warehouse
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+    // catalog tables (BucketedSpec) land in a per-JVM scratch dir, never the
+    // repo's ./spark-warehouse; a static conf, so it is set before the
+    // session is built (SparkConf reads spark.* system properties)
+    System.setProperty("spark.sql.warehouse.dir",
+      java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
+    Tables.session("graft-tests", "4")
   }
 }

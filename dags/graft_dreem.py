@@ -30,7 +30,6 @@ COMMON_ARGS = [
     "--assignments", "{{ var.value.graft_assignments }}",
     "--workdir", "{{ var.value.graft_workdir }}/{{ run_id }}",
     "--today", "{{ ds }}",
-    "--ledger-bucket-width", "{{ var.value.graft_ledger_bucket_width }}",
 ]
 
 with DAG(

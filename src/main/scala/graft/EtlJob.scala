@@ -25,7 +25,7 @@ import graft.sources.LookupCsv
   *     --dmp-url <url> --dmp-jwt-url <url> --dmp-dataset <id>
   *     [--drm-user <login>] [--dmp-user <login>] [--stage <task-id>]
   *     [--cutoff 12:00:00] [--today 2024-02-15]
-  *     [--upload-limit N] [--ledger-bucket-width k]
+  *     [--upload-limit N]
   *     [--ledger-format parquet|mongodb [--mongo-uri <uri>] [--mongo-db <db>]]
   *
   * `--incoming` schema: manufacturer_ref, device_type, start, end, meta
@@ -204,9 +204,8 @@ object EtlJob {
   }
 
   // --ledger-format selects the storage strategy:
-  //  - "parquet" (default): hash-prefix-partitioned Parquet;
-  //    --ledger-bucket-width picks 16^k buckets (k=3 → 4096 at 100 TB).
-  //    Fixed per table — Ledger fail-fasts on a mismatch.
+  //  - "parquet" (default): one Parquet directory (--ledger) on HDFS or a
+  //    local/NFS mount; Ledger refuses other filesystems before any write.
   //  - "mongodb": the reference's actual store (--ledger is the
   //    collection; --mongo-uri/--mongo-db configure the connection; needs
   //    the Mongo Spark connector jar on the classpath).
@@ -214,8 +213,7 @@ object EtlJob {
                          opts: Map[String, String]): LedgerStore =
     opts.getOrElse("ledger-format", "parquet") match {
       case "parquet" =>
-        new Ledger(spark, opts("ledger"),
-          opts.getOrElse("ledger-bucket-width", "1").toInt)
+        new Ledger(spark, opts("ledger"))
       case "mongodb" =>
         new MongoLedger(spark,
           opts.getOrElse("mongo-uri", "mongodb://localhost:27017"),

@@ -3,8 +3,10 @@ package graft
 import java.nio.file.{FileSystems, Files}
 import java.nio.file.attribute.PosixFilePermission
 
-import org.apache.hadoop.fs.{LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FileAlreadyExistsException, FSDataOutputStream,
+  LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.Progressable
 
 /** The `file:` filesystem [[Tables.session]] installs
   * (`spark.hadoop.fs.file.impl`): Hadoop's checksummed `LocalFileSystem`
@@ -15,8 +17,13 @@ import org.apache.hadoop.fs.permission.FsPermission
   * `chmod` for every file, `.crc` sidecar and directory a write creates —
   * about 540 processes per EtlJob DAG run. [[NioLocalFileSystem.Raw]] applies
   * the same mode bits with `Files.setPosixFilePermissions` instead.
+  *
+  * It also makes `create(…, overwrite = false)` exclusive, which the ledger's
+  * writer lock relies on (see [[NioLocalFileSystem.Raw]]).
   */
-class NioLocalFileSystem extends LocalFileSystem(new NioLocalFileSystem.Raw)
+class NioLocalFileSystem(raw: NioLocalFileSystem.Raw) extends LocalFileSystem(raw) {
+  def this() = this(new NioLocalFileSystem.Raw)
+}
 
 object NioLocalFileSystem {
   private val unixAttrs =
@@ -27,8 +34,29 @@ object NioLocalFileSystem {
     * `chmod <%04o mode>` does: a sticky bit (NIO sets only the nine rwx
     * bits), a directory carrying setuid/setgid (`chmod 0755` keeps those on
     * a directory, chmod(2) clears them), and a non-POSIX default filesystem.
+    *
+    * Its `create(…, overwrite = false)` — the overload every create of the
+    * checksummed filesystem reaches — claims the file with an atomic
+    * create-new (`Files.createFile`, O_EXCL) before Hadoop opens it, so of
+    * two racing creators exactly one wins. Hadoop's own checks `exists` and
+    * then opens, and both racers can pass the check.
     */
   class Raw extends RawLocalFileSystem {
+    override def create(f: Path, permission: FsPermission, overwrite: Boolean,
+        bufferSize: Int, replication: Short, blockSize: Long,
+        progress: Progressable): FSDataOutputStream = {
+      def open() = super.create(f, permission, true, bufferSize, replication,
+        blockSize, progress)
+      if (overwrite) return open()
+      val file = pathToFile(f).toPath
+      Option(f.getParent).foreach(p => mkdirs(p))
+      try Files.createFile(file) catch {
+        case _: java.nio.file.FileAlreadyExistsException =>
+          throw new FileAlreadyExistsException(s"File already exists: $f")
+      }
+      try open() catch { case e: Throwable => Files.deleteIfExists(file); throw e }
+    }
+
     override def setPermission(p: Path, permission: FsPermission): Unit = {
       val mode = permission.toShort.toInt // rwx bits, plus 01000 if sticky
       val file = pathToFile(p).toPath

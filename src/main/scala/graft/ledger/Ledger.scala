@@ -1,131 +1,119 @@
 package graft.ledger
 
+import org.apache.hadoop.fs.{FileAlreadyExistsException, FileStatus, FileSystem, Path}
+import org.apache.hadoop.hdfs.DistributedFileSystem
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.NioLocalFileSystem
 
 /** Parquet-backed mutable ledger with append, no-override enrichment and
   * the upload flag — the reference's MongoDB collection semantics
   * (db.py:66-231) on immutable columnar storage, with no external table
   * format available offline (SURVEY.md §7.5.1).
   *
-  * Layout: hash-prefix bucketed partitions (`bucket=<first k hex chars>` of
-  * the sha256 key → 16^k buckets, `bucketWidth` = k). Every rewrite takes
-  * the writer lock, recovers a crashed publish and checks the width, then:
-  *   1. [[enrich]] maps the live table in one pass — the resolution runs
+  * Layout: one flat parquet directory at `path`. Every file operation goes
+  * through the path's Hadoop `FileSystem`, which must be one where a
+  * directory `rename` is atomic and `create(…, overwrite = false)` is
+  * exclusive; the constructor refuses any other. Every entry point but
+  * [[exists]] takes the writer lock and recovers a crashed publish first:
+  *   1. [[append]] writes the unseen records into the live directory;
+  *   2. [[enrich]] maps the live table in one pass — the resolution runs
   *      over the stored rows, existing values win (coalesce against a copy
   *      of the field taken before the resolution, matching
   *      tests/hooks/test_db.py:16-47), and the rows carrying the field are
   *      counted by an observation on that write;
-  *   2. [[markUploaded]] finds the buckets holding the flagged groups and
-  *      rewrites only those (partition pruning);
-  *   3. both publish the rewritten buckets through [[writeBuckets]]
-  *      (stage, check `_SUCCESS`, rename per bucket).
+  *   3. [[markUploaded]] flags whole groups in one mapped pass;
+  *   4. enrich and markUploaded publish the rewritten table through
+  *      [[publish]] (stage, check `_SUCCESS`, swap by two renames).
   *
-  * At 100 TB: pick bucketWidth=3 → 4096 buckets of ~25 GB each; flagging
-  * groups that touch m buckets rewrites m/4096 of the table. An enrichment
-  * rewrites every bucket, as a resolution step can reach any row. The width
-  * is fixed at table creation (it is the physical layout); widening is a
-  * one-off re-init, and a width mismatch against the on-disk layout
-  * fail-fasts rather than silently missing every bucket in the prune
-  * filter. Deletes stay quarantined, as in the reference (db.py:127-133):
-  * append + update only.
+  * Each rewrite copies the whole table, the copy-on-write cost a table
+  * format would pay per touched file. Deletes stay quarantined, as in the
+  * reference (db.py:127-133): append + update only.
   */
-final class Ledger(spark: SparkSession, path: String, bucketWidth: Int = 1)
-    extends LedgerStore {
-  require(bucketWidth >= 1 && bucketWidth <= 4,
-    s"bucketWidth must be 1..4 (16..65536 buckets), got $bucketWidth")
+final class Ledger(spark: SparkSession, path: String) extends LedgerStore {
+  private val liveDir = new Path(path)
+  private val fs = Ledger.checked(liveDir,
+    liveDir.getFileSystem(spark.sparkContext.hadoopConfiguration))
 
-  private def withBucket(df: DataFrame): DataFrame =
-    df.withColumn("bucket", substring(col("hash"), 1, bucketWidth))
+  private def sibling(suffix: String): Path =
+    new Path(liveDir.getParent, liveDir.getName + suffix)
 
-  private def bucketDirs(): Array[java.io.File] =
-    Option(new java.io.File(path).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("bucket="))
+  private val lock = sibling("_lock")
 
-  /** A bucket dir holds the rows: a zero-row first append leaves a bare
-    * `_SUCCESS`, which Spark cannot infer a schema from. */
-  def exists: Boolean = bucketDirs().nonEmpty
-
-  /** The prune filters compare `bucket` partition values against prefixes of
-    * the configured width — opening a table written at a different width
-    * would make every filter miss (a silently-dropped rewrite). Check the
-    * on-disk dir names once per mutating entry point.
-    */
-  private def validateWidth(): Unit = {
-    bucketDirs().headOption.foreach { d =>
-      val w = d.getName.stripPrefix("bucket=").length
-      require(w == bucketWidth,
-        s"ledger at $path is bucketed at width $w but Ledger was opened " +
-          s"with bucketWidth=$bucketWidth — widths must match the layout")
-    }
+  /** The live directory's entries. A `bucket=` directory is the layout of
+    * earlier versions, which no entry point reads or rewrites. */
+  private def entries(): Array[FileStatus] = {
+    val all = if (fs.exists(liveDir)) fs.listStatus(liveDir) else Array.empty[FileStatus]
+    if (all.exists(s => s.isDirectory && s.getPath.getName.startsWith("bucket=")))
+      throw new IllegalStateException(s"ledger at $path has the retired " +
+        "bucket=<hash prefix> layout; rewrite it once to a new path — " +
+        s"`new Ledger(spark, <new path>).init(spark.read.parquet(\"$path\")" +
+        ".drop(\"bucket\"))` — and point --ledger there")
+    all
   }
 
-  /** Startup/entry recovery for a crash inside a previous publish: a kill
-    * between "old bucket -> trash" and "staged bucket -> live" leaves that
-    * bucket absent from the live table, with its old copy in a
-    * `_trash_<runId>` dir and its new copy in `_staging_<runId>`. Restore
-    * any trashed bucket whose live dir is missing (per-bucket old state —
-    * consistent with the publish contract), then drop the orphan dirs
-    * (unique names: they can never belong to the current call). The ledger
-    * is single-writer by design, as its Mongo counterpart was.
+  /** A part file holds the rows: a bare `_SUCCESS` holds no schema. */
+  def exists: Boolean = entries().exists(_.getPath.getName.startsWith("part-"))
+
+  /** Recovery for a crash inside a previous publish: a kill between
+    * "live -> trash" and "staging -> live" leaves no live table, with its
+    * old copy in a `_trash_<runId>` dir. Restore that copy, then drop the
+    * orphan dirs (unique names: they can never belong to the current call).
+    * Runs only under the writer lock, so it never touches a running writer's
+    * staging or trash.
     */
   private def recoverOrphans(): Unit = {
-    val self = new java.io.File(path)
-    val parent = self.getParentFile
-    if (parent == null || !parent.exists()) return
-    val base = self.getName
-    Option(parent.listFiles()).getOrElse(Array.empty).foreach { d =>
-      if (d.getName.startsWith(base + "_trash_")) {
-        Option(d.listFiles()).getOrElse(Array.empty).foreach { old =>
-          val target = new java.io.File(path, old.getName)
-          if (!target.exists()) {
-            java.nio.file.Files.move(old.toPath, target.toPath,
-              java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-          }
-        }
-        deleteRecursively(d)
-        spark.catalog.refreshByPath(path)
-      } else if (d.getName.startsWith(base + "_staging_")) {
-        deleteRecursively(d) // never published; safe to drop
-      }
+    val (trash, staging) = (liveDir.getName + "_trash_", liveDir.getName + "_staging_")
+    // the parent exists: it holds the lock
+    val orphans = fs.listStatus(liveDir.getParent, (p: Path) =>
+      p.getName.startsWith(trash) || p.getName.startsWith(staging))
+    val trashed = orphans.filter(_.getPath.getName.startsWith(trash))
+    if (trashed.nonEmpty && !fs.exists(liveDir)) {
+      val newest = trashed.maxBy(_.getModificationTime).getPath
+      if (!fs.rename(newest, liveDir))
+        throw new java.io.IOException(s"could not restore $newest to $liveDir")
+      spark.catalog.refreshByPath(path)
     }
+    orphans.map(_.getPath).filter(fs.exists).foreach(fs.delete(_, true))
   }
 
+  /** Recovers under the writer lock first, so it fails fast while another
+    * writer holds it. */
   def read(): DataFrame = {
-    recoverOrphans()
-    validateWidth()
-    spark.read.parquet(path).drop("bucket")
+    locked("read")(())
+    spark.read.parquet(path)
   }
 
   /** The ledger is SINGLE-writer (as its Mongo counterpart was via document
-    * atomicity): two concurrent rewrites could interleave per-bucket renames
-    * and publish a mix of both runs. Every mutating entry point takes this
-    * exclusive lock — an atomic O_EXCL create of `<path>_lock` — so the
-    * second writer fails FAST (before any staging work) instead of
-    * corrupting buckets. The lock carries pid/time/op for the error
-    * message. A writer that crashed while holding it leaves the file
-    * behind: recovery is (1) confirm no writer process is alive, (2)
-    * [[forceReleaseLock]], (3) rerun — recoverOrphans then restores any
-    * half-published bucket.
+    * atomicity): two concurrent rewrites could interleave their renames and
+    * publish a mix of both runs. Every entry point takes this exclusive
+    * lock — `create(<path>_lock, overwrite = false)` — so a second writer
+    * fails FAST (before any staging work) instead of corrupting the table.
+    * The lock carries pid/time/op for the error message. A writer that
+    * crashed while holding it leaves the file behind: recovery is (1)
+    * confirm no writer process is alive, (2) [[forceReleaseLock]], (3)
+    * rerun — recoverOrphans then restores a half-published table.
     */
   private def withWriterLock[T](op: String)(body: => T): T = {
-    val lock = new java.io.File(s"${path}_lock")
-    Option(lock.getParentFile).foreach(_.mkdirs())
-    if (!lock.createNewFile()) {
-      val held = try java.nio.file.Files.readString(lock.toPath)
-        catch { case _: Exception => "<unreadable>" }
-      throw new java.util.ConcurrentModificationException(
-        s"ledger at $path is locked by another writer [$held]; the ledger " +
-          "is single-writer — if that writer crashed, verify it is gone " +
-          "and call forceReleaseLock()")
+    val out = try fs.create(lock, false) catch {
+      case _: FileAlreadyExistsException =>
+        val held = try {
+          val in = fs.open(lock)
+          try new String(in.readAllBytes(), "UTF-8") finally in.close()
+        } catch { case _: Exception => "<unreadable>" }
+        throw new java.util.ConcurrentModificationException(
+          s"ledger at $path is locked by another writer [$held]; the ledger " +
+            "is single-writer — if that writer crashed, verify it is gone " +
+            "and call forceReleaseLock()")
     }
     try {
-      java.nio.file.Files.writeString(lock.toPath,
-        s"pid=${ProcessHandle.current().pid()} " +
-          s"at=${java.time.Instant.now()} op=$op")
+      try out.write((s"pid=${ProcessHandle.current().pid()} " +
+        s"at=${java.time.Instant.now()} op=$op").getBytes("UTF-8"))
+      finally out.close()
       body
     } finally {
-      lock.delete()
+      fs.delete(lock, false)
       ()
     }
   }
@@ -133,12 +121,11 @@ final class Ledger(spark: SparkSession, path: String, bucketWidth: Int = 1)
   /** Break a stale writer lock after a crash — ONLY when the holding
     * process is confirmed dead (see [[withWriterLock]]).
     */
-  def forceReleaseLock(): Boolean = new java.io.File(s"${path}_lock").delete()
+  def forceReleaseLock(): Boolean = fs.delete(lock, false)
 
   /** Initialize (overwrite-all) with a first batch. */
-  def init(records: DataFrame): Unit = withWriterLock("init") {
-    withBucket(records).write
-      .partitionBy("bucket").mode(SaveMode.Overwrite).parquet(path)
+  def init(records: DataFrame): Unit = locked("init") {
+    records.write.mode(SaveMode.Overwrite).parquet(path)
     spark.catalog.refreshByPath(path)
   }
 
@@ -148,13 +135,13 @@ final class Ledger(spark: SparkSession, path: String, bucketWidth: Int = 1)
   def append(records: DataFrame): Long = locked("append") {
     val fresh = if (!exists) records
       else records.join(live().select("hash"), Seq("hash"), "left_anti")
-    LedgerStore.countObserved(withBucket(fresh)) { df =>
-      df.write.partitionBy("bucket").mode(SaveMode.Append).parquet(path)
+    LedgerStore.countObserved(fresh) { df =>
+      df.write.mode(SaveMode.Append).parquet(path)
       spark.catalog.refreshByPath(path)
     }
   }
 
-  /** [[LedgerStore.enrich]] as one mapped rewrite of every bucket: no join
+  /** [[LedgerStore.enrich]] as one mapped rewrite of the table: no join
     * against the ledger itself, and the returned count is observed on the
     * staging write.
     */
@@ -162,113 +149,87 @@ final class Ledger(spark: SparkSession, path: String, bucketWidth: Int = 1)
     locked("enrich") {
       val fill = LedgerStore.fillNulls(field)(resolve) // checks field
       if (!exists) 0L
-      else LedgerStore.countObserved(fill(live().drop("bucket")), col(field)) {
-        df => writeBuckets(withBucket(df.drop(LedgerStore.prior)))
+      else LedgerStore.countObserved(fill(live()), col(field)) {
+        df => publish(df.drop(LedgerStore.prior))
       }
     }
 
   /** Terminal flag for whole upload groups (db.py:189-196): set
-    * is_uploaded=true for every record of the given dmp_ids.
-    *
-    * Bucket-pruned: a cheap semi-join scan (dmp_id + bucket columns only)
-    * finds which hash-prefix buckets actually contain the groups, and only
-    * those are rewritten — flagging one upload group at 100 TB touches
-    * k/|buckets| of the table, not all of it. No touched bucket, no publish.
+    * is_uploaded=true for every record of the given dmp_ids. No ids, no
+    * publish.
     */
   def markUploaded(dmpIds: DataFrame): Unit = locked("markUploaded") {
     val ids = broadcast(dmpIds.select(col("dmp_id").as("_flag_id")).distinct())
-    val hit = col("dmp_id") === col("_flag_id")
-    val buckets = live().join(ids, hit, "left_semi").select("bucket")
-      .distinct().collect().map(_.getString(0)) // bounded: ≤16^k bucket ids
-    if (buckets.nonEmpty)
-      writeBuckets(live().filter(col("bucket").isin(buckets.toSeq: _*))
-        .join(ids, hit, "left")
+    if (!dmpIds.isEmpty)
+      publish(live().join(ids, col("dmp_id") === col("_flag_id"), "left")
         .withColumn("is_uploaded",
           col("is_uploaded") || col("_flag_id").isNotNull)
         .drop("_flag_id"))
   }
 
-  /** The live table, with its `bucket` partition column. */
   private def live(): DataFrame = spark.read.parquet(path)
 
-  /** Every mutation: under the writer lock, recover a crashed publish and
-    * validate the layout before `body` looks at the table. */
+  /** Every entry point: under the writer lock, check the layout and
+    * recover a crashed publish before `body` looks at the table. */
   private def locked[T](op: String)(body: => T): T = withWriterLock(op) {
+    entries()
     recoverOrphans()
-    validateWidth()
     body
   }
 
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(deleteRecursively)
-    f.delete()
-    ()
-  }
-
-  /** Overwrite the buckets present in `df` via stage-then-rename:
+  /** Replace the table with `df` via stage-then-rename:
     *
-    *  1. write the rewritten buckets to a UNIQUE staging dir (a crashed
-    *     previous run can never leave stale partitions that a later call
-    *     silently republishes — the failure mode of a fixed staging path);
+    *  1. write `df` to a UNIQUE staging dir (a crashed previous run can
+    *     never leave stale files that a later call silently republishes —
+    *     the failure mode of a fixed staging path);
     *  2. require Spark's `_SUCCESS` marker before publishing (a partial
     *     staging write is abandoned, never swapped in);
-    *  3. publish each bucket with an atomic directory rename (old bucket
-    *     moved to a trash dir first, so a crash mid-publish leaves every
-    *     bucket fully old or fully new — never half-written).
+    *  3. move live to a unique trash dir, then staging to live — in that
+    *     order, because a directory rename onto an existing directory
+    *     nests the source inside it instead of failing. A crash between
+    *     the two leaves the old table in trash, which recoverOrphans puts
+    *     back.
     *
-    * The parquet source cannot overwrite partitions it is concurrently
-    * reading, so the staging materialization is also what makes the rewrite
-    * read-its-own-input safe; at scale it is the standard copy-on-write
-    * cost (Delta/Iceberg rewrite the same files under the hood — this is
-    * the no-table-format-offline stand-in, with the atomicity window
-    * narrowed to per-bucket renames instead of a whole second Spark write).
+    * The parquet source cannot overwrite files it is concurrently reading,
+    * so the staging materialization is also what makes the rewrite
+    * read-its-own-input safe.
     */
-  private def writeBuckets(df: DataFrame): Unit = {
+  private def publish(df: DataFrame): Unit = {
     val runId = java.util.UUID.randomUUID().toString.take(8)
-    val staging = new java.io.File(s"${path}_staging_$runId")
-    df.write.partitionBy("bucket").mode(SaveMode.Overwrite)
-      .parquet(staging.getPath)
-    require(new java.io.File(staging, "_SUCCESS").exists(),
-      s"staging write incomplete (no _SUCCESS): ${staging.getPath} — not publishing")
-    val trash = new java.io.File(s"${path}_trash_$runId")
-    trash.mkdirs()
+    val staging = sibling(s"_staging_$runId")
+    val trash = sibling(s"_trash_$runId")
+    df.write.mode(SaveMode.Overwrite).parquet(staging.toString)
+    require(fs.exists(new Path(staging, "_SUCCESS")),
+      s"staging write incomplete (no _SUCCESS): $staging — not publishing")
     try {
-      staging.listFiles()
-        .filter(f => f.isDirectory && f.getName.startsWith("bucket="))
-        .foreach { stagedBucket =>
-          val target = new java.io.File(path, stagedBucket.getName)
-          if (target.exists()) {
-            java.nio.file.Files.move(target.toPath,
-              new java.io.File(trash, stagedBucket.getName).toPath,
-              java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-          }
-          java.nio.file.Files.move(stagedBucket.toPath, target.toPath,
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        }
-      // cleanup ONLY after every bucket published — a failed rename must
-      // never reach a path that deletes the surviving copies of a bucket
-      // (the old one in trash, the new one in staging)
-      deleteRecursively(trash)
-      deleteRecursively(staging)
-    } catch {
-      case e: Throwable =>
-        // best-effort rollback: restore any bucket whose old copy was
-        // already trashed; leave trash/staging on disk for inspection if
-        // even the restore fails (their unique names cannot corrupt a
-        // later run)
-        Option(trash.listFiles()).getOrElse(Array.empty).foreach { old =>
-          val target = new java.io.File(path, old.getName)
-          if (!target.exists()) {
-            try java.nio.file.Files.move(old.toPath, target.toPath,
-              java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-            catch { case _: Exception => () }
-          }
-        }
-        if (Option(trash.listFiles()).forall(_.isEmpty)) deleteRecursively(trash)
-        throw e
+      if (!fs.rename(liveDir, trash))
+        throw new java.io.IOException(s"could not move $liveDir to $trash")
+      if (!fs.rename(staging, liveDir))
+        throw new java.io.IOException(s"could not publish $staging to $liveDir")
+      fs.delete(trash, true)
     } finally {
       // the rewrite invalidates any file listing cached for this path
       spark.catalog.refreshByPath(path)
     }
+  }
+}
+
+object Ledger {
+  /** `fs` when the ledger can be made safe on it: the lock needs an
+    * exclusive `create(…, overwrite = false)` and the publish an atomic
+    * directory `rename`. HDFS gives both, and so does a local or NFS mount
+    * through [[NioLocalFileSystem]], the `file:` filesystem
+    * `Tables.session` installs. Anything else (S3A among them) is refused
+    * before any write.
+    */
+  private def checked(path: Path, fs: FileSystem): FileSystem = {
+    require(fs.isInstanceOf[NioLocalFileSystem] ||
+      fs.isInstanceOf[DistributedFileSystem],
+      s"ledger at $path is on ${fs.getClass.getName}, which gives no " +
+        "exclusive create for the writer lock and no atomic directory " +
+        "rename for the publish; put the ledger on HDFS (hdfs://), on a " +
+        "local or NFS mount in a Tables.session session, or use " +
+        "--ledger-format mongodb")
+    fs
   }
 }

@@ -15,9 +15,10 @@ import org.apache.spark.sql.functions.{coalesce, col, count, lit}
   *  - [[markUploaded]]: the one terminal flag flip (db.py:189-196);
   *  - no delete: quarantined in the reference (db.py:127-133), absent here.
   *
-  * Strategies: [[Ledger]] (hash-prefix-partitioned Parquet, the deployed
-  * default) and [[MongoLedger]] (the reference's actual store, usable when
-  * the Mongo Spark connector jar is on the classpath).
+  * Strategies: [[Ledger]] (one Parquet directory on HDFS or a local/NFS
+  * mount, the deployed default) and [[MongoLedger]] (the reference's actual
+  * store, usable when the Mongo Spark connector jar is on the classpath).
+  * Both are single-writer: schedule one chain per store.
   */
 trait LedgerStore {
   def exists: Boolean

@@ -200,8 +200,7 @@ class EtlJobSpec extends SparkSpec {
       "serial-id" -> s"$base/serial_id.csv",
       "assignments" -> s"$base/assignments",
       "workdir" -> s"$base/work", "today" -> "2021-12-01",
-      "upload-limit" -> "1", // the reference's per-run group cap
-      "ledger-bucket-width" -> "2") ++ // exercise the threaded width too
+      "upload-limit" -> "1") ++ // the reference's per-run group cap
       EtlJobSpecLive.flags
     val transport = EtlJobSpecLive.transport()
     val run1 = EtlJob.run(spark, opts, transport).toMap

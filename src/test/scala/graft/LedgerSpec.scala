@@ -1,8 +1,10 @@
 package graft
 
+import java.net.URI
 import java.nio.file.Files
 import java.sql.Timestamp
 
+import org.apache.hadoop.fs.{FileSystem, Path, RawLocalFileSystem}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -10,13 +12,20 @@ import graft.ledger.Ledger
 
 /** Ledger semantics: append-dedup, no-override enrichment (idempotent),
   * group upload flags — the reference's Mongo collection contract
-  * (db.py:66-231, tests/hooks/test_db.py) on bucketed parquet.
+  * (db.py:66-231, tests/hooks/test_db.py) on one parquet directory — plus
+  * the single-writer lock and crash recovery of its publish. Each subclass
+  * runs the contract with every ledger path under one URI prefix.
   */
-class LedgerSpec extends SparkSpec {
+abstract class LedgerContract(prefix: String) extends SparkSpec {
   import spark.implicits._
 
-  private def tmp(): String =
-    Files.createTempDirectory("graft-ledger").toString + "/ledger"
+  protected def localTmp(): String =
+    Files.createTempDirectory("graft-ledger").toString
+
+  private def tmp(): String = prefix + localTmp() + "/ledger"
+
+  private def fs(path: String): FileSystem =
+    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private def rec(ref: String, serial: Option[String] = None,
                   dmpId: Option[String] = None): (String, String, String, Timestamp, Timestamp, Map[String, String], Option[String], Option[String], Option[String], Option[String], Option[String], Boolean) = {
@@ -42,6 +51,26 @@ class LedgerSpec extends SparkSpec {
       case (v, (ref, serial)) => when($"manufacturer_ref" === ref, serial).otherwise(v)
     })
 
+  private def serials(led: Ledger): Map[String, Option[String]] =
+    led.read().select($"manufacturer_ref", $"device_serial")
+      .as[(String, Option[String])].collect().toMap
+
+  /** The `_staging_`/`_trash_` dirs beside the ledger. */
+  private def orphanDirs(path: String): Seq[String] = {
+    val live = new Path(path)
+    fs(path).listStatus(live.getParent).map(_.getPath.getName).toSeq.filter(n =>
+      n.startsWith(live.getName + "_staging_") || n.startsWith(live.getName + "_trash_"))
+  }
+
+  /** The names of the live table's files. */
+  private def liveFiles(path: String): Set[String] =
+    fs(path).listStatus(new Path(path)).map(_.getPath.getName).toSet
+
+  private def holdLock(path: String): Unit = {
+    val out = fs(path).create(new Path(path + "_lock"), false)
+    try out.write("pid=999999 op=test".getBytes("UTF-8")) finally out.close()
+  }
+
   test("append deduplicates by hash") {
     val path = tmp()
     val led = new Ledger(spark, path)
@@ -61,7 +90,21 @@ class LedgerSpec extends SparkSpec {
     assert(led.read().count() == 3)
     assert(led.append(df(Seq(rec("a"), rec("b"), rec("c")))) == 0)
     assert(led.read().count() == 3)
-    assert(!new java.io.File(s"${path}_lock").exists())
+    assert(!fs(path).exists(new Path(path + "_lock")))
+  }
+
+  test("append, exists and enrich agree at this path; nothing lands under the working directory") {
+    val path = tmp()
+    val led = new Ledger(spark, path)
+    assert(led.append(df(Seq(rec("a"), rec("b")))) == 2)
+    assert(led.exists)
+    assert(led.append(df(Seq(rec("a"), rec("b"), rec("c")))) == 1)
+    assert(led.read().count() == 3)
+    assert(led.enrich("device_serial")(setSerials("a" -> "S-A", "c" -> "S-C")) == 2)
+    assert(serials(led) == Map("a" -> Some("S-A"), "b" -> None, "c" -> Some("S-C")))
+    // a URI handed to java.io names a relative path: `file:/tmp/…`
+    val scheme = new URI(path).getScheme
+    if (scheme != null) assert(!new java.io.File(scheme + ":").exists())
   }
 
   test("enrich fills nulls, existing values win, is idempotent; returns the rows carrying the field") {
@@ -72,14 +115,12 @@ class LedgerSpec extends SparkSpec {
     // the resolver clobbers a, fills b, leaves c null and nulls d
     val resolve = setSerials("a" -> "NEW", "b" -> "S-B") _
     assert(led.enrich("device_serial")(resolve) == 3)
-    assert(stagingDirs(path).isEmpty) // the publish leaves no staging/trash
-    def state() = led.read().select($"manufacturer_ref", $"device_serial")
-      .as[(String, Option[String])].collect().toMap
-    val s1 = state()
+    assert(orphanDirs(path).isEmpty) // the publish leaves no staging/trash
+    val s1 = serials(led)
     assert(s1 == Map("a" -> Some("KEEP"), "b" -> Some("S-B"), "c" -> None,
       "d" -> Some("KEEP-D")))
     assert(led.enrich("device_serial")(resolve) == 3) // idempotent
-    assert(state() == s1)
+    assert(serials(led) == s1)
     assert(led.read().count() == 4)
   }
 
@@ -90,36 +131,26 @@ class LedgerSpec extends SparkSpec {
     val resolve = setSerials("a" -> "S-A") _
     // a writer holds the lock (as another process would mid-rewrite):
     // every mutating entry point must fail fast, before staging anything
-    val lock = new java.io.File(s"${path}_lock")
-    assert(lock.createNewFile())
-    java.nio.file.Files.writeString(lock.toPath, "pid=999999 op=test")
+    holdLock(path)
     for (op <- Seq(
       () => led.enrich("device_serial")(resolve),
       () => led.append(df(Seq(rec("z")))),
       () => led.markUploaded(Seq("G-1").toDF("dmp_id")))) {
       val e = intercept[java.util.ConcurrentModificationException](op())
       assert(e.getMessage.contains("locked by another writer"))
+      assert(e.getMessage.contains("pid=999999"))
     }
-    assert(Option(new java.io.File(path).getParentFile.listFiles())
-      .getOrElse(Array.empty).count(_.getName.contains("_staging_")) == 0,
+    assert(orphanDirs(path).isEmpty,
       "a lock-blocked writer must not have staged anything")
     // stale-lock remediation + normal release
+    val lock = new Path(path + "_lock")
     assert(led.forceReleaseLock())
     led.enrich("device_serial")(resolve)
-    assert(!lock.exists(), "lock must release after a successful enrich")
+    assert(!fs(path).exists(lock), "lock must release after a successful enrich")
     // lock releases even when the enrich itself fails (bad field)
     intercept[IllegalArgumentException](led.enrich("is_uploaded")(identity))
-    assert(!lock.exists(), "lock must release when the guarded body throws")
-    val got = led.read().select($"manufacturer_ref", $"device_serial")
-      .as[(String, Option[String])].collect().toMap
-    assert(got("a").contains("S-A"))
-  }
-
-  private def stagingDirs(path: String): Seq[java.io.File] = {
-    val parent = new java.io.File(path).getParentFile
-    val base = new java.io.File(path).getName
-    parent.listFiles().toSeq.filter(f =>
-      f.getName.startsWith(base + "_staging_") || f.getName.startsWith(base + "_trash_"))
+    assert(!fs(path).exists(lock), "lock must release when the guarded body throws")
+    assert(serials(led)("a").contains("S-A"))
   }
 
   test("markUploaded flags whole dmp groups") {
@@ -133,88 +164,75 @@ class LedgerSpec extends SparkSpec {
     assert(got == Map("a" -> true, "b" -> true, "c" -> false))
   }
 
-  test("markUploaded rewrites only buckets containing the dmp group") {
+  test("markUploaded with no ids publishes nothing") {
     val path = tmp()
     val led = new Ledger(spark, path)
-    // enough rows to populate many hash-prefix buckets
-    val rows = (0 until 64).map(i =>
-      rec(s"r$i", dmpId = Some(if (i == 0) "G1" else "G2")))
-    led.init(df(rows))
-    // bucket of the single G1 record
-    val g1Hash = rows.head._1
-    val g1Bucket = "bucket=" + g1Hash.substring(0, 1)
-    def bucketFiles(): Map[String, Seq[(String, Long)]] =
-      new java.io.File(path).listFiles().filter(_.getName.startsWith("bucket="))
-        .map(d => d.getName ->
-          d.listFiles().toSeq.map(f => (f.getName, f.lastModified())).sorted)
-        .toMap
-    val before = bucketFiles()
-    led.markUploaded(Seq("G1").toDF("dmp_id"))
-    val after = bucketFiles()
-    assert(before.keySet == after.keySet)
-    // untouched buckets: identical file names AND mtimes (never rewritten)
-    before.keySet.filterNot(_ == g1Bucket).foreach { b =>
-      assert(before(b) == after(b), s"bucket $b was rewritten")
-    }
-    assert(before(g1Bucket) != after(g1Bucket)) // the affected one did change
-    val got = led.read().filter($"is_uploaded").select($"manufacturer_ref")
-      .as[String].collect().toSeq
-    assert(got == Seq("r0"))
+    led.init(df(Seq(rec("a", dmpId = Some("G1")), rec("b", dmpId = Some("G2")))))
+    val before = liveFiles(path)
+    led.markUploaded(Seq.empty[String].toDF("dmp_id"))
+    assert(liveFiles(path) == before) // a publish writes new part files
+    assert(orphanDirs(path).isEmpty)
+    assert(led.read().filter($"is_uploaded").count() == 0)
   }
 
-  test("bucketWidth=2 lays out 2-hex-char buckets and markUploaded rewrites only touched ones") {
+  test("an old bucket= layout fails fast at every entry point, naming the one-off rewrite") {
     val path = tmp()
-    val led = new Ledger(spark, path, bucketWidth = 2)
-    val rows = (0 until 64).map(i =>
-      rec(s"r$i", dmpId = Some(if (i == 0) "G1" else "G2")))
-    led.init(df(rows))
-    val dirs = new java.io.File(path).listFiles()
-      .filter(_.getName.startsWith("bucket=")).map(_.getName).toSeq
-    assert(dirs.nonEmpty && dirs.forall(_.stripPrefix("bucket=").length == 2))
-    def bucketFiles(): Map[String, Seq[(String, Long)]] =
-      new java.io.File(path).listFiles().filter(_.getName.startsWith("bucket="))
-        .map(d => d.getName ->
-          d.listFiles().toSeq.map(f => (f.getName, f.lastModified())).sorted)
-        .toMap
-    val targetBucket = "bucket=" + rows.head._1.substring(0, 2)
-    val before = bucketFiles()
-    led.markUploaded(Seq("G1").toDF("dmp_id"))
-    val after = bucketFiles()
-    assert(before.keySet == after.keySet)
-    before.keySet.filterNot(_ == targetBucket).foreach { b =>
-      assert(before(b) == after(b), s"bucket $b was rewritten")
+    df(Seq(rec("a"), rec("b"))).withColumn("bucket", substring($"hash", 1, 1))
+      .write.partitionBy("bucket").parquet(path)
+    val led = new Ledger(spark, path)
+    val before = liveFiles(path)
+    for (op <- Seq(
+      () => led.exists,
+      () => led.read(),
+      () => led.init(df(Seq(rec("z")))),
+      () => led.append(df(Seq(rec("z")))),
+      () => led.enrich("device_serial")(setSerials("a" -> "X")),
+      () => led.markUploaded(Seq("G-1").toDF("dmp_id")))) {
+      val e = intercept[IllegalStateException](op())
+      assert(e.getMessage.contains("bucket=") &&
+        e.getMessage.contains(".drop(\"bucket\")") && e.getMessage.contains("init"))
     }
-    assert(before(targetBucket) != after(targetBucket))
-    val got = led.read().filter($"is_uploaded").select($"manufacturer_ref")
-      .as[String].collect().toSeq
-    assert(got == Seq("r0"))
+    assert(liveFiles(path) == before && orphanDirs(path).isEmpty)
+    // the rewrite the message gives
+    val moved = tmp()
+    new Ledger(spark, moved).init(spark.read.parquet(path).drop("bucket"))
+    assert(new Ledger(spark, moved).read().select("manufacturer_ref").as[String]
+      .collect().toSet == Set("a", "b"))
   }
 
-  test("opening a ledger at a mismatched bucketWidth fails fast, not silently") {
-    val path = tmp()
-    new Ledger(spark, path, bucketWidth = 2).init(df(Seq(rec("a"), rec("b"))))
-    val wrong = new Ledger(spark, path) // default width 1 vs on-disk 2
-    val e = intercept[IllegalArgumentException](
-      wrong.enrich("device_serial")(setSerials("a" -> "X")))
-    assert(e.getMessage.contains("width"))
-  }
-
-  test("recovery restores a bucket stranded in trash by a crashed publish") {
+  test("recovery restores live stranded in trash by a crashed publish") {
     val path = tmp()
     val led = new Ledger(spark, path)
     led.init(df(Seq(rec("a"), rec("b"), rec("c"))))
     val before = led.read().orderBy("manufacturer_ref").collect().toSeq
-    // simulate a kill between the two publish renames: one live bucket dir
+    // simulate a kill between the two publish renames: the live table
     // moved to the trash dir, nothing moved in from staging yet
-    val bucketDir = new java.io.File(path).listFiles()
-      .filter(_.getName.startsWith("bucket=")).head
-    val trash = new java.io.File(path + "_trash_cafe01")
-    trash.mkdirs()
-    java.nio.file.Files.move(bucketDir.toPath,
-      new java.io.File(trash, bucketDir.getName).toPath)
-    // next entry to the ledger restores the stranded bucket and drops trash
+    val trash = new Path(path + "_trash_cafe01")
+    assert(fs(path).rename(new Path(path), trash))
+    // next entry to the ledger restores the stranded table and drops trash
     assert(led.read().orderBy("manufacturer_ref").collect().toSeq == before)
-    assert(!trash.exists())
+    assert(!fs(path).exists(trash))
+  }
+
+  test("read recovers only under the writer lock: a held lock leaves staging and trash alone") {
+    val path = tmp()
+    val led = new Ledger(spark, path)
+    led.init(df(Seq(rec("a"), rec("b"))))
+    val before = led.read().orderBy("manufacturer_ref").collect().toSeq
+    // a writer mid-publish: it staged, moved live to trash, holds the lock
+    val staging = new Path(path + "_staging_feed01")
+    df(Seq(rec("a"), rec("b"))).write.parquet(staging.toString)
+    val trash = new Path(path + "_trash_feed01")
+    assert(fs(path).rename(new Path(path), trash))
+    holdLock(path)
+    val e = intercept[java.util.ConcurrentModificationException](led.read())
+    assert(e.getMessage.contains("locked by another writer"))
+    assert(fs(path).exists(staging) && fs(path).exists(trash))
+    assert(!fs(path).exists(new Path(path)), "read must not restore mid-publish")
+    // once the writer is confirmed gone, the next read recovers
+    assert(led.forceReleaseLock())
+    assert(led.read().orderBy("manufacturer_ref").collect().toSeq == before)
+    assert(orphanDirs(path).isEmpty)
   }
 
   test("a stale staging dir from a crashed run cannot corrupt a later merge") {
@@ -222,17 +240,42 @@ class LedgerSpec extends SparkSpec {
     val led = new Ledger(spark, path)
     led.init(df(Seq(rec("a"), rec("b"), rec("c"))))
     // simulate a previous run that crashed after staging: a leftover dir
-    // with plausible-but-stale bucket data and no publish
-    val stale = new java.io.File(path + "_staging_deadbeef")
+    // with plausible-but-stale data and no publish
     df(Seq(rec("a", serial = Some("STALE-GARBAGE"))))
-      .withColumn("bucket", substring($"hash", 1, 1))
-      .write.partitionBy("bucket").mode("overwrite").parquet(stale.getPath)
+      .write.mode("overwrite").parquet(path + "_staging_deadbeef")
     val before = led.read().orderBy("manufacturer_ref").collect().toSeq
     led.enrich("device_serial")(setSerials("b" -> "S-B"))
-    val got = led.read().select($"manufacturer_ref", $"device_serial")
-      .as[(String, Option[String])].collect().toMap
     // only the intended update landed; nothing from the stale dir leaked
-    assert(got == Map("a" -> None, "b" -> Some("S-B"), "c" -> None))
+    assert(serials(led) == Map("a" -> None, "b" -> Some("S-B"), "c" -> None))
     assert(before.size == 3 && led.read().count() == 3)
   }
 }
+
+/** The contract at bare local paths, plus the filesystem check. */
+class LedgerSpec extends LedgerContract("") {
+  test("a filesystem without an exclusive create and an atomic rename is refused before any write") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.rawtest.impl", classOf[RawLocalFileSystem].getName)
+    val dir = localTmp()
+    val e = intercept[IllegalArgumentException](
+      new Ledger(spark, s"rawtest://$dir/ledger"))
+    Seq("RawLocalFileSystem", "hdfs://", "NFS", "--ledger-format mongodb")
+      .foreach(w => assert(e.getMessage.contains(w), e.getMessage))
+    assert(new java.io.File(dir).list().isEmpty)
+  }
+}
+
+/** The contract at `file://` URIs. */
+class LedgerFileUriSpec extends LedgerContract("file://")
+
+/** The contract at the test-only `niotest:` scheme, which `java.io` cannot
+  * resolve: a ledger file operation that bypasses Hadoop fails here. */
+class LedgerNioSchemeSpec extends LedgerContract("niotest://") {
+  spark.sparkContext.hadoopConfiguration
+    .set("fs.niotest.impl", classOf[NioSchemeFileSystem].getName)
+}
+
+/** [[NioLocalFileSystem]] serving the `niotest:` scheme. */
+class NioSchemeFileSystem extends NioLocalFileSystem(new NioLocalFileSystem.Raw {
+  override def getUri: URI = URI.create("niotest:///")
+})

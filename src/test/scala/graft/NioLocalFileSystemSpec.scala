@@ -4,7 +4,10 @@ import java.net.URI
 import java.nio.file.{Files, Path => NioPath}
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path}
+import java.util.concurrent.{Callable, CountDownLatch, Executors}
+
+import org.apache.hadoop.fs.{FileAlreadyExistsException, FileSystem,
+  LocalFileSystem, Path}
 import org.apache.hadoop.fs.permission.FsPermission
 
 class NioLocalFileSystemSpec extends SparkSpec {
@@ -86,6 +89,43 @@ class NioLocalFileSystemSpec extends SparkSpec {
         assert(fs.mkdirs(new Path(shared.resolve(side).toUri), perm("755")))
       assert(mode(shared.resolve("nio")) == mode(shared.resolve("stock")))
       assert(mode(shared.resolve("nio")) == Integer.parseInt("2755", 8))
+    }
+  }
+
+  test("create(p, overwrite = false) refuses an existing file and leaves it as it was") {
+    withDir { root =>
+      val fs = init(new NioLocalFileSystem)
+      val p = new Path(root.resolve("taken").toUri)
+      val out = fs.create(p, false)
+      try out.write(7) finally out.close()
+      intercept[FileAlreadyExistsException](fs.create(p, false))
+      assert(Files.readAllBytes(root.resolve("taken")).toSeq == Seq(7.toByte))
+    }
+  }
+
+  test("8 threads racing create(p, overwrite = false) on one path: exactly one wins") {
+    withDir { root =>
+      val fs = init(new NioLocalFileSystem)
+      val pool = Executors.newFixedThreadPool(8)
+      try for (round <- 1 to 20) {
+        val p = new Path(root.resolve(s"lock-$round").toUri)
+        val start = new CountDownLatch(1)
+        val racers = (1 to 8).map(id => pool.submit(new Callable[Option[Int]] {
+          def call(): Option[Int] = {
+            start.await()
+            try {
+              val out = fs.create(p, false)
+              try out.write(id) finally out.close()
+              Some(id)
+            } catch { case _: FileAlreadyExistsException => None }
+          }
+        }))
+        start.countDown()
+        val winners = racers.flatMap(_.get())
+        assert(winners.size == 1, s"round $round: winners $winners")
+        assert(Files.readAllBytes(root.resolve(s"lock-$round")).toSeq ==
+          Seq(winners.head.toByte))
+      } finally pool.shutdownNow()
     }
   }
 }

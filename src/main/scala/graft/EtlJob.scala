@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 import graft.connect.{BasicAuthTokenProvider, ConnectionConfig, Dmp,
@@ -260,12 +260,17 @@ object EtlJob {
     // slices its group list to 1 per run, dags/dreem.py:283-287). Defaulted
     // rather than optional so the driver-side collect of uploaded ids below
     // is bounded BY CONSTRUCTION — unuploaded groups simply go next run
-    // (at-least-once + idempotent redelivery).
+    // (at-least-once + idempotent redelivery). A cap of 0 would plan the
+    // manifest away, and with it the pending count observed on it.
     val uploadLimit = opts.getOrElse("upload-limit", "100000").toInt
+    require(uploadLimit > 0, s"--upload-limit must be at least 1, not $uploadLimit")
     if (!ledger.exists) return Seq("pending_groups" -> 0L, "uploaded_groups" -> 0L)
-    val manifest = Stages.uploadManifest(ledger.read())
-    val nGroups = manifest.count()
-    val batch = manifest.orderBy(col("dmp_id")).limit(uploadLimit)
+    // the batch's top-k reads every manifest group, so an observation on
+    // its input counts the pending groups in the transfer's own pass
+    val pending = Observation()
+    val batch = Stages.uploadManifest(ledger.read())
+      .observe(pending, count(lit(1)).as("groups"))
+      .orderBy(col("dmp_id")).limit(uploadLimit)
     val (fetch, push) = liveTransfer(opts, transport)
     val results = FileTransfer.executePlan(spark, batch,
       opts("workdir"), fetch, push)
@@ -277,8 +282,9 @@ object EtlJob {
     import spark.implicits._
     val okIds = results.filter(col("uploaded"))
       .select("dmp_id").as[String].collect().toSeq
-    ledger.markUploaded(okIds.toDF("dmp_id"))
-    Seq("pending_groups" -> nGroups, "uploaded_groups" -> okIds.size.toLong)
+    ledger.markUploaded(okIds)
+    Seq("pending_groups" -> pending.get("groups").asInstanceOf[Long],
+      "uploaded_groups" -> okIds.size.toLong)
   }
 
   /** Task 7 — cleanup: the always-run finalizer (trigger rule ALL_DONE,

@@ -17,24 +17,20 @@ import graft.functions.Etl
   * Scale notes: lookup sides are broadcast (they are the reference's
   * lru_cached CSV dicts, ucam.py:138-153); the ledger side of the dedup
   * anti-join stays distributed and shuffles on the uniform sha256 key; the
-  * interval join is an equi-join on device_id plus a range predicate, and
-  * its first-match is a window over the record key — no driver collection
+  * interval join is an equi-join on (device_id, start day) plus a range
+  * predicate that meets at most one index entry per record, so each record
+  * reads its first match straight off that entry — no driver collection
   * anywhere.
   */
 object Stages {
 
   /** J1+L1+S7 prep — compute the sha256 identity and drop records whose hash
     * already exists in the ledger (dags/dreem.py:44-67, db.py:49-55,228-231).
-    * `limit` mirrors the reference's islice backpressure; deterministic only
-    * if the caller ordered the input (documented reference quirk, §2.6).
     */
-  def ingestDedup(incoming: DataFrame, ledger: DataFrame,
-                  limit: Option[Int] = None): DataFrame = {
-    val hashed = incoming.withColumn("hash",
+  def ingestDedup(incoming: DataFrame, ledger: DataFrame): DataFrame =
+    incoming.withColumn("hash",
       Etl.recordHash(col("device_type"), col("manufacturer_ref")))
-    val fresh = hashed.join(ledger.select("hash"), Seq("hash"), "left_anti")
-    limit.fold(fresh)(fresh.limit)
-  }
+      .join(ledger.select("hash"), Seq("hash"), "left_anti")
 
   /** J1 at 100 TB (SURVEY.md §7.5.5): the reference materializes every
     * ledger hash in driver memory (db.py:228-231) — at scale the ledger side
@@ -138,14 +134,10 @@ object Stages {
     *     DAYS and the join key becomes (device, record-start-day) —
     *     containment implies the start day is covered (no match lost) and a
     *     record meets an assignment on exactly one day (no duplicates);
-    *  2. ONE reduction per record: the suffix-min index entry is
-    *     min(struct(ord, patient)) — lexicographic, so the single
-    *     aggregate yields the winning order value AND its tiebroken
-    *     patient together, and no second pass exists. (This min is a
-    *     SortAggregate rather than a hash one, but it runs over the
-    *     already-joined probe rows either way — measured at sf0.1 the
-    *     struct form is strictly faster than the numeric-min + re-join
-    *     pair it replaced: q70 7.6 s → 2.7 s, and scale-flat at 10×.)
+    *  2. a suffix-min index probed once: each (device, day, end) entry
+    *     carries the first match among the assignments ending at or after
+    *     its end, and owns the end range down to the next entry's, so a
+    *     record meets at most one entry and reads its patient off it.
     *
     * `broadcastAssignments`: the assignment table is the reference's small
     * per-device UCAM payload — broadcast by default (the exploded day form
@@ -179,17 +171,15 @@ object Stages {
     //   _a_start ≤ _a_day·00:00 ≤ bound(start) ≤ bound(end)  (automatic), so
     //   contained ⟺ _a_end >= bound(end).
     // That single threshold admits a SUFFIX-MIN index: per (device, day,
-    // a_end) keep the best assignment over all ending at-or-after a_end —
-    // the probe then joins |distinct end-days| rows per key instead of
-    // |assignments| (orders of magnitude fewer pairs on dense tables).
+    // a_end) keep the best assignment over all ending at-or-after a_end.
+    // `_a_lo` is the next smaller a_end of the same (device, day), so the
+    // entries own disjoint ranges (_a_lo, _a_end] and a record matches only
+    // the entry with the smallest a_end >= bound(end): the best over the
+    // assignments containing it, with no aggregate after the probe.
     //
     // The index entry is min(struct(ord, patient)) — a lexicographic min,
     // so ONE aggregate yields both the first-match order value AND its
-    // patient with the min-patient tiebreak. Carrying the winner inside
-    // the index removes the whole second pass (re-join records→best-ord→
-    // assignment-days→min-patient) that a min-ord-only index needs: on a
-    // 1M-record fixture that pass was two more million-row joins and a
-    // third wide aggregate.
+    // patient with the min-patient tiebreak.
     //
     // Null handling in the index, pinned to the oracle's
     // `ORDER BY ord NULLS LAST, patient NULLS LAST … rn = 1`:
@@ -206,28 +196,26 @@ object Stages {
     //    field first, so without the flag a null patient would also
     //    steal equal-ord ties that the oracle (patient NULLS LAST)
     //    gives to the real patient.
-    def contained = col("_a_end") >= bound(col("end"))
-    val wSfx = Window.partitionBy(col("_a_device"), col("_a_day"))
+    // a_end is unique per (device, day) after the groupBy, so the default
+    // RANGE frame of `w` is the running suffix over a_end descending
+    val w = Window.partitionBy(col("_a_device"), col("_a_day"))
       .orderBy(col("_a_end").desc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val sfxRaw = asgDaysRaw
       .filter(col("_a_ord").isNotNull)
       .groupBy(col("_a_device"), col("_a_day"), col("_a_end"))
       .agg(min(struct(col("_a_ord"), col("_a_patient").isNull.as("_a_pnull"),
         col("_a_patient"))).as("_m"))
-      .withColumn("_smo", min(col("_m")).over(wSfx))
-      .drop("_m")
+      .select(col("_a_device"), col("_a_day"), col("_a_end"),
+        lead(col("_a_end"), 1).over(w).as("_a_lo"),
+        min(col("_m")).over(w).getField("_a_patient").as("_a_patient"))
     val sfx = if (broadcastAssignments) broadcast(sfxRaw) else sfxRaw
-    val recKeys = records.select(col("hash"), col("device_id"),
-      col("start"), col("end"))
-    val best = recKeys
+    val end = bound(col("end"))
+    records
       .join(sfx, col("device_id") === col("_a_device") &&
-        to_date(col("start")) === col("_a_day") && contained)
-      .groupBy(col("hash")).agg(min(col("_smo")).as("_best"))
-      .select(col("hash"), col("_best").getField("_a_patient").as("_a_patient"))
-    records.join(best, Seq("hash"), "left")
+        to_date(col("start")) === col("_a_day") && col("_a_end") >= end &&
+        (col("_a_lo").isNull || col("_a_lo") < end), "left")
       .withColumn("patient_id", coalesce(col("patient_id"), col("_a_patient")))
-      .drop("_a_patient")
+      .drop("_a_device", "_a_day", "_a_end", "_a_lo", "_a_patient")
   }
 
   /** A1 — day-cut-off bucketing + composite dmp_id for fully-enriched rows

@@ -23,7 +23,8 @@ import graft.NioLocalFileSystem
   *      of the field taken before the resolution, matching
   *      tests/hooks/test_db.py:16-47), and the rows carrying the field are
   *      counted by an observation on that write;
-  *   3. [[markUploaded]] flags whole groups in one mapped pass;
+  *   3. [[markUploaded]] flags whole groups, named by a list of ids, in
+  *      one mapped pass;
   *   4. enrich and markUploaded publish the rewritten table through
   *      [[publish]] (stage, check `_SUCCESS`, swap by two renames).
   *
@@ -154,17 +155,12 @@ final class Ledger(spark: SparkSession, path: String) extends LedgerStore {
       }
     }
 
-  /** Terminal flag for whole upload groups (db.py:189-196): set
-    * is_uploaded=true for every record of the given dmp_ids. No ids, no
-    * publish.
+  /** [[LedgerStore.markUploaded]] as one mapped rewrite of the table. No
+    * ids, no publish.
     */
-  def markUploaded(dmpIds: DataFrame): Unit = locked("markUploaded") {
-    val ids = broadcast(dmpIds.select(col("dmp_id").as("_flag_id")).distinct())
-    if (!dmpIds.isEmpty)
-      publish(live().join(ids, col("dmp_id") === col("_flag_id"), "left")
-        .withColumn("is_uploaded",
-          col("is_uploaded") || col("_flag_id").isNotNull)
-        .drop("_flag_id"))
+  def markUploaded(dmpIds: Seq[String]): Unit = locked("markUploaded") {
+    if (dmpIds.nonEmpty) publish(live().withColumn("is_uploaded",
+      col("is_uploaded") || LedgerStore.inGroups(dmpIds)))
   }
 
   private def live(): DataFrame = spark.read.parquet(path)

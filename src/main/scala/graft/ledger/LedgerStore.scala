@@ -12,7 +12,8 @@ import org.apache.spark.sql.functions.{coalesce, col, count, lit}
   *  - [[enrich]]: one resolution step over the stored rows, filling a field
   *    only where it is still null (db.py:96-125, no-override guards at
   *    db.py:99,105-106,115,120-121 / tests/hooks/test_db.py:16-47);
-  *  - [[markUploaded]]: the one terminal flag flip (db.py:189-196);
+  *  - [[markUploaded]]: the one terminal flag flip, over a list of
+  *    dmp_ids (db.py:189-196);
   *  - no delete: quarantined in the reference (db.py:127-133), absent here.
   *
   * Strategies: [[Ledger]] (one Parquet directory on HDFS or a local/NFS
@@ -31,7 +32,10 @@ trait LedgerStore {
     * rows (one row out per row in, same columns); existing values win.
     * Returns the rows carrying `field` afterwards, 0 on an absent store. */
   def enrich(field: String)(resolve: DataFrame => DataFrame): Long
-  def markUploaded(dmpIds: DataFrame): Unit
+  /** Flag every record of the given groups uploaded (db.py:189-196). The
+    * ids are the groups a run transferred, collected and bounded by the
+    * caller's upload limit. */
+  def markUploaded(dmpIds: Seq[String]): Unit
 }
 
 object LedgerStore {
@@ -55,6 +59,11 @@ object LedgerStore {
       .map(c => if (c == field) coalesce(col(prior), col(c)).as(c) else col(c))
       :+ col(prior): _*)
   }
+
+  /** The records of the groups `dmpIds`: false, never null, where dmp_id
+    * is null, so or-ing it into is_uploaded keeps ungrouped rows false. */
+  private[ledger] def inGroups(dmpIds: Seq[String]): Column =
+    col("dmp_id").isNotNull && col("dmp_id").isInCollection(dmpIds)
 
   /** Run `write` over `df`; return the count of non-null `counted` over
     * the rows of `df`, observed on the write itself, not by a second pass.

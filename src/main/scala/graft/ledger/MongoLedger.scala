@@ -33,7 +33,8 @@ import org.apache.spark.sql.functions._
   *    SPARK over the collection, then replace-upsert keyed on `hash` only
   *    the documents whose field went from null to set — the
   *    whole-document update db.py does per record, batched;
-  *  - [[markUploaded]]: same replace-upsert for the flag flip.
+  *  - [[markUploaded]]: same replace-upsert for the flag flip, of the
+  *    documents whose dmp_id is among the given ids.
   *
   * Scale note: Mongo is the reference's operational metadata store, not a
   * 100 TB analytics substrate — the connector pushes filters/projections
@@ -76,13 +77,9 @@ final class MongoLedger private (spark: SparkSession,
     }
   }
 
-  def markUploaded(dmpIds: DataFrame): Unit = {
-    val ids = broadcast(dmpIds.select(col("dmp_id").as("_flag_id")).distinct())
-    val flagged = read()
-      .join(ids, col("dmp_id") === col("_flag_id"), "left_semi")
-      .withColumn("is_uploaded", lit(true))
-    t.replaceUpsert(flagged)
-  }
+  def markUploaded(dmpIds: Seq[String]): Unit =
+    t.replaceUpsert(read().filter(LedgerStore.inGroups(dmpIds))
+      .withColumn("is_uploaded", lit(true)))
 }
 
 object MongoLedger {

@@ -350,7 +350,7 @@ object Pipeline {
 
   private val q70 = Q("q70_interval_join_production",
     "J4 production path, standalone: Stages.resolvePatients (day-bucket " +
-      "equi-join + suffix-min interval index + two-pass min-agg) over the " +
+      "equi-join + suffix-min interval index probed once per record) over the " +
       "q05 fixture shape — gates the optimized interval join outside q18's " +
       "composite (ucam.py:119-136). q05 keeps the deliberately-naive " +
       "row_number form for contrast; this is the one the pipeline runs.",

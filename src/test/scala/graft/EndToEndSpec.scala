@@ -64,16 +64,26 @@ class EndToEndSpec extends SparkSpec {
       ledger.enrich("patient_id")(
         Stages.resolvePatients(_, assignments, today = "2021-12-01"))
       ledger.enrich("dmp_id")(Stages.groupRecords(_, cutOff = "12:00:00"))
-      // extract-prep-load over unfinished groups
+      // extract-prep-load over unfinished groups: the transfer runs once,
+      // and each push leaves a marker named after its group
       val manifest = Stages.uploadManifest(ledger.read())
       val results = FileTransfer.executePlan(spark, manifest, s"$base/work",
         fetch = (ref, path) => { Files.write(path, ref.getBytes); true },
-        push = (_, zip) => Files.size(zip) > 0)
-      ledger.markUploaded(results.filter(col("uploaded")).select("dmp_id"))
+        push = (dmpId, zip) => {
+          Files.createTempFile(Paths.get(base, "pushes"), dmpId + "~", "")
+          Files.size(zip) > 0
+        })
+      ledger.markUploaded(results.filter(col("uploaded"))
+        .select("dmp_id").as[String].collect().toSeq)
       ingested
     }
+    Files.createDirectory(Paths.get(base, "pushes"))
+    def pushes(): Seq[String] = new java.io.File(s"$base/pushes").list()
+      .map(_.takeWhile(_ != '~')).toSeq.sorted
 
     assert(runPipeline() == 3)
+    // one push per group, none repeated
+    assert(pushes() == Seq("DEV1-PA-20211110-20211111", "DEV2-PB-20211110-20211111"))
     val after1 = ledger.read()
       .select($"manufacturer_ref", $"device_serial", $"device_id",
         $"patient_id", $"dmp_id", $"is_uploaded")
@@ -88,6 +98,7 @@ class EndToEndSpec extends SparkSpec {
     assert(after1("r3") == (("r3", None, None, None, None, false)))
 
     assert(runPipeline() == 0) // incremental rerun: same inputs → identical state
+    assert(pushes().size == 2) // nothing left to send
     val after2 = ledger.read()
       .select($"manufacturer_ref", $"device_serial", $"device_id",
         $"patient_id", $"dmp_id", $"is_uploaded")

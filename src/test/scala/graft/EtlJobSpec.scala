@@ -410,7 +410,7 @@ class EtlJobSpec extends SparkSpec {
     }).size
   }
 
-  test("each enrichment stage scans the ledger once (resolve_patient_ids twice); its report is the rows carrying the field") {
+  test("each enrichment stage scans the ledger once; its report is the rows carrying the field") {
     val base = Files.createTempDirectory("graft-job-enrich").toString
     // r2's uid is unknown, so it never advances; r1 and r3 fill every field
     incoming(Seq(("r1", "U1", "2021-11-10 13:00:00"),
@@ -419,21 +419,51 @@ class EtlJobSpec extends SparkSpec {
     val opts = oneDeviceOpts(base)
     EtlJob.runStage(spark, "download_metadata", opts)
     val ledger = new graft.ledger.Ledger(spark, opts("ledger"))
-    for ((stage, field, reportKey, scans) <- Seq(
-        ("resolve_device_serials", "device_serial", "with_serial", 1),
-        ("resolve_device_ids", "device_id", "with_device", 1),
-        ("resolve_patient_ids", "patient_id", "with_patient", 2),
-        ("group_records", "dmp_id", "grouped", 1))) {
+    for ((stage, field, reportKey) <- Seq(
+        ("resolve_device_serials", "device_serial", "with_serial"),
+        ("resolve_device_ids", "device_id", "with_device"),
+        ("resolve_patient_ids", "patient_id", "with_patient"),
+        ("group_records", "dmp_id", "grouped"))) {
       var summary = Map.empty[String, Long]
       val plans = executedPlans {
         summary = EtlJob.runStage(spark, stage, opts).toMap
       }
-      assert(ledgerScans(plans, opts("ledger")) == scans,
+      assert(ledgerScans(plans, opts("ledger")) == 1,
         s"$stage:\n" + plans.mkString("\n"))
       assert(summary(reportKey) ==
         ledger.read().filter(col(field).isNotNull).count(), stage)
       assert(summary(reportKey) == 2, stage)
     }
+  }
+
+  test("extract_prep_load scans the ledger twice; pending_groups is the unfinished groups") {
+    val base = Files.createTempDirectory("graft-job-extract").toString
+    // one device on three days: three groups, one transferred per run
+    incoming(Seq(("r1", "U1", "2021-11-10 13:00:00"),
+      ("r2", "U1", "2021-11-11 13:00:00"), ("r3", "U1", "2021-11-12 13:00:00")))
+      .write.parquet(s"$base/incoming")
+    val opts = oneDeviceOpts(base) + ("upload-limit" -> "1")
+    val transport = EtlJobSpecLive.transport()
+    EtlJob.stageNames.takeWhile(_ != "extract_prep_load")
+      .foreach(EtlJob.runStage(spark, _, opts, transport))
+    val ledger = new graft.ledger.Ledger(spark, opts("ledger"))
+    def unfinished() = ledger.read()
+      .filter(col("dmp_id").isNotNull && !col("is_uploaded"))
+      .select("dmp_id").distinct().count()
+    for (pending <- Seq(3L, 2L)) {
+      assert(unfinished() == pending)
+      var summary = Map.empty[String, Long]
+      val plans = executedPlans {
+        summary = EtlJob.runStage(spark, "extract_prep_load", opts, transport).toMap
+      }
+      // the transfer's manifest and markUploaded's rewrite
+      assert(ledgerScans(plans, opts("ledger")) == 2, plans.mkString("\n"))
+      assert(summary == Map("pending_groups" -> pending, "uploaded_groups" -> 1L))
+    }
+    assert(unfinished() == 1)
+    // a cap of 0 would plan the manifest away, count and all: refused
+    intercept[IllegalArgumentException](EtlJob.runStage(spark,
+      "extract_prep_load", opts + ("upload-limit" -> "0"), transport))
   }
 
   test("EtlJob.run on a fresh ledger with an empty first batch reports zeros; the next batch ingests normally") {

@@ -135,7 +135,7 @@ abstract class LedgerContract(prefix: String) extends SparkSpec {
     for (op <- Seq(
       () => led.enrich("device_serial")(resolve),
       () => led.append(df(Seq(rec("z")))),
-      () => led.markUploaded(Seq("G-1").toDF("dmp_id")))) {
+      () => led.markUploaded(Seq("G-1")))) {
       val e = intercept[java.util.ConcurrentModificationException](op())
       assert(e.getMessage.contains("locked by another writer"))
       assert(e.getMessage.contains("pid=999999"))
@@ -157,11 +157,13 @@ abstract class LedgerContract(prefix: String) extends SparkSpec {
     val path = tmp()
     val led = new Ledger(spark, path)
     led.init(df(Seq(rec("a", dmpId = Some("G1")), rec("b", dmpId = Some("G1")),
-      rec("c", dmpId = Some("G2")))))
-    led.markUploaded(Seq("G1").toDF("dmp_id"))
+      rec("c", dmpId = Some("G2")), rec("d"))))
+    led.markUploaded(Seq("G1"))
     val got = led.read().select($"manufacturer_ref", $"is_uploaded")
-      .as[(String, Boolean)].collect().toMap
-    assert(got == Map("a" -> true, "b" -> true, "c" -> false))
+      .as[(String, Option[Boolean])].collect().toMap
+    // d has no group yet: its flag stays false, not null
+    assert(got == Map("a" -> Some(true), "b" -> Some(true), "c" -> Some(false),
+      "d" -> Some(false)))
   }
 
   test("markUploaded with no ids publishes nothing") {
@@ -169,7 +171,7 @@ abstract class LedgerContract(prefix: String) extends SparkSpec {
     val led = new Ledger(spark, path)
     led.init(df(Seq(rec("a", dmpId = Some("G1")), rec("b", dmpId = Some("G2")))))
     val before = liveFiles(path)
-    led.markUploaded(Seq.empty[String].toDF("dmp_id"))
+    led.markUploaded(Seq.empty)
     assert(liveFiles(path) == before) // a publish writes new part files
     assert(orphanDirs(path).isEmpty)
     assert(led.read().filter($"is_uploaded").count() == 0)
@@ -187,7 +189,7 @@ abstract class LedgerContract(prefix: String) extends SparkSpec {
       () => led.init(df(Seq(rec("z")))),
       () => led.append(df(Seq(rec("z")))),
       () => led.enrich("device_serial")(setSerials("a" -> "X")),
-      () => led.markUploaded(Seq("G-1").toDF("dmp_id")))) {
+      () => led.markUploaded(Seq("G-1")))) {
       val e = intercept[IllegalStateException](op())
       assert(e.getMessage.contains("bucket=") &&
         e.getMessage.contains(".drop(\"bucket\")") && e.getMessage.contains("init"))

@@ -72,7 +72,7 @@ class LedgerStoreSpec extends SparkSpec {
     assert(serials() == s2)
     assert(led.read().count() == 3)  // replace-upsert never duplicates
 
-    led.markUploaded(Seq("G1").toDF("dmp_id"))
+    led.markUploaded(Seq("G1"))
     val up = led.read().select($"manufacturer_ref", $"is_uploaded")
       .as[(String, Boolean)].collect().toMap
     assert(up == Map("a" -> false, "b" -> false, "c" -> true))

@@ -91,14 +91,33 @@ class StagesSpec extends SparkSpec {
       "null-patient first match must yield NULL enrichment, not the later patient")
   }
 
-  test("ingestDedup anti-joins on the sha256 identity and honors limit") {
+  test("resolvePatients: records sharing a hash still resolve on their own devices") {
+    // the resolver keys nothing on `hash`: two records that carry one hash
+    // (recordHash concatenates without a separator, so callers outside the
+    // ledger can produce that) each get their own device's patient
+    val recs = Seq(("r1", "D1"), ("r2", "D2"))
+      .toDF("manufacturer_ref", "device_id")
+      .select(lit("H").as("hash"), $"manufacturer_ref", $"device_id",
+        lit(ts("2021-11-05 10:00:00")).as("start"),
+        lit(ts("2021-11-05 12:00:00")).as("end"),
+        lit(null).cast("string").as("patient_id"))
+    val asg = Seq(
+      ("D1", "P1", ts("2021-11-01 00:00:00"), Some(ts("2021-11-08 00:00:00"))),
+      ("D2", "P2", ts("2021-11-02 00:00:00"), Some(ts("2021-11-08 00:00:00"))))
+      .toDF("device_id", "patient_id", "start_wear", "end_wear")
+    val got = Stages.resolvePatients(recs, asg, today = "2022-01-01")
+      .select($"manufacturer_ref", $"patient_id")
+      .as[(String, Option[String])].collect().toMap
+    assert(got == Map("r1" -> Some("P1"), "r2" -> Some("P2")))
+  }
+
+  test("ingestDedup anti-joins on the sha256 identity") {
     val incoming = Seq(("r1", "DRM"), ("r2", "DRM"), ("r3", "DRM"), ("r4", "DRM"))
       .toDF("manufacturer_ref", "device_type")
     val ledger = incoming.limit(2).select(
       sha2(concat($"device_type", $"manufacturer_ref"), 256).as("hash"))
     val fresh = Stages.ingestDedup(incoming, ledger)
     assert(fresh.select("manufacturer_ref").as[String].collect().toSet == Set("r3", "r4"))
-    assert(Stages.ingestDedup(incoming, ledger, limit = Some(1)).count() == 1)
   }
 
   test("resolveSerials / resolveDeviceIds never override set values") {

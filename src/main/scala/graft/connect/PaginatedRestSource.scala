@@ -1,8 +1,5 @@
 package graft.connect
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types.StructType
-
 /** S1 — the paginated REST metadata scan (drm.py:20-46): GET with a `limit`
   * page size, follow the `next` cursor until null, yield flat records.
   *
@@ -42,12 +39,5 @@ final class PaginatedRestSource(
           Some(results)
       }
     }.takeWhile(_.isDefined).flatMap(_.get)
-  }
-
-  /** Project fetched objects through `extract` into rows of `schema`. */
-  def toDataFrame(spark: SparkSession, path: String, schema: StructType)
-                 (extract: MiniJson.JObj => Row): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(fetchAll(path).map(extract).toList.asJava, schema)
   }
 }

@@ -30,33 +30,18 @@ object VectorFns {
     * Oracle: SUM(CAST(floor(a[i]*b[i]*1e12) AS BIGINT)).
     *
     * Native codegen kernel ([[graft.expressions.DotScaled]]): the composed
-    * aggregate(zip_with(...)) chain below is CodegenFallback — interpreted
-    * lambda dispatch per element per row — which dominated the pairwise
-    * embedding operators' profile. Accepts array<float> directly (exact
-    * widening inside the kernel), so callers shuffle the narrow floats.
+    * aggregate(zip_with(...)) chain (kept in the tests as the kernel's spec)
+    * is CodegenFallback — interpreted lambda dispatch per element per
+    * row — which dominated the pairwise embedding operators' profile.
+    * Accepts array<float> directly (exact widening inside the kernel), so
+    * callers shuffle the narrow floats.
     */
   def dotScaled(a: Column, b: Column): Column =
     graft.expressions.DotScaled(a, b)
 
-  /** Built-in-only form of [[dotScaled]] — bit-identical, kept as the
-    * executable spec the HashExprSpec pins the native kernel against.
-    */
-  def dotScaledComposed(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => floor(x * y * lit(Scale))),
-      lit(0L),
-      (acc, v) => acc + v)
-
   /** Scaled squared norm (same fixed-point scheme), native kernel. */
   def norm2Scaled(a: Column): Column =
     graft.expressions.Norm2Scaled(a)
-
-  /** Built-in-only form of [[norm2Scaled]] — the executable spec. */
-  def norm2ScaledComposed(a: Column): Column =
-    aggregate(
-      transform(a, x => floor(x * x * lit(Scale))),
-      lit(0L),
-      (acc, v) => acc + v)
 
   /** Cosine from scaled parts: dot_s / (sqrt(n2a_s)·sqrt(n2b_s)); all inputs
     * are identical integers in both engines, every remaining op is IEEE-exact.

@@ -46,7 +46,6 @@ case class DeviceAssignment(
 object DeviceType {
   val All: Seq[String] =
     Seq("AX6", "BTF", "DRM", "TFA", "BVN", "MMM", "SMP", "SMA", "BED", "VTP", "YSM")
-  def isValid(name: String): Boolean = All.contains(name)
 }
 
 /** Int-coded disease enum (ucam.py:18-27): 1..7. */

@@ -412,24 +412,6 @@ object Dedup {
     docs.select(col(idCol),
       graft.expressions.SimHashBits(col(textCol), bits).as("simhash"))
 
-  /** Built-in-only form of [[simHash]] — bit-identical (explode words →
-    * `bits` vote-sum columns → pack); kept as the executable spec the
-    * native single-pass expression is pinned against.
-    */
-  def simHashComposed(docs: DataFrame, idCol: String, textCol: String,
-                      bits: Int = 32): DataFrame = {
-    val words = docs
-      .select(col(idCol), explode(TextFns.words(col(textCol))).as("w"))
-      .withColumn("wh", TextFns.hash64(col("w")))
-    val voteCols = (0 until bits).map(b =>
-      sum(when(expr(s"(wh >> $b) & 1") === 1, 1).otherwise(-1)).as(s"_v$b"))
-    val votes = words.groupBy(col(idCol)).agg(voteCols.head, voteCols.tail: _*)
-    val sig = (0 until bits).map(b =>
-      when(col(s"_v$b") > 0, lit(1L << b)).otherwise(lit(0L)))
-      .reduce(_ + _)
-    votes.select(col(idCol), sig.as("simhash"))
-  }
-
   /** SimHash near-dup pairs under a Hamming-distance threshold.
     *
     * DEFAULT (`blockBits = 4`) is the blocked scale path: only pairs

@@ -4,7 +4,6 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 import graft.Tables
@@ -164,81 +163,164 @@ object Pipeline {
         .orderBy("key")
     })
 
-  /** Stream source for the events table: schema-adaptive (footer-probed),
-    * `ts` normalized to TimestampType — see [[graft.Tables.tableStream]]
-    * for the file-vs-directory and dtype-drift hazards it absorbs.
+  /** A streaming gate's query, written once: the gate drains it over its
+    * table for the oracle, and StreamBench drains it cold and warm over a
+    * staged copy it redelivers. `name` is StreamBench's key for it and
+    * `gates` the gates built from it.
     */
-  private def eventsStream(s: SparkSession, dir: String): DataFrame =
-    Tables.tableStream(s, dir, "events.parquet")
-
-  /** Streaming state is hash-partitioned by `spark.sql.shuffle.partitions`
-    * AT CHECKPOINT CREATION and pinned for the checkpoint's lifetime. Every
-    * stateful operator then pays per-partition state-store open/commit I/O
-    * each micro-batch, regardless of row volume — measured here: the
-    * stream-stream join drains in 9.2 s with 32 state partitions and 2.6 s
-    * with 4, same rows. A production job sizes state partitions to expected
-    * STATE VOLUME (thousands at 100 TB), not to session parallelism; these
-    * gates size them to the bench-scale state they actually hold. Batch
-    * shuffle partitioning is restored after the drain.
-    */
-  private def withStreamStatePartitions[T](s: SparkSession, n: Int)(body: => T): T = {
-    val old = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", n.toString)
-    try body finally s.conf.set("spark.sql.shuffle.partitions", old)
+  sealed trait Shape {
+    def name: String
+    def table: String
+    def gates: Seq[String]
   }
 
-  private val q33 = Q("q33_streaming_ingest",
-    "§2.9: Structured Streaming AvailableNow drain — sha256 dedup state + " +
-      "aggregation; result equals the batch query (exactly-once semantics)",
-    Some("""
-      SELECT event_type, count(*) AS n_records
-      FROM events GROUP BY event_type ORDER BY event_type"""),
-    (s, dir) => {
-      val cp = graft.TempDirs.create("graft-q33-cp").toString
-      val stream = eventsStream(s, dir)
-        .withColumn("hash",
-          Etl.recordHash(lit("DRM"), col("event_id").cast("string")))
-        .dropDuplicates("hash")
-        .groupBy("event_type").agg(count(lit(1)).as("n_records"))
-      val name = "q33_out_" + math.abs(cp.hashCode).toString
-      withStreamStatePartitions(s, 8) {
-        val q = stream.writeStream.format("memory").queryName(name)
-          .outputMode("complete")
-          .option("checkpointLocation", cp)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      s.table(name).orderBy("event_type")
+  /** A stream query over `table`, drained in `mode`. `query(s, dir, source)`
+    * builds it from a source factory (each call a new stream: q174 reads
+    * its source twice) and the static tables under `dir`. `rocksDb` marks
+    * the transformWithState shapes, which need that state store.
+    */
+  final case class StreamShape(name: String, table: String, gates: Seq[String],
+      mode: String, rocksDb: Boolean = false)(
+      val query: (SparkSession, String, () => DataFrame) => DataFrame)
+      extends Shape
+
+  /** An admission filter against a frozen index: `rows` derives the keyed
+    * rows from `table`, `index` builds the index over the even-`key` rows,
+    * and the odd-`key` rows stream through its per-batch verdict.
+    */
+  final case class AdmissionShape(name: String, table: String,
+      gates: Seq[String], key: String)(
+      val rows: DataFrame => DataFrame, val index: DataFrame => FrozenIndex)
+      extends Shape {
+
+    /** Build the index over `t`'s even-`key` rows and stage its odd-`key`
+      * rows in `stage` as 4 files. Returns the index and the drain that
+      * streams `stage` one file per micro-batch through the verdict into
+      * the parquet dir `out`, under a state-store provider if one is given.
+      */
+    def prepare(t: DataFrame, stage: String, cp: String, out: String):
+        (FrozenIndex, Option[String] => Long) = {
+      val r = rows(t)
+      val built = index(r.filter(col(key) % 2 === 0))
+      r.filter(col(key) % 2 === 1).repartitionByRange(4, col(key))
+        .write.mode("overwrite").parquet(stage)
+      (built, provider => graft.streaming.Drain.eachBatch(
+        fileStream(t.sparkSession, stage), cp, provider) { batch =>
+        built.verdict(batch).write.mode("append").parquet(out)
+      })
+    }
+  }
+
+  /** `rows` of `table` drained into a ledger by
+    * [[graft.streaming.IncrementalIngest.runIntoLedger]]. */
+  final case class LedgerShape(name: String, table: String,
+      gates: Seq[String])(val rows: DataFrame => DataFrame) extends Shape {
+
+    /** Stage `t`'s ledger records in `src` as one parquet file; returns the
+      * drain of `src` into `ledger` through the checkpoint `cp`. */
+    def prepare(t: DataFrame, src: String, cp: String,
+                ledger: graft.ledger.Ledger): () => Long = {
+      rows(t).coalesce(1).write.parquet(src)
+      val schema = t.sparkSession.read.parquet(src).schema
+      () => graft.streaming.IncrementalIngest.runIntoLedger(
+        t.sparkSession, src, schema, cp, ledger)
+    }
+  }
+
+  /** A persisted index: the verdict one micro-batch gets from it, and the
+    * frames it caches, released once the drains are done. */
+  final case class FrozenIndex(verdict: DataFrame => DataFrame,
+                               cached: DataFrame*) {
+    def release(): Unit = cached.foreach(_.unpersist())
+  }
+
+  /** Stream the parquet files under `dir` one per micro-batch. */
+  private def fileStream(s: SparkSession, dir: String): DataFrame =
+    s.readStream.schema(s.read.parquet(dir).schema)
+      .option("maxFilesPerTrigger", 1).parquet(dir)
+
+  /** Copy every parquet file in `dir` once more under a new name: an
+    * at-least-once redelivery, which the file source sees as new input. */
+  def redeliver(dir: String): Unit = {
+    val d = java.nio.file.Paths.get(dir)
+    val ls = java.nio.file.Files.list(d)
+    val files =
+      try ls.iterator().asScala
+        .filter(_.getFileName.toString.endsWith(".parquet")).toList
+      finally ls.close()
+    files.foreach(f =>
+      java.nio.file.Files.copy(f, d.resolve("re-" + f.getFileName)))
+  }
+
+  private def scratch(gate: String, what: String): String =
+    graft.TempDirs.create(s"graft-${gate.takeWhile(_ != '_')}-$what").toString
+
+  /** A gate that drains `shape` over its table into memory, then `finish`es
+    * the drained rows. */
+  private def streamGate(shape: StreamShape, doc: String, oracle: String)(
+      finish: DataFrame => DataFrame): Q =
+    Q(shape.gates.head, doc, Some(oracle), (s, dir) => {
+      val stream = shape.query(s, dir,
+        () => Tables.tableStream(s, dir, s"${shape.table}.parquet"))
+      finish(graft.streaming.Drain.toMemory(stream,
+        scratch(shape.gates.head, "cp"), shape.mode,
+        if (shape.rocksDb) Some("rocksdb") else None)._1)
     })
 
-  private val q56 = Q("q56_streaming_day_window",
+  /** A gate that streams the odd-`key` rows of `shape` as 4 files, one per
+    * micro-batch, through the index built over the even-`key` rows, and
+    * returns the verdicts. */
+  private def admissionGate(shape: AdmissionShape, doc: String,
+                            oracle: Option[String]): Q = {
+    val gate = shape.gates.head
+    Q(gate, doc, oracle, (s, dir) => {
+      val out = scratch(gate, "out")
+      val (index, drain) = shape.prepare(Tables.table(s, dir, shape.table),
+        scratch(gate, "stage"), scratch(gate, "cp"), out)
+      drain(None)
+      index.release()
+      s.read.parquet(out).orderBy(shape.key)
+    })
+  }
+
+  val ingestDedup: StreamShape = StreamShape("ingest_dedup", "events",
+    Seq("q33_streaming_ingest"), "complete") { (_, _, source) =>
+    source()
+      .withColumn("hash",
+        Etl.recordHash(lit("DRM"), col("event_id").cast("string")))
+      .dropDuplicates("hash")
+      .groupBy("event_type").agg(count(lit(1)).as("n_records"))
+  }
+
+  private val q33 = streamGate(ingestDedup,
+    "§2.9: Structured Streaming AvailableNow drain — sha256 dedup state + " +
+      "aggregation; result equals the batch query (exactly-once semantics)",
+    """
+      SELECT event_type, count(*) AS n_records
+      FROM events GROUP BY event_type ORDER BY event_type""")(
+    _.orderBy("event_type"))
+
+  val dayWindow: StreamShape = StreamShape("day_window", "events",
+    Seq("q56_streaming_day_window"), "complete") { (_, _, source) =>
+    graft.streaming.IncrementalIngest.dayBucketCounts(
+      source().select(col("event_type").as("device_id"), col("ts").as("start")),
+      "12:00:00")
+  }
+
+  private val q56 = streamGate(dayWindow,
     "§2.9: streaming 1-day tumbling event-time window anchored at the " +
       "12:00 cut-off (IncrementalIngest.dayBucketCounts) — the A1 day " +
       "bucket as a streaming aggregation; oracle computes the identical " +
       "windows in plain SQL",
-    Some("""
+    """
       SELECT event_type AS device_id,
              strftime(date_trunc('day', ts - INTERVAL 12 HOUR) + INTERVAL 12 HOUR,
                       '%Y-%m-%d %H:%M:%S') AS bucket_start,
              strftime(date_trunc('day', ts - INTERVAL 12 HOUR) + INTERVAL 36 HOUR,
                       '%Y-%m-%d %H:%M:%S') AS bucket_end,
              count(*) AS n_records
-      FROM events GROUP BY 1, 2, 3 ORDER BY device_id, bucket_start"""),
-    (s, dir) => {
-      val cp = graft.TempDirs.create("graft-q56-cp").toString
-      val stream = eventsStream(s, dir)
-        .select(col("event_type").as("device_id"), col("ts").as("start"))
-      val agg = graft.streaming.IncrementalIngest.dayBucketCounts(stream, "12:00:00")
-      val name = "q56_out_" + math.abs(cp.hashCode).toString
-      withStreamStatePartitions(s, 8) {
-        val q = agg.writeStream.format("memory").queryName(name)
-          .outputMode("complete")
-          .option("checkpointLocation", cp)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      s.table(name).orderBy("device_id", "bucket_start")
-    })
+      FROM events GROUP BY 1, 2, 3 ORDER BY device_id, bucket_start""")(
+    _.orderBy("device_id", "bucket_start"))
 
   private val q34 = Q("q34_approx_distinct",
     "distinct-count rollup whose exact columns are oracle-gated; the " +
@@ -366,39 +448,47 @@ object Pipeline {
     Some(intervalOracle),
     (s, dir) => intervalJoinQuery(s, dir, broadcastAssignments = false))
 
-  private val q75 = Q("q75_streaming_curation",
+  val curation: StreamShape = StreamShape("curation", "documents",
+    Seq("q75_streaming_curation"), "complete") { (_, _, source) =>
+    graft.streaming.IncrementalIngest.curateDocuments(source(),
+      minChars = 150, langs = Seq("de", "en", "fr"))
+      .groupBy("lang").agg(count(lit(1)).as("n_docs"))
+  }
+
+  private val q75 = streamGate(curation,
     "incremental corpus curation: AvailableNow drain through the quality " +
       "filter + (lang, content-hash) dedup state (IncrementalIngest." +
       "curateDocuments) — the streaming twin of q62's batch chain; result " +
       "equals the batch distinct count (exactly-once curation)",
-    Some("""
+    """
       SELECT lang, count(DISTINCT text) AS n_docs
       FROM documents
       WHERE n_chars >= 150 AND lang IN ('de', 'en', 'fr')
-      GROUP BY lang ORDER BY lang"""),
-    (s, dir) => {
-      val cp = graft.TempDirs.create("graft-q75-cp").toString
-      val curated = graft.streaming.IncrementalIngest.curateDocuments(
-        Tables.tableStream(s, dir, "documents.parquet"),
-        minChars = 150, langs = Seq("de", "en", "fr"))
-        .groupBy("lang").agg(count(lit(1)).as("n_docs"))
-      val name = "q75_out_" + math.abs(cp.hashCode).toString
-      withStreamStatePartitions(s, 8) {
-        val q = curated.writeStream.format("memory").queryName(name)
-          .outputMode("complete")
-          .option("checkpointLocation", cp)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      s.table(name).orderBy("lang")
-    })
+      GROUP BY lang ORDER BY lang""")(
+    _.orderBy("lang"))
 
-  private val q113 = Q("q113_streaming_stream_join",
+  val streamJoin: StreamShape = StreamShape("stream_join", "events",
+    Seq("q113_streaming_stream_join"), "append") { (_, _, source) =>
+    val ev = source()
+    val clicks = ev.filter(col("event_type") === "click")
+      .select(col("event_id").as("click_id"), col("user_id").as("c_user"),
+        col("ts").as("c_ts"))
+    val purchases = ev.filter(col("event_type") === "purchase")
+      .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
+        col("ts").as("p_ts"))
+    graft.streaming.IncrementalIngest.attributionJoin(
+      clicks, purchases, "c_user", "p_user", "c_ts", "p_ts", "1 hour")
+      .select(col("click_id"), col("purchase_id"), col("c_user").as("user_id"),
+        unix_millis(col("c_ts")).as("click_ms"),
+        unix_millis(col("p_ts")).as("purchase_ms"))
+  }
+
+  private val q113 = streamGate(streamJoin,
     "§2.9: watermarked stream-stream inner join (IncrementalIngest." +
       "attributionJoin) — purchases attributed to same-user clicks within " +
       "a 1-hour horizon; both sides watermarked so join state expires; " +
       "AvailableNow drain equals the batch join, which the oracle replays",
-    Some("""
+    """
       WITH a AS (SELECT event_id AS click_id, user_id AS c_user, ts AS c_ts
                  FROM events WHERE event_type = 'click'),
            b AS (SELECT event_id AS purchase_id, user_id AS p_user, ts AS p_ts
@@ -407,31 +497,8 @@ object Pipeline {
              epoch_ms(c_ts) AS click_ms, epoch_ms(p_ts) AS purchase_ms
       FROM a JOIN b ON c_user = p_user
         AND p_ts >= c_ts AND p_ts <= c_ts + INTERVAL 1 HOUR
-      ORDER BY click_id, purchase_id"""),
-    (s, dir) => {
-      val cp = graft.TempDirs.create("graft-q113-cp").toString
-      val ev = eventsStream(s, dir)
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("event_id").as("click_id"), col("user_id").as("c_user"),
-          col("ts").as("c_ts"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
-          col("ts").as("p_ts"))
-      val joined = graft.streaming.IncrementalIngest.attributionJoin(
-        clicks, purchases, "c_user", "p_user", "c_ts", "p_ts", "1 hour")
-        .select(col("click_id"), col("purchase_id"), col("c_user").as("user_id"),
-          unix_millis(col("c_ts")).as("click_ms"),
-          unix_millis(col("p_ts")).as("purchase_ms"))
-      val name = "q113_out_" + math.abs(cp.hashCode).toString
-      withStreamStatePartitions(s, 8) {
-        val q = joined.writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .option("checkpointLocation", cp)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      s.table(name).orderBy("click_id", "purchase_id")
-    })
+      ORDER BY click_id, purchase_id""")(
+    _.orderBy("click_id", "purchase_id"))
 
   /** Append-mode emission law, pinned empirically: the AvailableNow drain's
     * final no-data batch advances the watermark to max(ts) - delay, and a
@@ -442,12 +509,19 @@ object Pipeline {
     * re-emits the whole result every drain. The oracle applies the same
     * closure predicate in SQL: bucket_end <= max(ts) - 1 hour.
     */
-  private val q129 = Q("q129_streaming_append_window",
+  val appendWindow: StreamShape = StreamShape("append_window", "events",
+    Seq("q129_streaming_append_window"), "append") { (_, _, source) =>
+    graft.streaming.IncrementalIngest.dayBucketCounts(
+      source().select(col("event_type").as("device_id"), col("ts").as("start")),
+      "12:00:00", watermark = "1 hour")
+  }
+
+  private val q129 = streamGate(appendWindow,
     "§2.9: append-mode day-bucket window + 1-hour watermark — only " +
       "watermark-closed buckets are emitted (the incremental production " +
       "posture vs q56's complete-mode re-emit); oracle filters the same " +
       "closed windows in SQL",
-    Some("""
+    """
       WITH b AS (SELECT event_type AS device_id,
                    date_trunc('day', ts - INTERVAL 12 HOUR) + INTERVAL 12 HOUR AS bs,
                    count(*) AS n_records
@@ -458,23 +532,8 @@ object Pipeline {
              strftime(bs + INTERVAL 24 HOUR, '%Y-%m-%d %H:%M:%S') AS bucket_end,
              n_records
       FROM b, wm WHERE bs + INTERVAL 24 HOUR <= w
-      ORDER BY device_id, bucket_start"""),
-    (s, dir) => {
-      val cp = graft.TempDirs.create("graft-q129-cp").toString
-      val stream = eventsStream(s, dir)
-        .select(col("event_type").as("device_id"), col("ts").as("start"))
-      val agg = graft.streaming.IncrementalIngest.dayBucketCounts(
-        stream, "12:00:00", watermark = "1 hour")
-      val name = "q129_out_" + math.abs(cp.hashCode).toString
-      withStreamStatePartitions(s, 8) {
-        val q = agg.writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .option("checkpointLocation", cp)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      s.table(name).orderBy("device_id", "bucket_start")
-    })
+      ORDER BY device_id, bucket_start""")(
+    _.orderBy("device_id", "bucket_start"))
 
   /** Session windows share the law: a session closes when the watermark
     * passes its end (last event + gap), so the emitted set is exactly the
@@ -483,12 +542,19 @@ object Pipeline {
     * session_window's merge semantics equal chained <=gap steps) and applies
     * the closure predicate max(ts_in_session) + gap <= max(ts) - delay.
     */
-  private val q130 = Q("q130_streaming_closed_sessions",
+  val closedSessions: StreamShape = StreamShape("closed_sessions", "events",
+    Seq("q130_streaming_closed_sessions"), "append") { (_, _, source) =>
+    graft.streaming.IncrementalIngest.sessionCounts(
+      source().select(col("user_id").as("device_id"), col("ts").as("start")),
+      gap = "30 minutes", watermark = "1 hour")
+  }
+
+  private val q130 = streamGate(closedSessions,
     "§2.9: streaming session windows (30-min gap, 1-hour watermark) in " +
       "append mode — only sessions no future event can extend are emitted; " +
       "oracle rebuilds the sessions via the q65 lag-gap chain and filters " +
       "to the closed ones",
-    Some("""
+    """
       WITH e AS (SELECT user_id, event_id, ts FROM events),
       l AS (SELECT user_id, event_id, ts,
             CASE WHEN epoch_ns(ts) - LAG(epoch_ns(ts)) OVER
@@ -511,23 +577,8 @@ object Pipeline {
              strftime(s_end, '%Y-%m-%d %H:%M:%S') AS session_end,
              n_records
       FROM g, wm WHERE s_end <= w
-      ORDER BY device_id, session_start"""),
-    (s, dir) => {
-      val cp = graft.TempDirs.create("graft-q130-cp").toString
-      val stream = eventsStream(s, dir)
-        .select(col("user_id").as("device_id"), col("ts").as("start"))
-      val agg = graft.streaming.IncrementalIngest.sessionCounts(
-        stream, gap = "30 minutes", watermark = "1 hour")
-      val name = "q130_out_" + math.abs(cp.hashCode).toString
-      withStreamStatePartitions(s, 8) {
-        val q = agg.writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .option("checkpointLocation", cp)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      s.table(name).orderBy("device_id", "session_start")
-    })
+      ORDER BY device_id, session_start""")(
+    _.orderBy("device_id", "session_start"))
 
   /** The reference's whole incremental contract in one gate: at-least-once
     * delivery (the SAME file arrives twice, under two names, across two
@@ -539,7 +590,13 @@ object Pipeline {
     * synthetic data; this gate proves it end-to-end on the driver's events
     * table with a DuckDB oracle.
     */
-  private val q134 = Q("q134_streaming_ledger_sink",
+  val ledgerSink: LedgerShape = LedgerShape("ledger_sink", "events",
+    Seq("q134_streaming_ledger_sink")) { ev =>
+    ev.select(col("event_type").as("device_type"),
+      col("event_id").cast("string").as("manufacturer_ref"))
+  }
+
+  private val q134 = Q(ledgerSink.gates.head,
     "§2.9: foreachBatch → Ledger exactly-once sink, end-to-end — same file " +
       "delivered twice across two checkpointed drains; ledger contents " +
       "equal the batch counts (redelivery invisible)",
@@ -548,77 +605,71 @@ object Pipeline {
       FROM events GROUP BY 1 ORDER BY 1"""),
     (s, dir) => {
       val work = graft.TempDirs.create("graft-q134")
-      val src = work.resolve("src")
-      java.nio.file.Files.createDirectories(src)
-      // stage the events table (projected to the ledger-record shape the
-      // sink hashes) as a bare parquet FILE the file source can redeliver
-      val staged = work.resolve("staged").toString
-      Tables.table(s, dir, "events")
-        .select(col("event_type").as("device_type"),
-          col("event_id").cast("string").as("manufacturer_ref"))
-        .coalesce(1).write.parquet(staged)
-      val part = java.nio.file.Files.list(java.nio.file.Paths.get(staged))
-        .iterator().asScala
-        .find(_.getFileName.toString.endsWith(".parquet")).get
-      java.nio.file.Files.copy(part, src.resolve("batch_000.parquet"))
-      val schema = s.read.parquet(part.toString).schema
+      val src = work.resolve("src").toString
       val ledger = new graft.ledger.Ledger(s, work.resolve("ledger").toString)
-      val cp = work.resolve("cp").toString
-      withStreamStatePartitions(s, 8) {
-        graft.streaming.IncrementalIngest.runIntoLedger(
-          s, src.toString, schema, cp, ledger)
-        // at-least-once: the identical payload lands again under a new name
-        java.nio.file.Files.copy(part, src.resolve("batch_001.parquet"))
-        graft.streaming.IncrementalIngest.runIntoLedger(
-          s, src.toString, schema, cp, ledger)
-      }
+      val drain = ledgerSink.prepare(Tables.table(s, dir, ledgerSink.table),
+        src, work.resolve("cp").toString, ledger)
+      drain()
+      redeliver(src) // at-least-once: the identical payload lands again
+      drain()
       ledger.read()
         .groupBy("device_type").agg(count(lit(1)).as("n_records"))
         .orderBy("device_type")
     })
 
-  private val q157 = Q("q157_streaming_enrich",
+  val enrich: StreamShape = StreamShape("enrich", "events",
+    Seq("q157_streaming_enrich"), "complete") { (s, dir, source) =>
+    val dim = Tables.table(s, dir, "customer")
+      .select(col("c_custkey"), col("c_mktsegment"))
+    source()
+      .select(col("user_id"),
+        (col("value").cast(DecimalType(18, 2)) * 100).cast("long").as("cents"))
+      .join(broadcast(dim), col("user_id") === col("c_custkey"))
+      .groupBy("c_mktsegment")
+      .agg(count(lit(1)).as("n_events"), sum("cents").as("sum_cents"))
+  }
+
+  private val q157 = streamGate(enrich,
     "§2.9 stream-static enrichment: the event stream joins the STATIC " +
       "customer dimension (re-read and broadcast per micro-batch — the " +
       "slowly-changing-lookup posture; no state store involved for the " +
       "join side) and aggregates exact cents per market segment; " +
       "AvailableNow drain ≡ the batch join the oracle runs",
-    Some("""
+    """
       SELECT c.c_mktsegment, count(*) AS n_events,
              CAST(sum(CAST(CAST(e.value AS DECIMAL(18,2)) * 100 AS BIGINT))
                   AS BIGINT) AS sum_cents
       FROM events e JOIN customer c ON e.user_id = c.c_custkey
-      GROUP BY 1 ORDER BY c_mktsegment"""),
-    (s, dir) => {
-      val cp = graft.TempDirs.create("graft-q157-cp").toString
-      val dim = Tables.table(s, dir, "customer")
-        .select(col("c_custkey"), col("c_mktsegment"))
-      val agg = eventsStream(s, dir)
-        .select(col("user_id"),
-          (col("value").cast(DecimalType(18, 2)) * 100).cast("long")
-            .as("cents"))
-        .join(broadcast(dim), col("user_id") === col("c_custkey"))
-        .groupBy("c_mktsegment")
-        .agg(count(lit(1)).as("n_events"), sum("cents").as("sum_cents"))
-      val name = "q157_out_" + math.abs(cp.hashCode).toString
-      withStreamStatePartitions(s, 8) {
-        val q = agg.writeStream.format("memory").queryName(name)
-          .outputMode("complete")
-          .option("checkpointLocation", cp)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      s.table(name).orderBy("c_mktsegment")
-    })
+      GROUP BY 1 ORDER BY c_mktsegment""")(
+    _.orderBy("c_mktsegment"))
 
-  private val q166 = Q("q166_tws_closed_sessions",
+  /** Events keyed by user as (k, ts), null key/ts rows excluded before
+    * keying and watermarking — the batch twins' policy and the oracles'
+    * WHERE (r13 advice); without it a null-bearing corpus would push a
+    * "null" string key through the processor. */
+  private def userSessions(s: SparkSession, ev: DataFrame) = {
+    import s.implicits._
+    ev.filter(col("user_id").isNotNull && col("ts").isNotNull)
+      .select(col("user_id").cast("string").as("k"), col("ts"))
+      .withWatermark("ts", "1 hour")
+      .as[(String, java.sql.Timestamp)]
+  }
+
+  val twsSessions: StreamShape = StreamShape("tws_sessions", "events",
+    Seq("q166_tws_closed_sessions"), "append", rocksDb = true) {
+    (s, _, source) =>
+      graft.streaming.StatefulTracking
+        .closedSessionsTws(s, userSessions(s, source()), gapMs = 1800000L).toDF()
+  }
+
+  private val q166 = streamGate(twsSessions,
     "§2.9: session closure via transformWithState EVENT-TIME TIMERS " +
       "(StatefulProcessor + ValueState + registerTimer, RocksDB " +
       "provider) — push-based emission the built-in session_window " +
       "(q130) can't do: a user's NON-FINAL sessions close inline as the " +
       "closing event arrives, final sessions close when the watermark " +
       "(max ts - 1h) passes last+gap; oracle rebuilds both rules in SQL",
-    Some("""
+    """
       WITH l AS (SELECT user_id, event_id, ts,
             CASE WHEN epoch_ms(ts) - LAG(epoch_ms(ts)) OVER
                    (PARTITION BY user_id ORDER BY ts, event_id) <= 1800000
@@ -639,65 +690,46 @@ object Pipeline {
       SELECT g.user_id AS user_id, start_ms, last_ms, n_events
       FROM g JOIN m ON g.user_id = m.user_id CROSS JOIN wm
       WHERE g.sid < m.max_sid OR g.last_ms + 1800000 <= wm.w
-      ORDER BY g.user_id, start_ms"""),
-    (s, dir) => {
-      val cp = graft.TempDirs.create("graft-q166-cp").toString
-      import s.implicits._
-      // null key/ts rows excluded before keying/watermarking (q257's
-      // policy, applied here too — the shared latent gap from r13 advice)
-      val stream = eventsStream(s, dir)
-        .filter(col("user_id").isNotNull && col("ts").isNotNull)
-        .select(col("user_id").cast("string").as("k"), col("ts"))
-        .withWatermark("ts", "1 hour")
-        .as[(String, java.sql.Timestamp)]
-      val closed = graft.streaming.StatefulTracking
-        .closedSessionsTws(s, stream, gapMs = 1800000L)
-      val name = "q166_out_" + math.abs(cp.hashCode).toString
-      graft.streaming.StateStores.withProvider(s, "rocksdb") {
-        withStreamStatePartitions(s, 8) {
-          val q = closed.toDF().writeStream.format("memory").queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", cp)
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
-      }
-      s.table(name)
-        .select(col("device_id").cast("long").as("user_id"),
-          col("start_ms"), col("end_ms").as("last_ms"), col("n_events"))
-        .orderBy("user_id", "start_ms")
-    })
+      ORDER BY g.user_id, start_ms""")(
+    _.select(col("device_id").cast("long").as("user_id"),
+      col("start_ms"), col("end_ms").as("last_ms"), col("n_events"))
+      .orderBy("user_id", "start_ms"))
 
-  private val q174 = Q("q174_streaming_dedup_watermark",
+  val dedupWatermark: StreamShape = StreamShape("dedup_watermark", "events",
+    Seq("q174_streaming_dedup_watermark"), "append") { (_, _, source) =>
+    source().unionByName(source())
+      .withWatermark("ts", "1 hour")
+      .dropDuplicatesWithinWatermark("event_id")
+      .select(col("event_id"), col("event_type"))
+  }
+
+  private val q174 = streamGate(dedupWatermark,
     "§2.9: dropDuplicatesWithinWatermark over a deliberately DOUBLED " +
       "stream (two independent file-source reads of the same table, " +
       "unioned) — the at-least-once-redelivery dedup posture: state for " +
       "each key lives only until the watermark passes it, unlike " +
       "dropDuplicates' forever-state; append mode, result equals the " +
       "batch distinct",
-    Some("""
+    """
       SELECT event_type, count(*) AS n_records
-      FROM events GROUP BY 1 ORDER BY 1"""),
-    (s, dir) => {
-      val cp = graft.TempDirs.create("graft-q174-cp").toString
-      val doubled = eventsStream(s, dir).unionByName(eventsStream(s, dir))
-        .withWatermark("ts", "1 hour")
-        .dropDuplicatesWithinWatermark("event_id")
-        .select(col("event_id"), col("event_type"))
-      val name = "q174_out_" + math.abs(cp.hashCode).toString
-      withStreamStatePartitions(s, 8) {
-        val q = doubled.writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .option("checkpointLocation", cp)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      s.table(name).groupBy("event_type")
-        .agg(count(lit(1)).as("n_records"))
-        .orderBy("event_type")
-    })
+      FROM events GROUP BY 1 ORDER BY 1""")(
+    _.groupBy("event_type").agg(count(lit(1)).as("n_records"))
+      .orderBy("event_type"))
 
-  private val q235 = Q("q235_streaming_token_bucket",
+  val tokenBucket: StreamShape = StreamShape("token_bucket", "events",
+    Seq("q235_streaming_token_bucket"), "append", rocksDb = true) {
+    (s, _, source) =>
+      import s.implicits._
+      val ev = source()
+        .filter(col("user_id").isNotNull && col("ts").isNotNull)
+        .select(col("user_id").cast("string").as("k"),
+          unix_millis(col("ts")).as("ts_ms"), col("event_id"))
+        .as[(String, Long, Long)]
+      graft.streaming.StatefulTracking.tokenBucketTws(s, ev, capacity = 5L,
+        refillNum = 1L, refillDenMs = 43200000L).toDF()
+  }
+
+  private val q235 = streamGate(tokenBucket,
     "§2.9: token-bucket rate limiting as a LIVE stream — " +
       "transformWithState ValueState carries (tokens, lastTs) per user " +
       "across batches with the SAME integer recurrence as the batch " +
@@ -705,7 +737,7 @@ object Pipeline {
       "same input order (StreamingSpec pins stream == batch row for " +
       "row); RocksDB provider, AvailableNow drain, per-user admission " +
       "census",
-    Some("""
+    """
       WITH RECURSIVE ev AS (
         SELECT user_id, epoch_ms(ts) AS ts_ms, event_id,
           row_number() OVER (PARTITION BY user_id
@@ -726,45 +758,38 @@ object Pipeline {
       SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
         CAST(sum(CASE WHEN admitted THEN 1 ELSE 0 END) AS BIGINT)
           AS n_admitted
-      FROM scan GROUP BY 1 ORDER BY user_id"""),
-    (s, dir) => {
-      val cp = graft.TempDirs.create("graft-q235-cp")
-        .toString
-      import s.implicits._
-      val stream = eventsStream(s, dir)
-        .filter(col("user_id").isNotNull && col("ts").isNotNull)
-        .select(col("user_id").cast("string").as("k"),
-          unix_millis(col("ts")).as("ts_ms"), col("event_id"))
-        .as[(String, Long, Long)]
-      val admissions = graft.streaming.StatefulTracking
-        .tokenBucketTws(s, stream, capacity = 5L, refillNum = 1L,
-          refillDenMs = 43200000L)
-      val name = "q235_out_" + math.abs(cp.hashCode).toString
-      graft.streaming.StateStores.withProvider(s, "rocksdb") {
-        withStreamStatePartitions(s, 8) {
-          val q = admissions.toDF().writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", cp)
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
-      }
-      s.table(name)
-        .groupBy(col("user_id").cast("long").as("user_id"))
-        .agg(count(lit(1)).as("n_events"),
-          sum(when(col("admitted"), 1L).otherwise(0L)).as("n_admitted"))
-        .orderBy("user_id")
-    })
+      FROM scan GROUP BY 1 ORDER BY user_id""")(
+    _.groupBy(col("user_id").cast("long").as("user_id"))
+      .agg(count(lit(1)).as("n_events"),
+        sum(when(col("admitted"), 1L).otherwise(0L)).as("n_admitted"))
+      .orderBy("user_id"))
 
-  private val q244 = Q("q244_streaming_drift_monitor",
+  val driftMonitor: StreamShape = StreamShape("drift_monitor", "events",
+    Seq("q244_streaming_drift_monitor"), "append", rocksDb = true) {
+    (s, dir, source) =>
+      import s.implicits._
+      // Reference profile: the category census — bounded by event_type
+      // cardinality (an enum), not by data size; broadcast-shaped.
+      val ref = Tables.table(s, dir, "events")
+        .groupBy("event_type").agg(count(lit(1)).as("c"))
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      val ev = source()
+        .withColumn("day_key",
+          unix_millis(date_trunc("DAY", col("ts"))).cast("string"))
+        .select(col("day_key"), col("ts"), col("event_type"))
+        .withWatermark("ts", "1 hour")
+        .as[(String, java.sql.Timestamp, String)]
+      graft.streaming.StatefulTracking.dayDriftTws(s, ev, ref).toDF()
+  }
+
+  private val q244 = streamGate(driftMonitor,
     "§2.9: streaming drift MONITOR — per-day categorical TVD vs a " +
       "reference profile, emitted push-based by an event-time timer the " +
       "moment the watermark closes the day (transformWithState MapState: " +
       "state is O(categories) per open day, never O(rows)); the streaming " +
       "twin of the batch drift census (q136), sharing its exact " +
       "rational-TVD law; oracle rebuilds closed days + TVD in SQL",
-    Some("""
+    """
       WITH g AS (SELECT event_type, count(*) AS c_t FROM events GROUP BY 1),
       n AS (SELECT count(*) AS n_total FROM events),
       d AS (SELECT CAST(epoch_ms(date_trunc('day', ts)) AS BIGINT) AS day_ms,
@@ -784,37 +809,35 @@ object Pipeline {
              CAST(a_d + (n_total - cov) * n_d AS DOUBLE)
                / CAST(2 * n_d * n_total AS DOUBLE) AS tvd
       FROM j CROSS JOIN wm WHERE day_ms + 86400000 <= wm.w
-      ORDER BY day_ms"""),
-    (s, dir) => {
-      val cp = graft.TempDirs.create("graft-q244-cp")
-        .toString
-      import s.implicits._
-      // Reference profile: the category census — bounded by event_type
-      // cardinality (an enum), not by data size; broadcast-shaped.
-      val ref = Tables.table(s, dir, "events")
-        .groupBy("event_type").agg(count(lit(1)).as("c"))
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      val stream = eventsStream(s, dir)
-        .withColumn("day_key",
-          unix_millis(date_trunc("DAY", col("ts"))).cast("string"))
-        .select(col("day_key"), col("ts"), col("event_type"))
-        .withWatermark("ts", "1 hour")
-        .as[(String, java.sql.Timestamp, String)]
-      val drift = graft.streaming.StatefulTracking.dayDriftTws(s, stream, ref)
-      val name = "q244_out_" + math.abs(cp.hashCode).toString
-      graft.streaming.StateStores.withProvider(s, "rocksdb") {
-        withStreamStatePartitions(s, 8) {
-          val q = drift.toDF().writeStream.format("memory").queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", cp)
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
-      }
-      s.table(name).orderBy("day_ms")
+      ORDER BY day_ms""")(
+    _.orderBy("day_ms"))
+
+  /** Persist `df` and materialize it ONCE, before the first micro-batch
+    * would otherwise charge the build to itself. */
+  private def frozen(df: DataFrame): DataFrame = {
+    val p = df.persist()
+    p.count()
+    p
+  }
+
+  val indexAdmission: AdmissionShape = AdmissionShape("index_admission",
+    "documents", Seq("q248_streaming_index_admission"), "doc_id")(
+    identity, { evens =>
+      // persisted PRE-PARTITIONED by the join key — the bucketed-index
+      // shape dedupAgainstBands' scaladoc prescribes: the per-batch join
+      // reads index partitions in place (batch bands broadcast), and the
+      // cached layout is the one the join wants (r14: warm batch
+      // 0.54 -> 0.37 s)
+      val bands = frozen(graft.ops.Dedup.lshBands(
+        graft.ops.Dedup.minHashSignatures(evens, "doc_id", "text",
+          numHashes = 16, shingleSize = 3),
+        "doc_id", rowsPerBand = 2)
+        .repartition(col("band"), col("band_sig")))
+      FrozenIndex(graft.ops.Dedup.dedupAgainstBands(_, bands,
+        "doc_id", "text", numHashes = 16, rowsPerBand = 2), bands)
     })
 
-  private val q248 = Q("q248_streaming_index_admission",
+  private val q248 = admissionGate(indexAdmission,
     "§2.9 × near-dup: q138's incremental admission run the way a standing " +
       "pipeline runs it — the corpus index (even-id docs) is signed ONCE " +
       "and persisted as its lshBands relation; odd-id docs arrive as a " +
@@ -826,51 +849,16 @@ object Pipeline {
       "bit-for-bit (the foreachBatch parquet append is at-least-once on " +
       "retry — a production sink pairs it with the q134 ledger discipline; " +
       "the single AvailableNow drain here has no retry window)",
-    Some(Extensions.minHashAdmissionOracle),
-    (s, dir) => {
-      val docs = Tables.table(s, dir, "documents")
-      // persisted PRE-PARTITIONED by the join key — the bucketed-index
-      // shape dedupAgainstBands' scaladoc prescribes: the per-batch join
-      // reads index partitions in place (batch bands broadcast), and the
-      // cached layout is the one the join wants (r14: warm batch
-      // 0.54 -> 0.37 s)
-      val idxBands = graft.ops.Dedup.lshBands(
-        graft.ops.Dedup.minHashSignatures(
-          docs.filter(col("doc_id") % 2 === 0), "doc_id", "text",
-          numHashes = 16, shingleSize = 3),
-        "doc_id", rowsPerBand = 2)
-        .repartition(col("band"), col("band_sig")).persist()
-      // Materialize the index ONCE, before the first micro-batch would
-      // otherwise charge the build to itself.
-      idxBands.count()
-      val stage = graft.TempDirs
-        .create("graft-q248-stage").toString
-      val out = graft.TempDirs
-        .create("graft-q248-out").toString
-      val cp = graft.TempDirs
-        .create("graft-q248-cp").toString
-      docs.filter(col("doc_id") % 2 === 1)
-        .repartitionByRange(4, col("doc_id"))
-        .write.mode("overwrite").parquet(stage)
-      val schema = s.read.parquet(stage).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(stage)
-      withStreamStatePartitions(s, 8) {
-        val q = stream.writeStream
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            graft.ops.Dedup.dedupAgainstBands(batch, idxBands,
-              "doc_id", "text", numHashes = 16, rowsPerBand = 2)
-              .write.mode("append").parquet(out)
-          }
-          .option("checkpointLocation", cp)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      idxBands.unpersist()
-      s.read.parquet(out).orderBy("doc_id")
-    })
+    Some(Extensions.minHashAdmissionOracle))
 
-  private val q257 = Q("q257_tws_capped_sessions",
+  val cappedSessions: StreamShape = StreamShape("capped_sessions", "events",
+    Seq("q257_tws_capped_sessions"), "append", rocksDb = true) {
+    (s, _, source) =>
+      graft.streaming.StatefulTracking.cappedSessionsTws(s,
+        userSessions(s, source()), gapMs = 1800000L, capMs = 900000L).toDF()
+  }
+
+  private val q257 = streamGate(cappedSessions,
     "§2.9: q254's hard-cap sessionization as a LIVE stream — " +
       "CappedSessionProcessor extends the q166 timer machinery with the " +
       "cap rule: a session closes inline when the arriving event sits " +
@@ -880,7 +868,7 @@ object Pipeline {
       "close when the watermark (max ts − 1 h) passes last + gap; the " +
       "oracle replays the capped recurrence as a recursive CTE and " +
       "applies the q166 closure predicate",
-    Some("""
+    """
       WITH RECURSIVE ev AS (
         SELECT user_id AS k, epoch_ms(ts) AS ts_ms,
           row_number() OVER (PARTITION BY user_id
@@ -907,39 +895,29 @@ object Pipeline {
       SELECT g.k AS user_id, start_ms, end_ms, n_events
       FROM g JOIN m ON g.k = m.k CROSS JOIN wm
       WHERE g.sid < m.max_sid OR g.end_ms + 1800000 <= wm.w
-      ORDER BY user_id, start_ms"""),
-    (s, dir) => {
-      val cp = graft.TempDirs.create("graft-q257-cp")
-        .toString
-      import s.implicits._
-      // null key/ts rows are excluded BEFORE keying and watermarking —
-      // the batch twin sessionizeCapped's documented policy and the
-      // oracle's WHERE; without this a null-bearing corpus would push a
-      // "null" string key through the processor (r13 advice)
-      val stream = eventsStream(s, dir)
-        .filter(col("user_id").isNotNull && col("ts").isNotNull)
-        .select(col("user_id").cast("string").as("k"), col("ts"))
-        .withWatermark("ts", "1 hour")
-        .as[(String, java.sql.Timestamp)]
-      val closed = graft.streaming.StatefulTracking
-        .cappedSessionsTws(s, stream, gapMs = 1800000L, capMs = 900000L)
-      val name = "q257_out_" + math.abs(cp.hashCode).toString
-      graft.streaming.StateStores.withProvider(s, "rocksdb") {
-        withStreamStatePartitions(s, 8) {
-          val q = closed.toDF().writeStream.format("memory").queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", cp)
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
-      }
-      s.table(name)
-        .select(col("device_id").cast("long").as("user_id"),
-          col("start_ms"), col("end_ms"), col("n_events"))
-        .orderBy("user_id", "start_ms")
+      ORDER BY user_id, start_ms""")(
+    _.select(col("device_id").cast("long").as("user_id"),
+      col("start_ms"), col("end_ms"), col("n_events"))
+      .orderBy("user_id", "start_ms"))
+
+  /** `docs`' unigram census over `text`, pre-partitioned by its join key
+    * `w` (the q248 bucketed-index discipline). */
+  private def censusOf(docs: DataFrame, text: String = "text"): DataFrame =
+    graft.ops.TextAnalysis.unigramCensus(docs, text).repartition(col("w"))
+
+  private def scoreCensus(census: DataFrame)(batch: DataFrame): DataFrame =
+    graft.ops.TextAnalysis.scoreAgainstCensus(batch, census, "doc_id", "text",
+      keepLoPpm = 4010000L, keepHiPpm = 10000000L)
+
+  val censusAdmission: AdmissionShape = AdmissionShape("census_admission",
+    "documents", Seq("q267_streaming_census_admission",
+      "q271_streaming_census_growth"), "doc_id")(
+    identity, { evens =>
+      val census = frozen(censusOf(evens))
+      FrozenIndex(scoreCensus(census), census)
     })
 
-  private val q267 = Q("q267_streaming_census_admission",
+  private val q267 = admissionGate(censusAdmission,
     "§2.9 × quality: q266's frozen-census scoring run the way a standing " +
       "pipeline runs it — the census (even-id docs' unigram counts) is " +
       "built ONCE and persisted pre-partitioned by its join key `w` (the " +
@@ -950,40 +928,7 @@ object Pipeline {
       "rebuild; scoring is row-local per doc GIVEN the census, so the " +
       "drained result is batch-boundary invariant and equals the q266 " +
       "batch gate bit-for-bit",
-    Some(Extensions.censusScoringOracle),
-    (s, dir) => {
-      val docs = Tables.table(s, dir, "documents")
-      val census = graft.ops.TextAnalysis.unigramCensus(
-        docs.filter(col("doc_id") % 2 === 0), "text")
-        .repartition(col("w")).persist()
-      // materialize ONCE, before the first micro-batch would otherwise
-      // charge the census build to itself (the q248 index discipline)
-      census.count()
-      val stage = graft.TempDirs
-        .create("graft-q267-stage").toString
-      val out = graft.TempDirs
-        .create("graft-q267-out").toString
-      val cp = graft.TempDirs
-        .create("graft-q267-cp").toString
-      docs.filter(col("doc_id") % 2 === 1)
-        .repartitionByRange(4, col("doc_id"))
-        .write.mode("overwrite").parquet(stage)
-      val schema = s.read.parquet(stage).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(stage)
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          graft.ops.TextAnalysis.scoreAgainstCensus(batch, census,
-            "doc_id", "text", keepLoPpm = 4010000L,
-            keepHiPpm = 10000000L)
-            .write.mode("append").parquet(out)
-        }
-        .option("checkpointLocation", cp)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      census.unpersist()
-      s.read.parquet(out).orderBy("doc_id")
-    })
+    Some(Extensions.censusScoringOracle))
 
   private val q271 = Q("q271_streaming_census_growth",
     "§2.9 × quality: q270's census maintenance run the way a standing " +
@@ -999,36 +944,19 @@ object Pipeline {
       "it against C1; equals the q270 batch gate bit-for-bit",
     Some(Extensions.censusGrowthOracle),
     (s, dir) => {
+      val gate = "q271_streaming_census_growth"
       val docs = Tables.table(s, dir, "documents")
-      def census(df: DataFrame) =
-        graft.ops.TextAnalysis.unigramCensus(df, "text")
-      val stage = graft.TempDirs
-        .create("graft-q271-stage").toString
-      val out = graft.TempDirs
-        .create("graft-q271-out").toString
-      val cp = graft.TempDirs
-        .create("graft-q271-cp").toString
-      var cur = census(docs.filter(col("doc_id") % 4 === 0))
-        .repartition(col("w")).persist()
-      cur.count() // materialize before the drain would charge it to itself
+      val stage = scratch(gate, "stage")
+      val out = scratch(gate, "out")
+      val cp = scratch(gate, "cp")
+      var cur = frozen(censusOf(docs.filter(col("doc_id") % 4 === 0)))
       docs.filter(col("doc_id") % 4 === 1).coalesce(1)
         .write.mode("overwrite").parquet(stage)
-      val schema = s.read.parquet(stage).schema
-      def drain(batchNo: Long): Unit = {
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(stage)
-          .writeStream
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            graft.ops.TextAnalysis.scoreAgainstCensus(batch, cur,
-              "doc_id", "text", keepLoPpm = 4010000L,
-              keepHiPpm = 10000000L)
-              .withColumn("batch", lit(batchNo))
-              .write.mode("append").parquet(out)
-          }
-          .option("checkpointLocation", cp)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
+      def drain(batchNo: Long): Unit =
+        graft.streaming.Drain.eachBatch(fileStream(s, stage), cp) { batch =>
+          scoreCensus(cur)(batch).withColumn("batch", lit(batchNo))
+            .write.mode("append").parquet(out)
+        }
       drain(1L)
       val admitted = docs.filter(col("doc_id") % 4 === 1)
         .join(s.read.parquet(out).filter(col("keep")).select("doc_id"),
@@ -1040,7 +968,8 @@ object Pipeline {
       // census. Checkpointing truncates the lineage, so the relation is
       // durable against recompute (and local-mode partitions can't be
       // lost, only evicted).
-      val grown = graft.ops.TextAnalysis.mergeCensus(cur, census(admitted))
+      val grown = graft.ops.TextAnalysis.mergeCensus(cur,
+          graft.ops.TextAnalysis.unigramCensus(admitted, "text"))
         .repartition(col("w")).localCheckpoint(true)
       cur.unpersist()
       cur = grown
@@ -1049,6 +978,47 @@ object Pipeline {
       drain(2L)
       cur.unpersist()
       s.read.parquet(out).orderBy("doc_id")
+    })
+
+  private val SemMaxDist2 = 1200000000000L
+
+  /** The frozen codebook (k = ceil(sqrt(n)) centroids, n the vectors of
+    * the widest dimension) and the per-cell keep-set index over `evens`,
+    * both persisted; None when no vector has a size. ONE action for the
+    * dimensionality probe + k sizing (the q277 batched-collect shape). */
+  private def semIndex(evens: DataFrame): Option[(DataFrame, DataFrame)] = {
+    val sz = evens.groupBy(size(col("embedding")).as("_d"))
+      .agg(countDistinct(col("vec_id")).as("_n"))
+      .collect().filter(!_.isNullAt(0)).map(r => (r.getInt(0), r.getLong(1)))
+    if (sz.isEmpty) None
+    else {
+      val k = math.ceil(math.sqrt(sz.maxBy(_._1)._2.toDouble)).toInt
+      val cents = frozen(graft.ops.Similarity.kmeansCentroids(evens, "vec_id",
+        "embedding", k = k, iters = 2))
+      val index = frozen(graft.ops.Similarity.semDedup(evens, "vec_id",
+        "embedding", k = k, iters = 2, maxDist2 = SemMaxDist2,
+        centsOpt = Some(cents)) // reuse the frozen codebook — no refit
+        .filter(col("keep"))
+        .select(col("vec_id"), col("cluster"), col("dist2"))
+        .join(graft.ops.Similarity.scaledVectors(evens, "vec_id",
+          "embedding"), Seq("vec_id"))
+        .repartition(col("cluster")))
+      Some((cents, index))
+    }
+  }
+
+  private def semAdmit(cents: DataFrame, index: DataFrame)(
+      batch: DataFrame): DataFrame =
+    graft.ops.Similarity.semDedupAdmit(batch, index, cents,
+      "vec_id", "embedding", maxDist2 = SemMaxDist2)
+
+  val semAdmission: AdmissionShape = AdmissionShape("sem_admission",
+    "embeddings", Seq("q278_streaming_semdedup_admission"), "vec_id")(
+    identity, { evens =>
+      val (cents, index) = semIndex(evens).getOrElse(
+        throw new IllegalArgumentException(
+          "sem_admission: no even-id embedding to fit a codebook on"))
+      FrozenIndex(semAdmit(cents, index), index, cents)
     })
 
   private val q278 = Q("q278_streaming_semdedup_admission",
@@ -1067,79 +1037,62 @@ object Pipeline {
     Some(Extensions.semAdmissionOracle),
     (s, dir) => {
       val e = Tables.table(s, dir, "embeddings")
-      val evens = e.filter(col("vec_id") % 2 === 0)
-      // ONE action for the dimensionality probe + k sizing (the q277
-      // batched-collect shape)
-      val sz = evens.groupBy(size(col("embedding")).as("_d"))
-        .agg(countDistinct(col("vec_id")).as("_n"))
-        .collect().filter(!_.isNullAt(0)).map(r => (r.getInt(0), r.getLong(1)))
-      if (sz.isEmpty)
-        e.select(col("vec_id"), lit(1L).as("batch"), lit(0L).as("cluster"),
-          lit(0L).as("dist2"), lit(true).as("keep"),
-          lit(null).cast("long").as("dup_of")).limit(0)
-      else {
-        val nE = sz.maxBy(_._1)._2
-        val k = math.ceil(math.sqrt(nE.toDouble)).toInt
-        val maxDist2 = 1200000000000L
-        val cents = graft.ops.Similarity.kmeansCentroids(evens, "vec_id",
-          "embedding", k = k, iters = 2).cache()
-        cents.count() // materialize before the first drain (q248/q267)
-        val index0 = graft.ops.Similarity.semDedup(evens, "vec_id",
-          "embedding", k = k, iters = 2, maxDist2 = maxDist2,
-          centsOpt = Some(cents)) // reuse the frozen codebook — no refit
-          .filter(col("keep"))
-          .select(col("vec_id"), col("cluster"), col("dist2"))
-          .join(graft.ops.Similarity.scaledVectors(evens, "vec_id",
-            "embedding"), Seq("vec_id"))
-          .repartition(col("cluster")).persist()
-        index0.count()
-        var idx = index0
-        val stage = graft.TempDirs
-          .create("graft-q278-stage").toString
-        val out = graft.TempDirs
-          .create("graft-q278-out").toString
-        val cp = graft.TempDirs
-          .create("graft-q278-cp").toString
-        e.filter(col("vec_id") % 4 === 1).coalesce(1)
-          .write.mode("overwrite").parquet(stage)
-        val schema = s.read.parquet(stage).schema
-        def drain(batchNo: Long): Unit = {
-          val q = s.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1).parquet(stage)
-            .writeStream
-            .foreachBatch { (batch: DataFrame, _: Long) =>
-              graft.ops.Similarity.semDedupAdmit(batch, idx, cents,
-                "vec_id", "embedding", maxDist2 = maxDist2)
-                .withColumn("batch", lit(batchNo))
+      semIndex(e.filter(col("vec_id") % 2 === 0)) match {
+        case None =>
+          e.select(col("vec_id"), lit(1L).as("batch"), lit(0L).as("cluster"),
+            lit(0L).as("dist2"), lit(true).as("keep"),
+            lit(null).cast("long").as("dup_of")).limit(0)
+        case Some((cents, index0)) =>
+          val gate = "q278_streaming_semdedup_admission"
+          val stage = scratch(gate, "stage")
+          val out = scratch(gate, "out")
+          val cp = scratch(gate, "cp")
+          var idx = index0
+          e.filter(col("vec_id") % 4 === 1).coalesce(1)
+            .write.mode("overwrite").parquet(stage)
+          def drain(batchNo: Long): Unit =
+            graft.streaming.Drain.eachBatch(fileStream(s, stage), cp) { batch =>
+              semAdmit(cents, idx)(batch).withColumn("batch", lit(batchNo))
                 .write.mode("append").parquet(out)
             }
-            .option("checkpointLocation", cp)
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
-        drain(1L)
-        // grow the index from the drained verdicts (svec rides along in
-        // semDedupAdmit's output precisely so this union needs no
-        // re-scaling); eager localCheckpoint, NOT persist — the lineage
-        // reads `out`, which drain 2 appends to (the q271 hazard)
-        val grown = index0.unionByName(
-          s.read.parquet(out).filter(col("keep"))
-            .select(col("vec_id"), col("cluster"), col("dist2"),
-              col("svec")))
-          .repartition(col("cluster")).localCheckpoint(true)
-        index0.unpersist()
-        idx = grown
-        e.filter(col("vec_id") % 4 === 3).coalesce(1)
-          .write.mode("append").parquet(stage)
-        drain(2L)
-        s.read.parquet(out)
-          .select(col("vec_id"), col("batch"), col("cluster"),
-            col("dist2"), col("keep"), col("dup_of"))
-          .orderBy("vec_id")
+          drain(1L)
+          // grow the index from the drained verdicts (svec rides along in
+          // semDedupAdmit's output precisely so this union needs no
+          // re-scaling); eager localCheckpoint, NOT persist — the lineage
+          // reads `out`, which drain 2 appends to (the q271 hazard)
+          val grown = index0.unionByName(
+            s.read.parquet(out).filter(col("keep"))
+              .select(col("vec_id"), col("cluster"), col("dist2"),
+                col("svec")))
+            .repartition(col("cluster")).localCheckpoint(true)
+          index0.unpersist()
+          idx = grown
+          e.filter(col("vec_id") % 4 === 3).coalesce(1)
+            .write.mode("append").parquet(stage)
+          drain(2L)
+          cents.unpersist()
+          s.read.parquet(out)
+            .select(col("vec_id"), col("batch"), col("cluster"),
+              col("dist2"), col("keep"), col("dup_of"))
+            .orderBy("vec_id")
       }
     })
 
-  private val q283 = Q("q283_streaming_dsir_admission",
+  val dsirAdmission: AdmissionShape = AdmissionShape("dsir_admission",
+    "documents", Seq("q283_streaming_dsir_admission"), "doc_id")(
+    _.select(col("doc_id"),
+      concat(col("text"), when(col("doc_id") % 3 === 0,
+        lit(" flux quill sable umbra vex jade nimb ochre"))
+        .otherwise(lit(""))).as("t")),
+    { evens =>
+      val target = frozen(censusOf(evens.filter(col("doc_id") % 3 === 0), "t"))
+      val source = frozen(censusOf(evens, "t"))
+      FrozenIndex(batch => graft.ops.TextAnalysis.dsirGain(batch, target,
+          source, "doc_id", "t").withColumn("admitted", col("gain_ppm") >= -400000L),
+        target, source)
+    })
+
+  private val q283 = admissionGate(dsirAdmission,
     "§2.9 × selection: q280's DSIR scoring run as a standing admission " +
       "filter — both frozen censuses (target = the fixture-marked " +
       "domain slice of even-id docs, source = all even-id docs) are " +
@@ -1191,49 +1144,26 @@ object Pipeline {
              FROM g)
       SELECT doc_id, n_words, target_bits, source_bits, gain_bits,
              gain_ppm, gain_ppm >= -400000 AS admitted
-      FROM gg ORDER BY doc_id"""),
-    (s, dir) => {
-      val phrase = " flux quill sable umbra vex jade nimb ochre"
-      val docs = Tables.table(s, dir, "documents")
-        .select(col("doc_id"),
-          concat(col("text"), when(col("doc_id") % 3 === 0, lit(phrase))
-            .otherwise(lit(""))).as("t"))
-      val evens = docs.filter(col("doc_id") % 2 === 0)
-      val target = graft.ops.TextAnalysis.unigramCensus(
-        evens.filter(col("doc_id") % 3 === 0), "t")
-        .repartition(col("w")).persist()
-      val source = graft.ops.TextAnalysis.unigramCensus(evens, "t")
-        .repartition(col("w")).persist()
-      // materialize BOTH before the first micro-batch would otherwise
-      // charge the census builds to itself (the q248/q267 discipline)
-      target.count(); source.count()
-      val stage = graft.TempDirs
-        .create("graft-q283-stage").toString
-      val out = graft.TempDirs
-        .create("graft-q283-out").toString
-      val cp = graft.TempDirs
-        .create("graft-q283-cp").toString
-      docs.filter(col("doc_id") % 2 === 1)
-        .repartitionByRange(4, col("doc_id"))
-        .write.mode("overwrite").parquet(stage)
-      val schema = s.read.parquet(stage).schema
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(stage)
-        .writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          graft.ops.TextAnalysis.dsirGain(batch, target, source,
-            "doc_id", "t")
-            .withColumn("admitted", col("gain_ppm") >= -400000L)
-            .write.mode("append").parquet(out)
-        }
-        .option("checkpointLocation", cp)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      target.unpersist(); source.unpersist()
-      s.read.parquet(out).orderBy("doc_id")
+      FROM gg ORDER BY doc_id"""))
+
+  val substringScreen: AdmissionShape = AdmissionShape("substring_screen",
+    "documents", Seq("q285_streaming_substring_screen"), "doc_id")(
+    _.select(col("doc_id"),
+      concat(col("text"),
+        when(col("doc_id") % 4 === 0 || col("doc_id") % 3 === 0,
+          lit(" quark glint moss fjord ember dune crag veld tarn wisp onyx rill"))
+          .otherwise(lit(""))).as("t")),
+    { evens =>
+      val index = frozen(graft.ops.TextAnalysis.strideGramSpans(evens,
+          "doc_id", "t", n = 10)
+        .select(graft.functions.TextFns.hash64(col("g")).as("_gh"))
+        .distinct()
+        .repartition(col("_gh")))
+      FrozenIndex(graft.ops.TextAnalysis.substringScreen(_, index,
+        "doc_id", "t", n = 10, maxPpm = 25000L), index)
     })
 
-  private val q285 = Q("q285_streaming_substring_screen",
+  private val q285 = admissionGate(substringScreen,
     "§2.9 × dedup: q282's exact-substring detection as an INGEST screen " +
       "— the frozen index is the DISTINCT 60-bit hashes of the even-id " +
       "corpus's stride-1 10-word grams (word-volume sized, persisted " +
@@ -1296,47 +1226,13 @@ object Pipeline {
       FROM w LEFT JOIN mg ON w.doc_id = mg.doc_id
       LEFT JOIN st ON w.doc_id = st.doc_id
       WHERE w.doc_id % 2 = 1
-      ORDER BY w.doc_id"""),
-    (s, dir) => {
-      val p12 = "quark glint moss fjord ember dune crag veld tarn wisp " +
-        "onyx rill"
-      val docs = Tables.table(s, dir, "documents")
-        .select(col("doc_id"),
-          concat(col("text"),
-            when(col("doc_id") % 4 === 0 || col("doc_id") % 3 === 0,
-              lit(" " + p12)).otherwise(lit(""))).as("t"))
-      val index = graft.ops.TextAnalysis.strideGramSpans(
-        docs.filter(col("doc_id") % 2 === 0), "doc_id", "t", n = 10)
-        .select(graft.functions.TextFns.hash64(col("g")).as("_gh"))
-        .distinct()
-        .repartition(col("_gh")).persist()
-      // materialize ONCE, before the first micro-batch would otherwise
-      // charge the index build to itself (the q248/q267 discipline)
-      index.count()
-      val stage = graft.TempDirs
-        .create("graft-q285-stage").toString
-      val out = graft.TempDirs
-        .create("graft-q285-out").toString
-      val cp = graft.TempDirs
-        .create("graft-q285-cp").toString
-      docs.filter(col("doc_id") % 2 === 1)
-        .repartitionByRange(4, col("doc_id"))
-        .write.mode("overwrite").parquet(stage)
-      val schema = s.read.parquet(stage).schema
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(stage)
-        .writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          graft.ops.TextAnalysis.substringScreen(batch, index,
-            "doc_id", "t", n = 10, maxPpm = 25000L)
-            .write.mode("append").parquet(out)
-        }
-        .option("checkpointLocation", cp)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      index.unpersist()
-      s.read.parquet(out).orderBy("doc_id")
-    })
+      ORDER BY w.doc_id"""))
+
+  /** Every streaming shape, in StreamBench's order. */
+  val shapes: Seq[Shape] = Seq(ingestDedup, dayWindow, curation, appendWindow,
+    closedSessions, streamJoin, ledgerSink, enrich, dedupWatermark,
+    twsSessions, cappedSessions, tokenBucket, driftMonitor, indexAdmission,
+    censusAdmission, semAdmission, dsirAdmission, substringScreen)
 
   def all: Seq[Q] = Seq(q18, q19, q33, q34, q35, q56, q70, q75, q84, q113,
     q129, q130, q134, q157, q166, q174, q235, q244, q248, q257, q267, q271,

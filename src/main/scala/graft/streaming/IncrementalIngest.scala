@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
 import graft.functions.Etl
@@ -11,8 +10,8 @@ import graft.functions.Etl
   * poll-and-process architecture (SURVEY.md §2.9):
   *
   *  - the unscheduled DAG that "polls the data … and acts when new data is
-  *    found" (README.md:124-128) becomes a file-arrival source +
-  *    `Trigger.AvailableNow` — one run drains exactly what is new;
+  *    found" (README.md:124-128) becomes a file-arrival source + an
+  *    AvailableNow [[Drain]] — one run drains exactly what is new;
   *  - the ledger hash set (db.py:228-231) becomes `dropDuplicates("hash")`
   *    state, checkpointed and unbounded — the reference never expires
   *    hashes either; `dropDuplicatesWithinWatermark` is the opt-in bound;
@@ -23,25 +22,13 @@ object IncrementalIngest {
 
   /** Drain all currently-available files from `srcDir` into `outDir`,
     * emitting each sha256 identity at most once across ALL runs sharing
-    * `checkpointDir`. Blocks until the drain completes.
+    * `checkpointDir`. Blocks until the drain completes; returns the rows
+    * it read.
     */
   def runAvailableNow(spark: SparkSession, srcDir: String, schema: StructType,
-                      checkpointDir: String, outDir: String): Unit = {
-    val q = spark.readStream
-      .schema(schema)
-      .parquet(srcDir)
-      .withColumn("hash",
-        Etl.recordHash(col("device_type"), col("manufacturer_ref")))
-      .dropDuplicates("hash")
-      .writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                      checkpointDir: String, outDir: String): Long =
+    Drain.toFiles(dedupHashes(hashed(spark, srcDir, schema)),
+      checkpointDir, outDir)
 
   /** Drain all currently-available files straight INTO the ledger: each
     * micro-batch appends through [[graft.ledger.Ledger.append]] (the first
@@ -49,30 +36,39 @@ object IncrementalIngest {
     * batches idempotent — so the at-least-once `foreachBatch` sink
     * composes to exactly-once ledger state (the streaming twin of the
     * reference's poll→dedup→insert loop, dags/dreem.py:44-67 +
-    * db.py:76-86).
+    * db.py:76-86). Returns the rows the drain read.
     */
   def runIntoLedger(spark: SparkSession, srcDir: String, schema: StructType,
                     checkpointDir: String,
-                    ledger: graft.ledger.Ledger): Unit = {
-    val q = spark.readStream
-      .schema(schema)
-      .parquet(srcDir)
+                    ledger: graft.ledger.Ledger): Long =
+    Drain.eachBatch(hashed(spark, srcDir, schema), checkpointDir) { batch =>
+      // dedup WITHIN the batch too: append's anti-join only screens
+      // against hashes already in the ledger, so an intra-batch repeat
+      // (duplicate rows in one file, or two files delivering the same
+      // record in one drain) would otherwise land twice. In one scan: a
+      // null-hash record keys on its own row id, so none collapses (ids
+      // are unique within this batch, which is all a batch dedup spans)
+      ledger.append(batch
+        .withColumn("__row", when(col("hash").isNull, monotonically_increasing_id()))
+        .dropDuplicates("hash", "__row").drop("__row"))
+      ()
+    }
+
+  private def hashed(spark: SparkSession, srcDir: String,
+                     schema: StructType): DataFrame =
+    spark.readStream.schema(schema).parquet(srcDir)
       .withColumn("hash",
         Etl.recordHash(col("device_type"), col("manufacturer_ref")))
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // dedup WITHIN the batch too: append's anti-join only screens
-        // against hashes already in the ledger, so an intra-batch repeat
-        // (duplicate rows in one file, or two files delivering the same
-        // record in one drain) would otherwise land twice
-        ledger.append(batch.dropDuplicates("hash"))
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+
+  /** One record per non-null `hash`, across runs. A record whose hash is
+    * null (a null device type or manufacturer ref) has no identity to
+    * repeat, so every one is kept — the batch path's rule
+    * (`EtlJob.dedupBatch`). Row ids restart each micro-batch, so unlike
+    * [[runIntoLedger]]'s batch dedup the null-hash records bypass the
+    * state instead, at a second scan of each micro-batch. */
+  private def dedupHashes(stream: DataFrame): DataFrame =
+    stream.filter(col("hash").isNull)
+      .unionByName(stream.filter(col("hash").isNotNull).dropDuplicates("hash"))
 
   /** Streaming corpus curation — the incremental form of the batch
     * curation chain (quality gate + content dedup): keep documents passing

@@ -91,7 +91,7 @@ class HashExprSpec extends SparkSpec {
     for (bits <- Seq(16, 32)) {
       val fast = df.select($"id", graft.expressions.SimHashBits($"t", bits).as("s"))
         .as[(Long, Long)].collect().toMap
-      val spec = graft.ops.Dedup.simHashComposed(df, "id", "t", bits)
+      val spec = ComposedForms.simHash(df, "id", "t", bits)
         .as[(Long, Long)].collect().toMap
       assert(fast == spec, s"bits=$bits")
     }
@@ -108,17 +108,17 @@ class HashExprSpec extends SparkSpec {
     // float inputs straight into the native kernel vs widened composed form
     val cmp = df.select(
       VectorFns.dotScaled($"a", $"b").as("dot_fast"),
-      VectorFns.dotScaledComposed(
+      ComposedForms.dotScaled(
         VectorFns.toDoubleArray($"a"), VectorFns.toDoubleArray($"b")).as("dot_spec"),
       VectorFns.norm2Scaled($"a").as("n2_fast"),
-      VectorFns.norm2ScaledComposed(VectorFns.toDoubleArray($"a")).as("n2_spec"))
+      ComposedForms.norm2Scaled(VectorFns.toDoubleArray($"a")).as("n2_spec"))
     assert(cmp.filter($"dot_fast" =!= $"dot_spec" || $"n2_fast" =!= $"n2_spec")
       .count() == 0)
     // double-array inputs take the same path
     val cmpD = df.select(VectorFns.toDoubleArray($"a").as("ad"),
         VectorFns.toDoubleArray($"b").as("bd"))
       .select(VectorFns.dotScaled($"ad", $"bd").as("f"),
-        VectorFns.dotScaledComposed($"ad", $"bd").as("g"))
+        ComposedForms.dotScaled($"ad", $"bd").as("g"))
     assert(cmpD.filter($"f" =!= $"g").count() == 0)
   }
 

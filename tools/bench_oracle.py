@@ -12,7 +12,7 @@ Usage:
                   BENCH_r*.json whose "tail" embeds it); spark_s per query
 - [out]:          output path (default ORACLE_BENCH.json)
 - [streamBenchJson]: a graft.tools.StreamBench JSON line; when given, the
-                  four streaming gates gain `spark_steady_s` (the warm
+                  streaming gates gain `spark_steady_s` (the warm
                   second-AvailableNow-trigger drain against an existing
                   checkpoint) and `ratio_steady`. The raw `ratio` for
                   those gates compares a COLD checkpointed-stream start
@@ -48,6 +48,8 @@ STREAMING_GATES = {
     # RocksDB-only shape (transformWithState requires that provider)
     "q166_tws_closed_sessions": "tws_sessions",
     "q174_streaming_dedup_watermark": "dedup_watermark",
+    # RocksDB-only shape (transformWithState requires that provider)
+    "q235_streaming_token_bucket": "token_bucket",
     "q244_streaming_drift_monitor": "drift_monitor",
     "q248_streaming_index_admission": "index_admission",
     "q257_tws_capped_sessions": "capped_sessions",
@@ -102,12 +104,16 @@ ROUNDTRIP_GATES = {
 def stream_steady(path: str) -> dict:
     """shape -> warm seconds from a StreamBench line: the default (hdfs)
     provider, falling back to rocksdb for shapes that only run there
-    (transformWithState requires the RocksDB provider)."""
+    (transformWithState requires the RocksDB provider; stateless admission
+    shapes are measured once). Only the `timings` object is read: `rows`
+    carries the same keys with input row counts."""
     raw = open(path).read()
+    m = re.search(r'"timings"\s*:\s*(\{[^}]*\})', raw)
+    timings = m.group(1) if m else raw
     out = {}
     for prov in ("rocksdb", "hdfs"):  # hdfs second -> wins when present
         for k, v in re.findall(
-                rf'"([a-z_]+)/{prov}/warm"\s*:\s*(-?[0-9.]+)', raw):
+                rf'"([a-z_]+)/{prov}/warm"\s*:\s*(-?[0-9.]+)', timings):
             out[k] = float(v)
     return out
 

@@ -7,7 +7,7 @@ import graft.connect.{BasicAuthTokenProvider, ConnectionConfig, Dmp,
   FileTransfer, JavaNetTransport, SignatureAuthTokenProvider, Transport}
 import graft.etl.Stages
 import graft.ledger.{Ledger, LedgerStore, MongoLedger}
-import graft.sources.LookupCsv
+import graft.sources.{LookupCsv, ParquetFooters}
 
 /** The runnable pipeline — what an Airflow `SparkSubmitOperator` schedules
   * per run. The reference's 7-task `dreem` DAG (dags/dreem.py:297-307) maps
@@ -189,7 +189,7 @@ object EtlJob {
       case "resolve_patient_ids" => // task 4 (J4)
         val today = opts.getOrElse("today", java.time.LocalDate.now().toString)
         enrich("patient_id", "with_patient")(Stages.resolvePatients(_,
-          spark.read.parquet(opts("assignments")), today))
+          ParquetFooters.read(spark, opts("assignments")), today))
       case "group_records" => // task 5 (A1, unlimited by design)
         val cutOff = opts.getOrElse("cutoff", "12:00:00")
         enrich("dmp_id", "grouped")(Stages.groupRecords(_, cutOff))
@@ -232,7 +232,7 @@ object EtlJob {
                                     ledger: LedgerStore,
                                     opts: Map[String, String]): Seq[(String, Long)] = {
     val sites = opts("incoming").split('\u0000').toSeq
-      .map(spark.read.parquet(_))
+      .map(ParquetFooters.read(spark, _))
     val batch = dedupBatch(sites.reduce(_.unionByName(_)))
       .withColumn("device_serial", lit(null).cast("string"))
       .withColumn("device_id", lit(null).cast("string"))
@@ -268,7 +268,7 @@ object EtlJob {
     // the batch's top-k reads every manifest group, so an observation on
     // its input counts the pending groups in the transfer's own pass
     val pending = Observation()
-    val batch = Stages.uploadManifest(ledger.read())
+    val batch = Stages.uploadManifest(ledger.unfinished())
       .observe(pending, count(lit(1)).as("groups"))
       .orderBy(col("dmp_id")).limit(uploadLimit)
     val (fetch, push) = liveTransfer(opts, transport)

@@ -2,88 +2,140 @@ package graft.ledger
 
 import org.apache.hadoop.fs.{FileAlreadyExistsException, FileStatus, FileSystem, Path}
 import org.apache.hadoop.hdfs.DistributedFileSystem
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.NioLocalFileSystem
+import graft.sources.ParquetFooters
 
 /** Parquet-backed mutable ledger with append, no-override enrichment and
   * the upload flag — the reference's MongoDB collection semantics
   * (db.py:66-231) on immutable columnar storage, with no external table
   * format available offline (SURVEY.md §7.5.1).
   *
-  * Layout: one flat parquet directory at `path`. Every file operation goes
-  * through the path's Hadoop `FileSystem`, which must be one where a
-  * directory `rename` is atomic and `create(…, overwrite = false)` is
-  * exclusive; the constructor refuses any other. Every entry point but
-  * [[exists]] takes the writer lock and recovers a crashed publish first:
-  *   1. [[append]] writes the unseen records into the live directory;
-  *   2. [[enrich]] maps the live table in one pass — the resolution runs
-  *      over the stored rows, existing values win (coalesce against a copy
-  *      of the field taken before the resolution, matching
-  *      tests/hooks/test_db.py:16-47), and the rows carrying the field are
-  *      counted by an observation on that write;
+  * Layout: two flat parquet directories under `path`, the two parts of the
+  * table. `settled/` holds the rows no task changes again (uploaded, every
+  * enrichable field set: [[Ledger.settled]]), `open/` every other row, so
+  * a task reads and rewrites the rows that can still change, not the
+  * history. Each row is in exactly one data file under `path`; read the
+  * table through [[read]]. Every file operation goes through the path's
+  * Hadoop `FileSystem`, which must be one where a directory `rename` is
+  * atomic and `create(…, overwrite = false)` is exclusive; the constructor
+  * refuses any other. Every entry point but [[exists]] takes the writer
+  * lock and recovers a crashed publish first:
+  *   1. [[append]] writes the unseen records into the open part;
+  *   2. [[enrich]] maps the open part in one pass — the resolution runs
+  *      over the rows that can still change, existing values win
+  *      (coalesce against a copy of the field taken before the resolution,
+  *      matching tests/hooks/test_db.py:16-47), and the rows carrying the
+  *      field are counted by an observation on that write, plus the
+  *      settled rows, counted from their footers;
   *   3. [[markUploaded]] flags whole groups, named by a list of ids, in
-  *      one mapped pass;
-  *   4. enrich and markUploaded publish the rewritten table through
-  *      [[publish]] (stage, check `_SUCCESS`, swap by two renames).
+  *      one mapped pass over the open part;
+  *   4. enrich and markUploaded publish the rewritten open part through
+  *      [[publish]], which moves the rows that became settled into the
+  *      settled part (stage, check `_SUCCESS`, move, swap by two renames).
   *
-  * Each rewrite copies the whole table, the copy-on-write cost a table
-  * format would pay per touched file. Deletes stay quarantined, as in the
+  * Each rewrite copies the open part, the copy-on-write cost a table
+  * format would pay per touched file; the settled part grows by one file
+  * per publish that settles rows. Deletes stay quarantined, as in the
   * reference (db.py:127-133): append + update only.
   */
 final class Ledger(spark: SparkSession, path: String) extends LedgerStore {
   private val liveDir = new Path(path)
   private val fs = Ledger.checked(liveDir,
     liveDir.getFileSystem(spark.sparkContext.hadoopConfiguration))
+  private val openDir = new Path(liveDir, "open")
+  private val settledDir = new Path(liveDir, "settled")
 
   private def sibling(suffix: String): Path =
     new Path(liveDir.getParent, liveDir.getName + suffix)
 
   private val lock = sibling("_lock")
 
-  /** The live directory's entries. A `bucket=` directory is the layout of
-    * earlier versions, which no entry point reads or rewrites. */
-  private def entries(): Array[FileStatus] = {
+  /** Checks the layout. A `bucket=` directory, or part files directly
+    * under `path`, is the layout of earlier versions, which no entry point
+    * reads or rewrites. */
+  private def checkLayout(): Unit = {
     val all = if (fs.exists(liveDir)) fs.listStatus(liveDir) else Array.empty[FileStatus]
+    def rewrite(read: String) = "rewrite it once to a new path — " +
+      s"`new Ledger(spark, <new path>).init($read)` — and point --ledger there"
     if (all.exists(s => s.isDirectory && s.getPath.getName.startsWith("bucket=")))
       throw new IllegalStateException(s"ledger at $path has the retired " +
-        "bucket=<hash prefix> layout; rewrite it once to a new path — " +
-        s"`new Ledger(spark, <new path>).init(spark.read.parquet(\"$path\")" +
-        ".drop(\"bucket\"))` — and point --ledger there")
-    all
+        "bucket=<hash prefix> layout; " +
+        rewrite(s"spark.read.parquet(\"$path\").drop(\"bucket\")"))
+    if (all.exists(s => s.isFile && ParquetFooters.isData(s.getPath.getName)))
+      throw new IllegalStateException(s"ledger at $path has the retired " +
+        "single-directory layout (part files directly under it); " +
+        rewrite(s"spark.read.parquet(\"$path\")"))
   }
 
-  /** A part file holds the rows: a bare `_SUCCESS` holds no schema. */
-  def exists: Boolean = entries().exists(_.getPath.getName.startsWith("part-"))
+  private def dataFiles(dir: Path): Array[FileStatus] =
+    if (!fs.exists(dir)) Array.empty
+    else fs.listStatus(dir).filter(s => s.isFile && ParquetFooters.isData(s.getPath.getName))
 
-  /** Recovery for a crash inside a previous publish: a kill between
-    * "live -> trash" and "staging -> live" leaves no live table, with its
-    * old copy in a `_trash_<runId>` dir. Restore that copy, then drop the
-    * orphan dirs (unique names: they can never belong to the current call).
-    * Runs only under the writer lock, so it never touches a running writer's
-    * staging or trash.
+  /** A data file holds the rows: a bare `_SUCCESS` holds no schema. */
+  def exists: Boolean = {
+    checkLayout()
+    dataFiles(openDir).nonEmpty || dataFiles(settledDir).nonEmpty
+  }
+
+  /** Recovery for a crash inside a previous publish, in two steps:
+    *  1. a kill between "open -> trash" and "staging -> open" leaves no
+    *     open part, with its old copy in a `_trash_<runId>` dir: put back
+    *     each part the newest trash holds and the ledger lacks;
+    *  2. a publish moves its settled rows before it swaps the open part,
+    *     so while its staging still holds the new open part those rows are
+    *     in the open part too: drop that run's settled files.
+    * Then drop the orphan dirs (unique names: they can never belong to the
+    * current call). Runs only under the writer lock, so it never touches a
+    * running writer's staging or trash.
     */
   private def recoverOrphans(): Unit = {
     val (trash, staging) = (liveDir.getName + "_trash_", liveDir.getName + "_staging_")
     // the parent exists: it holds the lock
     val orphans = fs.listStatus(liveDir.getParent, (p: Path) =>
-      p.getName.startsWith(trash) || p.getName.startsWith(staging))
-    val trashed = orphans.filter(_.getPath.getName.startsWith(trash))
-    if (trashed.nonEmpty && !fs.exists(liveDir)) {
-      val newest = trashed.maxBy(_.getModificationTime).getPath
-      if (!fs.rename(newest, liveDir))
-        throw new java.io.IOException(s"could not restore $newest to $liveDir")
-      spark.catalog.refreshByPath(path)
+      p.getName.startsWith(trash) || p.getName.startsWith(staging)).map(_.getPath)
+    val trashed = orphans.filter(_.getName.startsWith(trash))
+    if (trashed.nonEmpty && !fs.exists(openDir)) {
+      val newest = trashed.maxBy(fs.getFileStatus(_).getModificationTime)
+      fs.mkdirs(liveDir)
+      for (part <- Seq(openDir, settledDir)
+           if fs.exists(new Path(newest, part.getName)) && !fs.exists(part))
+        rename(new Path(newest, part.getName), part)
     }
-    orphans.map(_.getPath).filter(fs.exists).foreach(fs.delete(_, true))
+    for (p <- orphans if p.getName.startsWith(staging) &&
+         fs.exists(new Path(p, Ledger.stagedOpen))) {
+      val runId = p.getName.stripPrefix(staging)
+      dataFiles(settledDir).map(_.getPath)
+        .filter(_.getName.startsWith(s"part-$runId-")).foreach(fs.delete(_, false))
+    }
+    orphans.filter(fs.exists).foreach(fs.delete(_, true))
+    if (orphans.nonEmpty) spark.catalog.refreshByPath(path)
   }
 
   /** Recovers under the writer lock first, so it fails fast while another
     * writer holds it. */
   def read(): DataFrame = {
     locked("read")(())
-    spark.read.parquet(path)
+    scan(parts())
+  }
+
+  private def parts(): Seq[Path] = Seq(openDir, settledDir).filter(fs.exists)
+
+  /** The open rows, plus the settled rows of their groups: a late record
+    * re-opens an uploaded group, whose settled members must be re-sent
+    * with it. */
+  override def unfinished(): DataFrame = {
+    locked("unfinished")(())
+    if (!fs.exists(settledDir)) scan(Seq(openDir))
+    else {
+      val schema = scan(parts()).schema // one footer for both parts
+      def part(dir: Path) = spark.read.schema(schema).parquet(dir.toString)
+      val open = part(openDir)
+      open.unionByName(part(settledDir).join(
+        broadcast(open.select("dmp_id")), Seq("dmp_id"), "left_semi"))
+    }
   }
 
   /** The ledger is SINGLE-writer (as its Mongo counterpart was via document
@@ -124,84 +176,117 @@ final class Ledger(spark: SparkSession, path: String) extends LedgerStore {
     */
   def forceReleaseLock(): Boolean = fs.delete(lock, false)
 
-  /** Initialize (overwrite-all) with a first batch. */
+  /** Initialize (overwrite-all) with a first batch, split between the two
+    * parts. The old table is deleted once the new one is staged, so a
+    * crash inside `init` can leave a partial table: rerun it. A zero-row
+    * batch leaves no data file, and the ledger reads as absent until the
+    * first append. */
   def init(records: DataFrame): Unit = locked("init") {
-    records.write.mode(SaveMode.Overwrite).parquet(path)
-    spark.catalog.refreshByPath(path)
+    publish(records, replace = true)
   }
 
-  /** S7 — [[LedgerStore.append]] as one hash anti-join (insert-only dedup,
-    * db.py:76-86 + the J1 anti-join); the first append creates the ledger.
+  /** S7 — [[LedgerStore.append]] as one hash anti-join against both parts
+    * (insert-only dedup, db.py:76-86 + the J1 anti-join); the first append
+    * creates the ledger.
     */
   def append(records: DataFrame): Long = locked("append") {
     val fresh = if (!exists) records
-      else records.join(live().select("hash"), Seq("hash"), "left_anti")
+      else records.join(scan(parts()).select("hash"), Seq("hash"), "left_anti")
     LedgerStore.countObserved(fresh) { df =>
-      df.write.mode(SaveMode.Append).parquet(path)
+      df.write.mode(SaveMode.Append).parquet(openDir.toString)
       spark.catalog.refreshByPath(path)
     }
   }
 
-  /** [[LedgerStore.enrich]] as one mapped rewrite of the table: no join
-    * against the ledger itself, and the returned count is observed on the
-    * staging write.
+  /** [[LedgerStore.enrich]] as one mapped rewrite of the open part: no
+    * join against the ledger itself. `resolve` sees only the rows that can
+    * still change; a settled row carries every enrichable field, so the
+    * count is the one observed on the staging write plus the settled rows.
     */
   def enrich(field: String)(resolve: DataFrame => DataFrame): Long =
     locked("enrich") {
       val fill = LedgerStore.fillNulls(field)(resolve) // checks field
-      if (!exists) 0L
-      else LedgerStore.countObserved(fill(live()), col(field)) {
+      val settled = ParquetFooters.rows(spark, settledDir)
+      if (dataFiles(openDir).isEmpty) settled
+      else settled + LedgerStore.countObserved(fill(open()), col(field)) {
         df => publish(df.drop(LedgerStore.prior))
       }
     }
 
-  /** [[LedgerStore.markUploaded]] as one mapped rewrite of the table. No
-    * ids, no publish.
+  /** [[LedgerStore.markUploaded]] as one mapped rewrite of the open part.
+    * No ids, no publish.
     */
   def markUploaded(dmpIds: Seq[String]): Unit = locked("markUploaded") {
-    if (dmpIds.nonEmpty) publish(live().withColumn("is_uploaded",
-      col("is_uploaded") || LedgerStore.inGroups(dmpIds)))
+    if (dmpIds.nonEmpty && dataFiles(openDir).nonEmpty) publish(open()
+      .withColumn("is_uploaded", col("is_uploaded") || LedgerStore.inGroups(dmpIds)))
   }
 
-  private def live(): DataFrame = spark.read.parquet(path)
+  private def open(): DataFrame = scan(Seq(openDir))
+
+  /** The parts in `dirs`, or the ledger path when none exists (Spark then
+    * names the missing path). */
+  private def scan(dirs: Seq[Path]): DataFrame =
+    ParquetFooters.read(spark, (if (dirs.isEmpty) Seq(liveDir) else dirs)
+      .map(_.toString): _*)
 
   /** Every entry point: under the writer lock, check the layout and
     * recover a crashed publish before `body` looks at the table. */
   private def locked[T](op: String)(body: => T): T = withWriterLock(op) {
-    entries()
+    checkLayout()
     recoverOrphans()
     body
   }
 
-  /** Replace the table with `df` via stage-then-rename:
+  private def rename(from: Path, to: Path): Unit =
+    if (!fs.rename(from, to)) throw new java.io.IOException(s"could not move $from to $to")
+
+  /** Replace the open part with the open rows of `df` and add its settled
+    * rows to the settled part (with `replace`, replace the whole table):
     *
-    *  1. write `df` to a UNIQUE staging dir (a crashed previous run can
-    *     never leave stale files that a later call silently republishes —
-    *     the failure mode of a fixed staging path);
+    *  1. write `df` to a UNIQUE staging dir, split by [[Ledger.settled]]
+    *     (a crashed previous run can never leave stale files that a later
+    *     call silently republishes — the failure mode of a fixed staging
+    *     path);
     *  2. require Spark's `_SUCCESS` marker before publishing (a partial
     *     staging write is abandoned, never swapped in);
-    *  3. move live to a unique trash dir, then staging to live — in that
-    *     order, because a directory rename onto an existing directory
-    *     nests the source inside it instead of failing. A crash between
-    *     the two leaves the old table in trash, which recoverOrphans puts
-    *     back.
+    *  3. move the staged settled files into the settled part, named
+    *     `part-<runId>-…`; until step 4 completes those rows are in the old
+    *     open part too, and recoverOrphans drops them again;
+    *  4. move the open part to a unique trash dir, then the staged open
+    *     rows to the open part — in that order, because a directory rename
+    *     onto an existing directory nests the source inside it instead of
+    *     failing. A crash between the two leaves the old open part in
+    *     trash, which recoverOrphans puts back.
     *
     * The parquet source cannot overwrite files it is concurrently reading,
     * so the staging materialization is also what makes the rewrite
     * read-its-own-input safe.
     */
-  private def publish(df: DataFrame): Unit = {
+  private def publish(df: DataFrame, replace: Boolean = false): Unit = {
     val runId = java.util.UUID.randomUUID().toString.take(8)
     val staging = sibling(s"_staging_$runId")
     val trash = sibling(s"_trash_$runId")
-    df.write.mode(SaveMode.Overwrite).parquet(staging.toString)
+    df.withColumn(Ledger.split, Ledger.settled).write.partitionBy(Ledger.split)
+      .mode(SaveMode.Overwrite).parquet(staging.toString)
     require(fs.exists(new Path(staging, "_SUCCESS")),
       s"staging write incomplete (no _SUCCESS): $staging — not publishing")
+    val fresh = new Path(staging, Ledger.stagedOpen)
     try {
-      if (!fs.rename(liveDir, trash))
-        throw new java.io.IOException(s"could not move $liveDir to $trash")
-      if (!fs.rename(staging, liveDir))
-        throw new java.io.IOException(s"could not publish $staging to $liveDir")
+      // before any move: while it exists, recoverOrphans undoes this run's
+      // moves (and with no open rows left it becomes an empty open part)
+      fs.mkdirs(fresh)
+      if (replace) fs.delete(liveDir, true)
+      fs.mkdirs(liveDir)
+      val moved = dataFiles(new Path(staging, s"${Ledger.split}=true"))
+      if (moved.nonEmpty) fs.mkdirs(settledDir)
+      moved.map(_.getPath).foreach(f => rename(f,
+        new Path(settledDir, s"part-$runId-${f.getName.stripPrefix("part-")}")))
+      if (fs.exists(openDir)) {
+        fs.mkdirs(trash)
+        rename(openDir, new Path(trash, openDir.getName))
+      }
+      rename(fresh, openDir)
+      fs.delete(staging, true)
       fs.delete(trash, true)
     } finally {
       // the rewrite invalidates any file listing cached for this path
@@ -211,6 +296,17 @@ final class Ledger(spark: SparkSession, path: String) extends LedgerStore {
 }
 
 object Ledger {
+  /** A row no task changes again: uploaded, and every field an enrichment
+    * fills is set. */
+  private val settled: Column = coalesce(LedgerStore.enrichable.map(col(_).isNotNull)
+    .foldLeft(col("is_uploaded"))(_ && _), lit(false))
+
+  /** The staging column that splits a publish between the two parts. */
+  private val split = "_settled"
+
+  /** The staged open rows, until the publish moves them to the open part. */
+  private val stagedOpen = s"$split=false"
+
   /** `fs` when the ledger can be made safe on it: the lock needs an
     * exclusive `create(…, overwrite = false)` and the publish an atomic
     * directory `rename`. HDFS gives both, and so does a local or NFS mount

@@ -16,9 +16,10 @@ import org.apache.spark.sql.functions.{coalesce, col, count, lit}
   *    dmp_ids (db.py:189-196);
   *  - no delete: quarantined in the reference (db.py:127-133), absent here.
   *
-  * Strategies: [[Ledger]] (one Parquet directory on HDFS or a local/NFS
-  * mount, the deployed default) and [[MongoLedger]] (the reference's actual
-  * store, usable when the Mongo Spark connector jar is on the classpath).
+  * Strategies: [[Ledger]] (Parquet on HDFS or a local/NFS mount, split into
+  * open and settled rows; the deployed default) and [[MongoLedger]] (the
+  * reference's actual store, usable when the Mongo Spark connector jar is
+  * on the classpath).
   * Both are single-writer: schedule one chain per store.
   */
 trait LedgerStore {
@@ -30,20 +31,27 @@ trait LedgerStore {
   def append(records: DataFrame): Long
   /** Fill `field` where null with what `resolve` computes from the stored
     * rows (one row out per row in, same columns); existing values win.
-    * Returns the rows carrying `field` afterwards, 0 on an absent store. */
+    * `resolve` must be row-local: a store may pass it only the rows that
+    * can still change. Returns the rows carrying `field` afterwards, over
+    * the whole store, 0 on an absent store. */
   def enrich(field: String)(resolve: DataFrame => DataFrame): Long
   /** Flag every record of the given groups uploaded (db.py:189-196). The
     * ids are the groups a run transferred, collected and bounded by the
     * caller's upload limit. */
   def markUploaded(dmpIds: Seq[String]): Unit
+  /** The rows an upload manifest needs: every row of each group that has a
+    * row not yet uploaded. A store may return more, since the manifest
+    * drops finished groups; by default it returns every row. */
+  def unfinished(): DataFrame = read()
 }
 
 object LedgerStore {
   /** The columns an enrichment may fill — everything else is identity or
-    * terminal state (is_uploaded goes through markUploaded only).
+    * terminal state (is_uploaded goes through markUploaded only;
+    * dmp_dataset is the upload's `--dmp-dataset`, never resolved per row).
     */
   val enrichable: Seq[String] =
-    Seq("device_serial", "device_id", "patient_id", "dmp_dataset", "dmp_id")
+    Seq("device_serial", "device_id", "patient_id", "dmp_id")
 
   /** `field`'s value before an enrichment, kept beside the filled rows. */
   private[ledger] val prior = "_prior"

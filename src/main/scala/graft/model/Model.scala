@@ -2,8 +2,6 @@ package graft.model
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.types._
-
 /** Core data model, re-expressed from the reference's dataclasses.
   *
   * `LedgerRecord` mirrors ideafast_etl/hooks/db.py:30-47 (13 fields, the
@@ -53,20 +51,4 @@ object DiseaseType {
   val ByCode: Map[Int, String] = Map(
     1 -> "Healthy", 2 -> "HD", 3 -> "IBD", 4 -> "PD", 5 -> "PSS",
     6 -> "RA", 7 -> "SLE")
-}
-
-object Schemas {
-  val ledger: StructType = StructType(Seq(
-    StructField("hash", StringType, nullable = false),
-    StructField("manufacturer_ref", StringType, nullable = false),
-    StructField("device_type", StringType, nullable = false),
-    StructField("start", TimestampType, nullable = false),
-    StructField("end", TimestampType, nullable = false),
-    StructField("meta", MapType(StringType, StringType), nullable = false),
-    StructField("device_serial", StringType, nullable = true),
-    StructField("device_id", StringType, nullable = true),
-    StructField("patient_id", StringType, nullable = true),
-    StructField("dmp_dataset", StringType, nullable = true),
-    StructField("dmp_id", StringType, nullable = true),
-    StructField("is_uploaded", BooleanType, nullable = false)))
 }

@@ -25,7 +25,9 @@ object LookupCsv {
         StructField(keyName, StringType), StructField(valueName, StringType))))
       .option("header", "false")
       .csv(path)
-    // min-wins dedup on the key → safe for equi-join enrichment
-    broadcast(raw.groupBy(col(keyName)).agg(min(col(valueName)).as(valueName)))
+    // min-wins dedup on the key → safe for equi-join enrichment; on one
+    // partition, since the side is broadcast whole: no shuffle, one job
+    broadcast(raw.coalesce(1).groupBy(col(keyName))
+      .agg(min(col(valueName)).as(valueName)))
   }
 }

@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
@@ -401,12 +402,20 @@ class EtlJobSpec extends SparkSpec {
     assert(ledgerScans(plans, ledgerPath) == 1, plans.mkString("\n"))
   }
 
-  /** The file scans of `path` in `plans`, subqueries included. */
-  private def ledgerScans(plans: Seq[SparkPlan], path: String): Int = {
+  /** The file scans in `plans` that read the ledger at `path` (either of
+    * its parts, or both in one scan), subqueries included. */
+  private def ledgerScans(plans: Seq[SparkPlan], path: String): Int =
+    scans(plans, _.getParent.toUri.getPath == path)
+
+  /** The file scans in `plans` that read the ledger's `part` directory. */
+  private def partScans(plans: Seq[SparkPlan], path: String, part: String): Int =
+    scans(plans, _.toUri.getPath == s"$path/$part")
+
+  private def scans(plans: Seq[SparkPlan],
+                    reads: org.apache.hadoop.fs.Path => Boolean): Int = {
     object Plans extends AdaptiveSparkPlanHelper
     plans.flatMap(Plans.collectWithSubqueries(_) {
-      case s: FileSourceScanExec
-          if s.relation.location.rootPaths.exists(_.toUri.getPath == path) => s
+      case s: FileSourceScanExec if s.relation.location.rootPaths.exists(reads) => s
     }).size
   }
 
@@ -436,7 +445,7 @@ class EtlJobSpec extends SparkSpec {
     }
   }
 
-  test("extract_prep_load scans the ledger twice; pending_groups is the unfinished groups") {
+  test("extract_prep_load scans the open part, and the settled part only for its groups") {
     val base = Files.createTempDirectory("graft-job-extract").toString
     // one device on three days: three groups, one transferred per run
     incoming(Seq(("r1", "U1", "2021-11-10 13:00:00"),
@@ -450,20 +459,74 @@ class EtlJobSpec extends SparkSpec {
     def unfinished() = ledger.read()
       .filter(col("dmp_id").isNotNull && !col("is_uploaded"))
       .select("dmp_id").distinct().count()
-    for (pending <- Seq(3L, 2L)) {
+    // (pending groups, open-part scans, settled-part scans): the first run
+    // finds no settled part; the second reads the settled rows of the open
+    // rows' groups (one scan, semi-joined on the open part's dmp_ids)
+    for ((pending, openScans, settledScans) <- Seq((3L, 2, 0), (2L, 3, 1))) {
       assert(unfinished() == pending)
       var summary = Map.empty[String, Long]
       val plans = executedPlans {
         summary = EtlJob.runStage(spark, "extract_prep_load", opts, transport).toMap
       }
-      // the transfer's manifest and markUploaded's rewrite
-      assert(ledgerScans(plans, opts("ledger")) == 2, plans.mkString("\n"))
+      // the transfer's manifest (and its semi-join's dmp_id side), then
+      // markUploaded's rewrite of the open part
+      assert(partScans(plans, opts("ledger"), "open") == openScans, plans.mkString("\n"))
+      assert(partScans(plans, opts("ledger"), "settled") == settledScans,
+        plans.mkString("\n"))
       assert(summary == Map("pending_groups" -> pending, "uploaded_groups" -> 1L))
     }
     assert(unfinished() == 1)
     // a cap of 0 would plan the manifest away, count and all: refused
     intercept[IllegalArgumentException](EtlJob.runStage(spark,
       "extract_prep_load", opts + ("upload-limit" -> "0"), transport))
+  }
+
+  /** The call sites of the jobs `body` runs: the first line of each
+    * job's long call site, the Spark method the program called. */
+  private def jobCallSites(body: => Unit): Seq[String] = {
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    // as in executedPlans: only the jobs between two marker jobs count
+    val (start, end) = (s"jobs_start_${System.nanoTime()}", s"jobs_end_${System.nanoTime()}")
+    @volatile var started = false
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.job.description")) match {
+          case Some(`start`) => started = true
+          case Some(`end`) => drained.countDown()
+          case _ => if (started) e.stageInfos.sortBy(_.stageId).lastOption
+            .foreach(st => sites.add(st.details.linesIterator.next()))
+        }
+    }
+    def marker(name: String): Unit = {
+      spark.sparkContext.setJobDescription(name)
+      try spark.range(1).collect() finally spark.sparkContext.setJobDescription(null)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      marker(start)
+      body
+      marker(end)
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally spark.sparkContext.removeSparkListener(listener)
+    sites.asScala.toSeq
+  }
+
+  test("no DAG task runs a schema-inference job: every parquet read takes its schema from a footer") {
+    val base = Files.createTempDirectory("graft-job-footer").toString
+    incoming(Seq(("r1", "U1", "2021-11-10 13:00:00"),
+      ("r2", "U1", "2021-11-11 13:00:00"))).write.parquet(s"$base/day1")
+    incoming(Seq(("r3", "U1", "2021-11-10 15:00:00"))).write.parquet(s"$base/day2")
+    val opts = oneDeviceOpts(base) + ("upload-limit" -> "1")
+    val transport = EtlJobSpecLive.transport()
+    // day 1 settles a group, so day 2 reads both parts, from two sites
+    for (batch <- Seq(s"$base/day1", s"$base/day2\u0000$base/day1")) {
+      val sites = jobCallSites(EtlJob.stageNames.foreach(
+        EtlJob.runStage(spark, _, opts + ("incoming" -> batch), transport)))
+      assert(sites.nonEmpty)
+      assert(!sites.exists(_.contains("DataFrameReader.parquet")), sites.mkString("\n"))
+    }
+    assert(new graft.ledger.Ledger(spark, opts("ledger")).read().count() == 3)
   }
 
   test("EtlJob.run on a fresh ledger with an empty first batch reports zeros; the next batch ingests normally") {

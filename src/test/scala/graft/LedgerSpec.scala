@@ -3,12 +3,15 @@ package graft
 import java.net.URI
 import java.nio.file.Files
 import java.sql.Timestamp
+import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.hadoop.fs.{FileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ledger.Ledger
+import graft.sources.ParquetFooters
 
 /** Ledger semantics: append-dedup, no-override enrichment (idempotent),
   * group upload flags — the reference's Mongo collection contract
@@ -24,10 +27,10 @@ abstract class LedgerContract(prefix: String) extends SparkSpec {
 
   private def tmp(): String = prefix + localTmp() + "/ledger"
 
-  private def fs(path: String): FileSystem =
+  protected def fs(path: String): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def rec(ref: String, serial: Option[String] = None,
+  protected def rec(ref: String, serial: Option[String] = None,
                   dmpId: Option[String] = None): (String, String, String, Timestamp, Timestamp, Map[String, String], Option[String], Option[String], Option[String], Option[String], Option[String], Boolean) = {
     val h = java.security.MessageDigest.getInstance("SHA-256")
       .digest(("DRM" + ref).getBytes("UTF-8")).map("%02x".format(_)).mkString
@@ -40,13 +43,13 @@ abstract class LedgerContract(prefix: String) extends SparkSpec {
     "end", "meta", "device_serial", "device_id", "patient_id", "dmp_dataset",
     "dmp_id", "is_uploaded")
 
-  private def df(rows: Seq[(String, String, String, Timestamp, Timestamp, Map[String, String], Option[String], Option[String], Option[String], Option[String], Option[String], Boolean)]): DataFrame =
+  protected def df(rows: Seq[(String, String, String, Timestamp, Timestamp, Map[String, String], Option[String], Option[String], Option[String], Option[String], Option[String], Boolean)]): DataFrame =
     rows.toDF(cols: _*)
 
   /** A resolver that overwrites `device_serial` unconditionally — the given
     * refs get their serial, every other row gets null — so any value that
     * survives an existing one is the store's no-override guard at work. */
-  private def setSerials(serials: (String, String)*)(rows: DataFrame): DataFrame =
+  protected def setSerials(serials: (String, String)*)(rows: DataFrame): DataFrame =
     rows.withColumn("device_serial", serials.foldLeft(lit(null).cast("string")) {
       case (v, (ref, serial)) => when($"manufacturer_ref" === ref, serial).otherwise(v)
     })
@@ -55,8 +58,23 @@ abstract class LedgerContract(prefix: String) extends SparkSpec {
     led.read().select($"manufacturer_ref", $"device_serial")
       .as[(String, Option[String])].collect().toMap
 
+  /** A row every enrichment has filled, in group `dmpId`. */
+  protected def done(ref: String, dmpId: String, uploaded: Boolean = false) =
+    rec(ref, serial = Some("S-" + ref), dmpId = Some(dmpId))
+      .copy(_8 = Some("DEV-1"), _9 = Some("P-1"), _12 = uploaded)
+
+  /** The refs in each part's data files, read past the ledger. */
+  protected def partRefs(path: String): Map[String, Seq[String]] =
+    Seq("open", "settled").map(part => part -> {
+      val dir = new Path(path, part)
+      if (!fs(path).exists(dir) || !fs(path).listStatus(dir)
+          .exists(f => ParquetFooters.isData(f.getPath.getName))) Seq.empty
+      else spark.read.parquet(dir.toString).select("manufacturer_ref")
+        .as[String].collect().toSeq.sorted
+    }).toMap
+
   /** The `_staging_`/`_trash_` dirs beside the ledger. */
-  private def orphanDirs(path: String): Seq[String] = {
+  protected def orphanDirs(path: String): Seq[String] = {
     val live = new Path(path)
     fs(path).listStatus(live.getParent).map(_.getPath.getName).toSeq.filter(n =>
       n.startsWith(live.getName + "_staging_") || n.startsWith(live.getName + "_trash_"))
@@ -202,6 +220,90 @@ abstract class LedgerContract(prefix: String) extends SparkSpec {
       .collect().toSet == Set("a", "b"))
   }
 
+  test("init splits its input between two flat parts; each row is in exactly one data file") {
+    val path = tmp()
+    val led = new Ledger(spark, path)
+    // d is flagged but never resolved: it stays open
+    led.init(df(Seq(done("a", "G1", uploaded = true), done("b", "G2"), rec("c"),
+      rec("d", dmpId = Some("G3")).copy(_12 = true))))
+    assert(partRefs(path) == Map("open" -> Seq("b", "c", "d"), "settled" -> Seq("a")))
+    // flat parts, and no <column>=… directory for a hive-partitioned reader
+    for (part <- Seq("open", "settled"))
+      assert(!fs(path).listStatus(new Path(path, part)).exists(_.isDirectory))
+    assert(fs(path).listStatus(new Path(path)).map(_.getPath.getName).toSet ==
+      Set("open", "settled"))
+    assert(led.read().columns.toSeq == cols)
+    assert(led.read().select("manufacturer_ref").as[String].collect().sorted.toSeq ==
+      Seq("a", "b", "c", "d"))
+  }
+
+  test("enrich never passes a settled row to resolve and counts settled rows from their footers") {
+    val path = tmp()
+    val led = new Ledger(spark, path)
+    led.init(df(Seq(done("a", "G1", uploaded = true), done("b", "G2"), rec("c"))))
+    var seen = Seq.empty[String]
+    def spy(rows: DataFrame): DataFrame = {
+      seen = rows.select("manufacturer_ref").as[String].collect().toSeq.sorted
+      setSerials("c" -> "S-C")(rows)
+    }
+    assert(led.enrich("device_serial")(spy) == 3)
+    assert(seen == Seq("b", "c"))
+    // uploading b's group settles it: the next enrichment no longer sees it
+    led.markUploaded(Seq("G2"))
+    assert(partRefs(path) == Map("open" -> Seq("c"), "settled" -> Seq("a", "b")))
+    assert(led.enrich("device_serial")(spy) == 3)
+    assert(seen == Seq("c"))
+    assert(serials(led) == Map("a" -> Some("S-a"), "b" -> Some("S-b"), "c" -> Some("S-C")))
+    // every row settled: nothing left to map, the count comes from footers
+    led.init(df(Seq(done("a", "G1", uploaded = true))))
+    seen = Seq("unset")
+    assert(led.enrich("dmp_id")(spy) == 1)
+    assert(seen == Seq("unset"))
+  }
+
+  test("enrich refuses dmp_dataset, which no resolver fills") {
+    val led = new Ledger(spark, tmp())
+    led.init(df(Seq(rec("a"))))
+    val e = intercept[IllegalArgumentException](led.enrich("dmp_dataset")(identity))
+    assert(e.getMessage.contains("enrichable"))
+  }
+
+  test("unfinished is the open rows plus the settled rows of their groups") {
+    val path = tmp()
+    val led = new Ledger(spark, path)
+    // a's group G1 was uploaded; the late record e re-opens it
+    led.init(df(Seq(done("a", "G1", uploaded = true), done("b", "G2", uploaded = true),
+      done("e", "G1"), rec("c"))))
+    assert(partRefs(path)("settled") == Seq("a", "b"))
+    assert(led.unfinished().select("manufacturer_ref").as[String].collect().sorted.toSeq ==
+      Seq("a", "c", "e"))
+  }
+
+  test("a single-directory ledger of earlier versions fails fast at every entry point, naming the one-off rewrite") {
+    val path = tmp()
+    df(Seq(rec("a"), rec("b"))).write.parquet(path)
+    val led = new Ledger(spark, path)
+    val before = liveFiles(path)
+    for (op <- Seq(
+      () => led.exists,
+      () => led.read(),
+      () => led.unfinished(),
+      () => led.init(df(Seq(rec("z")))),
+      () => led.append(df(Seq(rec("z")))),
+      () => led.enrich("device_serial")(setSerials("a" -> "X")),
+      () => led.markUploaded(Seq("G-1")))) {
+      val e = intercept[IllegalStateException](op())
+      assert(e.getMessage.contains("single-directory") &&
+        e.getMessage.contains(s"spark.read.parquet(\"$path\")") && e.getMessage.contains("init"))
+    }
+    assert(liveFiles(path) == before && orphanDirs(path).isEmpty)
+    // the rewrite the message gives
+    val moved = tmp()
+    new Ledger(spark, moved).init(spark.read.parquet(path))
+    assert(new Ledger(spark, moved).read().select("manufacturer_ref").as[String]
+      .collect().toSet == Set("a", "b"))
+  }
+
   test("recovery restores live stranded in trash by a crashed publish") {
     val path = tmp()
     val led = new Ledger(spark, path)
@@ -265,6 +367,38 @@ class LedgerSpec extends LedgerContract("") {
       .foreach(w => assert(e.getMessage.contains(w), e.getMessage))
     assert(new java.io.File(dir).list().isEmpty)
   }
+
+  test("a crash at any step of a settling publish, then recovery, leaves each row in exactly one part") {
+    import spark.implicits._
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.crashtest.impl", classOf[CrashingFileSystem].getName)
+    var step = 0
+    var crashed = true
+    while (crashed) {
+      val path = "crashtest://" + localTmp() + "/ledger"
+      val led = new Ledger(spark, path)
+      led.init(df(Seq(done("a", "G1"), done("b", "G1"), done("c", "G2"), rec("d"))))
+      CrashingFileSystem.arm(step)
+      crashed = try { led.markUploaded(Seq("G1")); CrashingFileSystem.fired }
+        catch { case _: Exception => assert(CrashingFileSystem.fired); true }
+        finally CrashingFileSystem.disarm()
+      // the crashed writer is gone: release its lock, recover on entry
+      led.forceReleaseLock()
+      val refs = led.read().select("manufacturer_ref").as[String].collect().sorted.toSeq
+      assert(refs == Seq("a", "b", "c", "d"), s"step $step")
+      assert(partRefs(path).values.flatten.toSeq.sorted == refs, s"step $step: ${partRefs(path)}")
+      assert(orphanDirs(path).isEmpty, s"step $step")
+      // the rerun publishes what the crashed run meant to
+      led.markUploaded(Seq("G1"))
+      assert(partRefs(path) == Map("open" -> Seq("c", "d"), "settled" -> Seq("a", "b")),
+        s"step $step")
+      assert(led.read().filter($"is_uploaded").select("manufacturer_ref").as[String]
+        .collect().sorted.toSeq == Seq("a", "b"), s"step $step")
+      step += 1
+    }
+    // the lock, the staging write, the settled move and the open swap
+    assert(step > 8, s"only $step steps")
+  }
 }
 
 /** The contract at `file://` URIs. */
@@ -275,6 +409,40 @@ class LedgerFileUriSpec extends LedgerContract("file://")
 class LedgerNioSchemeSpec extends LedgerContract("niotest://") {
   spark.sparkContext.hadoopConfiguration
     .set("fs.niotest.impl", classOf[NioSchemeFileSystem].getName)
+}
+
+/** [[NioLocalFileSystem]] at the test-only `crashtest:` scheme that throws
+  * at the armed rename, delete or mkdirs outside Spark's `_temporary`
+  * dirs, as a writer killed at that step would stop there. */
+class CrashingFileSystem extends NioLocalFileSystem(new NioLocalFileSystem.Raw {
+  override def getUri: URI = URI.create("crashtest:///")
+}) {
+  override def rename(src: Path, dst: Path): Boolean = {
+    CrashingFileSystem.step(src, dst); super.rename(src, dst)
+  }
+  override def delete(p: Path, recursive: Boolean): Boolean = {
+    CrashingFileSystem.step(p); super.delete(p, recursive)
+  }
+  override def mkdirs(p: Path): Boolean = { CrashingFileSystem.step(p); super.mkdirs(p) }
+  override def mkdirs(p: Path, perm: FsPermission): Boolean = {
+    CrashingFileSystem.step(p); super.mkdirs(p, perm)
+  }
+}
+
+object CrashingFileSystem {
+  /** Steps before the crash; -1 when disarmed. */
+  private val left = new AtomicInteger(-1)
+  @volatile var fired = false
+
+  def arm(steps: Int): Unit = { fired = false; left.set(steps) }
+  def disarm(): Unit = left.set(-1)
+
+  private def step(paths: Path*): Unit =
+    if (!paths.exists(_.toString.contains("_temporary")) &&
+        left.getAndUpdate(n => if (n >= 0) n - 1 else n) == 0) {
+      fired = true
+      throw new java.io.IOException(s"injected crash at ${paths.mkString(" -> ")}")
+    }
 }
 
 /** [[NioLocalFileSystem]] serving the `niotest:` scheme. */

@@ -1,11 +1,15 @@
 package graft
 
+import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 
 import graft.etl.Stages
+import graft.sources.LookupCsv
 
 /** Pins the reference's pipeline-stage semantics over the canonical
   * NR1_DEVICE fixture (tests/hooks/conftest.py:86-118, FIXTURES.md §3) and
@@ -196,5 +200,22 @@ class StagesSpec extends SparkSpec {
     assert(got == Map("h1" -> Some("ds-123"), "h2" -> None))
     assertThrows[NoSuchElementException](
       Stages.assignDataset(recs, Map("OTHER" -> "x"), "TEST"))
+  }
+
+  test("LookupCsv.read: duplicate keys keep the smallest value; the lookup join shuffles nothing") {
+    val dir = Files.createTempDirectory("graft-lookup")
+    // two files, so the scan has two partitions; K1 is in both
+    Files.write(dir.resolve("a.csv"), "K1,V9\nK2,V2\n".getBytes)
+    Files.write(dir.resolve("b.csv"), "K1,V1\nK3,V3\nK3,V0\n".getBytes)
+    val lk = LookupCsv.read(spark, dir.toString, "key", "value")
+    assert(lk.as[(String, String)].collect().toMap ==
+      Map("K1" -> "V1", "K2" -> "V2", "K3" -> "V0"))
+    val joined = Seq("K1", "K3", "K4").toDF("k").join(lk, $"k" === $"key", "left")
+    assert(joined.select($"k", $"value").as[(String, Option[String])].collect().toMap ==
+      Map("K1" -> Some("V1"), "K3" -> Some("V0"), "K4" -> None))
+    object Plans extends AdaptiveSparkPlanHelper
+    val plan = joined.queryExecution.executedPlan
+    assert(Plans.collectWithSubqueries(plan) { case s: ShuffleExchangeExec => s }.isEmpty,
+      plan.toString)
   }
 }

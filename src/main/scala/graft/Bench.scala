@@ -11,7 +11,7 @@ package graft
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Tables.cores
     val spark = Tables.session("graft-bench", cpus)
     // extra confs for experiments (e.g. the AQE skew-join pass in
     // SCALING.md): SPARK_GRAFT_CONF="k=v;k=v", runtime SQL confs only.

@@ -57,8 +57,7 @@ object EtlJob {
 
   def main(args: Array[String]): Unit = {
     val opts = parseArgs(args)
-    val spark = Tables.session("graft-etl-job",
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = Tables.session("graft-etl-job")
     try {
       val summary = opts.get("stage") match {
         case Some(stage) => runStage(spark, stage, opts)

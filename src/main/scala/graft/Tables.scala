@@ -104,10 +104,20 @@ object Tables {
     if (name == "events") events(spark, dir)
     else spark.read.parquet(s"$dir/$name.parquet")
 
+  /** The local core count every main runs at: `$SPARK_GRAFT_CPUS`, else
+    * every processor this JVM may use.
+    */
+  def cores: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors.toString)
+
+  /** [[session]] at [[cores]]. */
+  def session(appName: String): SparkSession = session(appName, cores)
+
   /** Session factory used by mains and tests: UTC (oracle parity), shuffle
-    * partitions sized to local cores (not the 200 default), AQE on, and
-    * `file:` paths through [[NioLocalFileSystem]] (no `chmod` fork per
-    * created file; `hdfs:`/`s3a:` paths are unaffected).
+    * partitions sized to local cores (not the 200 default), AQE on, a
+    * generated-class cache that holds a session's working set, and `file:`
+    * paths through [[NioLocalFileSystem]] (no `chmod` fork per created
+    * file; `hdfs:`/`s3a:` paths are unaffected).
     */
   def session(appName: String, cores: String): SparkSession = {
     val spark = SparkSession.builder()
@@ -115,6 +125,14 @@ object Tables {
       .appName(appName)
       .withExtensions(new graft.expressions.GraftExtensions)
       .config("spark.sql.shuffle.partitions", cores)
+      // Spark's generated-class cache is one LRU per JVM (Guava, 4
+      // segments), sized once by CodeGenerator's static initialiser from
+      // this static conf, so it must be set here, before the first query.
+      // At the default 100 entries, perfbench's etl_daily (~130 distinct
+      // classes per JVM) and gate_mix (261) evicted their classes before
+      // reusing them, and each warm DAG run recompiled ~70 of them; at
+      // 1000, a few times the larger working set, it compiles 4
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -11,8 +11,7 @@ object Verify {
       val prefixes = args(2).split(",").toSeq
       name => prefixes.exists(name.startsWith)
     } else _ => true
-    val spark = Tables.session("graft-verify",
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+    val spark = Tables.session("graft-verify")
     TempDirs.sweepStale() // crashed earlier runs leave graft-* litter
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => only(kv._1)).foreach { case (name, fn) =>

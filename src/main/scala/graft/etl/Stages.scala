@@ -113,6 +113,8 @@ object Stages {
     * always day-normalised and open-ended `end_wear` defaults to `today`
     * (pinned as a parameter, not `current_date()`, so runs reproduce); a
     * patient matches when BOTH record endpoints fall inside the wear period.
+    * `today` folds into a timestamp literal that codegen inlines, so the
+    * assignment-side stage compiles anew for each distinct `today`.
     *
     * `normaliseRecordDays=true` mirrors the pipeline entry
     * `resolve_patient_id` (ucam.py:95-105), which truncates the record

@@ -12,8 +12,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val spark = Tables.session("graft-explain",
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = Tables.session("graft-explain")
     val df = SparkEntry.queries(name)(spark, sfDir)
     df.explain("formatted")
     // per-stage wall breakdown: where a multi-exchange query's time goes

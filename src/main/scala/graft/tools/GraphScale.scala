@@ -23,8 +23,7 @@ object GraphScale {
     val maxDeg = if (args.length > 1) args(1).toInt else 10000
     val hub = if (args.length > 2) args(2).toInt else 1000
     val runUncapped = args.length > 3 && args(3) == "uncapped"
-    val spark = Tables.session("graft-graphscale",
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = Tables.session("graft-graphscale")
     // q216's edge set, verbatim (Extensions.scala q216 lambda)
     val li = Tables.table(spark, sfDir, "lineitem")
       .filter(col("l_quantity") >= 30)
@@ -89,8 +88,7 @@ object GraphScale {
   private def lpDemo(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(100000)
     val rounds = if (args.length > 1) args(1).toInt else 2
-    val spark = Tables.session("graft-lpscale",
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = Tables.session("graft-lpscale")
     def edgesFor(m: Long): DataFrame = {
       val ids = spark.range(m).toDF("i")
       val e1 = ids.filter(col("i") % 100 =!= 99)
@@ -151,8 +149,7 @@ object GraphScale {
     val nHubs = if (args.length > 1) args(1).toInt else 2
     val maxDeg = if (args.length > 2) args(2).toInt else 10000
     val s = if (args.length > 3) args(3).toInt else 1000
-    val spark = Tables.session("graft-graphscale-skew",
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = Tables.session("graft-graphscale-skew")
     import spark.implicits._
     val base = 1000000L
     // hubs 1..nHubs each touch a DISJOINT neighbor block (hub wedges only);

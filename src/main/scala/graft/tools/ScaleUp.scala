@@ -18,8 +18,7 @@ object ScaleUp {
   def main(args: Array[String]): Unit = {
     val Array(src, out, factorS) = args
     val factor = factorS.toInt
-    val spark = Tables.session("graft-scaleup",
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = Tables.session("graft-scaleup")
 
     def replicate(name: String, idCols: Map[String, Long]): Unit = {
       val base = Tables.table(spark, src, name)

@@ -41,8 +41,7 @@ object StreamBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Tables.session("graft-streambench", cpus)
+    val spark = Tables.session("graft-streambench")
     graft.TempDirs.sweepStale() // litter from crashed earlier runs
     val r = run(spark, sfDir)
     def obj[V](m: Iterable[(String, V)])(v: V => String) =

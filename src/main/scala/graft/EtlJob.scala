@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.connect.{BasicAuthTokenProvider, ConnectionConfig, Dmp,
   FileTransfer, JavaNetTransport, SignatureAuthTokenProvider, Transport}
 import graft.etl.Stages
+import graft.functions.Etl
 import graft.ledger.{Ledger, LedgerStore, MongoLedger}
 import graft.sources.{LookupCsv, ParquetFooters}
 
@@ -34,8 +35,9 @@ import graft.sources.{LookupCsv, ParquetFooters}
   * multi-site ingest — the reference runs one Dreem connection per site
   * (`dreem_kiel`/`dreem_newcastle`, init/connections.yaml.example:5-18)
   * into a single pipeline; here the per-site frames are unioned by name
-  * before ingest, and the hash anti-join dedups ACROSS sites as well as
-  * against the ledger.
+  * before ingest, and the ledger's append dedups ACROSS sites (one
+  * survivor per hash, the `LedgerStore.append` rule) as well as against
+  * the ledger.
   * Task 6 (extract-prep-load) transfers through the live connectors:
   * downloads run through `FileTransfer.chunkedFetch` (not-ready detection
   * included) and uploads through `Dmp.upload` (GraphQL multipart +
@@ -66,34 +68,6 @@ object EtlJob {
       println(summary.map { case (k, v) => s""""$k":$v""" }
         .mkString("{", ",", "}"))
     } finally spark.stop()
-  }
-
-  /** Collapse duplicates WITHIN one run's batch — the same record at two
-    * sites, or a paginated fetch emitting a row twice. Keyed on the exact
-    * identity the ledger keys on: the hash expression itself (recordHash
-    * concats without a separator, a reference quirk, so distinct
-    * (device_type, ref) pairs can share a hash — partitioning on the pair
-    * would under-dedup those). The hash computed here is the key the
-    * ledger's append dedups on.
-    *
-    * Null-key records (recordHash is null-intolerant) BYPASS the dedup:
-    * a null hash is not an identity — Window.partitionBy would pool every
-    * null-key record into one partition and keep a single survivor,
-    * silently dropping the rest. The survivor among real duplicates is
-    * chosen DETERMINISTICALLY (earliest start/end, then serialized meta) —
-    * dropDuplicates would keep whichever partition won the race, making
-    * ledger contents differ between identical runs when sources disagree
-    * on non-key fields.
-    */
-  private[graft] def dedupBatch(unioned: org.apache.spark.sql.DataFrame):
-      org.apache.spark.sql.DataFrame = {
-    val hashed = unioned.withColumn("hash",
-      graft.functions.Etl.recordHash(col("device_type"), col("manufacturer_ref")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("hash"))
-      .orderBy(col("start"), col("end"), to_json(col("meta")))
-    hashed.withColumn("__rn", row_number().over(w))
-      .filter(col("hash").isNull || col("__rn") === 1).drop("__rn")
   }
 
   /** Live fetch/push pair built from connection options (testable: pass a
@@ -222,17 +196,22 @@ object EtlJob {
           s"unknown --ledger-format '$other' (parquet | mongodb)")
     }
 
-  /** Task 1 — download_metadata: ingest-dedup + append (J1+L1+S7).
+  /** Task 1 — download_metadata: hash + append (J1+L1+S7).
     * Multi-site fan-in: one frame per --incoming source, unioned by name
-    * (same S1 schema per site, init/connections.yaml.example:5-18).
-    * Duplicates WITHIN one run's batch are collapsed by dedupBatch (above);
-    * the ledger's append drops ALREADY-SEEN records, counting the rest. */
+    * (same S1 schema per site, init/connections.yaml.example:5-18). The
+    * ledger's append keeps one record per hash — of a record seen at two
+    * sites, or twice in a paginated fetch, the earliest `start` — drops
+    * the ALREADY-SEEN ones and counts the rest. The hash is the exact
+    * identity the ledger keys on (recordHash concats without a separator,
+    * a reference quirk, so distinct (device_type, ref) pairs can share
+    * one). */
   private def stageDownloadMetadata(spark: org.apache.spark.sql.SparkSession,
                                     ledger: LedgerStore,
                                     opts: Map[String, String]): Seq[(String, Long)] = {
     val sites = opts("incoming").split('\u0000').toSeq
       .map(ParquetFooters.read(spark, _))
-    val batch = dedupBatch(sites.reduce(_.unionByName(_)))
+    val batch = sites.reduce(_.unionByName(_))
+      .withColumn("hash", Etl.recordHash(col("device_type"), col("manufacturer_ref")))
       .withColumn("device_serial", lit(null).cast("string"))
       .withColumn("device_id", lit(null).cast("string"))
       .withColumn("patient_id", lit(null).cast("string"))

@@ -23,7 +23,8 @@ import graft.sources.ParquetFooters
   * atomic and `create(…, overwrite = false)` is exclusive; the constructor
   * refuses any other. Every entry point but [[exists]] takes the writer
   * lock and recovers a crashed publish first:
-  *   1. [[append]] writes the unseen records into the open part;
+  *   1. [[append]] writes the unseen records into the open part, in the
+  *      stored column order;
   *   2. [[enrich]] maps the open part in one pass — the resolution runs
   *      over the rows that can still change, existing values win
   *      (coalesce against a copy of the field taken before the resolution,
@@ -185,14 +186,16 @@ final class Ledger(spark: SparkSession, path: String) extends LedgerStore {
     publish(records, replace = true)
   }
 
-  /** S7 — [[LedgerStore.append]] as one hash anti-join against both parts
-    * (insert-only dedup, db.py:76-86 + the J1 anti-join); the first append
-    * creates the ledger.
-    */
+  /** S7 — [[LedgerStore.append]] as one written query: the batch's
+    * survivors anti-joined against both parts in one scan (db.py:76-86 +
+    * the J1 anti-join), written in the stored column order, so every file
+    * lists one order whichever footer the read opens. The first append
+    * creates the ledger. */
   def append(records: DataFrame): Long = locked("append") {
-    val fresh = if (!exists) records
-      else records.join(scan(parts()).select("hash"), Seq("hash"), "left_anti")
-    LedgerStore.countObserved(fresh) { df =>
+    val stored = if (exists) Some(scan(parts())) else None
+    val fresh = LedgerStore.unseen(records, stored)
+    val ordered = stored.fold(fresh)(s => fresh.select(s.columns.map(col): _*))
+    LedgerStore.countObserved(ordered) { df =>
       df.write.mode(SaveMode.Append).parquet(openDir.toString)
       spark.catalog.refreshByPath(path)
     }

@@ -1,14 +1,16 @@
 package graft.ledger
 
 import org.apache.spark.sql.{Column, DataFrame, Observation}
-import org.apache.spark.sql.functions.{coalesce, col, count, lit}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions.{coalesce, col, count, lit, row_number,
+  struct, to_json}
 
 /** The ledger contract every storage strategy implements — the reference's
   * MongoDB collection operations (db.py:66-231) as a storage-neutral
   * interface:
   *
-  *  - [[append]]: insert-only ingest, deduped by hash ([[init]] seeds a
-  *    store wholesale);
+  *  - [[append]]: insert-only ingest, one record per hash ([[init]] seeds
+  *    a store wholesale);
   *  - [[enrich]]: one resolution step over the stored rows, filling a field
   *    only where it is still null (db.py:96-125, no-override guards at
   *    db.py:99,105-106,115,120-121 / tests/hooks/test_db.py:16-47);
@@ -27,7 +29,10 @@ trait LedgerStore {
   def read(): DataFrame
   def init(records: DataFrame): Unit
   /** Insert the records whose hash is not stored yet, creating the store
-    * on first use; returns the rows written. */
+    * on first use; returns the rows written. Of a hash the batch holds
+    * twice, the copy with the earliest `start`, then `end`, then `meta`,
+    * then the serialized record lands; every null-hash record lands
+    * ([[LedgerStore.unseen]]). */
   def append(records: DataFrame): Long
   /** Fill `field` where null with what `resolve` computes from the stored
     * rows (one row out per row in, same columns); existing values win.
@@ -72,6 +77,25 @@ object LedgerStore {
     * is null, so or-ing it into is_uploaded keeps ungrouped rows false. */
   private[ledger] def inGroups(dmpIds: Seq[String]): Column =
     col("dmp_id").isNotNull && col("dmp_id").isInCollection(dmpIds)
+
+  /** The rows [[LedgerStore.append]] inserts: the batch's survivors whose
+    * hash `stored` (the store, `None` when absent) lacks. The order among
+    * copies is total (where the batch has no `start`, `end` or `meta`, the
+    * serialized record alone decides), so a batch lands the same rows
+    * whatever its partitioning; `dropDuplicates` keeps whichever copy its
+    * partition saw first. A null hash (recordHash is null-intolerant) is
+    * no identity: pooled, its records would keep one. All copies of a hash
+    * go together, so the dedup and the anti-join commute. */
+  private[ledger] def unseen(records: DataFrame, stored: Option[DataFrame]): DataFrame = {
+    val has = records.columns.toSet
+    val order = Seq("start", "end").filter(has).map(col) ++
+      Seq("meta").filter(has).map(m => to_json(col(m))) :+
+      to_json(struct(records.columns.map(col): _*))
+    val batch = records
+      .withColumn("__rn", row_number().over(Window.partitionBy("hash").orderBy(order: _*)))
+      .filter(col("hash").isNull || col("__rn") === 1).drop("__rn")
+    stored.fold(batch)(s => batch.join(s.select("hash"), Seq("hash"), "left_anti"))
+  }
 
   /** Run `write` over `df`; return the count of non-null `counted` over
     * the rows of `df`, observed on the write itself, not by a second pass.

@@ -28,7 +28,7 @@ import org.apache.spark.sql.functions._
   * `idFieldList` + `operationType` + `upsertDocument`).
   *
   * Semantics map 1:1 onto db.py:
-  *  - [[append]]: anti-join dedup then insert (db.py:76-86);
+  *  - [[append]]: the batch's survivors, anti-joined, then insert (db.py:76-86);
   *  - [[enrich]]: run the resolution and the no-override coalesce IN
   *    SPARK over the collection, then replace-upsert keyed on `hash` only
   *    the documents whose field went from null to set — the
@@ -62,11 +62,8 @@ final class MongoLedger private (spark: SparkSession,
 
   def init(records: DataFrame): Unit = t.overwrite(records)
 
-  def append(records: DataFrame): Long = {
-    val fresh = if (!exists) records
-      else records.join(read().select("hash"), Seq("hash"), "left_anti")
-    LedgerStore.countObserved(fresh)(t.insert)
-  }
+  def append(records: DataFrame): Long = LedgerStore.countObserved(
+    LedgerStore.unseen(records, if (exists) Some(read()) else None))(t.insert)
 
   def enrich(field: String)(resolve: DataFrame => DataFrame): Long = {
     val fill = LedgerStore.fillNulls(field)(resolve) // checks field

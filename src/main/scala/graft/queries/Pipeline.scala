@@ -583,10 +583,10 @@ object Pipeline {
   /** The reference's whole incremental contract in one gate: at-least-once
     * delivery (the SAME file arrives twice, under two names, across two
     * AvailableNow drains sharing a checkpoint) composing to exactly-once
-    * ledger state through the foreachBatch sink's anti-join + intra-batch
-    * dedup. The oracle sees none of the redelivery machinery — just the
-    * per-type counts the ledger must equal if and only if every record
-    * landed exactly once. StreamingSpec covers the same sink against
+    * ledger state through the foreachBatch sink's `Ledger.append` (one
+    * survivor per hash within the batch, then the anti-join). The oracle
+    * sees none of the redelivery machinery — just the per-type counts the
+    * ledger must equal if and only if every record landed exactly once. StreamingSpec covers the same sink against
     * synthetic data; this gate proves it end-to-end on the driver's events
     * table with a DuckDB oracle.
     */

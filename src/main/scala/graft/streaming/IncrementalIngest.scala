@@ -32,27 +32,16 @@ object IncrementalIngest {
 
   /** Drain all currently-available files straight INTO the ledger: each
     * micro-batch appends through [[graft.ledger.Ledger.append]] (the first
-    * one creates the ledger), whose hash anti-join makes redelivered
-    * batches idempotent — so the at-least-once `foreachBatch` sink
-    * composes to exactly-once ledger state (the streaming twin of the
-    * reference's poll→dedup→insert loop, dags/dreem.py:44-67 +
-    * db.py:76-86). Returns the rows the drain read.
+    * one creates the ledger), which keeps `EtlJob`'s survivor per hash
+    * and whose anti-join makes redelivered batches idempotent — so the
+    * at-least-once `foreachBatch` sink composes to exactly-once ledger
+    * state (the streaming twin of the reference's poll→dedup→insert loop,
+    * dags/dreem.py:44-67 + db.py:76-86). Returns the rows the drain read.
     */
   def runIntoLedger(spark: SparkSession, srcDir: String, schema: StructType,
                     checkpointDir: String,
                     ledger: graft.ledger.Ledger): Long =
-    Drain.eachBatch(hashed(spark, srcDir, schema), checkpointDir) { batch =>
-      // dedup WITHIN the batch too: append's anti-join only screens
-      // against hashes already in the ledger, so an intra-batch repeat
-      // (duplicate rows in one file, or two files delivering the same
-      // record in one drain) would otherwise land twice. In one scan: a
-      // null-hash record keys on its own row id, so none collapses (ids
-      // are unique within this batch, which is all a batch dedup spans)
-      ledger.append(batch
-        .withColumn("__row", when(col("hash").isNull, monotonically_increasing_id()))
-        .dropDuplicates("hash", "__row").drop("__row"))
-      ()
-    }
+    Drain.eachBatch(hashed(spark, srcDir, schema), checkpointDir)(ledger.append(_))
 
   private def hashed(spark: SparkSession, srcDir: String,
                      schema: StructType): DataFrame =
@@ -60,12 +49,12 @@ object IncrementalIngest {
       .withColumn("hash",
         Etl.recordHash(col("device_type"), col("manufacturer_ref")))
 
-  /** One record per non-null `hash`, across runs. A record whose hash is
-    * null (a null device type or manufacturer ref) has no identity to
-    * repeat, so every one is kept — the batch path's rule
-    * (`EtlJob.dedupBatch`). Row ids restart each micro-batch, so unlike
-    * [[runIntoLedger]]'s batch dedup the null-hash records bypass the
-    * state instead, at a second scan of each micro-batch. */
+  /** One record per non-null `hash`, across runs: the first to arrive,
+    * since the state outlives the batch. A record whose hash is null (a
+    * null device type or manufacturer ref) has no identity to repeat, so
+    * every one is kept — the ledger's rule (`LedgerStore.append`). The
+    * null-hash records bypass the state, at a second scan of each
+    * micro-batch. */
   private def dedupHashes(stream: DataFrame): DataFrame =
     stream.filter(col("hash").isNull)
       .unionByName(stream.filter(col("hash").isNotNull).dropDuplicates("hash"))

@@ -253,27 +253,6 @@ class EtlJobSpec extends SparkSpec {
     assert(r2start.toSeq == Seq("13:30:00")) // deterministic earliest-start survivor
   }
 
-  test("dedupBatch: hash-keyed survivor is deterministic; null-key rows bypass") {
-    val batch = Seq(
-      // two true duplicates (same identity, sites disagree on start)
-      (Some("DRM"), "r1", "2021-11-10 14:00:00"),
-      (Some("DRM"), "r1", "2021-11-10 13:30:00"),
-      // null device_type -> null hash: NOT an identity; both must survive
-      (None: Option[String], "r8", "2021-11-10 10:00:00"),
-      (None: Option[String], "r9", "2021-11-10 11:00:00"))
-      .toDF("device_type", "manufacturer_ref", "s")
-      .select(col("device_type"), col("manufacturer_ref"),
-        col("s").cast("timestamp").as("start"),
-        (col("s").cast("timestamp") + expr("INTERVAL 2 HOURS")).as("end"),
-        map(lit("k"), lit("v")).as("meta"))
-    val out = EtlJob.dedupBatch(batch)
-      .select(col("manufacturer_ref"), date_format(col("start"), "HH:mm:ss"))
-      .as[(String, String)].collect().sortBy(r => (r._1, r._2))
-    assert(out.toSeq == Seq(
-      ("r1", "13:30:00"), // deterministic earliest-start survivor
-      ("r8", "10:00:00"), ("r9", "11:00:00"))) // null-key rows untouched
-  }
-
   /** One device (U1 → S1 → DEV-1, worn by P-A since 2021-11-01): every
     * record of one day lands in one upload group.
     */
@@ -293,6 +272,37 @@ class EtlJobSpec extends SparkSpec {
       "assignments" -> s"$base/assignments",
       "workdir" -> s"$base/work", "today" -> "2021-12-01") ++
       EtlJobSpecLive.flags
+  }
+
+  test("two EtlJob.run days land the same ledger at 1 and 8 shuffle partitions, without AQE and without broadcast joins") {
+    val base = Files.createTempDirectory("graft-job-layout").toString
+    // r1 and r3 arrive twice in their batch, the copies differing in meta
+    // (only U1 resolves); day 2 redelivers r2
+    incoming(Seq(("r1", "U9", "2021-11-10 13:00:00"), ("r1", "U1", "2021-11-10 13:00:00"),
+      ("r2", "U1", "2021-11-10 15:00:00"))).write.parquet(s"$base/day1")
+    incoming(Seq(("r2", "U1", "2021-11-10 15:00:00"), ("r3", "U9", "2021-11-11 13:00:00"),
+      ("r3", "U1", "2021-11-11 13:00:00"), ("r4", "U1", "2021-11-12 13:00:00")))
+      .write.parquet(s"$base/day2")
+    val transport = EtlJobSpecLive.transport()
+    val outcomes = Seq(
+      Seq("spark.sql.shuffle.partitions" -> "1"),
+      Seq("spark.sql.shuffle.partitions" -> "8"),
+      Seq("spark.sql.adaptive.enabled" -> "false"),
+      Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1")).zipWithIndex.map {
+      case (conf, i) => withConf(conf: _*) {
+        val dir = Files.createDirectories(Paths.get(base, s"conf$i")).toString
+        val opts = oneDeviceOpts(dir) + ("upload-limit" -> "1")
+        val summaries = Seq("day1", "day2").map(day =>
+          EtlJob.run(spark, opts + ("incoming" -> s"$base/$day"), transport))
+        val ledger = new graft.ledger.Ledger(spark, opts("ledger")).read()
+        (ledger.select(to_json(struct(ledger.columns.sorted.map(col): _*)))
+          .as[String].collect().sorted.toSeq, summaries)
+      }
+    }
+    val (rows, summaries) = outcomes.head
+    assert(rows.size == 4 && rows.count(_.contains("\"is_uploaded\":true")) == 3, rows)
+    assert(!rows.exists(_.contains("U9")), rows) // the resolvable copies
+    outcomes.tail.foreach(o => assert(o == (rows, summaries)))
   }
 
   test("EtlJob.run live transfer: chunkedFetch + Dmp.upload against scripted endpoints") {

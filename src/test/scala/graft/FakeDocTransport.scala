@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.col
 
 import graft.ledger.MongoLedger.DocTransport
 
@@ -10,9 +11,10 @@ import graft.ledger.MongoLedger.DocTransport
   * SEMANTICS (key = `hash`, the connector's `idFieldList` ≙ `_id`):
   *
   *  - `insert` ≙ insert_many(ordered=False) (db.py:76-86): every
-  *    non-duplicate lands, then a duplicate-key error raises if any input
-  *    key already existed — so a caller that forgets its dedup anti-join
-  *    fails here exactly as it would against real Mongo;
+  *    non-duplicate lands, and the first copy of a key the batch repeats,
+  *    then a duplicate-key error raises if any input key already existed
+  *    or came twice — so a caller that forgets its dedup fails here
+  *    exactly as it would against real Mongo;
   *  - `replaceUpsert` ≙ replace_one(upsert=True) per document
   *    (db.py:96-125): whole-document replace by key, insert when absent;
   *  - an absent collection throws on `load` (the ledger's `exists` probe
@@ -27,7 +29,7 @@ final class FakeDocTransport(spark: SparkSession, root: java.nio.file.Path)
     extends DocTransport {
 
   final class DuplicateKeyException(n: Long) extends RuntimeException(
-    s"E11000 duplicate key: $n document(s) already present (non-duplicates were inserted)")
+    s"E11000 duplicate key: $n document(s) already present or repeated (the first copies were inserted)")
 
   private var version = 0
   private def dir(v: Int) = root.resolve(s"v$v").toString
@@ -46,14 +48,17 @@ final class FakeDocTransport(spark: SparkSession, root: java.nio.file.Path)
   def overwrite(records: DataFrame): Unit = write(records)
 
   def insert(records: DataFrame): Unit = {
-    if (version == 0) { write(records); return }
-    val existing = load()
-    val keys = existing.select("hash")
-    write(existing.unionByName(
-      records.join(keys, Seq("hash"), "left_anti")))
+    val existing = if (version == 0) None else Some(load())
+    val fresh = existing.fold(records)(e =>
+      records.join(e.select("hash"), Seq("hash"), "left_anti"))
+    // one document per key: a batch's repeated key fails after its first
+    // copy (a null key is left alone, as the ledger leaves it)
+    val landed = fresh.filter(col("hash").isNull)
+      .unionByName(fresh.filter(col("hash").isNotNull).dropDuplicates("hash"))
+    write(existing.fold(landed)(_.unionByName(landed)))
     // ordered=False: the error raises AFTER the fresh documents landed
-    // (`keys` still reads the previous version)
-    val dups = records.join(keys, Seq("hash")).count()
+    // (`existing` still reads the previous version)
+    val dups = records.count() - landed.count()
     if (dups > 0) throw new DuplicateKeyException(dups)
   }
 

@@ -99,6 +99,33 @@ abstract class LedgerContract(prefix: String) extends SparkSpec {
       == Set("a", "b", "c"))
   }
 
+  test("append keeps one record per hash: the earliest start, then end, then meta; null-hash records bypass") {
+    val led = new Ledger(spark, tmp())
+    def at(ref: String, start: String, end: String = "2021-11-10 18:00:00",
+           uid: String = "U1", hash: Boolean = true) = {
+      val r = rec(ref)
+      r.copy(_1 = if (hash) r._1 else null, _4 = Timestamp.valueOf(start),
+        _5 = Timestamp.valueOf(end), _6 = Map("dreem_uid" -> uid))
+    }
+    // each identity's losing copy comes first
+    assert(led.append(df(Seq(
+      // two true duplicates (sites disagree on start)
+      at("r1", "2021-11-10 14:00:00"), at("r1", "2021-11-10 13:30:00"),
+      // same start, different end; same start and end, different meta
+      at("r2", "2021-11-10 09:00:00", "2021-11-10 12:00:00"),
+      at("r2", "2021-11-10 09:00:00", "2021-11-10 11:00:00"),
+      at("r3", "2021-11-10 09:00:00", uid = "U9"), at("r3", "2021-11-10 09:00:00"),
+      // a null hash is NOT an identity: both must land
+      at("r8", "2021-11-10 10:00:00", hash = false),
+      at("r9", "2021-11-10 11:00:00", hash = false)))) == 5)
+    assert(led.read().select($"manufacturer_ref", date_format($"start", "HH:mm:ss"),
+        date_format($"end", "HH:mm:ss"), $"meta"("dreem_uid"))
+      .as[(String, String, String, String)].collect().sorted.toSeq == Seq(
+      ("r1", "13:30:00", "18:00:00", "U1"), // deterministic earliest-start survivor
+      ("r2", "09:00:00", "11:00:00", "U1"), ("r3", "09:00:00", "18:00:00", "U1"),
+      ("r8", "10:00:00", "18:00:00", "U1"), ("r9", "11:00:00", "18:00:00", "U1")))
+  }
+
   test("append creates an absent ledger and returns the rows it wrote; a redelivered batch writes 0") {
     val path = tmp()
     val led = new Ledger(spark, path)
@@ -357,6 +384,30 @@ abstract class LedgerContract(prefix: String) extends SparkSpec {
 
 /** The contract at bare local paths, plus the filesystem check. */
 class LedgerSpec extends LedgerContract("") {
+  test("after init, append, enrich and append, every data file lists the stored column order") {
+    val path = localTmp() + "/ledger"
+    val led = new Ledger(spark, path)
+    // hash after meta, as EtlJob's batch lists it
+    def batch(refs: String*) = df(refs.map(rec(_)))
+      .select(Seq("manufacturer_ref", "device_type", "start", "end", "meta", "hash",
+        "device_serial", "device_id", "patient_id", "dmp_dataset", "dmp_id",
+        "is_uploaded").map(col): _*)
+    val stored = batch().columns.toSeq
+    def orders() = Seq("open", "settled").map(p => new Path(path, p))
+      .filter(fs(path).exists).flatMap(fs(path).listStatus(_))
+      .filter(f => ParquetFooters.isData(f.getPath.getName))
+      .map(f => spark.read.parquet(f.getPath.toString).columns.toSeq).distinct
+    for ((step, op) <- Seq[(String, () => Unit)](
+        "init" -> (() => led.init(batch("a", "b"))),
+        "append" -> (() => led.append(batch("b", "c"))),
+        "enrich" -> (() => led.enrich("device_serial")(setSerials("a" -> "S-A"))),
+        "append" -> (() => led.append(batch("d"))))) {
+      op()
+      assert(orders() == Seq(stored), step)
+    }
+    assert(led.read().count() == 4)
+  }
+
   test("a filesystem without an exclusive create and an atomic rename is refused before any write") {
     spark.sparkContext.hadoopConfiguration
       .set("fs.rawtest.impl", classOf[RawLocalFileSystem].getName)

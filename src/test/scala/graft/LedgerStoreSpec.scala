@@ -90,6 +90,14 @@ class LedgerStoreSpec extends SparkSpec {
     assert(led.read().count() == 3)
   }
 
+  test("MongoLedger.append stores a hash its batch holds twice once, and counts it once") {
+    val led = MongoLedger.forTransport(spark, new FakeDocTransport(
+      spark, java.nio.file.Files.createTempDirectory("graft_mongo_twice")))
+    led.init(df(Seq(rec("a"))))
+    assert(led.append(df(Seq(rec("a"), rec("b"), rec("b")))) == 1)
+    assert(led.read().groupBy("hash").count().collect().map(_.getLong(1)).toSeq == Seq(1L, 1L))
+  }
+
   test("FakeDocTransport pins insert_many(ordered=False): non-duplicates land, then the duplicate-key error raises") {
     val t = new FakeDocTransport(spark,
       java.nio.file.Files.createTempDirectory("graft_mongo_dup"))
@@ -100,5 +108,8 @@ class LedgerStoreSpec extends SparkSpec {
     assert(e.getMessage.contains("duplicate key"))
     // the non-duplicate document c landed BEFORE the error surfaced
     assert(t.load().count() == 3)
+    // a key the batch repeats: its first copy lands, then the error
+    intercept[t.DuplicateKeyException](t.insert(df(Seq(rec("d"), rec("d")))))
+    assert(t.load().count() == 4)
   }
 }

@@ -20,13 +20,7 @@ class ParquetFootersSpec extends SparkSpec {
   /** `df` written with the session's `conf` settings in force. */
   private def written(df: DataFrame, conf: (String, String)*): String = {
     val out = tmp() + "/t"
-    val before = conf.map { case (k, _) => k -> spark.conf.getOption(k) }
-    conf.foreach { case (k, v) => spark.conf.set(k, v) }
-    try df.write.parquet(out)
-    finally before.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
+    withConf(conf: _*)(df.write.parquet(out))
     out
   }
 
@@ -57,23 +51,22 @@ class ParquetFootersSpec extends SparkSpec {
   }
 
   test("a ledger whose files list their columns in different orders reads as inference reads it") {
-    val base = tmp()
-    val ledger = s"$base/ledger"
-    // init with hash after meta, then an EtlJob append, which writes hash
-    // first (the anti-join's key leads its output)
-    new graft.ledger.Ledger(spark, ledger).init(Seq(("h0", "r0")).toDF("hash", "manufacturer_ref")
+    val ledger = s"${tmp()}/ledger"
+    def records(refs: String*) = refs.toDF("manufacturer_ref")
       .select($"manufacturer_ref", lit("DRM").as("device_type"),
         current_timestamp().as("start"), current_timestamp().as("end"),
-        map(lit("dreem_uid"), lit("U0")).as("meta"), $"hash",
+        map(lit("dreem_uid"), lit("U0")).as("meta"), sha2($"manufacturer_ref", 256).as("hash"),
         lit(null).cast("string").as("device_serial"),
         lit(null).cast("string").as("device_id"),
         lit(null).cast("string").as("patient_id"),
         lit(null).cast("string").as("dmp_dataset"),
-        lit(null).cast("string").as("dmp_id"), lit(false).as("is_uploaded")))
-    stamps.select($"ref".as("manufacturer_ref"), lit("DRM").as("device_type"),
-      $"ts".as("start"), $"ts".as("end"), $"meta").write.parquet(s"$base/incoming")
-    EtlJob.runStage(spark, "download_metadata",
-      Map("ledger" -> ledger, "incoming" -> s"$base/incoming"))
+        lit(null).cast("string").as("dmp_id"), lit(false).as("is_uploaded"))
+    // init with hash after meta, then a file that lists hash first, as
+    // appends of earlier versions wrote it (the anti-join's key led)
+    new graft.ledger.Ledger(spark, ledger).init(records("r0"))
+    val later = records("r1", "r2")
+    later.select("hash", later.columns.filter(_ != "hash"): _*)
+      .write.mode("append").parquet(s"$ledger/open")
     val orders = Files.list(Paths.get(ledger, "open"))
       .filter(_.toString.endsWith(".parquet")).toArray.map(f =>
         spark.read.parquet(f.toString).columns.toSeq).distinct

@@ -9,6 +9,17 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
+
+  /** `body` with the session's `conf` settings in force, restored after. */
+  def withConf[T](conf: (String, String)*)(body: => T): T = {
+    val before = conf.map { case (k, _) => k -> spark.conf.getOption(k) }
+    conf.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally before.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }
 
 object SparkSpec {

@@ -106,10 +106,44 @@ class StreamingSpec extends SparkSpec {
       == Set("a", "b", "c"))
   }
 
+  test("a micro-batch lands EtlJob's survivor per hash, at 1 and 8 shuffle partitions; null-hash records all land") {
+    val records = StructType(schema.fields ++ Seq(StructField("start", TimestampType),
+      StructField("end", TimestampType), StructField("meta", MapType(StringType, StringType))))
+    val base = Files.createTempDirectory("graft-stream-survivor").toString
+    val src = s"$base/src"
+    // one file, one micro-batch: r1's copy EtlJob does not keep (the later
+    // start, another uid) comes first
+    Seq[(String, String, String)](("r1", "2021-11-10 14:00:00", "U2"),
+      ("r1", "2021-11-10 13:00:00", "U1"), (null, "2021-11-10 15:00:00", "U3"),
+      (null, "2021-11-10 16:00:00", "U4"), ("r2", "2021-11-10 17:00:00", "U5"))
+      .toDF("manufacturer_ref", "s", "uid")
+      .select($"manufacturer_ref", lit("DRM").as("device_type"),
+        $"s".cast("timestamp").as("start"),
+        ($"s".cast("timestamp") + expr("INTERVAL 2 HOURS")).as("end"),
+        map(lit("dreem_uid"), $"uid").as("meta"))
+      .coalesce(1).write.parquet(src)
+    def landed(ledger: String) = new graft.ledger.Ledger(spark, ledger).read()
+      .select(to_json(struct(records.fieldNames.map(col) :+ col("hash"): _*)))
+      .as[String].collect().sorted.toSeq
+    // the width reaches EtlJob's batch; the drain runs its micro-batches at
+    // its own state width whatever the session's
+    for (parts <- Seq("1", "8")) withConf("spark.sql.shuffle.partitions" -> parts) {
+      IncrementalIngest.runIntoLedger(spark, src, records, s"$base/cp-$parts",
+        new graft.ledger.Ledger(spark, s"$base/stream-$parts"))
+      EtlJob.runStage(spark, "download_metadata",
+        Map("ledger" -> s"$base/batch-$parts", "incoming" -> src))
+      val streamed = landed(s"$base/stream-$parts")
+      assert(streamed == landed(s"$base/batch-$parts"), parts)
+      assert(streamed.size == 4 && streamed.count(_.contains("\"U1\"")) == 1 &&
+        !streamed.exists(_.contains("\"U2\"")), streamed)
+      assert(streamed.count(!_.contains("\"hash\"")) == 2, streamed) // null hashes
+    }
+  }
+
   test("null-hash records all land: both streaming ingests dedup only hashed records") {
-    // a null manufacturer_ref hashes to null; the batch path (dedupBatch,
-    // then Ledger.append) keeps every such record, so the streaming paths
-    // must not fold them into one
+    // a null manufacturer_ref hashes to null; the batch path (Ledger.append)
+    // keeps every such record, so the streaming paths must not fold them
+    // into one
     val base = Files.createTempDirectory("graft-stream-nullhash").toString
     val src = s"$base/src"
     Seq[(String, String)](("a", "DRM"), (null, "DRM"), (null, "DRM"), ("a", "DRM"))

@@ -14,16 +14,21 @@ object Verify {
     val spark = Tables.session("graft-verify")
     TempDirs.sweepStale() // crashed earlier runs leave graft-* litter
     new java.io.File(outDir).mkdirs()
+    def cached(): Int = org.apache.spark.sql.graftbridge.Bridge.cachedEntries(spark)
     SparkEntry.queries.filter(kv => only(kv._1)).foreach { case (name, fn) =>
+      val before = cached()
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // the parquet write above fully forced the query, so its cached
-      // relations and scratch dirs (stage/out/checkpoint) are dead — drop
-      // them now, not at exit
-      spark.catalog.clearCache()
+      // a gate owns nothing past its own run: a relation it left cached
+      // is its failure
+      val left = cached() - before
+      if (left > 0)
+        System.err.println(s"[verify] $name failed: left $left cached relation(s)")
+      // the parquet write above fully forced the query, so its scratch
+      // dirs (stage/out/checkpoint) are dead — drop them now, not at exit
       TempDirs.sweep()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

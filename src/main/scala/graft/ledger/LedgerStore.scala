@@ -3,7 +3,8 @@ package graft.ledger
 import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions.{coalesce, col, count, lit, row_number,
-  struct, to_json}
+  to_json}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** The ledger contract every storage strategy implements — the reference's
   * MongoDB collection operations (db.py:66-231) as a storage-neutral
@@ -31,8 +32,8 @@ trait LedgerStore {
   /** Insert the records whose hash is not stored yet, creating the store
     * on first use; returns the rows written. Of a hash the batch holds
     * twice, the copy with the earliest `start`, then `end`, then `meta`,
-    * then the serialized record lands; every null-hash record lands
-    * ([[LedgerStore.unseen]]). */
+    * then the rest of its columns in the batch's order lands; every
+    * null-hash record lands ([[LedgerStore.unseen]]). */
   def append(records: DataFrame): Long
   /** Fill `field` where null with what `resolve` computes from the stored
     * rows (one row out per row in, same columns); existing values win.
@@ -80,17 +81,25 @@ object LedgerStore {
 
   /** The rows [[LedgerStore.append]] inserts: the batch's survivors whose
     * hash `stored` (the store, `None` when absent) lacks. The order among
-    * copies is total (where the batch has no `start`, `end` or `meta`, the
-    * serialized record alone decides), so a batch lands the same rows
-    * whatever its partitioning; `dropDuplicates` keeps whichever copy its
-    * partition saw first. A null hash (recordHash is null-intolerant) is
-    * no identity: pooled, its records would keep one. All copies of a hash
-    * go together, so the dedup and the anti-join commute. */
+    * copies is total: `start`, `end` and `meta` first, then every other
+    * column of the batch, each a sort key by itself (a column holding a
+    * map, which does not sort, by its JSON), so only identical copies tie
+    * and a batch lands the same rows whatever its partitioning;
+    * `dropDuplicates` keeps whichever copy its partition saw first. A null
+    * hash (recordHash is null-intolerant) is no identity: pooled, its
+    * records would keep one. All copies of a hash go together, so the
+    * dedup and the anti-join commute. */
   private[ledger] def unseen(records: DataFrame, stored: Option[DataFrame]): DataFrame = {
-    val has = records.columns.toSet
-    val order = Seq("start", "end").filter(has).map(col) ++
-      Seq("meta").filter(has).map(m => to_json(col(m))) :+
-      to_json(struct(records.columns.map(col): _*))
+    def hasMap(t: DataType): Boolean = t match {
+      case _: MapType => true
+      case a: ArrayType => hasMap(a.elementType)
+      case s: StructType => s.fields.exists(f => hasMap(f.dataType))
+      case _ => false
+    }
+    val first = Seq("start", "end", "meta")
+    val order = (first.filter(records.columns.contains) ++
+      records.columns.filterNot(c => c == "hash" || first.contains(c)))
+      .map(c => if (hasMap(records.schema(c).dataType)) to_json(col(c)) else col(c))
     val batch = records
       .withColumn("__rn", row_number().over(Window.partitionBy("hash").orderBy(order: _*)))
       .filter(col("hash").isNull || col("__rn") === 1).drop("__rn")

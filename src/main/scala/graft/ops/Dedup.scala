@@ -575,10 +575,9 @@ object Dedup {
     * (localCheckpoint) so plans stay flat. The edge set is CACHED in a
     * dst-partitioned layout (the pageRank/labelPropagation posture), so
     * after round 1 only the node-sized label relation shuffles — at
-    * 100 TB the per-round exchange is O(nodes), never O(edges). CACHE
-    * CONTRACT: the edge layout stays persisted for the returned lazy
-    * plan (same as [[prefixJaccardPairs]]); sessions clustering many
-    * graphs should `spark.catalog.clearCache()` between them.
+    * 100 TB the per-round exchange is O(nodes), never O(edges). The edge
+    * layout is released before returning: the labels handed back are a
+    * checkpoint, and so is the fallback's input.
     *
     * If the label loop still hasn't converged after `maxRounds` (an
     * adversarial graph whose diameter exceeds 2^maxRounds — not a shape
@@ -600,69 +599,69 @@ object Dedup {
     // node-sized label relation shuffles per round. The old
     // localCheckpoint(true) edge materialization paid one eager action
     // AND re-shuffled the full edge set inside every round's join.
-    val edges = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
-      .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
-      .distinct()
-      .repartition(col("dst")).sortWithinPartitions("dst")
-      .persist()
-    // lazy cut: the seed is referenced twice per round (edge join + own-
-    // label union) — the localCheckpoint dedups it at the RDD level, and
-    // the labelSum action below materializes it (no separate eager job)
-    var labels = edges.select(col("src").as("node"))
-      .distinct()
-      .withColumn("label", col("node"))
-      .localCheckpoint(false)
-    // convergence checksum over xxhash64 of the label, NOT a numeric cast
-    // of the label itself: string doc ids cast to NULL, which summed to
-    // NULL -> ZERO every round and declared convergence after round 1
-    // with wrong components. The hash is type-agnostic; labels only move
-    // by min-propagation, so an unconverged round changes the label
-    // multiset and (w.h.p.) this sum.
-    def labelSum(df: DataFrame): java.math.BigDecimal = {
-      val s = df
-        .agg(sum(xxhash64(col("label"))
-          .cast(org.apache.spark.sql.types.DecimalType(38, 0))))
-        .head().getDecimal(0)
-      if (s == null) java.math.BigDecimal.ZERO else s // empty graph
-    }
-    var round = 0
-    var prevSum = labelSum(labels)
-    var converged = false
-    while (!converged && round < maxRounds) {
-      // neighbor labels (via edges) + own label, min per node
-      val neighborMin = edges
-        .join(labels.withColumnRenamed("node", "dst"), "dst")
-        .select(col("src").as("node"), col("label"))
-        .union(labels)
-        .groupBy("node").agg(min(col("label")).as("label"))
-      // pointer jumping: follow label -> label(label) so the hop distance
-      // to each component's minimum DOUBLES per round — O(log diameter)
-      // rounds instead of O(diameter) (a label is always a node id, so the
-      // lookup is a self-join on the same frame; exchange reuse dedups the
-      // shared subtree below the aggregate)
-      //
-      // LAZY checkpoint + the labelSum action = ONE job per round that
-      // materializes the round AND observes the fixpoint sum (the LPA
-      // converge-mode shape) — the old eager checkpoint-then-sum paid two
-      // jobs per round of a loop whose sf0.1 cost is pure scheduling floor
-      val next = neighborMin
-        .join(neighborMin.select(col("node").as("_l"), col("label").as("_l2")),
-          col("label") === col("_l"), "left")
-        .select(col("node"), coalesce(col("_l2"), col("label")).as("label"))
+    withPersisted(pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
+        .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
+        .distinct()
+        .repartition(col("dst")).sortWithinPartitions("dst")) { edges =>
+      // lazy cut: the seed is referenced twice per round (edge join + own-
+      // label union) — the localCheckpoint dedups it at the RDD level, and
+      // the labelSum action below materializes it (no separate eager job)
+      var labels = edges.select(col("src").as("node"))
+        .distinct()
+        .withColumn("label", col("node"))
         .localCheckpoint(false)
-      // labels only ever decrease, so an unchanged (exact decimal) sum IS
-      // the fixpoint — one cheap aggregate instead of a join per round
-      val curSum = labelSum(next)
-      converged = curSum.compareTo(prevSum) == 0
-      prevSum = curSum
-      labels = next
-      round += 1
+      // convergence checksum over xxhash64 of the label, NOT a numeric cast
+      // of the label itself: string doc ids cast to NULL, which summed to
+      // NULL -> ZERO every round and declared convergence after round 1
+      // with wrong components. The hash is type-agnostic; labels only move
+      // by min-propagation, so an unconverged round changes the label
+      // multiset and (w.h.p.) this sum.
+      def labelSum(df: DataFrame): java.math.BigDecimal = {
+        val s = df
+          .agg(sum(xxhash64(col("label"))
+            .cast(org.apache.spark.sql.types.DecimalType(38, 0))))
+          .head().getDecimal(0)
+        if (s == null) java.math.BigDecimal.ZERO else s // empty graph
+      }
+      var round = 0
+      var prevSum = labelSum(labels)
+      var converged = false
+      while (!converged && round < maxRounds) {
+        // neighbor labels (via edges) + own label, min per node
+        val neighborMin = edges
+          .join(labels.withColumnRenamed("node", "dst"), "dst")
+          .select(col("src").as("node"), col("label"))
+          .union(labels)
+          .groupBy("node").agg(min(col("label")).as("label"))
+        // pointer jumping: follow label -> label(label) so the hop distance
+        // to each component's minimum DOUBLES per round — O(log diameter)
+        // rounds instead of O(diameter) (a label is always a node id, so the
+        // lookup is a self-join on the same frame; exchange reuse dedups the
+        // shared subtree below the aggregate)
+        //
+        // LAZY checkpoint + the labelSum action = ONE job per round that
+        // materializes the round AND observes the fixpoint sum (the LPA
+        // converge-mode shape) — the old eager checkpoint-then-sum paid two
+        // jobs per round of a loop whose sf0.1 cost is pure scheduling floor
+        val next = neighborMin
+          .join(neighborMin.select(col("node").as("_l"), col("label").as("_l2")),
+            col("label") === col("_l"), "left")
+          .select(col("node"), coalesce(col("_l2"), col("label")).as("label"))
+          .localCheckpoint(false)
+        // labels only ever decrease, so an unchanged (exact decimal) sum IS
+        // the fixpoint — one cheap aggregate instead of a join per round
+        val curSum = labelSum(next)
+        converged = curSum.compareTo(prevSum) == 0
+        prevSum = curSum
+        labels = next
+        round += 1
+      }
+      if (!converged) {
+        // degrade to the guaranteed-O(log n) contraction instead of crashing
+        labels = starContraction(edges)
+      }
+      labels.select(col("node").as(outIdCol), col("label").as("canonical_id"))
     }
-    if (!converged) {
-      // degrade to the guaranteed-O(log n) contraction instead of crashing
-      labels = starContraction(edges)
-    }
-    labels.select(col("node").as(outIdCol), col("label").as("canonical_id"))
   }
 
   /** Alternating large-star/small-star contraction over a SYMMETRIC distinct
@@ -832,12 +831,9 @@ object Dedup {
     val withDf = sh.withColumn("df",
       count(lit(1)).over(Window.partitionBy("sh")))
     // ONE doc-keyed aggregate carries each doc's full rare-first-sorted
-    // set; persisted because prefix postings AND both verify sides read it
-    // (the q112 pageRank cache posture) — doc-count rows, set-sized arrays.
-    // Deliberately NOT unpersisted: the returned plan is lazy, so there is
-    // no post-execution hook; MEMORY_AND_DISK spills rather than OOMs and
-    // eviction merely recomputes. Long-lived sessions calling this across
-    // many corpora can spark.catalog.clearCache() between them.
+    // set; checkpointed because prefix postings AND both verify sides read
+    // it — doc-count rows, set-sized arrays, computed once by the first
+    // action over the returned plan
     val byDoc = withDf.groupBy("_id")
       .agg(sort_array(collect_list(struct(col("df"), col("sh")))).as("ss"))
       .select(col("_id"),
@@ -847,7 +843,7 @@ object Dedup {
       .withColumn("plen",
         (col("n") - expr(s"($tauNum * n + ${tauDen - 1}) div $tauDen")
           + lit(1)).cast("int"))
-      .persist()
+      .localCheckpoint(false)
     val prefix = byDoc.select(col("_id"), col("n"),
       explode(slice(col("arr"), lit(1), col("plen"))).as("sh"))
     // PROBE MODE (probeFilter = Some(p)): candidate generation joins the
@@ -1010,7 +1006,7 @@ object Dedup {
         explode(graft.functions.TextFns.shingleHashes(col(textCol), n))
           .as("_h"))
       .distinct()
-      .persist()
+      .localCheckpoint(false)
     val counts = sh.groupBy("_src").agg(count(lit(1)).as("_n"))
     val pairs = sh.as("a")
       .join(sh.as("b"),

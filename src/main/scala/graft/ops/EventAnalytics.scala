@@ -9,8 +9,9 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: everything is keyed by user. The funnel is a chain of
   * per-user min-aggregates joined user-to-user (each step's state is one
-  * row per surviving user, persisted so step k+1 and step k's count share
-  * one computation — never a re-walk of the event scan chain); retention
+  * row per surviving user, persisted until the result is materialized so
+  * step k+1 and step k's count share one computation — never a re-walk of
+  * the event scan chain); retention
   * is two aggregates and one keyed join. No windows over the full event
   * set, no collects.
   *
@@ -34,29 +35,26 @@ object EventAnalytics {
              deadline: String): DataFrame = {
     require(steps.nonEmpty, "steps must be non-empty")
     val horizon = expr(s"interval $deadline")
-    var reached = events.filter(col(typeCol) === steps.head)
-      .groupBy(col(userCol).as("_g_u")).agg(min(col(tsCol)).as("_g_t"))
-      .persist()
-    val stages = scala.collection.mutable.ListBuffer(reached)
-    var out = reached.agg(count(lit(1)).as("users_reached"))
-      .select(lit(1).as("step"), lit(steps.head).as("step_type"),
-        col("users_reached"))
-    steps.tail.zipWithIndex.foreach { case (st, i) =>
-      reached = events.filter(col(typeCol) === st)
-        .join(reached, col(userCol) === col("_g_u"))
-        .filter(col(tsCol) > col("_g_t") && col(tsCol) <= col("_g_t") + horizon)
-        .groupBy(col("_g_u")).agg(min(col(tsCol)).as("_g_t"))
-        .persist()
-      stages += reached
-      out = out.unionAll(reached.agg(count(lit(1)).as("users_reached"))
-        .select(lit(i + 2).as("step"), lit(st).as("step_type"),
-          col("users_reached")))
-    }
-    // materialize the (|steps|-row) result, then free the per-user stages
-    val result = out.persist()
-    result.count()
-    stages.foreach(_.unpersist())
-    result
+    def reachedCount(reached: DataFrame, step: Int, st: String) =
+      reached.agg(count(lit(1)).as("users_reached"))
+        .select(lit(step).as("step"), lit(st).as("step_type"),
+          col("users_reached"))
+    // each stage stays persisted until the (|steps|-row) result is
+    // materialized: step k+1 and step k's count share one computation
+    def from(reached: DataFrame, step: Int, out: Option[DataFrame]): DataFrame =
+      withPersisted(reached) { r =>
+        val counted = reachedCount(r, step, steps(step - 1))
+        val outNow = out.fold(counted)(_.unionAll(counted))
+        if (step == steps.size) outNow.localCheckpoint(true)
+        else from(events.filter(col(typeCol) === steps(step))
+          .join(r, col(userCol) === col("_g_u"))
+          .filter(col(tsCol) > col("_g_t") && col(tsCol) <= col("_g_t") + horizon)
+          .groupBy(col("_g_u")).agg(min(col(tsCol)).as("_g_t")),
+          step + 1, Some(outNow))
+      }
+    from(events.filter(col(typeCol) === steps.head)
+      .groupBy(col(userCol).as("_g_u")).agg(min(col(tsCol)).as("_g_t")),
+      1, None)
   }
 
   /** Cohort retention: users grouped by the day of their FIRST event; for

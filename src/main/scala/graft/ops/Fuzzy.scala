@@ -231,7 +231,7 @@ object Fuzzy {
     * offset+local cancels it: the final rank is the deterministic total
     * (key, id) order. Neighbors arrive by an EQUI-join on target rank
     * (explode of `window−1` offsets), never an inequality join; the
-    * ranked relation is persisted because probe and build sides both
+    * ranked relation is checkpointed because probe and build sides both
     * read it. JW verify is the same native codegen scalar as the
     * blocked twin.
     */
@@ -252,7 +252,7 @@ object Fuzzy {
       .select("_pid", "_off")
     val ranked = local.join(broadcast(offsets), "_pid")
       .select(col(idCol), col(strCol), (col("_off") + col("_lr")).as("_rank"))
-      .persist()
+      .localCheckpoint(false)
     val probes = ranked.select(col(idCol).as("id_a"),
       col(strCol).as("_s_a"),
       explode(sequence(col("_rank") + 1, col("_rank") + (window - 1)))

@@ -9,11 +9,11 @@ import org.apache.spark.sql.functions._
   *
   * Scale design (the classic Pregel-as-dataflow layout):
   *  - the edge list is joined with out-degrees ONCE, hash-partitioned by
-  *    `src`, and persisted; the cached InMemoryRelation keeps its
-  *    `HashPartitioning(src)`, so every iteration's ranks join reuses the
-  *    edge-side layout instead of re-shuffling the (dominant) edge relation
-  *    each round — per round, only the rank relation (one row per NODE, not
-  *    per edge) moves.
+  *    `src`, and persisted for the loop; the cached InMemoryRelation
+  *    keeps its `HashPartitioning(src)`, so every iteration's ranks join
+  *    reuses the edge-side layout instead of re-shuffling the (dominant)
+  *    edge relation each round — per round, only the rank relation (one
+  *    row per NODE, not per edge) moves.
   *  - rank mass is scaled-integer (`scale` = 1e9 ppb by default) and every
   *    division is integral (`div`), so results are bit-identical across
   *    engines and partitionings — parallel float summation would not be.
@@ -46,7 +46,7 @@ object Graph {
     */
   /** The per-iteration edge layout pageRank reuses across rounds:
     * edge-sized, ONE shuffle + sort lays the edges out by src, and the
-    * cached layout (partitioning AND ordering survive InMemoryRelation)
+    * persisted layout (partitioning AND ordering survive InMemoryRelation)
     * serves every iteration's ranks join without touching the source
     * scan OR re-exchanging the edge side — pinned by PlanIntegritySpec
     * ("pagerank round"): the round join plans with ZERO exchange above
@@ -54,8 +54,7 @@ object Graph {
     * shuffle plus the map-side-combined contribution aggregate, never an
     * edge re-shuffle. */
   private[graft] def prEdgeLayout(e: DataFrame, deg: DataFrame): DataFrame =
-    e.join(deg, "src")
-      .repartition(col("src")).sortWithinPartitions("src").persist()
+    e.join(deg, "src").repartition(col("src")).sortWithinPartitions("src")
 
   /** One PageRank round's contribution pass over the cached layout (the
     * shape PlanIntegritySpec pins). */
@@ -73,42 +72,40 @@ object Graph {
     require(checkpointEvery >= 1, "checkpointEvery must be >= 1")
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
     // node-sized; read three times per iteration (outdeg, node set, init)
-    val deg = e.groupBy("src").agg(count(lit(1)).as("outdeg")).persist()
-    val ewd = prEdgeLayout(e, deg)
-    val n = deg.count()
-    require(n > 0, "pageRank needs a non-empty edge list (no out-degree nodes)")
-    val init = scale / n
-    val base = (scale * (dampDen - dampNum) / dampDen) / n
-    val nodes = deg.select(col("src").as("node"))
-    var ranks = nodes.select(col("node"), lit(init).as("rank"))
-    var round = 0
-    var converged = false
-    while (round < iters && !converged) {
-      round += 1
-      val contribs = prContribs(ewd, ranks)
-      val next = nodes
-        .join(contribs, col("node") === col("dst"), "left")
-        .select(col("node"),
-          (lit(base) + expr(s"(${dampNum}L * coalesce(mass, 0L)) div ${dampDen}L"))
-            .as("rank"))
-      val cut = round % checkpointEvery == 0 && round < iters
-      val nextMat = if (cut || tolAbs >= 0L) next.localCheckpoint(true) else next
-      if (tolAbs >= 0L) {
-        val delta = nextMat
-          .join(ranks.select(col("node"), col("rank").as("_g_prev")), "node")
-          .agg(sum(abs(col("rank") - col("_g_prev"))).as("d"))
-          .head().getLong(0)
-        converged = delta <= tolAbs
+    withPersisted(e.groupBy("src").agg(count(lit(1)).as("outdeg"))) { deg =>
+      withPersisted(prEdgeLayout(e, deg)) { ewd =>
+        val n = deg.count()
+        require(n > 0, "pageRank needs a non-empty edge list (no out-degree nodes)")
+        val init = scale / n
+        val base = (scale * (dampDen - dampNum) / dampDen) / n
+        val nodes = deg.select(col("src").as("node"))
+        var ranks = nodes.select(col("node"), lit(init).as("rank"))
+        var round = 0
+        var converged = false
+        while (round < iters && !converged) {
+          round += 1
+          val contribs = prContribs(ewd, ranks)
+          val next = nodes
+            .join(contribs, col("node") === col("dst"), "left")
+            .select(col("node"),
+              (lit(base) + expr(s"(${dampNum}L * coalesce(mass, 0L)) div ${dampDen}L"))
+                .as("rank"))
+          val cut = round % checkpointEvery == 0 && round < iters
+          val nextMat = if (cut || tolAbs >= 0L) next.localCheckpoint(true) else next
+          if (tolAbs >= 0L) {
+            val delta = nextMat
+              .join(ranks.select(col("node"), col("rank").as("_g_prev")), "node")
+              .agg(sum(abs(col("rank") - col("_g_prev"))).as("d"))
+              .head().getLong(0)
+            converged = delta <= tolAbs
+          }
+          ranks = nextMat
+        }
+        // the caller gets materialized node-sized ranks, not a lineage
+        // through the edge-sized caches released on the way out
+        ranks.localCheckpoint(true)
       }
-      ranks = nextMat
     }
-    // pin the (node-sized) result, then drop the edge-sized cache — the
-    // caller gets materialized ranks, not a lineage through freed state
-    ranks = ranks.persist()
-    ranks.count()
-    ewd.unpersist()
-    deg.unpersist()
-    ranks
   }
 
   /** Synchronous label propagation (community detection): every node
@@ -169,12 +166,10 @@ object Graph {
     *
     * Self-loops count as neighbors (filter first if undesired); node ids
     * must be NON-NEGATIVE longs (the tie-break negates the label).
-    * CACHE CONTRACT: the returned label relation is persisted and
-    * materialized (the edge-sized working cache is freed before
-    * returning); callers running many graphs in one session should
-    * `spark.catalog.clearCache()` between them — the same contract as
-    * [[commonNeighborPairs]]. Per-round cost: the node-sized label
-    * relation re-keys to src to meet the CACHED src-partitioned edge
+    * The returned label relation is materialized (a localCheckpoint);
+    * the edge-sized working cache is released before returning.
+    * Per-round cost: the node-sized label relation re-keys to src to
+    * meet the CACHED src-partitioned edge
     * layout (pageRank's reuse posture — the edge side never
     * re-exchanges), then a map-side-combined (dst, label) count, a
     * node-sized argmax, and a node-sized keep-label join. At 100 TB that
@@ -199,96 +194,94 @@ object Graph {
                        assumeTotal: Boolean = false): DataFrame = {
     require(rounds >= 1, "rounds must be >= 1")
     require(checkpointEvery >= 0, "checkpointEvery must be >= 0")
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .repartition(col("src")).sortWithinPartitions("src").persist()
-    // seed: on declared-total input src alone covers the node set; on
-    // possibly-directed input seed from src ∪ dst (a dst-only node
-    // would otherwise never receive a label and a src-only node would
-    // vanish from the output after round 1). Cut the seed eagerly
-    // whenever the keep-label join will reference it twice — every
-    // guarded path, and round 1 of EVERY converge run (converge always
-    // joins): an uncut union+distinct seed doubles per round inside the
-    // first segment's tree (measured +30% on the 6M-edge rounds=8 run).
-    // Only the total FIXED path skips the cut — it references the seed
-    // once per round and a shallow run is then a single cut-free job
-    // (the r13 unconditional seed localCheckpoint cost q245 a wasted
-    // job).
-    var labels = {
-      val nodes =
-        if (assumeTotal) e.select(col("src").as("node")).distinct()
-        else e.select(col("src").as("node"))
-          .unionAll(e.select(col("dst").as("node"))).distinct()
-      val seed = nodes.withColumn("label", col("node"))
-      if (assumeTotal && !converge) seed else seed.localCheckpoint(true)
-    }
-    // one guarded LPA step: adoption + keep-label left join; withChg
-    // additionally carries the changed-flag column for converge checks
-    def guardedStep(cur: DataFrame, withChg: Boolean): DataFrame = {
-      val adopted = lpRound(e, cur)
-        .select(col("node"), col("label").as("_adopted"))
-      val base = cur.join(adopted, Seq("node"), "left")
-      if (withChg)
-        base.select(col("node"),
-          coalesce(col("_adopted"), col("label")).as("label"),
-          (col("_adopted").isNotNull && col("_adopted") =!= col("label"))
-            .cast("long").as("_chg"))
-      else
-        base.select(col("node"),
-          coalesce(col("_adopted"), col("label")).as("label"))
-    }
-    if (converge) {
-      // converge mode: one blocking action per round observes that
-      // round's change count (checking less often is unsound for the
-      // oscillation guard — sync LPA oscillates with period 2, so
-      // labels_r == labels_{r-2} does NOT imply a fixpoint). Each
-      // round's input is the previous round's CHECKPOINT — a leaf — so
-      // the keep-label join here never doubles a deep subtree (a
-      // leaf-vs-leaf stability join under assumeTotal measured
-      // identical, 4.0 s either way on a 90k-node graph, so converge
-      // keeps ONE code path); the LAZY localCheckpoint makes the
-      // counting action also materialize + cut lineage in one job
-      // (eager + agg paid two jobs per round in r13).
-      var r = 0
-      var stable = false
-      while (r < rounds && !stable) {
-        r += 1
-        val mat = guardedStep(labels, withChg = true)
-          .localCheckpoint(false)
-        // coalesce: sum over ZERO rows is NULL (empty edge input) — an
-        // empty graph is vacuously converged, not an NPE
-        stable = mat.agg(coalesce(sum(col("_chg")), lit(0L)))
-          .head().getLong(0) == 0L
-        labels = mat.drop("_chg")
+    withPersisted(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+        .repartition(col("src")).sortWithinPartitions("src")) { e =>
+      // seed: on declared-total input src alone covers the node set; on
+      // possibly-directed input seed from src ∪ dst (a dst-only node
+      // would otherwise never receive a label and a src-only node would
+      // vanish from the output after round 1). Cut the seed eagerly
+      // whenever the keep-label join will reference it twice — every
+      // guarded path, and round 1 of EVERY converge run (converge always
+      // joins): an uncut union+distinct seed doubles per round inside the
+      // first segment's tree (measured +30% on the 6M-edge rounds=8 run).
+      // Only the total FIXED path skips the cut — it references the seed
+      // once per round and a shallow run is then a single cut-free job
+      // (the r13 unconditional seed localCheckpoint cost q245 a wasted
+      // job).
+      var labels = {
+        val nodes =
+          if (assumeTotal) e.select(col("src").as("node")).distinct()
+          else e.select(col("src").as("node"))
+            .unionAll(e.select(col("dst").as("node"))).distinct()
+        val seed = nodes.withColumn("label", col("node"))
+        if (assumeTotal && !converge) seed else seed.localCheckpoint(true)
       }
-      if (!stable)
-        throw new IllegalStateException(
-          s"labelPropagation did not converge in $rounds rounds " +
-            "(sync LPA oscillates on bipartite-ish graphs — use fixed " +
-            "rounds there)")
-    } else {
-      var r = 0
-      while (r < rounds) {
-        r += 1
-        // total input: every node has in-edges, so the round's adoption
-        // IS the next label relation — no keep-label join, the labels
-        // subtree appears once, and a shallow run stays one cut-free job
-        val next =
-          if (assumeTotal) lpRound(e, labels)
-          else guardedStep(labels, withChg = false)
-        // no cut on the FINAL round even when the cadence lands there:
-        // the persist+count on the way out materializes the same
-        // node-sized relation eagerly anyway, and a final-round
-        // localCheckpoint(true) would run that job twice
-        val cut = checkpointEvery > 0 && r % checkpointEvery == 0 &&
-          r != rounds
-        labels = if (cut) next.localCheckpoint(true) else next
+      // one guarded LPA step: adoption + keep-label left join; withChg
+      // additionally carries the changed-flag column for converge checks
+      def guardedStep(cur: DataFrame, withChg: Boolean): DataFrame = {
+        val adopted = lpRound(e, cur)
+          .select(col("node"), col("label").as("_adopted"))
+        val base = cur.join(adopted, Seq("node"), "left")
+        if (withChg)
+          base.select(col("node"),
+            coalesce(col("_adopted"), col("label")).as("label"),
+            (col("_adopted").isNotNull && col("_adopted") =!= col("label"))
+              .cast("long").as("_chg"))
+        else
+          base.select(col("node"),
+            coalesce(col("_adopted"), col("label")).as("label"))
       }
+      if (converge) {
+        // converge mode: one blocking action per round observes that
+        // round's change count (checking less often is unsound for the
+        // oscillation guard — sync LPA oscillates with period 2, so
+        // labels_r == labels_{r-2} does NOT imply a fixpoint). Each
+        // round's input is the previous round's CHECKPOINT — a leaf — so
+        // the keep-label join here never doubles a deep subtree (a
+        // leaf-vs-leaf stability join under assumeTotal measured
+        // identical, 4.0 s either way on a 90k-node graph, so converge
+        // keeps ONE code path); the LAZY localCheckpoint makes the
+        // counting action also materialize + cut lineage in one job
+        // (eager + agg paid two jobs per round in r13).
+        var r = 0
+        var stable = false
+        while (r < rounds && !stable) {
+          r += 1
+          val mat = guardedStep(labels, withChg = true)
+            .localCheckpoint(false)
+          // coalesce: sum over ZERO rows is NULL (empty edge input) — an
+          // empty graph is vacuously converged, not an NPE
+          stable = mat.agg(coalesce(sum(col("_chg")), lit(0L)))
+            .head().getLong(0) == 0L
+          labels = mat.drop("_chg")
+        }
+        if (!stable)
+          throw new IllegalStateException(
+            s"labelPropagation did not converge in $rounds rounds " +
+              "(sync LPA oscillates on bipartite-ish graphs — use fixed " +
+              "rounds there)")
+      } else {
+        var r = 0
+        while (r < rounds) {
+          r += 1
+          // total input: every node has in-edges, so the round's adoption
+          // IS the next label relation — no keep-label join, the labels
+          // subtree appears once, and a shallow run stays one cut-free job
+          val next =
+            if (assumeTotal) lpRound(e, labels)
+            else guardedStep(labels, withChg = false)
+          // no cut on the FINAL round even when the cadence lands there:
+          // the checkpoint on the way out materializes the same
+          // node-sized relation eagerly anyway, and a final-round
+          // localCheckpoint(true) would run that job twice
+          val cut = checkpointEvery > 0 && r % checkpointEvery == 0 &&
+            r != rounds
+          labels = if (cut) next.localCheckpoint(true) else next
+        }
+      }
+      // materialize node-sized result before the edge-sized cache goes
+      labels.localCheckpoint(true)
     }
-    // materialize node-sized result, then free the edge-sized cache
-    val out = labels.persist()
-    out.count()
-    e.unpersist()
-    out
   }
 
   /** Global triangle census over an undirected graph: one row with
@@ -310,57 +303,64 @@ object Graph {
     */
   def triangleStats(edges: DataFrame, aCol: String = "a",
                     bCol: String = "b"): DataFrame = {
-    val e = edges
+    val e0 = edges
       .select(least(col(aCol), col(bCol)).as("a"),
         greatest(col(aCol), col(bCol)).as("b"))
       .filter(col("a") =!= col("b") && col("a").isNotNull && col("b").isNotNull)
-      .distinct().persist()
-    // deg is REUSED after e unpersists (orientation join now, node and
-    // wedge counts at the end) — cache the per-node rows or the final
-    // aggregates silently rebuild the full edge scan + distinct, twice
-    val deg = e.select(col("a").as("node"))
-      .unionAll(e.select(col("b").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("deg"))
-      .persist()
-    // orient a->b when (deg,node) of a sorts below b; struct compare is
-    // lexicographic, mirroring the documented total order
-    val oa = struct(col("da").as("d"), col("a").as("n"))
-    val ob = struct(col("db").as("d"), col("b").as("n"))
-    val ort = e
-      .join(deg.select(col("node").as("a"), col("deg").as("da")), "a")
-      .join(deg.select(col("node").as("b"), col("deg").as("db")), "b")
-      .select(when(oa < ob, col("a")).otherwise(col("b")).as("src"),
-        when(oa < ob, ob).otherwise(oa).as("dst"))
-      .persist()
-    ort.count()
-    e.unpersist()
-    // wedges at the minimum-order corner: unordered out-neighbor pairs,
-    // normalized by the same (deg,node) order the orientation used; the
-    // closure probe keys on (lower endpoint's NODE, higher endpoint struct).
-    // The wedge self-join is an EXPANSION join (Σ outdeg² output from a
-    // small oriented-edge input) — the expansion-join rule, see
-    // [[Expansion.parts]]. Orientation bounds outdeg by √(2·edges), so
-    // per-corner work is already skew-capped; this keeps it spread.
-    val nParts = Expansion.parts(edges.sparkSession)
-    val ortP = ort.repartition(nParts, col("src"))
-    val closed = ortP.select(col("src"), col("dst").as("x"))
-      .join(ortP.select(col("src"), col("dst").as("y")), "src")
-      .filter(col("x") < col("y"))
-      .select(col("x").getField("n").as("wsrc"), col("y").as("wdst"))
-      .join(ort.select(col("src").as("wsrc"), col("dst").as("wdst")),
-        Seq("wsrc", "wdst"))
+      .distinct()
+    withPersisted(e0) { e =>
+      // deg is read by the orientation join and the final node and wedge
+      // counts — cache the per-node rows or the final aggregates silently
+      // rebuild the full edge scan + distinct, twice
+      val deg0 = e.select(col("a").as("node"))
+        .unionAll(e.select(col("b").as("node")))
+        .groupBy("node").agg(count(lit(1)).as("deg"))
+      withPersisted(deg0) { deg =>
+        // orient a->b when (deg,node) of a sorts below b; struct compare is
+        // lexicographic, mirroring the documented total order
+        val oa = struct(col("da").as("d"), col("a").as("n"))
+        val ob = struct(col("db").as("d"), col("b").as("n"))
+        val ort0 = e
+          .join(deg.select(col("node").as("a"), col("deg").as("da")), "a")
+          .join(deg.select(col("node").as("b"), col("deg").as("db")), "b")
+          .select(when(oa < ob, col("a")).otherwise(col("b")).as("src"),
+            when(oa < ob, ob).otherwise(oa).as("dst"))
+        withPersisted(ort0) { ort =>
+          ort.count()
+          // wedges at the minimum-order corner: unordered out-neighbor
+          // pairs, normalized by the same (deg,node) order the orientation
+          // used; the closure probe keys on (lower endpoint's NODE, higher
+          // endpoint struct). The wedge self-join is an EXPANSION join
+          // (Σ outdeg² output from a small oriented-edge input) — the
+          // expansion-join rule, see [[Expansion.parts]]. Orientation
+          // bounds outdeg by √(2·edges), so per-corner work is already
+          // skew-capped; this keeps it spread.
+          val nParts = Expansion.parts(edges.sparkSession)
+          val ortP = ort.repartition(nParts, col("src"))
+          val closed = ortP.select(col("src"), col("dst").as("x"))
+            .join(ortP.select(col("src"), col("dst").as("y")), "src")
+            .filter(col("x") < col("y"))
+            .select(col("x").getField("n").as("wsrc"), col("y").as("wdst"))
+            .join(ort.select(col("src").as("wsrc"), col("dst").as("wdst")),
+              Seq("wsrc", "wdst"))
 
-    val nodeWedgeDf = deg.agg(count(lit(1)).as("nodes"),
-      sum(expr("deg * (deg - 1) div 2")).as("wedges"))
-    val edgesDf = ort.agg(count(lit(1)).as("edges"))
-    val triDf = closed.agg(count(lit(1)).as("triangles"))
-    // wedge-free graphs (every component a single edge) get an explicit NULL
-    // coefficient: `div 0` is NULL in Spark but an error in ANSI engines, so
-    // the guard makes the degenerate case portable instead of engine-luck
-    nodeWedgeDf.crossJoin(edgesDf).crossJoin(triDf)
-      .select(col("nodes"), col("edges"), col("wedges"), col("triangles"),
-        when(col("wedges") > 0,
-          expr("3L * triangles * 1000000L div wedges")).as("global_cc_ppm"))
+          val nodeWedgeDf = deg.agg(count(lit(1)).as("nodes"),
+            sum(expr("deg * (deg - 1) div 2")).as("wedges"))
+          val edgesDf = ort.agg(count(lit(1)).as("edges"))
+          val triDf = closed.agg(count(lit(1)).as("triangles"))
+          // wedge-free graphs (every component a single edge) get an
+          // explicit NULL coefficient: `div 0` is NULL in Spark but an
+          // error in ANSI engines, so the guard makes the degenerate case
+          // portable instead of engine-luck. The one-row answer is
+          // materialized before the caches go.
+          nodeWedgeDf.crossJoin(edgesDf).crossJoin(triDf)
+            .select(col("nodes"), col("edges"), col("wedges"), col("triangles"),
+              when(col("wedges") > 0,
+                expr("3L * triangles * 1000000L div wedges")).as("global_cc_ppm"))
+            .localCheckpoint(true)
+        }
+      }
+    }
   }
 
   /** Common-neighbors link prediction: the top-`topK` UNLINKED node pairs
@@ -403,13 +403,10 @@ object Graph {
     * centers keep weight 1 in both modes; a graph with no over-cap hub
     * returns identical output in either mode.
     *
-    * CACHE CONTRACT: the distinct edge set, the degree relation and the
-    * capped adjacency are persisted (each feeds 2-3 consumers of the
-    * returned lazy plan) and deliberately NOT unpersisted — the result
-    * is lazy, so there is no post-execution hook, and MEMORY_AND_DISK
-    * eviction merely recomputes. Long-lived sessions calling this
-    * across many graphs should `spark.catalog.clearCache()` between
-    * corpora (the [[graft.ops.Dedup.prefixJaccardPairs]] contract).
+    * The returned plan is lazy and reads no cached relation: the distinct
+    * edge set, the degree relation and the capped adjacency each end on a
+    * shuffle that all their consumers in the plan share (exchange reuse),
+    * so each is computed once per evaluation.
     */
   def commonNeighborPairs(edges: DataFrame, aCol: String = "a",
                           bCol: String = "b", minCommon: Int = 2,
@@ -432,24 +429,17 @@ object Graph {
       .select(least(col(aCol), col(bCol)).as("a"),
         greatest(col(aCol), col(bCol)).as("b"))
       .filter(col("a") =!= col("b") && col("a").isNotNull && col("b").isNotNull)
-      .distinct().persist()
+      .distinct()
     val deg = e.select(col("a").as("node"))
       .unionAll(e.select(col("b").as("node")))
       .groupBy("node").agg(count(lit(1)).as("deg"))
-      .persist()
-    // materialize both caches with ONE job before the multi-consumer
-    // fan-out (deg is read three times in the final job; an
-    // unmaterialized cache would race its own population across those
-    // consumers) — counting deg computes and caches e on the way
-    deg.count()
     val adjAll = e.select(col("a").as("w"), col("b").as("n"))
       .unionAll(e.select(col("b").as("w"), col("a").as("n")))
     val nParts = Expansion.parts(edges.sparkSession)
-    // the capped adjacency feeds BOTH wedge-join sides and would other-
-    // wise be re-derived per side per evaluation — persisted, it is also
-    // the co-partitioned input that lets the self-join run exchange-free
-    // (measured at sf0.1: candidate build 4.5 s -> 1.3 s warm)
-    val adjBase =
+    // the capped adjacency feeds BOTH wedge-join sides through one
+    // center-keyed exchange, the co-partitioned input that lets the
+    // self-join run without another shuffle
+    val adjP =
       if (hubSample == 0)
         adjAll.join(deg.filter(col("deg") <= maxDegree)
             .select(col("node").as("w")), "w")
@@ -472,7 +462,6 @@ object Graph {
                 (lit(hubSample.toDouble) * lit((hubSample - 1).toDouble)))))
           .select(col("w"), col("n"), col("wt"))
       }
-    val adjP = adjBase.persist()
     val wedges = adjP.select(col("w"), col("n").as("u"),
         col("wt").as("wt_u"))
       .join(adjP.select(col("w"), col("n").as("v"), col("wt").as("wt_v")),
@@ -544,19 +533,18 @@ object Graph {
     var rounds = 0
     var converged = false
     while (!converged && rounds < maxRounds) {
-      val removed = degrees(e).filter(col("core_deg") < k)
-        .select(col("node")).persist()
-      if (removed.count() == 0L) converged = true
-      else {
-        val next = e
-          .join(removed.select(col("node").as("a")), Seq("a"), "left_anti")
-          .join(removed.select(col("node").as("b")), Seq("b"), "left_anti")
-          .select(col("a"), col("b"))
-          .localCheckpoint(true)
-        e = next
-        rounds += 1
+      withPersisted(degrees(e).filter(col("core_deg") < k)
+          .select(col("node"))) { removed =>
+        if (removed.count() == 0L) converged = true
+        else {
+          e = e
+            .join(removed.select(col("node").as("a")), Seq("a"), "left_anti")
+            .join(removed.select(col("node").as("b")), Seq("b"), "left_anti")
+            .select(col("a"), col("b"))
+            .localCheckpoint(true)
+          rounds += 1
+        }
       }
-      removed.unpersist()
     }
     if (!converged)
       throw new IllegalStateException(

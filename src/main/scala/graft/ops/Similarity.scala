@@ -279,7 +279,7 @@ object Similarity {
     * hands both over in one relation, instead of the old re-scan of the
     * corpus plus an id-keyed join back (one full exchange saved per
     * consumer; identical rows under the family's unique-id contract).
-    * ONE probe action, ONE persisted sv relation shared by the Lloyd
+    * ONE probe action, ONE checkpointed sv relation shared by the Lloyd
     * rounds and the final assignment (r16 verdict: the eager per-round
     * codebook collects re-derived sv from parquet every round).
     */
@@ -296,24 +296,23 @@ object Similarity {
         array().cast("array<long>").as("svec"),
         lit(0L).as("cluster"), lit(0L).as("dist2")).limit(0)
     val d = probe.getInt(0)
-    // persisted: the seed job, every Lloyd round's update and the final
-    // assignment all read this relation (guide §5) — deliberately NOT
-    // unpersisted, the returned plan is lazy over it (the
-    // prefixJaccardPairs cache contract; Bench clears caches per gate)
+    // checkpointed: the seed job (which materializes it), every Lloyd
+    // round's update and the returned assignment all read this relation
     val sv = embs.filter(size(col(vecCol)) === d)
       .select(col(idCol), scaleVec(col(vecCol), scale).as("svec"))
-      .persist()
+      .localCheckpoint(false)
     assignSv(sv, idCol, centroidsFromSv(sv, idCol, d, k, iters))
   }
 
   /** The FROZEN codebook [[kmeansFit]] trains: the (cluster, cvec)
     * centroid relation after iters−1 Lloyd updates — exactly the
     * centroids kmeansFit's final assignment measures dist2 against,
-    * exposed so admission pipelines ([[semDedupAdmit]]) can persist the
+    * exposed so admission pipelines ([[semDedupAdmit]]) can train the
     * codebook once and assign every later batch against it without a
-    * refit (the q270 frozen-artifact discipline, in embedding space).
-    * Deterministic: hash-seeded, integer-exact updates — a refit on the
-    * same input is bit-identical.
+    * refit (the q270 frozen-artifact discipline, in embedding space). It
+    * comes back materialized (a k-row checkpoint). Deterministic:
+    * hash-seeded, integer-exact updates — a refit on the same input is
+    * bit-identical.
     */
   def kmeansCentroids(embs: DataFrame, idCol: String, vecCol: String,
                       k: Int, iters: Int, scale: Double = 1e6): DataFrame = {
@@ -329,17 +328,17 @@ object Similarity {
     val d = probe.getInt(0)
     // persisted across the Lloyd rounds (each round's codebook collect is
     // a driver action that would otherwise re-scan + re-scale the corpus
-    // from parquet — the r16-verdict q277 regression); lazy plan contract
-    // as in kmeansFitFull
-    val sv = embs.filter(size(col(vecCol)) === d)
-      .select(col(idCol), scaleVec(col(vecCol), scale).as("svec"))
-      .persist()
-    centroidsFromSv(sv, idCol, d, k, iters)
+    // from parquet — the r16-verdict q277 regression); the k-row codebook
+    // is materialized before sv is released
+    withPersisted(embs.filter(size(col(vecCol)) === d)
+        .select(col(idCol), scaleVec(col(vecCol), scale).as("svec"))) { sv =>
+      centroidsFromSv(sv, idCol, d, k, iters).localCheckpoint(true)
+    }
   }
 
   /** The Lloyd loop over a prepared (idCol, svec) relation — `d` is the
-    * (already probed) dimensionality, `sv` should be persisted by the
-    * caller (every round reads it).
+    * (already probed) dimensionality, `sv` should be cached or checkpointed
+    * by the caller (every round reads it).
     *
     * Round-17 update shape: ONE wide aggregate per round — d per-element
     * long sums + the member count, keyed by cluster (map-side combined,
@@ -447,7 +446,7 @@ object Similarity {
   }
 
   /** Assign vectors to a FROZEN codebook — [[kmeansFit]]'s final-round
-    * assignment against an externally persisted (cluster, cvec)
+    * assignment against an externally trained (cluster, cvec)
     * relation: nearest centroid by exact scaled-BIGINT dist2, ties to
     * the lower cluster id. Vectors whose dimensionality differs from
     * the codebook's are EXCLUDED (the ragged-row contract).
@@ -488,9 +487,9 @@ object Similarity {
     * `index`: (idCol, cluster, dist2, svec) — kept vectors with their
     * frozen-codebook assignment and scaled vectors ([[scaledVectors]]);
     * grow it between batches by unioning admitted rows (the q270
-    * census-growth pattern). Persist it pre-partitioned by `cluster`
-    * (the q248 bucketed-index discipline) so each batch shuffles only
-    * itself.
+    * census-growth pattern). Materialize it pre-partitioned by
+    * `cluster` (the q248 bucketed-index discipline) so each batch
+    * shuffles only itself.
     *
     * Shape at 100 TB: one broadcast assignment pass over the batch +
     * one cluster-keyed join against the index — batch-sized work; the
@@ -585,7 +584,7 @@ object Similarity {
                centsOpt: Option[DataFrame] = None): DataFrame = {
     require(maxDist2 >= 0L, s"maxDist2 must be >= 0, got $maxDist2")
     // centsOpt: a caller that already trained THIS codebook
-    // (kmeansCentroids with the same args — q277/q278 persist it for the
+    // (kmeansCentroids with the same args — q277/q278 reuse it for the
     // admission passes) can hand it in so the fit is not re-derived;
     // kmeansFit(embs,…) ≡ assignToCodebook(embs, kmeansCentroids(embs,…))
     // by construction (deterministic training), so results are identical.
@@ -849,74 +848,71 @@ object Similarity {
     // (id, sub, sv): every vector's m scaled-integer sub-vectors
     // the training working set: persisted because SIX consumers read it
     // (assign + memberMeans per round, the final encode, the query
-    // distance tables) — the iterative-trainer posture; freed after the
+    // distance tables) — the iterative-trainer posture; released after the
     // (topK·|q|-row) result materializes below
-    val sv = embs.filter(size(col(vecCol)) === d)
+    withPersisted(embs.filter(size(col(vecCol)) === d)
       .select(col(idCol).as("_id"),
         transform(col(vecCol),
           v => floor(v.cast("double") * scale).cast("long")).as("_svec"))
       .select(col("_id"), explode(sequence(lit(0), lit(m - 1))).as("sub"),
         col("_svec"))
       .select(col("_id"), col("sub"),
-        expr(s"slice(_svec, sub * $w + 1, $w)").as("_sv"))
-      .persist()
-    // k global seed rows by (hash, id) — each contributes its sub-vector
-    // to every subspace's initial codebook (q91's seeding, PQ-wide)
-    val seedW = Window.orderBy(col("_h"), col("_id"))
-    val seeds = embs.select(col(idCol).as("_id"))
-      .withColumn("_h", TextFns.hash64(col("_id").cast("string")))
-      .orderBy(col("_h"), col("_id")).limit(k)
-      .withColumn("cluster", (row_number().over(seedW) - 1).cast("long"))
-      .select(col("_id"), col("cluster"))
-    var cents = sv.join(broadcast(seeds), "_id")
-      .select(col("sub"), col("cluster"), col("_sv").as("_cv"))
-    val d2 = graft.expressions.SqDistLong(col("_sv"), col("_cv"))
-    // the sub-vector rides THROUGH the argmin aggregate (kmeansFit's
-    // shape) so the centroid update needs no corpus-to-corpus re-join
-    def assign(cb: DataFrame): DataFrame =
-      sv.join(broadcast(cb), Seq("sub"))
+        expr(s"slice(_svec, sub * $w + 1, $w)").as("_sv"))) { sv =>
+      // k global seed rows by (hash, id) — each contributes its sub-vector
+      // to every subspace's initial codebook (q91's seeding, PQ-wide)
+      val seedW = Window.orderBy(col("_h"), col("_id"))
+      val seeds = embs.select(col(idCol).as("_id"))
+        .withColumn("_h", TextFns.hash64(col("_id").cast("string")))
+        .orderBy(col("_h"), col("_id")).limit(k)
+        .withColumn("cluster", (row_number().over(seedW) - 1).cast("long"))
+        .select(col("_id"), col("cluster"))
+      var cents = sv.join(broadcast(seeds), "_id")
+        .select(col("sub"), col("cluster"), col("_sv").as("_cv"))
+      val d2 = graft.expressions.SqDistLong(col("_sv"), col("_cv"))
+      // the sub-vector rides THROUGH the argmin aggregate (kmeansFit's
+      // shape) so the centroid update needs no corpus-to-corpus re-join
+      def assign(cb: DataFrame): DataFrame =
+        sv.join(broadcast(cb), Seq("sub"))
+          .withColumn("_d2", d2)
+          .groupBy(col("_id"), col("sub"), col("_sv"))
+          .agg(min(struct(col("_d2"), col("cluster"))).as("_m"))
+          .select(col("_id"), col("sub"), col("_sv"),
+            col("_m.cluster").as("code"), col("_m._d2").as("_d2"))
+      def memberMeans(asg: DataFrame): DataFrame =
+        asg.select(col("sub"), col("code").as("cluster"),
+            posexplode(col("_sv")).as(Seq("i", "s")))
+          .groupBy(col("sub"), col("cluster"), col("i"))
+          .agg(floor(sum(col("s")).cast("double") /
+            count(lit(1)).cast("double")).cast("long").as("c"))
+          .groupBy(col("sub"), col("cluster"))
+          .agg(transform(array_sort(collect_list(struct(col("i"), col("c")))),
+            x => x.getField("c")).as("_cv"))
+      for (_ <- 1 to iters) cents = memberMeans(assign(cents))
+      // the trained codebook is m·k rows with TWO consumers below (encode
+      // + distance tables) — one eager materialization stops the whole
+      // training chain from evaluating twice (pageRank's checkpoint
+      // discipline); rounds themselves are a linear chain, one evaluation
+      cents = cents.localCheckpoint(true)
+      // encode the whole corpus against the TRAINED codebook
+      val codes = assign(cents).select(col("_id"), col("sub"), col("code"))
+      // exact per-(query, sub, codeword) distance table — |q|·m·k rows
+      val dt = sv.filter(col("_id").isin(queryIds: _*))
+        .select(col("_id").as("q_id"), col("sub"), col("_sv"))
+        .join(cents, Seq("sub"))
         .withColumn("_d2", d2)
-        .groupBy(col("_id"), col("sub"), col("_sv"))
-        .agg(min(struct(col("_d2"), col("cluster"))).as("_m"))
-        .select(col("_id"), col("sub"), col("_sv"),
-          col("_m.cluster").as("code"), col("_m._d2").as("_d2"))
-    def memberMeans(asg: DataFrame): DataFrame =
-      asg.select(col("sub"), col("code").as("cluster"),
-          posexplode(col("_sv")).as(Seq("i", "s")))
-        .groupBy(col("sub"), col("cluster"), col("i"))
-        .agg(floor(sum(col("s")).cast("double") /
-          count(lit(1)).cast("double")).cast("long").as("c"))
-        .groupBy(col("sub"), col("cluster"))
-        .agg(transform(array_sort(collect_list(struct(col("i"), col("c")))),
-          x => x.getField("c")).as("_cv"))
-    for (_ <- 1 to iters) cents = memberMeans(assign(cents))
-    // the trained codebook is m·k rows with TWO consumers below (encode
-    // + distance tables) — one eager materialization stops the whole
-    // training chain from evaluating twice (pageRank's checkpoint
-    // discipline); rounds themselves are a linear chain, one evaluation
-    cents = cents.localCheckpoint(true)
-    // encode the whole corpus against the TRAINED codebook
-    val codes = assign(cents).select(col("_id"), col("sub"), col("code"))
-    // exact per-(query, sub, codeword) distance table — |q|·m·k rows
-    val dt = sv.filter(col("_id").isin(queryIds: _*))
-      .select(col("_id").as("q_id"), col("sub"), col("_sv"))
-      .join(cents, Seq("sub"))
-      .withColumn("_d2", d2)
-      .select(col("q_id"), col("sub"), col("cluster").as("code"),
-        col("_d2"))
-    val rankW = Window.partitionBy(col("q_id"))
-      .orderBy(col("adc_d2"), col("vec_id"))
-    val result = codes.join(broadcast(dt), Seq("sub", "code"))
-      .groupBy(col("q_id"), col("_id"))
-      .agg(sum(col("_d2")).as("adc_d2"))
-      .select(col("q_id"), col("_id").as("vec_id"), col("adc_d2"))
-      .withColumn("rank", row_number().over(rankW).cast("long"))
-      .filter(col("rank") <= topK)
-      .select(col("q_id"), col("rank"), col("vec_id"), col("adc_d2"))
-      .persist()
-    result.count() // pin the (≤ topK·|q|-row) answer, then free the corpus
-    sv.unpersist()
-    result
+        .select(col("q_id"), col("sub"), col("cluster").as("code"),
+          col("_d2"))
+      val rankW = Window.partitionBy(col("q_id"))
+        .orderBy(col("adc_d2"), col("vec_id"))
+      codes.join(broadcast(dt), Seq("sub", "code"))
+        .groupBy(col("q_id"), col("_id"))
+        .agg(sum(col("_d2")).as("adc_d2"))
+        .select(col("q_id"), col("_id").as("vec_id"), col("adc_d2"))
+        .withColumn("rank", row_number().over(rankW).cast("long"))
+        .filter(col("rank") <= topK)
+        .select(col("q_id"), col("rank"), col("vec_id"), col("adc_d2"))
+        .localCheckpoint(true) // the (≤ topK·|q|-row) answer
+    }
   }
 
   /** Recall audit for [[pqTopK]] — the q190 posture applied to PQ:
@@ -1080,8 +1076,7 @@ object Similarity {
       bruteForceTopK(cut(queries), cut(embs), idCol, vecCol, k)
         .select(col("query_id"), col("neighbor_id"))
     }
-    val full = topk(None).persist()
-    full.count()
+    val full = topk(None).localCheckpoint(true)
     val perDim = dims.map { d =>
       val ov = topk(Some(d)).join(full, Seq("query_id", "neighbor_id"))
         .groupBy("query_id").agg(count(lit(1)).as("n_overlap"))

@@ -1168,8 +1168,9 @@ object TextAnalysis {
     * array with [[mergePair]]'s row-local fold.
     *
     * Per round: ONE vocabulary-sized aggregate + a shuffle-free rewrite.
-    * The corpus is scanned exactly once total (vocab collapse, persisted);
-    * rounds never touch it again. Driver state is the merge table —
+    * The corpus is scanned exactly once total (vocab collapse,
+    * checkpointed, as is every round's rewrite); rounds never touch it
+    * again. Driver state is the merge table —
     * model-parameter sized, never data.
     *
     * Returns (vocab segmentation, learned merges): segmentation =
@@ -1186,8 +1187,7 @@ object TextAnalysis {
       .withColumn("syms", transform(
         sequence(lit(1), length(col("word"))),
         i => col("word").substr(i, lit(1))))
-      .persist()
-    vocab.count()
+      .localCheckpoint(true)
     val merges = scala.collection.mutable.ListBuffer.empty[(Int, String, String, Long)]
     for (round <- 1 to rounds) {
       // a fully-merged word can reach one symbol: guard the 1..size-1
@@ -1206,11 +1206,8 @@ object TextAnalysis {
         val (l, r, cnt) =
           (win(0).getString(0), win(0).getString(1), win(0).getLong(2))
         merges += ((round, l, r, cnt))
-        val next = vocab.withColumn("syms",
-          mergePair(col("syms"), l, r)).persist()
-        next.count()
-        vocab.unpersist()
-        vocab = next
+        vocab = vocab.withColumn("syms", mergePair(col("syms"), l, r))
+          .localCheckpoint(true)
       }
     }
     import spark.implicits._
@@ -1631,7 +1628,7 @@ object TextAnalysis {
     // Self-training (the q191 shape: train eq docs) runs the expensive
     // gram explode + count ONCE: lang rides the (doc, gram) aggregate for
     // free (functionally dependent on the doc id), the shared counts are
-    // persisted, and profiles re-aggregate them per (lang, gram) — no
+    // checkpointed, and profiles re-aggregate them per (lang, gram) — no
     // second corpus scan. Distinct corpora keep the two-pass general path.
     val (profiles, docGrams, docN) =
       if (train eq docs) {
@@ -1652,20 +1649,16 @@ object TextAnalysis {
             explode(grams(col(textCol))).as("gram"))
           .groupBy(col("_id"), col("_lang"), col("gram"))
           .agg(count(lit(1)).as("cnt"))
-          // persisted for the THREE consumers (profiles, ranks, gram
-          // counts) and deliberately not unpersisted: the returned plan
-          // is lazy, so there is no post-execution hook here — the
-          // Dedup.scala posture. MEMORY_AND_DISK (the default) spills
-          // rather than OOMs, and an eviction merely recomputes; callers
-          // running many corpora in one session can spark.catalog
-          // .clearCache() between them.
-          .persist()
+          // checkpointed for the THREE consumers (profiles, ranks, gram
+          // counts) of the returned plan; the checkpoint keeps the id
+          // partitioning
+          .localCheckpoint(false)
         val lp = rankTop(base.filter(col("_lang").isNotNull)
           .groupBy(col("_lang").as("lang"), col("gram"))
           .agg(sum("cnt").as("cnt")), "lang")
         // gram budget per doc WITHOUT a second window pass: the ranked
         // relation keeps min(profileSize, distinct grams) rows per doc,
-        // which is a plain capped count over the cached base
+        // which is a plain capped count over the checkpointed base
         val n = base.groupBy("_id").agg(
           least(count(lit(1)), lit(profileSize.toLong)).as("_ng"))
         (lp.select(col("lang"), col("gram"), col("r").as("pr")),

@@ -4338,13 +4338,13 @@ object Extensions {
     (s, dir) => {
       val docs = t(s, dir, "documents")
       // stage 1: exact dedup, canonical (min-id) survivors. The survivor
-      // ID MANIFEST is persisted (r17): the sha256 aggregate over the
+      // ID MANIFEST is checkpointed (r17): the sha256 aggregate over the
       // full corpus text feeds three consumers (the SimHash pass via the
       // CC edge materialization, the keep-best join, the quality gate) —
-      // one narrow id relation cached instead of three sha-agg replays
+      // one narrow id relation kept instead of three sha-agg replays
       // (§6 scan reuse; ids only, never the text)
       val ex = Dedup.exact(docs, "doc_id", "text")
-        .select(col("canonical_id").as("doc_id")).persist()
+        .select(col("canonical_id").as("doc_id")).localCheckpoint(false)
       val surv1 = docs.join(ex, "doc_id")
       // stage 2: near-dup families keep the longest member
       val sigs = Dedup.simHash(surv1, "doc_id", "text", bits = 32)
@@ -6635,23 +6635,18 @@ object Extensions {
       // AND the novel-band append (the whole point of the
       // annotateAgainstBands split — dedupAgainstBands would re-sign the
       // novel docs); ann1 serves the output and the survivor filter
-      // index cache pre-partitioned by the join key (the q248 bucketed-
-      // index shape) — both admission joins read it in place
+      // index checkpoint pre-partitioned by the join key (the q248
+      // bucketed-index shape) — both admission joins read it in place
       val bands0 = bandsFor(docs.filter(col("doc_id") % 2 === 0))
-        .repartition(col("band"), col("band_sig")).cache()
-      val b1bands = bandsFor(batch1).cache()
+        .repartition(col("band"), col("band_sig")).localCheckpoint(false)
+      val b1bands = bandsFor(batch1).localCheckpoint(false)
       val ann1 = Dedup.annotateAgainstBands(batch1.select("doc_id"),
-        b1bands, bands0, "doc_id").cache()
+        b1bands, bands0, "doc_id").localCheckpoint(false)
       val novelBands = b1bands.join(
         ann1.filter(col("n_matches") === 0).select("doc_id"),
         Seq("doc_id"), "left_semi")
       val ann2 = Dedup.annotateAgainstBands(batch2.select("doc_id"),
         bandsFor(batch2), bands0.unionByName(novelBands), "doc_id")
-      // cache lifetime: released by Bench's per-gate clearCache; a full
-      // Verify run carries them to the end (band-relation-sized — at
-      // production scale a sequential-admission loop persists its bands
-      // as STORAGE between batches, not as executor cache, so the
-      // question doesn't arise there)
       ann1.withColumn("batch", lit(1L))
         .unionByName(ann2.withColumn("batch", lit(2L)))
         .select(col("doc_id"), col("batch"), col("dup_of"),
@@ -7300,15 +7295,12 @@ object Extensions {
     Some(censusGrowthOracle),
     (s, dir) => {
       val docs = t(s, dir, "documents")
-      // cache lifetime: released by Bench's per-gate clearCache (the
-      // q256 note) — census-sized relations; a production loop persists
-      // the census as STORAGE between batches
       val c0 = TextAnalysis.unigramCensus(
         docs.filter(col("doc_id") % 4 === 0), "text")
-        .repartition(col("w")).cache()
+        .repartition(col("w")).localCheckpoint(false)
       val b1 = docs.filter(col("doc_id") % 4 === 1)
       val r1 = TextAnalysis.scoreAgainstCensus(b1, c0, "doc_id", "text",
-        keepLoPpm = 4010000L, keepHiPpm = 10000000L).cache()
+        keepLoPpm = 4010000L, keepHiPpm = 10000000L).localCheckpoint(false)
       val adm = TextAnalysis.unigramCensus(
         b1.join(r1.filter(col("keep")).select("doc_id"), Seq("doc_id"),
           "left_semi"), "text")
@@ -7645,7 +7637,7 @@ object Extensions {
         val nE = sz.maxBy(_._1)._2
         val k = math.ceil(math.sqrt(nE.toDouble)).toInt
         val cents = Similarity.kmeansCentroids(evens, "vec_id",
-          "embedding", k = k, iters = 2).cache()
+          "embedding", k = k, iters = 2)
         val kept = Similarity.semDedup(evens, "vec_id", "embedding",
           k = k, iters = 2, maxDist2 = Q277MaxDist2,
           centsOpt = Some(cents)) // reuse the frozen codebook — no refit
@@ -7654,19 +7646,17 @@ object Extensions {
         val index0 = kept
           .join(Similarity.scaledVectors(evens, "vec_id", "embedding"),
             Seq("vec_id"))
-          .repartition(col("cluster")).cache()
+          .repartition(col("cluster")).localCheckpoint(false)
         val r1 = Similarity.semDedupAdmit(
           e.filter(col("vec_id") % 4 === 1), index0, cents,
-          "vec_id", "embedding", maxDist2 = Q277MaxDist2).cache()
+          "vec_id", "embedding", maxDist2 = Q277MaxDist2)
+          .localCheckpoint(false)
         val grown = index0.unionByName(r1.filter(col("keep"))
           .select(col("vec_id"), col("cluster"), col("dist2"),
             col("svec")))
         val r2 = Similarity.semDedupAdmit(
           e.filter(col("vec_id") % 4 === 3), grown, cents,
           "vec_id", "embedding", maxDist2 = Q277MaxDist2)
-        // cache lifetime: released by Bench's per-gate clearCache (the
-        // q256 note); a production admission loop persists the index as
-        // STORAGE between batches, not executor cache
         r1.withColumn("batch", lit(1L))
           .unionByName(r2.withColumn("batch", lit(2L)))
           .select(col("vec_id"), col("batch"), col("cluster"),
@@ -7812,7 +7802,7 @@ object Extensions {
     (s, dir) => {
       val docs = t(s, dir, "documents")
       // ONE corpus tokenize (the q261 discipline): the (doc, lang, w, k)
-      // counts persist once and supply BOTH frozen censuses (census-
+      // counts are checkpointed once and supply BOTH frozen censuses (census-
       // sized aggregates) and the per-doc scoring relation — the naive
       // form paid three tokenizes (target census, source census, dw)
       // and a checkpoint; measured 6.8 → ~3 s at the 10× replica
@@ -7821,26 +7811,24 @@ object Extensions {
           explode(split(col("text"), " ")).as("w"))
         .groupBy(col("doc_id"), col("lang"), col("w"))
         .agg(count(lit(1)).as("k"))
-        .persist()
+        .localCheckpoint(false)
       val target = dw.filter(col("lang") === "en")
         .groupBy(col("w")).agg(sum(col("k")).as("c"))
       val source = dw.groupBy(col("w")).agg(sum(col("k")).as("c"))
       val g = TextAnalysis.dsirGainFromCounts(
         dw.select(col("doc_id"), col("w"), col("k")), target, source,
-        "doc_id").persist()
+        "doc_id").localCheckpoint(false)
       // n is corpus row count (every doc tokenizes to >= 1 word); the
       // 1-value probe is the established q265/q277 pattern
       val k = (docs.count() / 4L).toInt
       val top = g.orderBy(col("gain_ppm").desc, col("doc_id"))
         .limit(k).select(col("doc_id"))
-      val res = g.join(top.withColumn("_sel", lit(true)),
+      g.join(top.withColumn("_sel", lit(true)),
         Seq("doc_id"), "left")
         .select(col("doc_id"), col("n_words"), col("target_bits"),
           col("source_bits"), col("gain_bits"), col("gain_ppm"),
           coalesce(col("_sel"), lit(false)).as("selected"))
         .orderBy("doc_id")
-      // cache lifetime: released by Bench's per-gate clearCache (q256)
-      res
     })
 
   private val q281 = Q("q281_c4_line_filter",

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Tables
+import graft.ops.withPersisted
 import graft.etl.Stages
 import graft.functions.Etl
 
@@ -185,28 +186,33 @@ object Pipeline {
       extends Shape
 
   /** An admission filter against a frozen index: `rows` derives the keyed
-    * rows from `table`, `index` builds the index over the even-`key` rows,
-    * and the odd-`key` rows stream through its per-batch verdict.
+    * rows from `table`, `index(evens, use)` builds the index over the
+    * even-`key` rows and hands `use` its per-batch verdict, releasing the
+    * index when `use` returns, and the odd-`key` rows stream through that
+    * verdict.
     */
   final case class AdmissionShape(name: String, table: String,
       gates: Seq[String], key: String)(
-      val rows: DataFrame => DataFrame, val index: DataFrame => FrozenIndex)
+      val rows: DataFrame => DataFrame,
+      val index: (DataFrame, (DataFrame => DataFrame) => Unit) => Unit)
       extends Shape {
 
-    /** Build the index over `t`'s even-`key` rows and stage its odd-`key`
-      * rows in `stage` as 4 files. Returns the index and the drain that
-      * streams `stage` one file per micro-batch through the verdict into
-      * the parquet dir `out`, under a state-store provider if one is given.
+    /** Build the index over `t`'s even-`key` rows, stage its odd-`key` rows
+      * in `stage` as 4 files, and run `body` with the drain that streams
+      * `stage` one file per micro-batch through the verdict into the
+      * parquet dir `out`, under a state-store provider if one is given.
+      * The index lives while `body` runs.
       */
-    def prepare(t: DataFrame, stage: String, cp: String, out: String):
-        (FrozenIndex, Option[String] => Long) = {
+    def withDrain(t: DataFrame, stage: String, cp: String, out: String)(
+        body: (Option[String] => Long) => Unit): Unit = {
       val r = rows(t)
-      val built = index(r.filter(col(key) % 2 === 0))
-      r.filter(col(key) % 2 === 1).repartitionByRange(4, col(key))
-        .write.mode("overwrite").parquet(stage)
-      (built, provider => graft.streaming.Drain.eachBatch(
-        fileStream(t.sparkSession, stage), cp, provider) { batch =>
-        built.verdict(batch).write.mode("append").parquet(out)
+      index(r.filter(col(key) % 2 === 0), verdict => {
+        r.filter(col(key) % 2 === 1).repartitionByRange(4, col(key))
+          .write.mode("overwrite").parquet(stage)
+        body(provider => graft.streaming.Drain.eachBatch(
+          fileStream(t.sparkSession, stage), cp, provider) { batch =>
+          verdict(batch).write.mode("append").parquet(out)
+        })
       })
     }
   }
@@ -225,13 +231,6 @@ object Pipeline {
       () => graft.streaming.IncrementalIngest.runIntoLedger(
         t.sparkSession, src, schema, cp, ledger)
     }
-  }
-
-  /** A persisted index: the verdict one micro-batch gets from it, and the
-    * frames it caches, released once the drains are done. */
-  final case class FrozenIndex(verdict: DataFrame => DataFrame,
-                               cached: DataFrame*) {
-    def release(): Unit = cached.foreach(_.unpersist())
   }
 
   /** Stream the parquet files under `dir` one per micro-batch. */
@@ -275,10 +274,8 @@ object Pipeline {
     val gate = shape.gates.head
     Q(gate, doc, oracle, (s, dir) => {
       val out = scratch(gate, "out")
-      val (index, drain) = shape.prepare(Tables.table(s, dir, shape.table),
-        scratch(gate, "stage"), scratch(gate, "cp"), out)
-      drain(None)
-      index.release()
+      shape.withDrain(Tables.table(s, dir, shape.table),
+        scratch(gate, "stage"), scratch(gate, "cp"), out)(drain => drain(None))
       s.read.parquet(out).orderBy(shape.key)
     })
   }
@@ -812,29 +809,27 @@ object Pipeline {
       ORDER BY day_ms""")(
     _.orderBy("day_ms"))
 
-  /** Persist `df` and materialize it ONCE, before the first micro-batch
-    * would otherwise charge the build to itself. */
-  private def frozen(df: DataFrame): DataFrame = {
-    val p = df.persist()
-    p.count()
-    p
-  }
+  /** `body` over `df` persisted and materialized ONCE, before the first
+    * micro-batch would otherwise charge the build to itself. */
+  private def frozen[T](df: DataFrame)(body: DataFrame => T): T =
+    withPersisted(df) { p => p.count(); body(p) }
 
   val indexAdmission: AdmissionShape = AdmissionShape("index_admission",
     "documents", Seq("q248_streaming_index_admission"), "doc_id")(
-    identity, { evens =>
+    identity, { (evens, use) =>
       // persisted PRE-PARTITIONED by the join key — the bucketed-index
       // shape dedupAgainstBands' scaladoc prescribes: the per-batch join
       // reads index partitions in place (batch bands broadcast), and the
       // cached layout is the one the join wants (r14: warm batch
       // 0.54 -> 0.37 s)
-      val bands = frozen(graft.ops.Dedup.lshBands(
+      frozen(graft.ops.Dedup.lshBands(
         graft.ops.Dedup.minHashSignatures(evens, "doc_id", "text",
           numHashes = 16, shingleSize = 3),
         "doc_id", rowsPerBand = 2)
-        .repartition(col("band"), col("band_sig")))
-      FrozenIndex(graft.ops.Dedup.dedupAgainstBands(_, bands,
-        "doc_id", "text", numHashes = 16, rowsPerBand = 2), bands)
+        .repartition(col("band"), col("band_sig"))) { bands =>
+        use(graft.ops.Dedup.dedupAgainstBands(_, bands,
+          "doc_id", "text", numHashes = 16, rowsPerBand = 2))
+      }
     })
 
   private val q248 = admissionGate(indexAdmission,
@@ -912,9 +907,8 @@ object Pipeline {
   val censusAdmission: AdmissionShape = AdmissionShape("census_admission",
     "documents", Seq("q267_streaming_census_admission",
       "q271_streaming_census_growth"), "doc_id")(
-    identity, { evens =>
-      val census = frozen(censusOf(evens))
-      FrozenIndex(scoreCensus(census), census)
+    identity, { (evens, use) =>
+      frozen(censusOf(evens))(census => use(scoreCensus(census)))
     })
 
   private val q267 = admissionGate(censusAdmission,
@@ -949,61 +943,60 @@ object Pipeline {
       val stage = scratch(gate, "stage")
       val out = scratch(gate, "out")
       val cp = scratch(gate, "cp")
-      var cur = frozen(censusOf(docs.filter(col("doc_id") % 4 === 0)))
       docs.filter(col("doc_id") % 4 === 1).coalesce(1)
         .write.mode("overwrite").parquet(stage)
-      def drain(batchNo: Long): Unit =
+      def drain(census: DataFrame, batchNo: Long): Unit =
         graft.streaming.Drain.eachBatch(fileStream(s, stage), cp) { batch =>
-          scoreCensus(cur)(batch).withColumn("batch", lit(batchNo))
+          scoreCensus(census)(batch).withColumn("batch", lit(batchNo))
             .write.mode("append").parquet(out)
         }
-      drain(1L)
-      val admitted = docs.filter(col("doc_id") % 4 === 1)
-        .join(s.read.parquet(out).filter(col("keep")).select("doc_id"),
-          Seq("doc_id"), "left_semi")
-      // eager localCheckpoint, NOT persist: grown's lineage reads the
-      // `out` parquet dir, which drain(2) appends to — a persist()ed
-      // partition evicted and recomputed after that append would
-      // silently fold batch-2 admissions into the batch-2 scoring
-      // census. Checkpointing truncates the lineage, so the relation is
-      // durable against recompute (and local-mode partitions can't be
-      // lost, only evicted).
-      val grown = graft.ops.TextAnalysis.mergeCensus(cur,
-          graft.ops.TextAnalysis.unigramCensus(admitted, "text"))
-        .repartition(col("w")).localCheckpoint(true)
-      cur.unpersist()
-      cur = grown
+      val grown = frozen(censusOf(docs.filter(col("doc_id") % 4 === 0))) { c0 =>
+        drain(c0, 1L)
+        val admitted = docs.filter(col("doc_id") % 4 === 1)
+          .join(s.read.parquet(out).filter(col("keep")).select("doc_id"),
+            Seq("doc_id"), "left_semi")
+        // eager localCheckpoint, NOT persist: grown's lineage reads the
+        // `out` parquet dir, which drain 2 appends to — a persisted
+        // partition evicted and recomputed after that append would
+        // silently fold batch-2 admissions into the batch-2 scoring
+        // census. Checkpointing truncates the lineage, so the relation is
+        // durable against recompute (and local-mode partitions can't be
+        // lost, only evicted).
+        graft.ops.TextAnalysis.mergeCensus(c0,
+            graft.ops.TextAnalysis.unigramCensus(admitted, "text"))
+          .repartition(col("w")).localCheckpoint(true)
+      }
       docs.filter(col("doc_id") % 4 === 2).coalesce(1)
         .write.mode("append").parquet(stage)
-      drain(2L)
-      cur.unpersist()
+      drain(grown, 2L)
       s.read.parquet(out).orderBy("doc_id")
     })
 
   private val SemMaxDist2 = 1200000000000L
 
-  /** The frozen codebook (k = ceil(sqrt(n)) centroids, n the vectors of
-    * the widest dimension) and the per-cell keep-set index over `evens`,
-    * both persisted; None when no vector has a size. ONE action for the
-    * dimensionality probe + k sizing (the q277 batched-collect shape). */
-  private def semIndex(evens: DataFrame): Option[(DataFrame, DataFrame)] = {
+  /** `body` over the frozen codebook (k = ceil(sqrt(n)) centroids, n the
+    * vectors of the widest dimension) and the per-cell keep-set index over
+    * `evens`, the index persisted while `body` runs; None when no vector
+    * has a size. ONE action for the dimensionality probe + k sizing (the
+    * q277 batched-collect shape). */
+  private def semIndex[T](evens: DataFrame)(
+      body: Option[(DataFrame, DataFrame)] => T): T = {
     val sz = evens.groupBy(size(col("embedding")).as("_d"))
       .agg(countDistinct(col("vec_id")).as("_n"))
       .collect().filter(!_.isNullAt(0)).map(r => (r.getInt(0), r.getLong(1)))
-    if (sz.isEmpty) None
+    if (sz.isEmpty) body(None)
     else {
       val k = math.ceil(math.sqrt(sz.maxBy(_._1)._2.toDouble)).toInt
-      val cents = frozen(graft.ops.Similarity.kmeansCentroids(evens, "vec_id",
-        "embedding", k = k, iters = 2))
-      val index = frozen(graft.ops.Similarity.semDedup(evens, "vec_id",
+      val cents = graft.ops.Similarity.kmeansCentroids(evens, "vec_id",
+        "embedding", k = k, iters = 2)
+      frozen(graft.ops.Similarity.semDedup(evens, "vec_id",
         "embedding", k = k, iters = 2, maxDist2 = SemMaxDist2,
         centsOpt = Some(cents)) // reuse the frozen codebook — no refit
         .filter(col("keep"))
         .select(col("vec_id"), col("cluster"), col("dist2"))
         .join(graft.ops.Similarity.scaledVectors(evens, "vec_id",
           "embedding"), Seq("vec_id"))
-        .repartition(col("cluster")))
-      Some((cents, index))
+        .repartition(col("cluster")))(index => body(Some((cents, index))))
     }
   }
 
@@ -1014,11 +1007,13 @@ object Pipeline {
 
   val semAdmission: AdmissionShape = AdmissionShape("sem_admission",
     "embeddings", Seq("q278_streaming_semdedup_admission"), "vec_id")(
-    identity, { evens =>
-      val (cents, index) = semIndex(evens).getOrElse(
-        throw new IllegalArgumentException(
-          "sem_admission: no even-id embedding to fit a codebook on"))
-      FrozenIndex(semAdmit(cents, index), index, cents)
+    identity, { (evens, use) =>
+      semIndex(evens) { built =>
+        val (cents, index) = built.getOrElse(
+          throw new IllegalArgumentException(
+            "sem_admission: no even-id embedding to fit a codebook on"))
+        use(semAdmit(cents, index))
+      }
     })
 
   private val q278 = Q("q278_streaming_semdedup_admission",
@@ -1037,7 +1032,7 @@ object Pipeline {
     Some(Extensions.semAdmissionOracle),
     (s, dir) => {
       val e = Tables.table(s, dir, "embeddings")
-      semIndex(e.filter(col("vec_id") % 2 === 0)) match {
+      semIndex(e.filter(col("vec_id") % 2 === 0)) {
         case None =>
           e.select(col("vec_id"), lit(1L).as("batch"), lit(0L).as("cluster"),
             lit(0L).as("dist2"), lit(true).as("keep"),
@@ -1047,15 +1042,14 @@ object Pipeline {
           val stage = scratch(gate, "stage")
           val out = scratch(gate, "out")
           val cp = scratch(gate, "cp")
-          var idx = index0
           e.filter(col("vec_id") % 4 === 1).coalesce(1)
             .write.mode("overwrite").parquet(stage)
-          def drain(batchNo: Long): Unit =
+          def drain(idx: DataFrame, batchNo: Long): Unit =
             graft.streaming.Drain.eachBatch(fileStream(s, stage), cp) { batch =>
               semAdmit(cents, idx)(batch).withColumn("batch", lit(batchNo))
                 .write.mode("append").parquet(out)
             }
-          drain(1L)
+          drain(index0, 1L)
           // grow the index from the drained verdicts (svec rides along in
           // semDedupAdmit's output precisely so this union needs no
           // re-scaling); eager localCheckpoint, NOT persist — the lineage
@@ -1065,12 +1059,9 @@ object Pipeline {
               .select(col("vec_id"), col("cluster"), col("dist2"),
                 col("svec")))
             .repartition(col("cluster")).localCheckpoint(true)
-          index0.unpersist()
-          idx = grown
           e.filter(col("vec_id") % 4 === 3).coalesce(1)
             .write.mode("append").parquet(stage)
-          drain(2L)
-          cents.unpersist()
+          drain(grown, 2L)
           s.read.parquet(out)
             .select(col("vec_id"), col("batch"), col("cluster"),
               col("dist2"), col("keep"), col("dup_of"))
@@ -1084,12 +1075,14 @@ object Pipeline {
       concat(col("text"), when(col("doc_id") % 3 === 0,
         lit(" flux quill sable umbra vex jade nimb ochre"))
         .otherwise(lit(""))).as("t")),
-    { evens =>
-      val target = frozen(censusOf(evens.filter(col("doc_id") % 3 === 0), "t"))
-      val source = frozen(censusOf(evens, "t"))
-      FrozenIndex(batch => graft.ops.TextAnalysis.dsirGain(batch, target,
-          source, "doc_id", "t").withColumn("admitted", col("gain_ppm") >= -400000L),
-        target, source)
+    { (evens, use) =>
+      frozen(censusOf(evens.filter(col("doc_id") % 3 === 0), "t")) { target =>
+        frozen(censusOf(evens, "t")) { source =>
+          use(batch => graft.ops.TextAnalysis.dsirGain(batch, target,
+            source, "doc_id", "t")
+            .withColumn("admitted", col("gain_ppm") >= -400000L))
+        }
+      }
     })
 
   private val q283 = admissionGate(dsirAdmission,
@@ -1153,14 +1146,15 @@ object Pipeline {
         when(col("doc_id") % 4 === 0 || col("doc_id") % 3 === 0,
           lit(" quark glint moss fjord ember dune crag veld tarn wisp onyx rill"))
           .otherwise(lit(""))).as("t")),
-    { evens =>
-      val index = frozen(graft.ops.TextAnalysis.strideGramSpans(evens,
+    { (evens, use) =>
+      frozen(graft.ops.TextAnalysis.strideGramSpans(evens,
           "doc_id", "t", n = 10)
         .select(graft.functions.TextFns.hash64(col("g")).as("_gh"))
         .distinct()
-        .repartition(col("_gh")))
-      FrozenIndex(graft.ops.TextAnalysis.substringScreen(_, index,
-        "doc_id", "t", n = 10, maxPpm = 25000L), index)
+        .repartition(col("_gh"))) { index =>
+        use(graft.ops.TextAnalysis.substringScreen(_, index,
+          "doc_id", "t", n = 10, maxPpm = 25000L))
+      }
     })
 
   private val q285 = admissionGate(substringScreen,

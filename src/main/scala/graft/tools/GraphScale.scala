@@ -44,17 +44,6 @@ object GraphScale {
     println(s"[graphscale] dir=$sfDir nodes=${census.getLong(0)} " +
       s"max_deg=${census.getLong(1)} over_cap(maxDeg=$maxDeg)=" +
       s"${census.getLong(2)} sum_deg2=${census.getLong(3)}")
-    def time(label: String)(mode: => DataFrame): Unit = {
-      val walls = (1 to 2).map { _ =>
-        spark.catalog.clearCache()
-        System.gc()
-        val t0 = System.nanoTime()
-        mode.write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      println(f"[graphscale] $label min2=${walls.min}%.2f s " +
-        s"runs=${walls.map(w => f"$w%.2f").mkString(",")}")
-    }
     time(s"exact(maxDegree=$maxDeg)")(Graph.commonNeighborPairs(
       pairs, minCommon = 2, topK = 100, maxDegree = maxDeg))
     time(s"hubSample(maxDegree=$maxDeg,s=$hub)")(Graph.commonNeighborPairs(
@@ -100,18 +89,9 @@ object GraphScale {
       val und = e1.unionAll(e2).unionAll(bridge)
       und.unionAll(und.select(col("dst").as("src"), col("src").as("dst")))
     }
-    for (m <- Seq(n.toLong, n.toLong * 10)) {
-      val walls = (1 to 2).map { _ =>
-        spark.catalog.clearCache()
-        System.gc()
-        val t0 = System.nanoTime()
-        Graph.labelPropagation(edgesFor(m), rounds = rounds)
-          .write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      println(f"[lpscale] n=$m rounds=$rounds min2=${walls.min}%.2f s " +
-        s"runs=${walls.map(w => f"$w%.2f").mkString(",")}")
-    }
+    for (m <- Seq(n.toLong, n.toLong * 10))
+      time(s"n=$m rounds=$rounds", "lpscale")(
+        Graph.labelPropagation(edgesFor(m), rounds = rounds))
     // converge mode on q259's bridged-triangle motif graph: every motif
     // settles at round 3 and the zero-change transition is observed at
     // round 4, INDEPENDENT of motif count — so rounds-to-settle is a
@@ -128,20 +108,24 @@ object GraphScale {
       und.select(col("a").as("src"), col("b").as("dst"))
         .unionAll(und.select(col("b").as("src"), col("a").as("dst")))
     }
-    for (m <- Seq(15000L, 150000L)) {
-      val walls = (1 to 2).map { _ =>
-        spark.catalog.clearCache()
-        System.gc()
-        val t0 = System.nanoTime()
+    for (m <- Seq(15000L, 150000L))
+      time(s"converge motifs=$m settle=3 detect=4", "lpscale")(
         Graph.labelPropagation(motifEdges(m), rounds = 10, converge = true,
-          assumeTotal = true)
-          .write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      println(f"[lpscale] converge motifs=$m settle=3 detect=4 " +
-        f"min2=${walls.min}%.2f s " +
-        s"runs=${walls.map(w => f"$w%.2f").mkString(",")}")
+          assumeTotal = true))
+  }
+
+  /** Print the min-of-2 noop-forced wall of `mode`, each run after a full
+    * GC (which also lets Spark free the previous run's checkpoints). */
+  private def time(label: String, tag: String = "graphscale")(
+      mode: => DataFrame): Unit = {
+    val walls = (1 to 2).map { _ =>
+      System.gc()
+      val t0 = System.nanoTime()
+      mode.write.format("noop").mode("overwrite").save()
+      (System.nanoTime() - t0) / 1e9
     }
+    println(f"[$tag] $label min2=${walls.min}%.2f s " +
+      s"runs=${walls.map(w => f"$w%.2f").mkString(",")}")
   }
 
   private def skewDemo(args: Array[String]): Unit = {
@@ -165,17 +149,6 @@ object GraphScale {
     println(s"[graphscale] skew hubDeg=$hubDeg nHubs=$nHubs " +
       s"uncappedHubWedges=$trueHubMass (not run) " +
       s"dropHubWedges=0 hubSampleWedges=${nHubs.toLong * s * (s - 1) / 2}")
-    def time(label: String)(mode: => DataFrame): Unit = {
-      val walls = (1 to 2).map { _ =>
-        spark.catalog.clearCache()
-        System.gc()
-        val t0 = System.nanoTime()
-        mode.write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      println(f"[graphscale] $label min2=${walls.min}%.2f s " +
-        s"runs=${walls.map(w => f"$w%.2f").mkString(",")}")
-    }
     time(s"drop(maxDegree=$maxDeg)")(Graph.commonNeighborPairs(
       edges, minCommon = 2, topK = 100, maxDegree = maxDeg))
     time(s"hubSample(maxDegree=$maxDeg,s=$s)")(Graph.commonNeighborPairs(

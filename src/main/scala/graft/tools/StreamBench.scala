@@ -68,24 +68,22 @@ object StreamBench {
         // measurements (the first streaming query in a JVM pays JIT +
         // codegen compilation)
         mine.headOption.foreach { sh =>
-          val (drain, release) = open(spark, sfDir, sh, work.resolve("warmup"))
-          drain(provider)
-          release()
+          open(spark, sfDir, sh, work.resolve("warmup"))(drain => drain(provider))
         }
         for (sh <- mine) {
           val dir = work.resolve(sh.name)
-          val (drain, release) = open(spark, sfDir, sh, dir)
-          for (pass <- Seq("cold", "warm")) {
-            if (pass == "warm") Pipeline.redeliver(dir.resolve("src").toString)
-            val t0 = System.nanoTime()
-            val n = drain(provider)
-            val key = s"${sh.name}/$provider/$pass"
-            report.timings(key) = (System.nanoTime() - t0) / 1e9
-            report.rows(key) = n
-            require(pass == "cold" || n > 0,
-              s"$key read 0 rows: the redelivered files never reached the source")
+          open(spark, sfDir, sh, dir) { drain =>
+            for (pass <- Seq("cold", "warm")) {
+              if (pass == "warm") Pipeline.redeliver(dir.resolve("src").toString)
+              val t0 = System.nanoTime()
+              val n = drain(provider)
+              val key = s"${sh.name}/$provider/$pass"
+              report.timings(key) = (System.nanoTime() - t0) / 1e9
+              report.rows(key) = n
+              require(pass == "cold" || n > 0,
+                s"$key read 0 rows: the redelivered files never reached the source")
+            }
           }
-          release()
         }
       } finally graft.TempDirs.deleteRecursively(work)
     }
@@ -100,13 +98,13 @@ object StreamBench {
     case _: LedgerShape => false
   }
 
-  /** Stage `sh`'s input under `dir/src` and return its drain (one call
-    * per drain, under the given provider; returns the rows it read) and the
-    * release of what the drains share. A frozen index is built here, so no
-    * drain is charged for it.
+  /** Stage `sh`'s input under `dir/src` and run `body` with its drain (one
+    * call per drain, under the given provider; returns the rows it read).
+    * A frozen index is built here and lives while `body` runs, so no drain
+    * is charged for it.
     */
-  private def open(spark: SparkSession, sfDir: String, sh: Shape,
-                   dir: Path): (String => Long, () => Unit) = {
+  private def open(spark: SparkSession, sfDir: String, sh: Shape, dir: Path)(
+      body: (String => Long) => Unit): Unit = {
     val src = dir.resolve("src").toString
     val cp = dir.resolve("cp").toString
     val out = dir.resolve("out").toString
@@ -117,19 +115,16 @@ object StreamBench {
           dir.resolve("src").resolve("batch_000.parquet"))
         val q = s.query(spark, sfDir, () => Tables.dirStream(spark, src))
         // an append-mode memory sink cannot restart from its checkpoint
-        val drain: String => Long =
-          if (s.mode == "complete") p => Drain.toMemory(q, cp, s.mode, Some(p))._2
-          else p => Drain.toFiles(q, cp, out, Some(p))
-        (drain, () => ())
+        body(if (s.mode == "complete") p => Drain.toMemory(q, cp, s.mode, Some(p))._2
+          else p => Drain.toFiles(q, cp, out, Some(p)))
       case a: AdmissionShape =>
-        val (index, drain) =
-          a.prepare(Tables.table(spark, sfDir, a.table), src, cp, out)
-        (p => drain(Some(p)), () => index.release())
+        a.withDrain(Tables.table(spark, sfDir, a.table), src, cp, out)(
+          drain => body(p => drain(Some(p))))
       case l: LedgerShape =>
         // stateless foreachBatch: the provider has nothing to hold
         val drain = l.prepare(Tables.table(spark, sfDir, l.table), src, cp,
           new graft.ledger.Ledger(spark, dir.resolve("ledger").toString))
-        (_ => drain(), () => ())
+        body(_ => drain())
     }
   }
 }

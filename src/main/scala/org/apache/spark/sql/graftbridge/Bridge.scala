@@ -1,6 +1,6 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 
@@ -11,4 +11,9 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** Relations registered with the session's CacheManager. */
+  def cachedEntries(spark: SparkSession): Int =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager.numCachedEntries
 }

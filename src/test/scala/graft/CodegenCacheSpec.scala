@@ -94,9 +94,6 @@ class CodegenCacheSpec extends SparkSpec {
     def round(): Seq[(String, Long)] = gates.map { g =>
       g -> compiled {
         SparkEntry.queries(g)(spark, sf).write.format("noop").mode("overwrite").save()
-        // a gate that leaves its frames cached would plan the next round
-        // against the cache: clear it, as Verify does after each gate
-        spark.catalog.clearCache()
       }
     }
     val first = round()

@@ -5,10 +5,9 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
 
 /** JVM-global request log: executePlan serializes the transport into
   * executor tasks (copies, even in local mode), so a per-instance log never
@@ -364,31 +363,8 @@ class EtlJobSpec extends SparkSpec {
   }
 
   /** The executed plans of every query `body` runs, in order. */
-  private def executedPlans(body: => Unit): Seq[SparkPlan] = {
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
-    // listener events arrive asynchronously but in order, so `body`'s are
-    // exactly those between a start and an end marker query's: an event
-    // still queued from an earlier query must not count
-    val start = s"plans_start_${System.nanoTime()}"
-    val marker = s"plans_marker_${System.nanoTime()}"
-    @volatile var started = false
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    val listener = new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        if (qe.analyzed.output.exists(_.name == start)) started = true
-        else if (qe.analyzed.output.exists(_.name == marker)) drained.countDown()
-        else if (started) plans.add(qe.executedPlan)
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      spark.range(1).toDF(start).collect()
-      body
-      spark.range(1).toDF(marker).collect()
-      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
-    } finally spark.listenerManager.unregister(listener)
-    plans.asScala.toSeq
-  }
+  private def executedPlans(body: => Unit): Seq[SparkPlan] =
+    queriesRun(body).map(_.executedPlan)
 
   test("download_metadata scans the ledger once; ingested_new is the rows it added") {
     val base = Files.createTempDirectory("graft-job-ingest").toString
@@ -495,7 +471,7 @@ class EtlJobSpec extends SparkSpec {
     * job's long call site, the Spark method the program called. */
   private def jobCallSites(body: => Unit): Seq[String] = {
     val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    // as in executedPlans: only the jobs between two marker jobs count
+    // as in SparkSpec.queriesRun: only the jobs between two marker jobs count
     val (start, end) = (s"jobs_start_${System.nanoTime()}", s"jobs_end_${System.nanoTime()}")
     @volatile var started = false
     val drained = new java.util.concurrent.CountDownLatch(1)

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ops.Graph
@@ -64,17 +65,24 @@ class GraphSpec extends SparkSpec {
     val edges = (Seq(("A", "B"), ("B", "C"), ("C", "A"), ("C", "D"),
       ("D", "A")) ++ Seq("A", "B", "C", "D").map(n => (n, "H")) ++
       Seq(("H", "A"))).toDF("src", "dst")
-    val plainDf = Graph.pageRank(edges, iters = 20, checkpointEvery = 1000)
+    // the ranks, and the longest plan among the queries the run executes
+    // (its rounds and the materialization of the ranks it hands back)
+    def run(every: Int): (DataFrame, Int) = {
+      var ranks: DataFrame = null
+      val longest = queriesRun {
+        ranks = Graph.pageRank(edges, iters = 20, checkpointEvery = every)
+      }.map(_.optimizedPlan.toString.length).max
+      (ranks, longest)
+    }
+    val (plainDf, plainLen) = run(1000)
+    val (ck, ckLen) = run(3)
     val plain = plainDf.as[(String, Long)].collect().toMap
-    val ck = Graph.pageRank(edges, iters = 20, checkpointEvery = 3)
     assert(ck.as[(String, Long)].collect().toMap == plain,
       "localCheckpoint must truncate lineage, never change a value")
     // bounded plan: the checkpointed variant's lineage reaches back at most
     // checkpointEvery rounds (plus cached-relation definitions), while the
     // uncheckpointed one embeds the full 20-round join tree — require a
     // decisive (not cosmetic) reduction
-    val ckLen = ck.queryExecution.optimizedPlan.toString.length
-    val plainLen = plainDf.queryExecution.optimizedPlan.toString.length
     assert(ckLen < plainLen / 3,
       s"plan depth must stay bounded: checkpointed $ckLen chars vs " +
         s"uncheckpointed $plainLen")

@@ -400,19 +400,18 @@ class PlanIntegritySpec extends SparkSpec {
 
   test("q112: PageRank hands back materialized ranks, not a 3-round lineage") {
     val p = plan("q112_pagerank")
-    // the operator materializes ranks internally (then frees the edge-sized
-    // cache), so the caller's plan is a sort over the node-sized cache — if
-    // the full iteration tree (source scans, per-round joins) shows up
-    // here, every downstream action would re-run all rounds
-    assert(p.contains("InMemoryTableScan"),
-      s"returned ranks must come from the materialized cache:\n$p")
-    // the text below the first InMemoryRelation is the cache's DEFINITION
-    // (it legitimately shows the source scans); everything above it is what
-    // actually executes downstream — no file scan may appear there
-    val executedAboveCache = aboveCache(p)
-    assert(!executedAboveCache.contains("FileScan"),
+    // the operator materializes ranks internally (a localCheckpoint, then
+    // releases the edge-sized cache), so the caller's plan is a sort over
+    // the node-sized checkpoint — if the full iteration tree (source
+    // scans, per-round joins) shows up here, every downstream action would
+    // re-run all rounds
+    assert(p.contains("Scan ExistingRDD"),
+      s"returned ranks must come from the materialized checkpoint:\n$p")
+    // a checkpoint prints no definition below it: the whole plan is what
+    // executes downstream — no file scan may appear in it
+    assert(!p.contains("FileScan"),
       s"downstream actions must not re-run the iteration lineage:\n$p")
-    assert(!executedAboveCache.contains("CartesianProduct"),
+    assert(!p.contains("CartesianProduct"),
       s"rank joins must stay keyed:\n$p")
   }
 
@@ -545,18 +544,17 @@ class PlanIntegritySpec extends SparkSpec {
     "doc-set relation serves postings and both verify sides)") {
     val p = plan("q178_prefix_jaccard_join")
     // the doc-set relation feeds prefix postings and both verify sides via
-    // the persisted InMemoryRelation; the naive shape re-derived the
-    // documents scan + shingle kernel SIX times as live subtrees. In the
-    // cached shape the kernel string does NOT appear in the live plan at
-    // all (it lives only inside the cached child that InMemoryTableScan
-    // reprints without expression bodies), so its ABSENCE is the pin.
+    // its localCheckpoint; the naive shape re-derived the documents scan +
+    // shingle kernel SIX times as live subtrees. Above the checkpoint the
+    // kernel string does NOT appear in the plan at all (a checkpoint scan
+    // prints no lineage), so its ABSENCE is the pin.
     val kernels = "graft_shingle_parts".r.findAllIn(p).size
     assert(kernels == 0,
       s"live shingle re-derivation crept back in ($kernels kernels):\n$p")
-    val cacheReads = p.linesIterator.count(_.contains("InMemoryTableScan"))
-    assert(cacheReads >= 3,
-      s"byDoc cache must serve postings + both verify sides " +
-        s"($cacheReads cache reads):\n$p")
+    val checkpointReads = p.linesIterator.count(_.contains("Scan ExistingRDD"))
+    assert(checkpointReads >= 3,
+      s"byDoc checkpoint must serve postings + both verify sides " +
+        s"($checkpointReads checkpoint reads):\n$p")
   }
 
   test("q182: BM25 query/df/totals relations broadcast; corpus scans bounded") {
@@ -656,7 +654,7 @@ class PlanIntegritySpec extends SparkSpec {
     val e = Seq((1L, 2L), (2L, 3L), (3L, 1L), (1L, 3L))
       .toDF("src", "dst")
     val deg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    val ewd = Graph.prEdgeLayout(e, deg)
+    val ewd = Graph.prEdgeLayout(e, deg).persist()
     try {
       ewd.count() // materialize the cached layout, as pageRank does
       val ranks = e.select(col("src").as("node")).distinct()

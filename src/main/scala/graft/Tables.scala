@@ -20,13 +20,12 @@ object Tables {
     * TIMESTAMP(NANOS) in some rounds and native TIMESTAMP(MICROS) in others,
     * so every reader must adapt to the footer it actually finds. NANOS is
     * rejected by Spark 4 ([PARQUET_TYPE_ILLEGAL]) unless
-    * `spark.sql.legacy.parquet.nanosAsLong=true` maps it to LongType; we set
-    * that (runtime-settable SQLConf) and convert to a micros-precision
+    * `spark.sql.legacy.parquet.nanosAsLong=true` maps it to LongType;
+    * [[session]] sets that, and this converts to a micros-precision
     * TimestampType with exact integer division (`div`, not `/`, because nanos
     * since epoch exceed 2^53 and double division would lose precision).
     */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = spark.read.parquet(s"$dir/events.parquet")
     normalizeTs(raw, raw.schema)
   }
@@ -67,7 +66,6 @@ object Tables {
     * resolve the same way.
     */
   def tableStream(spark: SparkSession, dir: String, leaf: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val p = new org.apache.hadoop.fs.Path(dir, leaf)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     val isDir = fs.exists(p) && fs.getFileStatus(p).isDirectory
@@ -84,7 +82,6 @@ object Tables {
     * files already present. Used by StreamBench's stage-then-redeliver dirs.
     */
   def dirStream(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val rawSchema =
       try spark.read.parquet(dir).schema
       catch {
@@ -114,7 +111,9 @@ object Tables {
   def session(appName: String): SparkSession = session(appName, cores)
 
   /** Session factory used by mains and tests: UTC (oracle parity), shuffle
-    * partitions sized to local cores (not the 200 default), AQE on, a
+    * partitions sized to local cores (not the 200 default; the one base
+    * of every explicit count, see [[graft.ops.Partitions]]), AQE on,
+    * nanos-precision parquet timestamps read as longs ([[events]]), a
     * generated-class cache that holds a session's working set, and `file:`
     * paths through [[NioLocalFileSystem]] (no `chmod` fork per created
     * file; `hdfs:`/`s3a:` paths are unaffected).

@@ -14,15 +14,10 @@ final case class HttpRequest(
     url: String,
     headers: Map[String, String] = Map.empty,
     body: Array[Byte] = Array.emptyByteArray,
-    /** Large payloads stream from disk instead of materializing in memory
-      * (an in-memory multipart body caps uploads at <2 GB and triples the
-      * footprint); when set, `body` is ignored by transports.
-      */
-    bodyFile: Option[java.nio.file.Path] = None,
     /** Fully streaming body: a supplier of a fresh InputStream per send
       * attempt (e.g. a multipart prologue + file + epilogue composite) —
       * constant memory, no temp copy on disk. Takes precedence over
-      * `bodyFile`/`body`.
+      * `body`.
       */
     bodyStream: Option[() => java.io.InputStream] = None) {
   /** The payload bytes regardless of backing — for tests/mocks only;
@@ -32,7 +27,7 @@ final case class HttpRequest(
     case Some(mk) =>
       val in = mk()
       try in.readAllBytes() finally in.close()
-    case None => bodyFile.fold(body)(java.nio.file.Files.readAllBytes)
+    case None => body
   }
 }
 
@@ -98,10 +93,9 @@ final class JavaNetTransport(
   private def buildJdkRequest(req: HttpRequest): JHttpRequest = {
     val b = JHttpRequest.newBuilder(URI.create(req.url)).timeout(readTimeout)
     req.headers.foreach { case (k, v) => b.header(k, v) }
-    def publisher = (req.bodyStream, req.bodyFile) match {
-      case (Some(mk), _) => JHttpRequest.BodyPublishers.ofInputStream(() => mk())
-      case (None, Some(f)) => JHttpRequest.BodyPublishers.ofFile(f)
-      case _ => JHttpRequest.BodyPublishers.ofByteArray(req.body)
+    def publisher = req.bodyStream match {
+      case Some(mk) => JHttpRequest.BodyPublishers.ofInputStream(() => mk())
+      case None => JHttpRequest.BodyPublishers.ofByteArray(req.body)
     }
     req.method.toUpperCase match {
       case "GET" => b.GET().build()
@@ -215,8 +209,7 @@ final class MockTransport(script: Seq[PartialFunction[HttpRequest, HttpResponse]
     // materialize streaming bodies NOW — callers may free the backing
     // stream/file right after send returns, tests inspect the log later,
     // and script handlers must see the same bytes the log records
-    val eff = req.copy(body = req.effectiveBody, bodyFile = None,
-      bodyStream = None)
+    val eff = req.copy(body = req.effectiveBody, bodyStream = None)
     log += eff
     val handler = script.find(_.isDefinedAt(eff))
       .getOrElse(throw new IllegalStateException(s"unexpected request: ${req.method} ${req.url}"))

@@ -375,7 +375,7 @@ object Dedup {
     * relative to the corpus, so it is BROADCAST into both text joins —
     * the corpus text column streams through two broadcast hash joins and
     * never shuffles. The surviving pair rows then get an EXPLICIT-COUNT
-    * repartition before the Levenshtein kernel: the pair relation is a
+    * repartition ([[Partitions.parts]]) before the Levenshtein kernel: the pair relation is a
     * few KB of ids but carries O(len²) CPU per row, and AQE's
     * input-bytes-driven coalescing would otherwise fold the whole verify
     * stage onto one task (the expansion-join trap, CPU flavor — the
@@ -389,10 +389,9 @@ object Dedup {
     val cands = minHashLshCandidates(sigs, idCol, rowsPerBand)
     val ta = docs.select(col(idCol).as("doc_a"), col(textCol).as("_ta"))
     val tb = docs.select(col(idCol).as("doc_b"), col(textCol).as("_tb"))
-    val verifyParts =
-      docs.sparkSession.sessionState.conf.numShufflePartitions * 3
     broadcast(broadcast(cands).join(ta, "doc_a")).join(tb, "doc_b")
-      .repartition(verifyParts, col("doc_a"), col("doc_b"))
+      .repartition(Partitions.parts(docs.sparkSession),
+        col("doc_a"), col("doc_b"))
       .withColumn("edit_dist", levenshtein(col("_ta"), col("_tb")))
       .filter(col("edit_dist") <= maxDistance)
       .select(col("doc_a"), col("doc_b"), col("n_shared_bands"),

@@ -35,20 +35,10 @@ object Fuzzy {
     // the ~O(len^k) variant fan-out is the CPU stage: rebalance the narrow
     // input rows first so it never runs at the SCAN's parallelism (a small
     // single-file table is one input split — measured: the whole explode
-    // serialized on 1 of 32 cores; guide §2.5 input-skew rule). r17: the
-    // partition count is INPUT-AWARE — ~64 KB of narrow rows per task
-    // (≈ a few hundred ms of deletion-explode CPU), capped at the session
-    // parallelism — instead of the unconditional defaultParallelism that
-    // over-fanned a ~300 KB relation into 32 tasks (r16 verdict: q47 ran
-    // 0.49× at 32 cores vs 8 at bench scale; big inputs still get the
-    // full fan-out).
-    val fanParts = {
-      val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-      val cap = BigInt(df.sparkSession.sparkContext.defaultParallelism)
-      ((est / (64L * 1024L)) + 1).min(cap).max(BigInt(1)).toInt
-    }
+    // serialized on 1 of 32 cores; guide §2.5 input-skew rule), at an
+    // input-aware count (see [[Partitions.spread]])
     val v = df.select(col(idCol) +: blockCols.map(col) :+ col(strCol): _*)
-      .repartition(fanParts)
+      .repartition(Partitions.spread(df))
       .select(
         col(idCol) +: blockCols.map(col) :+
           explode(DeletionNeighborhood(col(strCol), maxDist)).as("_v"): _*)
@@ -157,8 +147,8 @@ object Fuzzy {
           .cast("long") * ratioPpm
     // EXPLICIT repartition on the cell key: this join's INPUT is tiny
     // (distinct names × (salt+1)/2) but its OUTPUT is the quadratic pair
-    // stream — the expansion-join rule, see [[Expansion.parts]].
-    val nParts = Expansion.parts(df.sparkSession)
+    // stream — the expansion-join rule, see [[Partitions.parts]].
+    val nParts = Partitions.parts(df.sparkSession)
     val aP = a.repartition(nParts, col("_blk"), col("_ci"), col("_cj"))
     val bP = b.repartition(nParts, col("_blk_b"), col("_ci_b"), col("_cj_b"))
     val namePairs = aP.join(bP.hint("shuffle_hash"),

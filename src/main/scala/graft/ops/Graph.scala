@@ -332,10 +332,10 @@ object Graph {
           // used; the closure probe keys on (lower endpoint's NODE, higher
           // endpoint struct). The wedge self-join is an EXPANSION join
           // (Σ outdeg² output from a small oriented-edge input) — the
-          // expansion-join rule, see [[Expansion.parts]]. Orientation
+          // expansion-join rule, see [[Partitions.parts]]. Orientation
           // bounds outdeg by √(2·edges), so per-corner work is already
           // skew-capped; this keeps it spread.
-          val nParts = Expansion.parts(edges.sparkSession)
+          val nParts = Partitions.parts(edges.sparkSession)
           val ortP = ort.repartition(nParts, col("src"))
           val closed = ortP.select(col("src"), col("dst").as("x"))
             .join(ortP.select(col("src"), col("dst").as("y")), "src")
@@ -383,7 +383,7 @@ object Graph {
     * single 10⁶-degree hub under the old permissive default would alone
     * emit ~5·10¹¹ candidate pairs at 100× scale. The wedge self-join
     * carries an explicit-count repartition on the center key
-    * ([[Expansion.parts]]) so AQE's input-byte heuristic cannot fold the
+    * ([[Partitions.parts]]) so AQE's input-byte heuristic cannot fold the
     * quadratic expansion onto few tasks; `minCommon` prunes the
     * candidate relation before the degree joins; the linked-pair
     * anti-join and the two degree joins are all key joins on
@@ -435,7 +435,7 @@ object Graph {
       .groupBy("node").agg(count(lit(1)).as("deg"))
     val adjAll = e.select(col("a").as("w"), col("b").as("n"))
       .unionAll(e.select(col("b").as("w"), col("a").as("n")))
-    val nParts = Expansion.parts(edges.sparkSession)
+    val nParts = Partitions.parts(edges.sparkSession)
     // the capped adjacency feeds BOTH wedge-join sides through one
     // center-keyed exchange, the co-partitioned input that lets the
     // self-join run without another shuffle

@@ -309,7 +309,7 @@ object Profile {
     // real many-row-group data the guard sees enough splits and the plan
     // stays exchange-free. base0 has no exchanges, so .rdd here only
     // compiles the plan — it cannot trigger a job.
-    val par = df.sparkSession.sparkContext.defaultParallelism
+    val par = Partitions.base(df.sparkSession)
     val base =
       if (base0.rdd.getNumPartitions * 2 < par) base0.repartition(par)
       else base0

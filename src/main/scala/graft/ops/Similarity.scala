@@ -285,24 +285,17 @@ object Similarity {
     */
   private[ops] def kmeansFitFull(embs: DataFrame, idCol: String,
                                  vecCol: String, k: Int, iters: Int,
-                                 scale: Double = 1e6): DataFrame = {
-    require(k > 0, s"k must be positive, got $k")
-    require(iters >= 1, s"iters must be >= 1, got $iters")
-    require(scale > 0 && scale <= 1e7,
-      s"scale must be in (0, 1e7], got $scale")
-    val probe = embs.select(max(size(col(vecCol))).as("d")).head()
-    if (probe.isNullAt(0))
-      return embs.select(col(idCol),
+                                 scale: Double = 1e6): DataFrame =
+    lloydInput(embs, idCol, vecCol, k, iters, scale) match {
+      case None => embs.select(col(idCol),
         array().cast("array<long>").as("svec"),
         lit(0L).as("cluster"), lit(0L).as("dist2")).limit(0)
-    val d = probe.getInt(0)
-    // checkpointed: the seed job (which materializes it), every Lloyd
-    // round's update and the returned assignment all read this relation
-    val sv = embs.filter(size(col(vecCol)) === d)
-      .select(col(idCol), scaleVec(col(vecCol), scale).as("svec"))
-      .localCheckpoint(false)
-    assignSv(sv, idCol, centroidsFromSv(sv, idCol, d, k, iters))
-  }
+      case Some((d, scaled)) =>
+        // checkpointed: the seed job (which materializes it), every Lloyd
+        // round's update and the returned assignment all read this relation
+        val sv = scaled.localCheckpoint(false)
+        assignSv(sv, idCol, centroidsFromSv(sv, idCol, d, k, iters))
+    }
 
   /** The FROZEN codebook [[kmeansFit]] trains: the (cluster, cvec)
     * centroid relation after iters−1 Lloyd updates — exactly the
@@ -315,24 +308,38 @@ object Similarity {
     * bit-identical.
     */
   def kmeansCentroids(embs: DataFrame, idCol: String, vecCol: String,
-                      k: Int, iters: Int, scale: Double = 1e6): DataFrame = {
+                      k: Int, iters: Int, scale: Double = 1e6): DataFrame =
+    lloydInput(embs, idCol, vecCol, k, iters, scale) match {
+      case None => embs.select(lit(0L).as("cluster"),
+        array().cast("array<long>").as("cvec")).limit(0)
+      case Some((d, scaled)) =>
+        // persisted across the Lloyd rounds (each round's codebook collect
+        // is a driver action that would otherwise re-scan + re-scale the
+        // corpus from parquet — the r16-verdict q277 regression); the
+        // k-row codebook is materialized before sv is released
+        withPersisted(scaled) { sv =>
+          centroidsFromSv(sv, idCol, d, k, iters).localCheckpoint(true)
+        }
+    }
+
+  /** What a Lloyd run reads, after checking its arguments (`scale` has the
+    * same Long-overflow headroom bound as centroidOutliers): None when no
+    * row has a vector, else the corpus's max width d and the lazy
+    * (idCol, svec) relation of the rows at that width (the ragged-row
+    * contract). One probe action. */
+  private def lloydInput(embs: DataFrame, idCol: String, vecCol: String,
+                         k: Int, iters: Int,
+                         scale: Double): Option[(Int, DataFrame)] = {
     require(k > 0, s"k must be positive, got $k")
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    // same Long-overflow headroom bound as centroidOutliers
     require(scale > 0 && scale <= 1e7,
       s"scale must be in (0, 1e7], got $scale")
     val probe = embs.select(max(size(col(vecCol))).as("d")).head()
-    if (probe.isNullAt(0))
-      return embs.select(lit(0L).as("cluster"),
-        array().cast("array<long>").as("cvec")).limit(0)
-    val d = probe.getInt(0)
-    // persisted across the Lloyd rounds (each round's codebook collect is
-    // a driver action that would otherwise re-scan + re-scale the corpus
-    // from parquet — the r16-verdict q277 regression); the k-row codebook
-    // is materialized before sv is released
-    withPersisted(embs.filter(size(col(vecCol)) === d)
-        .select(col(idCol), scaleVec(col(vecCol), scale).as("svec"))) { sv =>
-      centroidsFromSv(sv, idCol, d, k, iters).localCheckpoint(true)
+    if (probe.isNullAt(0)) None
+    else {
+      val d = probe.getInt(0)
+      Some((d, embs.filter(size(col(vecCol)) === d)
+        .select(col(idCol), scaleVec(col(vecCol), scale).as("svec"))))
     }
   }
 
@@ -382,17 +389,10 @@ object Similarity {
     * ragged-row contract); empty input yields the empty relation.
     */
   def scaledVectors(embs: DataFrame, idCol: String, vecCol: String,
-                    scale: Double = 1e6): DataFrame = {
-    require(scale > 0 && scale <= 1e7,
-      s"scale must be in (0, 1e7], got $scale")
-    val probe = embs.select(max(size(col(vecCol))).as("d")).head()
-    if (probe.isNullAt(0))
-      return embs.select(col(idCol),
-        array().cast("array<long>").as("svec")).limit(0)
-    val d = probe.getInt(0)
-    embs.filter(size(col(vecCol)) === d)
-      .select(col(idCol), scaleVec(col(vecCol), scale).as("svec"))
-  }
+                    scale: Double = 1e6): DataFrame =
+    lloydInput(embs, idCol, vecCol, k = 1, iters = 1, scale).fold(
+      embs.select(col(idCol), array().cast("array<long>").as("svec"))
+        .limit(0))(_._2)
 
   /** kmeansFit's loop body: nearest centroid per vector by exact BIGINT
     * dist2 (ties to the lower cluster id).
@@ -1106,7 +1106,7 @@ object Similarity {
     * (deterministic, oracle-reproducible), ties on (cosine DESC, id).
     *
     * Scale: one signature pass, one bucket self-join repartitioned by
-    * bucket key with an explicit count ([[graft.ops.Expansion]] rule —
+    * bucket key with an explicit count ([[Partitions.parts]] rule —
     * quadratic OUTPUT from small input, AQE must not fold it), two rank
     * windows partitioned by anchor.
     */
@@ -1119,7 +1119,7 @@ object Similarity {
       .join(embs.select(col(idCol).as("_id"), col(labelCol).as("_lbl"))
         .filter(col("_lbl").isNotNull), "_id")
       .join(sig.withColumnRenamed(idCol, "_id"), "_id")
-    val nParts = Expansion.parts(embs.sparkSession)
+    val nParts = Partitions.parts(embs.sparkSession)
     val b = base.repartition(nParts, col("sig"))
     val pairs = b.select(col("sig"), col("_id").as("a_id"),
         col("_lbl").as("a_lbl"), col("_vec").as("a_vec"),

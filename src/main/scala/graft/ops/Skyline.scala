@@ -28,11 +28,11 @@ object Skyline {
     * bucket key), which collapses the corpus to ≤ buckets·|frontier-ish|
     * survivors; pass 2 re-runs it globally over that small relation — a
     * single-partition window, priced on survivors, never on the corpus.
+    * `buckets` ≤ 0 takes the session's [[Partitions.base]].
     */
   def paretoFrontier2D(df: DataFrame, idCol: String, xCol: Column,
                        yCol: Column, buckets: Int = 0): DataFrame = {
-    val nb = if (buckets > 0) buckets
-             else df.sparkSession.sparkContext.defaultParallelism
+    val nb = if (buckets > 0) buckets else Partitions.base(df.sparkSession)
     def survivors(in: DataFrame, part: Seq[String]): DataFrame = {
       val wBase = if (part.isEmpty) Window.orderBy(col("x"))
                   else Window.partitionBy(part.map(col): _*).orderBy(col("x"))

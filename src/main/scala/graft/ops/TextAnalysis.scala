@@ -921,9 +921,8 @@ object TextAnalysis {
     // count applies (no ×3 slack, one task wave per stage at the floor-
     // dominated end); an unpruned corpus keeps the full slack.
     val nParts =
-      if (maxDf != Long.MaxValue)
-        graft.ops.Expansion.boundedCellParts(docs.sparkSession)
-      else graft.ops.Expansion.parts(docs.sparkSession)
+      if (maxDf != Long.MaxValue) Partitions.boundedCellParts(docs.sparkSession)
+      else Partitions.parts(docs.sparkSession)
     // tf counts fused INTO the shingle-hash expression (one map per row)
     // — the (doc, term) relation is unique per doc by construction, so
     // the posting build has NO doc-keyed aggregation exchange; df comes
@@ -1641,8 +1640,7 @@ object TextAnalysis {
         // explicit count: AQE's input-byte coalescing would see only the
         // small raw-doc shuffle and fold the expensive explode+window
         // work onto one task (the q173 lesson)
-        val base = docs.repartition(
-            docs.sparkSession.sessionState.conf.numShufflePartitions,
+        val base = docs.repartition(Partitions.base(docs.sparkSession),
             col(idCol))
           .select(col(idCol).as("_id"),
             col(langCol).as("_lang"),
@@ -2100,8 +2098,8 @@ object TextAnalysis {
       // explicit count: the text relation is small in BYTES (AQE would
       // coalesce it to 1-2 partitions) but each row fans out into
       // n_grams sha256 evaluations — the CPU-per-byte exemption
-      // Expansion.boundedCellParts documents (the q173 lesson)
-      .repartition(graft.ops.Expansion.boundedCellParts(docs.sparkSession),
+      // Partitions.boundedCellParts documents (the q173 lesson)
+      .repartition(Partitions.boundedCellParts(docs.sparkSession),
         col(idCol))
       .select(col(idCol), size(col("_ws")).as("_n"),
         posexplode(transform(

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.ops.{Decontamination, Dedup, Diff, EventAnalytics, Formats, Graph, Intervals, Multimodal, Output, Profile, Regression, Sampling, Sessionize, Similarity, TextAnalysis}
+import graft.ops.{Decontamination, Dedup, Diff, EventAnalytics, Formats, Graph, Intervals, Multimodal, Output, Partitions, Profile, Regression, Sampling, Sessionize, Similarity, TextAnalysis}
 
 /** Scale-extension queries: dedup suite, similarity search, text analysis,
   * multimodal binary plumbing — each oracle-backed over `documents` /
@@ -1226,7 +1226,7 @@ object Extensions {
       FROM documents ORDER BY doc_id"""),
     (s, dir) => {
       import s.implicits._
-      val payloads = t(s, dir, "documents").select("doc_id").repartition(s.sparkContext.defaultParallelism).as[Long]
+      val payloads = t(s, dir, "documents").select("doc_id").repartition(Partitions.base(s)).as[Long]
         .mapPartitions(_.map { id =>
           val w = (id % 64 + 16).toInt
           val h = (id % 48 + 16).toInt
@@ -1259,7 +1259,7 @@ object Extensions {
       FROM documents ORDER BY doc_id"""),
     (s, dir) => {
       import s.implicits._
-      val payloads = t(s, dir, "documents").select("doc_id").repartition(s.sparkContext.defaultParallelism).as[Long]
+      val payloads = t(s, dir, "documents").select("doc_id").repartition(Partitions.base(s)).as[Long]
         .mapPartitions(_.map { id =>
           val w = (id % 40 + 8).toInt
           val h = (id % 30 + 8).toInt
@@ -2420,7 +2420,7 @@ object Extensions {
       ORDER BY doc_a, doc_b"""),
     (s, dir) => {
       import s.implicits._
-      val sigs = t(s, dir, "documents").select("doc_id").repartition(s.sparkContext.defaultParallelism).as[Long]
+      val sigs = t(s, dir, "documents").select("doc_id").repartition(Partitions.base(s)).as[Long]
         .mapPartitions(_.flatMap { id =>
           val bx = (id * 7 % 9).toInt
           val by = (id * 11 % 8).toInt
@@ -3522,7 +3522,7 @@ object Extensions {
       ORDER BY doc_id"""),
     (s, dir) => {
       import s.implicits._
-      val payloads = t(s, dir, "documents").select("doc_id").repartition(s.sparkContext.defaultParallelism).as[Long]
+      val payloads = t(s, dir, "documents").select("doc_id").repartition(Partitions.base(s)).as[Long]
         .mapPartitions(_.map { id =>
           val n = (400 + (id % 5) * 100).toInt
           val rate = (8000 + (id % 3) * 4000).toInt
@@ -4006,7 +4006,7 @@ object Extensions {
       FROM l GROUP BY 1 ORDER BY doc_id"""),
     (s, dir) => {
       import s.implicits._
-      val payloads = t(s, dir, "documents").select("doc_id").repartition(s.sparkContext.defaultParallelism).as[Long]
+      val payloads = t(s, dir, "documents").select("doc_id").repartition(Partitions.base(s)).as[Long]
         .mapPartitions(_.map { id =>
           val w = (id % 64 + 16).toInt
           val h = (id % 48 + 16).toInt
@@ -4131,7 +4131,7 @@ object Extensions {
       FROM documents ORDER BY doc_id"""),
     (s, dir) => {
       import s.implicits._
-      t(s, dir, "documents").select("doc_id").repartition(s.sparkContext.defaultParallelism).as[Long]
+      t(s, dir, "documents").select("doc_id").repartition(Partitions.base(s)).as[Long]
         .mapPartitions(_.flatMap { id =>
           val n = (700 + (id % 3) * 200).toInt
           val lead = ((id % 3) * 100).toInt

@@ -41,7 +41,7 @@ object Explain {
         f" + force ${(t2 - t1) / 1e9}%.2f s = ${(t2 - t0) / 1e9}%.2f s")
       graft.TempDirs.sweep()
     }
-    Thread.sleep(500) // let the listener bus drain
+    org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(spark)
     stages.sortBy(_._2).foreach { case (id, sub, done, n, nm) =>
       println(f"[stage] id=$id%-4d wall=${(done - sub) / 1000.0}%6.3fs tasks=$n%-3d $nm")
     }

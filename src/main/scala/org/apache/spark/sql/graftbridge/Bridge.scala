@@ -16,4 +16,8 @@ object Bridge {
   def cachedEntries(spark: SparkSession): Int =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sharedState.cacheManager.numCachedEntries
+
+  /** Blocks until every listener has handled every event posted so far. */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

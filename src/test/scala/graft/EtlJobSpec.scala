@@ -25,7 +25,7 @@ class RecordingTransport(inner: graft.connect.MockTransport)
   override def send(r: graft.connect.HttpRequest): graft.connect.HttpResponse = {
     // materialize streamed bodies: the sender deletes its temp body file
     // right after send returns, but assertions read the log later
-    EtlJobSpecLog.log.add(r.copy(body = r.effectiveBody, bodyFile = None))
+    EtlJobSpecLog.log.add(r.copy(body = r.effectiveBody))
     inner.send(r)
   }
 }

@@ -1,10 +1,14 @@
 package graft
 
+import java.net.URI
 import java.nio.file.{FileSystems, Files}
 import java.nio.file.attribute.PosixFilePermission
 
-import org.apache.hadoop.fs.{FileAlreadyExistsException, FSDataOutputStream,
-  LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem,
+  FileAlreadyExistsException, FileStatus, FSDataOutputStream, FsConstants,
+  FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
 
@@ -20,9 +24,41 @@ import org.apache.hadoop.util.Progressable
   *
   * It also makes `create(…, overwrite = false)` exclusive, which the ledger's
   * writer lock relies on (see [[NioLocalFileSystem.Raw]]).
+  *
+  * [[NioLocalFs]] is its `FileContext` twin.
   */
 class NioLocalFileSystem(raw: NioLocalFileSystem.Raw) extends LocalFileSystem(raw) {
   def this() = this(new NioLocalFileSystem.Raw)
+}
+
+/** The `file:` `AbstractFileSystem` [[Tables.session]] installs
+  * (`spark.hadoop.fs.AbstractFileSystem.file.impl`), which `FileContext`
+  * uses: streaming checkpoints and state stores write through it. It is
+  * Hadoop's `LocalFs` (checksummed, over `RawLocalFs`) with
+  * [[NioLocalFileSystem.Raw]] under it in place of `RawLocalFileSystem`, so
+  * it sets modes without forking `chmod` and answers `getFileLinkStatus`
+  * for a non-link without forking `readlink`. Written out, not subclassed:
+  * `LocalFs`' and `RawLocalFs`' constructors are package-private.
+  */
+class NioLocalFs(uri: URI, conf: Configuration)
+    extends ChecksumFs(new NioLocalFs.Raw(uri, conf)) {
+  def this(conf: Configuration) = this(FsConstants.LOCAL_FS_URI, conf)
+}
+
+object NioLocalFs {
+  /** `RawLocalFs` over [[NioLocalFileSystem.Raw]], with its three overrides. */
+  class Raw(uri: URI, conf: Configuration) extends DelegateToFileSystem(uri,
+      new NioLocalFileSystem.Raw, conf, FsConstants.LOCAL_FS_URI.getScheme, false) {
+    override def getUriDefaultPort: Int = -1 // no default port for file:///
+
+    override def getServerDefaults(f: Path): FsServerDefaults =
+      LocalConfigKeys.getServerDefaults
+
+    override def getServerDefaults: FsServerDefaults =
+      LocalConfigKeys.getServerDefaults
+
+    override def isValidName(src: String): Boolean = true // any local path
+  }
 }
 
 object NioLocalFileSystem {
@@ -56,6 +92,14 @@ object NioLocalFileSystem {
       }
       try open() catch { case e: Throwable => Files.deleteIfExists(file); throw e }
     }
+
+    /** Hadoop's own answer forks `readlink` for every path; for anything
+      * that is not a symlink it then returns `getFileStatus`, which this
+      * returns directly. A symlink, dangling or not, keeps Hadoop's path.
+      */
+    override def getFileLinkStatus(f: Path): FileStatus =
+      if (Files.isSymbolicLink(pathToFile(f).toPath)) super.getFileLinkStatus(f)
+      else getFileStatus(f)
 
     override def setPermission(p: Path, permission: FsPermission): Unit = {
       val mode = permission.toShort.toInt // rwx bits, plus 01000 if sticky

@@ -3,12 +3,16 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.ParquetFooters
+
 /** Canonical readers for the driver-provided parquet testdata
   * (`/root/testdata/sf*`, see TESTDATA.md).
   *
   * Scale notes (100 TB posture): every reader returns a plain parquet scan so
   * Catalyst keeps predicate pushdown / column pruning / partition pruning.
-  * Nothing here collects or caches on the driver.
+  * Nothing here collects or caches on the driver, and no read of a file or
+  * a flat directory runs a schema-inference job: the schema comes from a
+  * footer read on the driver ([[ParquetFooters]]).
   */
 object Tables {
 
@@ -26,7 +30,7 @@ object Tables {
     * since epoch exceed 2^53 and double division would lose precision).
     */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    val raw = spark.read.parquet(s"$dir/events.parquet")
+    val raw = ParquetFooters.read(spark, s"$dir/events.parquet")
     normalizeTs(raw, raw.schema)
   }
 
@@ -55,7 +59,7 @@ object Tables {
     * with a different `ts` physical type (an r6 lesson: LongType over a
     * TIMESTAMP(MICROS) file reads raw micros, `div 1000` then lands every
     * event in January 1970 — one giant window, exploded interval joins).
-    * Probe the real footer schema with a metadata-only batch read, stream
+    * Probe the real footer schema on the driver ([[ParquetFooters]]), stream
     * with THAT, and normalize `ts` after load exactly like the batch path.
     *
     * The file source needs a directory: the driver's testdata keeps each
@@ -69,7 +73,7 @@ object Tables {
     val p = new org.apache.hadoop.fs.Path(dir, leaf)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     val isDir = fs.exists(p) && fs.getFileStatus(p).isDirectory
-    val rawSchema = spark.read.parquet(p.toString).schema
+    val rawSchema = ParquetFooters.read(spark, p.toString).schema
     val stream =
       if (isDir) spark.readStream.schema(rawSchema).parquet(p.toString)
       else spark.readStream.schema(rawSchema)
@@ -83,7 +87,7 @@ object Tables {
     */
   def dirStream(spark: SparkSession, dir: String): DataFrame = {
     val rawSchema =
-      try spark.read.parquet(dir).schema
+      try ParquetFooters.read(spark, dir).schema
       catch {
         // ONLY the empty-staging-dir case gets the staging hint; any other
         // AnalysisException (missing path, corrupt footer, permissions)
@@ -99,7 +103,7 @@ object Tables {
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") events(spark, dir)
-    else spark.read.parquet(s"$dir/$name.parquet")
+    else ParquetFooters.read(spark, s"$dir/$name.parquet")
 
   /** The local core count every main runs at: `$SPARK_GRAFT_CPUS`, else
     * every processor this JVM may use.
@@ -115,8 +119,9 @@ object Tables {
     * of every explicit count, see [[graft.ops.Partitions]]), AQE on,
     * nanos-precision parquet timestamps read as longs ([[events]]), a
     * generated-class cache that holds a session's working set, and `file:`
-    * paths through [[NioLocalFileSystem]] (no `chmod` fork per created
-    * file; `hdfs:`/`s3a:` paths are unaffected).
+    * paths through [[NioLocalFileSystem]] and, for `FileContext` (streaming
+    * checkpoints and state stores), [[NioLocalFs]]: no `chmod` or
+    * `readlink` fork per file; `hdfs:`/`s3a:` paths are unaffected.
     */
   def session(appName: String, cores: String): SparkSession = {
     val spark = SparkSession.builder()
@@ -132,11 +137,19 @@ object Tables {
       // reusing them, and each warm DAG run recompiled ~70 of them; at
       // 1000, a few times the larger working set, it compiles 4
       .config("spark.sql.codegen.cache.maxEntries", "1000")
+      // the cache is keyed by class loader too, and with per-session
+      // artifact isolation each session's tasks get their own: every
+      // streaming query runs in a fresh clone of the session, so q33
+      // recompiled its 14 classes on every run. Nothing here adds
+      // session artifacts (jars, files) to isolate
+      .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[NioLocalFs].getName)
       .getOrCreate()
     // SPARK_GRAFT_STATE_STORE=rocksdb — the 100 TB posture for unbounded
     // streaming state (see graft.streaming.StateStores for the trade-off)

@@ -10,6 +10,7 @@ import graft.Tables
 import graft.ops.withPersisted
 import graft.etl.Stages
 import graft.functions.Etl
+import graft.sources.ParquetFooters
 
 /** The flagship end-to-end pipeline query (SURVEY.md §7.2) plus incremental
   * upsert semantics, exercised through the real `graft.etl.Stages` library
@@ -227,7 +228,7 @@ object Pipeline {
     def prepare(t: DataFrame, src: String, cp: String,
                 ledger: graft.ledger.Ledger): () => Long = {
       rows(t).coalesce(1).write.parquet(src)
-      val schema = t.sparkSession.read.parquet(src).schema
+      val schema = ParquetFooters.read(t.sparkSession, src).schema
       () => graft.streaming.IncrementalIngest.runIntoLedger(
         t.sparkSession, src, schema, cp, ledger)
     }
@@ -235,7 +236,7 @@ object Pipeline {
 
   /** Stream the parquet files under `dir` one per micro-batch. */
   private def fileStream(s: SparkSession, dir: String): DataFrame =
-    s.readStream.schema(s.read.parquet(dir).schema)
+    s.readStream.schema(ParquetFooters.read(s, dir).schema)
       .option("maxFilesPerTrigger", 1).parquet(dir)
 
   /** Copy every parquet file in `dir` once more under a new name: an

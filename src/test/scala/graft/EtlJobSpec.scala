@@ -77,6 +77,42 @@ object EtlJobSpecLive {
   /** The upload POSTs since the log was cleared. */
   def uploads(): Seq[HttpRequest] = EtlJobSpecLog.log.asScala
     .filter(r => r.url == "https://dmp/graphql" && r.body.nonEmpty).toSeq
+
+  /** One small DAG day under `base`: lookups, assignments and five incoming
+    * records, of which two groups upload and settle (U3's serial has no
+    * device and U4 has no serial, so those rows stay open). Returns
+    * `EtlJob.run`'s options, with the ledger and workdir under `base/run`.
+    */
+  def smallDay(spark: org.apache.spark.sql.SparkSession,
+               base: java.nio.file.Path): Map[String, String] = {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    Files.write(base.resolve("uid_serial.csv"), "U1,S1\nU2,S2\nU3,S3\n".getBytes)
+    Files.write(base.resolve("serial_id.csv"), "S1,DEV-1\nS2,DEV-2\n".getBytes)
+    Seq(("DEV-1", "P-A", "2021-11-01 00:00:00", null: String),
+      ("DEV-2", "P-B", "2021-11-01 00:00:00", "2021-11-30 00:00:00"))
+      .toDF("device_id", "patient_id", "sw", "ew")
+      .select(col("device_id"), col("patient_id"),
+        col("sw").cast("timestamp").as("start_wear"),
+        col("ew").cast("timestamp").as("end_wear"))
+      .write.parquet(s"$base/assignments")
+    Seq(("r1", "U1", "2021-11-10 13:00:00"), ("r2", "U1", "2021-11-10 16:00:00"),
+      ("r3", "U2", "2021-11-11 13:00:00"), ("r4", "U3", "2021-11-10 14:00:00"),
+      ("r5", "U4", "2021-11-10 15:00:00"))
+      .toDF("manufacturer_ref", "uid", "s")
+      .select(col("manufacturer_ref"), lit("DRM").as("device_type"),
+        col("s").cast("timestamp").as("start"),
+        (col("s").cast("timestamp") + expr("INTERVAL 2 HOURS")).as("end"),
+        map(lit("dreem_uid"), col("uid")).as("meta"))
+      .write.parquet(s"$base/incoming")
+    val run = base.resolve("run")
+    Map(
+      "ledger" -> s"$run/ledger", "incoming" -> s"$base/incoming",
+      "uid-serial" -> s"$base/uid_serial.csv",
+      "serial-id" -> s"$base/serial_id.csv",
+      "assignments" -> s"$base/assignments",
+      "workdir" -> s"$run/work", "today" -> "2021-12-01") ++ flags
+  }
 }
 
 /** Drives the runnable job end-to-end (the SparkSubmitOperator surface).

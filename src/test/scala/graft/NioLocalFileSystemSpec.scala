@@ -2,12 +2,16 @@ package graft
 
 import java.net.URI
 import java.nio.file.{Files, Path => NioPath}
-
-import org.apache.hadoop.conf.Configuration
 import java.util.concurrent.{Callable, CountDownLatch, Executors}
 
-import org.apache.hadoop.fs.{FileAlreadyExistsException, FileSystem,
-  LocalFileSystem, Path}
+import scala.jdk.CollectionConverters._
+
+import jdk.jfr.Recording
+import jdk.jfr.consumer.RecordingFile
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{CreateFlag, FileAlreadyExistsException,
+  FileContext, FileStatus, FileSystem, LocalFileSystem, Options, Path,
+  RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 
 class NioLocalFileSystemSpec extends SparkSpec {
@@ -27,6 +31,14 @@ class NioLocalFileSystemSpec extends SparkSpec {
     fs
   }
 
+  /** A `FileContext` over `impl` for `file:` with umask 000. */
+  private def context(impl: String): FileContext = {
+    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
+    conf.set("fs.permissions.umask-mode", "000")
+    conf.set("fs.AbstractFileSystem.file.impl", impl)
+    FileContext.getFileContext(URI.create("file:///"), conf)
+  }
+
   private def withDir(body: NioPath => Unit): Unit = {
     val root = Files.createTempDirectory("nio-fs-spec")
     try body(root) finally TempDirs.deleteRecursively(root)
@@ -38,6 +50,121 @@ class NioLocalFileSystemSpec extends SparkSpec {
     assert(fs.isInstanceOf[NioLocalFileSystem])
     assert(fs.asInstanceOf[LocalFileSystem].getRaw
       .isInstanceOf[NioLocalFileSystem.Raw])
+  }
+
+  test("the shared session's FileContext for file:/// is NioLocalFs") {
+    val fc = FileContext.getFileContext(URI.create("file:///"),
+      spark.sessionState.newHadoopConf())
+    assert(fc.getDefaultFileSystem.isInstanceOf[NioLocalFs])
+    assert(fc.getDefaultFileSystem.asInstanceOf[NioLocalFs].getRawFs
+      .isInstanceOf[NioLocalFs.Raw])
+  }
+
+  test("getFileLinkStatus answers as the stock RawLocalFileSystem for files, dirs, symlinks and missing paths") {
+    withDir { root =>
+      val nio = init(new NioLocalFileSystem.Raw)
+      val stock = init(new RawLocalFileSystem) // forks readlink: the reference
+      val file = Files.write(root.resolve("f"), Array[Byte](1, 2, 3))
+      val dir = Files.createDirectory(root.resolve("d"))
+      Files.createSymbolicLink(root.resolve("link"), file)
+      Files.createSymbolicLink(root.resolve("dangling"), root.resolve("gone"))
+      def seen(st: FileStatus) = (st.getPath, st.isFile, st.isDirectory,
+        st.isSymlink, if (st.isSymlink) Some(st.getSymlink) else None,
+        st.getLen, st.getPermission, st.getOwner, st.getGroup,
+        st.getModificationTime)
+      /** The status, or the class of what was thrown. */
+      def answer(fs: FileSystem, p: Path) =
+        scala.util.Try(seen(fs.getFileLinkStatus(p))).toEither.left.map(_.getClass)
+      val missing = root.resolve("missing")
+      // the stock filesystem sees a link only through a scheme-less path (it
+      // runs `readlink` on the path's string); FileContext passes file: ones
+      for (p <- Seq(file, dir, root.resolve("link"), root.resolve("dangling"),
+          missing); h <- Seq(new Path(p.toUri), new Path(p.toString)))
+        assert(answer(nio, h) == answer(stock, h), h)
+      for (p <- Seq("link", "dangling"))
+        assert(nio.getFileLinkStatus(new Path(root.resolve(p).toString)).isSymlink, p)
+      intercept[java.io.FileNotFoundException](
+        nio.getFileLinkStatus(new Path(missing.toString)))
+    }
+  }
+
+  test("FileContext mkdir, create and rename(OVERWRITE) leave the stock LocalFs's modes and .crc files") {
+    withDir { root =>
+      val sides = Seq("nio" -> context(classOf[NioLocalFs].getName),
+        "stock" -> context("org.apache.hadoop.fs.local.LocalFs"))
+      /** Each entry under `base`, relative, with its mode. */
+      def tree(base: NioPath): Seq[(String, Int)] = {
+        val all = Files.walk(base)
+        try all.iterator().asScala.filter(_ != base)
+          .map(p => base.relativize(p).toString -> mode(p)).toSeq.sorted
+        finally all.close()
+      }
+      for ((side, fc) <- sides; octal <- Seq("644", "600", "755", "700")) {
+        val dir = new Path(root.resolve(s"$side/$octal/a/b").toUri)
+        fc.mkdir(dir, perm(octal), true)
+        def write(name: String, byte: Int): Path = {
+          val p = new Path(dir, name)
+          val out = fc.create(p, java.util.EnumSet.of(CreateFlag.CREATE,
+            CreateFlag.OVERWRITE), Options.CreateOpts.perms(perm(octal)))
+          try out.write(byte) finally out.close()
+          p
+        }
+        val target = write("delta", 1)
+        // a checkpoint commit: write a temp file, rename it over the target
+        fc.rename(write(".delta.tmp", 2), target, Options.Rename.OVERWRITE)
+        val defaults = new Path(dir, "defaults")
+        fc.create(defaults, java.util.EnumSet.of(CreateFlag.CREATE)).close()
+        assert(Files.readAllBytes(root.resolve(s"$side/$octal/a/b/delta")).toSeq ==
+          Seq(2.toByte))
+      }
+      val nio = tree(root.resolve("nio"))
+      assert(nio.exists(_._1.endsWith(".delta.crc")), nio)
+      assert(nio == tree(root.resolve("stock")))
+    }
+  }
+
+  /** The processes this JVM started while `body` ran: each one's command
+    * and the frames of its stack outside `java.`/`jdk.`. */
+  private def processesStarted(body: => Unit): Seq[(String, Seq[String])] = {
+    val rec = new Recording()
+    rec.enable("jdk.ProcessStart").withStackTrace()
+    rec.start()
+    try body finally rec.stop()
+    val out = Files.createTempFile("graft-forks", ".jfr")
+    try {
+      rec.dump(out)
+      RecordingFile.readAllEvents(out).asScala.toSeq
+        .filter(_.getEventType.getName == "jdk.ProcessStart")
+        .map(e => e.getString("command") -> Option(e.getStackTrace).toSeq
+          .flatMap(_.getFrames.asScala).map(f =>
+            s"${f.getMethod.getType.getName}.${f.getMethod.getName}")
+          .filterNot(f => f.startsWith("java.") || f.startsWith("jdk.")))
+    } finally { rec.close(); Files.delete(out) }
+  }
+
+  test("q33, a RocksDB-provider drain and an EtlJob day start no process from Hadoop or graft code") {
+    val sf = "/root/testdata/sf0.001"
+    val opts = EtlJobSpecLive.smallDay(spark,
+      Files.createTempDirectory("graft-forks-etl"))
+    val shape = graft.queries.Pipeline.ingestDedup
+    val started = processesStarted {
+      SparkEntry.queries("q33_streaming_ingest")(spark, sf)
+        .write.format("noop").mode("overwrite").save()
+      graft.streaming.Drain.toMemory(shape.query(spark, sf,
+        () => Tables.tableStream(spark, sf, s"${shape.table}.parquet")),
+        TempDirs.create("graft-forks-cp").toString, shape.mode, Some("rocksdb"))
+      EtlJob.run(spark, opts, EtlJobSpecLive.transport())
+    }
+    // what Spark itself starts is out of graft's reach: its RocksDB provider
+    // deletes local state dirs with `rm -rf` (JavaUtils.deleteRecursively),
+    // RocksDB's loader probes libc once, the heartbeat reads the page size
+    // once
+    val (ours, others) = started.partition(_._2.exists(f =>
+      f.startsWith("org.apache.hadoop.") || f.startsWith("graft.")))
+    others.groupBy { case (c, st) => (c.takeWhile(_ != ' '), st.headOption) }
+      .foreach { case (k, v) => info(s"started by Spark: ${v.size} x $k") }
+    assert(ours.size == 0, "processes: " +
+      ours.groupBy(_._1.takeWhile(_ != ' ')).map { case (c, v) => s"${v.size} x $c" })
   }
 
   test("created files, .crc sidecars and dirs get the stock RawLocalFileSystem's modes") {

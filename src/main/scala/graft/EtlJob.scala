@@ -243,10 +243,12 @@ object EtlJob {
     val uploadLimit = opts.getOrElse("upload-limit", "100000").toInt
     require(uploadLimit > 0, s"--upload-limit must be at least 1, not $uploadLimit")
     if (!ledger.exists) return Seq("pending_groups" -> 0L, "uploaded_groups" -> 0L)
-    // the batch's top-k reads every manifest group, so an observation on
+    // the manifest reads the whole ledger in one scan and drops finished
+    // groups itself, so a group a late record re-opens is re-sent whole.
+    // The batch's top-k reads every manifest group, so an observation on
     // its input counts the pending groups in the transfer's own pass
     val pending = Observation()
-    val batch = Stages.uploadManifest(ledger.unfinished())
+    val batch = Stages.uploadManifest(ledger.read())
       .observe(pending, count(lit(1)).as("groups"))
       .orderBy(col("dmp_id")).limit(uploadLimit)
     val (fetch, push) = liveTransfer(opts, transport)

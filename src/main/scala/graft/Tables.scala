@@ -151,10 +151,6 @@ object Tables {
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
         classOf[NioLocalFs].getName)
       .getOrCreate()
-    // SPARK_GRAFT_STATE_STORE=rocksdb — the 100 TB posture for unbounded
-    // streaming state (see graft.streaming.StateStores for the trade-off)
-    sys.env.get("SPARK_GRAFT_STATE_STORE")
-      .foreach(graft.streaming.StateStores.configure(spark, _))
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

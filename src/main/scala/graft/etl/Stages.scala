@@ -232,7 +232,7 @@ object Stages {
           Etl.bucketEnd(col("start"), cutOff)))))
   }
 
-  /** P6+J5+A4+A5 — per-group upload manifest of unfinished groups
+  /** P6+J5+A4+A5 — per-group upload manifest of the groups not fully uploaded
     * (dags/dreem.py:153-234): member refs, size, partial-upload flag.
     *
     * `skipPartial=true` replicates the reference exactly: a group that is

@@ -124,21 +124,6 @@ final class Ledger(spark: SparkSession, path: String) extends LedgerStore {
 
   private def parts(): Seq[Path] = Seq(openDir, settledDir).filter(fs.exists)
 
-  /** The open rows, plus the settled rows of their groups: a late record
-    * re-opens an uploaded group, whose settled members must be re-sent
-    * with it. */
-  override def unfinished(): DataFrame = {
-    locked("unfinished")(())
-    if (!fs.exists(settledDir)) scan(Seq(openDir))
-    else {
-      val schema = scan(parts()).schema // one footer for both parts
-      def part(dir: Path) = spark.read.schema(schema).parquet(dir.toString)
-      val open = part(openDir)
-      open.unionByName(part(settledDir).join(
-        broadcast(open.select("dmp_id")), Seq("dmp_id"), "left_semi"))
-    }
-  }
-
   /** The ledger is SINGLE-writer (as its Mongo counterpart was via document
     * atomicity): two concurrent rewrites could interleave their renames and
     * publish a mix of both runs. Every entry point takes this exclusive

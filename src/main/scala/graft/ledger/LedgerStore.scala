@@ -45,10 +45,6 @@ trait LedgerStore {
     * ids are the groups a run transferred, collected and bounded by the
     * caller's upload limit. */
   def markUploaded(dmpIds: Seq[String]): Unit
-  /** The rows an upload manifest needs: every row of each group that has a
-    * row not yet uploaded. A store may return more, since the manifest
-    * drops finished groups; by default it returns every row. */
-  def unfinished(): DataFrame = read()
 }
 
 object LedgerStore {

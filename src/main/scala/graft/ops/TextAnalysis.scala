@@ -1631,12 +1631,9 @@ object TextAnalysis {
     // second corpus scan. Distinct corpora keep the two-pass general path.
     val (profiles, docGrams, docN) =
       if (train eq docs) {
-        // ONE exchange for the whole doc side: repartition the raw docs by
-        // id BEFORE the explode — HashPartitioning(_id) satisfies every
-        // downstream requirement (the (id, lang, gram) aggregate, both
-        // doc-partitioned windows, the docN aggregate and the final id
-        // join), so none of them shuffles; only the raw doc rows move,
-        // never the exploded gram stream.
+        // repartition the raw docs by id BEFORE the explode: the (id,
+        // lang, gram) aggregate then needs no exchange, and only the raw
+        // doc rows move, never the exploded gram stream.
         // explicit count: AQE's input-byte coalescing would see only the
         // small raw-doc shuffle and fold the expensive explode+window
         // work onto one task (the q173 lesson)
@@ -1648,8 +1645,9 @@ object TextAnalysis {
           .groupBy(col("_id"), col("_lang"), col("gram"))
           .agg(count(lit(1)).as("cnt"))
           // checkpointed for the THREE consumers (profiles, ranks, gram
-          // counts) of the returned plan; the checkpoint keeps the id
-          // partitioning
+          // counts) of the returned plan. The checkpoint keeps no
+          // partitioning (see ops.withPersisted), so the doc-side windows
+          // and joins above it shuffle the counts by id again
           .localCheckpoint(false)
         val lp = rankTop(base.filter(col("_lang").isNotNull)
           .groupBy(col("_lang").as("lang"), col("gram"))
@@ -2175,12 +2173,8 @@ object TextAnalysis {
     // r14 Explain audit showed two documents scans, no ReusedExchange).
     // A lazy localCheckpoint computes it once and feeds both sides from
     // the materialized (doc, fp) relation — which is ~1/window of gram
-    // volume, the cheapest thing in this operator to hold. Checkpointed
-    // PRE-PARTITIONED by fp: Dataset.localCheckpoint preserves
-    // outputPartitioning, so both join sides arrive co-partitioned and
-    // the equi-join plans with ZERO further exchanges.
+    // volume, the cheapest thing in this operator to hold.
     val fps = winnowFingerprints(docs, idCol, textCol, shingleSize, window)
-      .repartition(col("fp"))
       .localCheckpoint(false)
     val a = fps.toDF("doc_a", "fp")
     val b = fps.toDF("doc_b", "fp")
@@ -2241,10 +2235,9 @@ object TextAnalysis {
                      minShared: Long = 2L, maxPairs: Int = 0): DataFrame = {
     require(minShared >= 1L, s"minShared must be >= 1, got $minShared")
     val k = shingleSize.toLong
-    // fp-partitioned checkpoint for the same zero-exchange self-join as
-    // winnowMatches (partitioning survives localCheckpoint)
+    // checkpointed like winnowMatches' fingerprints: both join sides read it
     val fpp = winnowFingerprintsPos(docs, idCol, textCol, shingleSize,
-      window).repartition(col("fp")).localCheckpoint(false)
+      window).localCheckpoint(false)
     val a = fpp.toDF("doc_a", "fp", "pa")
     val b = fpp.toDF("doc_b", "fp", "pb")
     // jn feeds three consumers (pair screen + both coverage branches):

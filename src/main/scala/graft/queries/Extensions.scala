@@ -6635,10 +6635,8 @@ object Extensions {
       // AND the novel-band append (the whole point of the
       // annotateAgainstBands split — dedupAgainstBands would re-sign the
       // novel docs); ann1 serves the output and the survivor filter
-      // index checkpoint pre-partitioned by the join key (the q248
-      // bucketed-index shape) — both admission joins read it in place
       val bands0 = bandsFor(docs.filter(col("doc_id") % 2 === 0))
-        .repartition(col("band"), col("band_sig")).localCheckpoint(false)
+        .localCheckpoint(false)
       val b1bands = bandsFor(batch1).localCheckpoint(false)
       val ann1 = Dedup.annotateAgainstBands(batch1.select("doc_id"),
         b1bands, bands0, "doc_id").localCheckpoint(false)
@@ -7297,7 +7295,7 @@ object Extensions {
       val docs = t(s, dir, "documents")
       val c0 = TextAnalysis.unigramCensus(
         docs.filter(col("doc_id") % 4 === 0), "text")
-        .repartition(col("w")).localCheckpoint(false)
+        .localCheckpoint(false)
       val b1 = docs.filter(col("doc_id") % 4 === 1)
       val r1 = TextAnalysis.scoreAgainstCensus(b1, c0, "doc_id", "text",
         keepLoPpm = 4010000L, keepHiPpm = 10000000L).localCheckpoint(false)
@@ -7607,8 +7605,7 @@ object Extensions {
       "q265's production follow-through (its selection was a one-shot " +
       "batch): the even-id vectors train the 2-iteration codebook at " +
       "k = ceil(sqrt(n_evens)) and their SemDeDup keep set becomes the " +
-      "index, pre-partitioned by cluster (the q248 bucketed-index " +
-      "discipline); batch 1 (ids % 4 = 1) assigns to the FROZEN " +
+      "index; batch 1 (ids % 4 = 1) assigns to the FROZEN " +
       "centroids and is rejected by any index member within dist2 <= " +
       "1.2e12 in its cell (dup_of = the in-range member farthest from " +
       "the centroid, ties lower id — the dominator pick under frozen-" +
@@ -7646,7 +7643,7 @@ object Extensions {
         val index0 = kept
           .join(Similarity.scaledVectors(evens, "vec_id", "embedding"),
             Seq("vec_id"))
-          .repartition(col("cluster")).localCheckpoint(false)
+          .localCheckpoint(false)
         val r1 = Similarity.semDedupAdmit(
           e.filter(col("vec_id") % 4 === 1), index0, cents,
           "vec_id", "embedding", maxDist2 = Q277MaxDist2)

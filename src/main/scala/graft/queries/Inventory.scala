@@ -523,7 +523,7 @@ object Inventory {
 
   // ---------------------------------------------------------------- q17
   private val q17 = Q("q17_upload_manifest",
-    "P6+J5+A4+A5: unfinished-group manifest with bool_or / span / size " +
+    "P6+J5+A4+A5: pending-group manifest with bool_or / span / size " +
       "(dags/dreem.py:153-234)",
     Some("""
       WITH b AS (

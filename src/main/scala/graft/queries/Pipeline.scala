@@ -933,7 +933,7 @@ object Pipeline {
       "scores staged batch 1 against the persisted C0 and appends " +
       "verdicts; BETWEEN drains the driver merges the admitted docs' " +
       "counts into C1 (census-sized union+sum, never a corpus re-read) " +
-      "and re-persists it pre-partitioned by `w`; batch 2 then lands in " +
+      "and checkpoints it; batch 2 then lands in " +
       "the stage dir and drain 2 — same checkpoint, so the source " +
       "offset log skips batch 1's already-processed file — scores only " +
       "it against C1; equals the q270 batch gate bit-for-bit",
@@ -965,7 +965,7 @@ object Pipeline {
         // lost, only evicted).
         graft.ops.TextAnalysis.mergeCensus(c0,
             graft.ops.TextAnalysis.unigramCensus(admitted, "text"))
-          .repartition(col("w")).localCheckpoint(true)
+          .localCheckpoint(true)
       }
       docs.filter(col("doc_id") % 4 === 2).coalesce(1)
         .write.mode("append").parquet(stage)
@@ -1059,7 +1059,7 @@ object Pipeline {
             s.read.parquet(out).filter(col("keep"))
               .select(col("vec_id"), col("cluster"), col("dist2"),
                 col("svec")))
-            .repartition(col("cluster")).localCheckpoint(true)
+            .localCheckpoint(true)
           e.filter(col("vec_id") % 4 === 3).coalesce(1)
             .write.mode("append").parquet(stage)
           drain(grown, 2L)

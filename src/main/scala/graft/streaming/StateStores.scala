@@ -24,9 +24,10 @@ import org.apache.spark.sql.SparkSession
   * At 100 TB use BOTH: RocksDB so the store scales past heap, and a
   * watermark wherever the dedup horizon is genuinely finite.
   *
-  * Selection knob: `SPARK_GRAFT_STATE_STORE=rocksdb` flips every session
-  * built by [[graft.Tables.session]]; [[withProvider]] scopes a provider
-  * to queries started inside a block (the conf is snapshotted per query
+  * Selection: `spark-submit --conf
+  * spark.sql.streaming.stateStore.providerClass=<class>` sets it for a
+  * whole job; [[withProvider]] scopes a provider to queries started
+  * inside a block (the conf is snapshotted per query
   * at start, so existing checkpoints keep the provider they started with —
   * Spark refuses a provider switch on a live checkpoint).
   */
@@ -49,16 +50,13 @@ object StateStores {
         s"unknown state store '$other' — use rocksdb, hdfs, or a provider class name")
   }
 
-  def configure(spark: SparkSession, name: String): Unit =
-    spark.conf.set(ConfKey, resolve(name))
-
   /** Run `f` with the given provider set on the session, restoring the
     * previous value after. Streaming queries STARTED inside `f` keep the
     * provider for their lifetime (per-query conf snapshot).
     */
   def withProvider[A](spark: SparkSession, name: String)(f: => A): A = {
     val previous = spark.conf.getOption(ConfKey)
-    configure(spark, name)
+    spark.conf.set(ConfKey, resolve(name))
     try f
     finally previous match {
       case Some(v) => spark.conf.set(ConfKey, v)

@@ -467,7 +467,7 @@ class EtlJobSpec extends SparkSpec {
     }
   }
 
-  test("extract_prep_load scans the open part, and the settled part only for its groups") {
+  test("extract_prep_load's manifest reads both ledger parts in one scan") {
     val base = Files.createTempDirectory("graft-job-extract").toString
     // one device on three days: three groups, one transferred per run
     incoming(Seq(("r1", "U1", "2021-11-10 13:00:00"),
@@ -478,26 +478,24 @@ class EtlJobSpec extends SparkSpec {
     EtlJob.stageNames.takeWhile(_ != "extract_prep_load")
       .foreach(EtlJob.runStage(spark, _, opts, transport))
     val ledger = new graft.ledger.Ledger(spark, opts("ledger"))
-    def unfinished() = ledger.read()
+    def pendingGroups() = ledger.read()
       .filter(col("dmp_id").isNotNull && !col("is_uploaded"))
       .select("dmp_id").distinct().count()
     // (pending groups, open-part scans, settled-part scans): the first run
-    // finds no settled part; the second reads the settled rows of the open
-    // rows' groups (one scan, semi-joined on the open part's dmp_ids)
-    for ((pending, openScans, settledScans) <- Seq((3L, 2, 0), (2L, 3, 1))) {
-      assert(unfinished() == pending)
+    // finds no settled part; the second reads both parts in one scan
+    for ((pending, openScans, settledScans) <- Seq((3L, 2, 0), (2L, 2, 1))) {
+      assert(pendingGroups() == pending)
       var summary = Map.empty[String, Long]
       val plans = executedPlans {
         summary = EtlJob.runStage(spark, "extract_prep_load", opts, transport).toMap
       }
-      // the transfer's manifest (and its semi-join's dmp_id side), then
-      // markUploaded's rewrite of the open part
+      // the transfer's manifest, then markUploaded's rewrite of the open part
       assert(partScans(plans, opts("ledger"), "open") == openScans, plans.mkString("\n"))
       assert(partScans(plans, opts("ledger"), "settled") == settledScans,
         plans.mkString("\n"))
       assert(summary == Map("pending_groups" -> pending, "uploaded_groups" -> 1L))
     }
-    assert(unfinished() == 1)
+    assert(pendingGroups() == 1)
     // a cap of 0 would plan the manifest away, count and all: refused
     intercept[IllegalArgumentException](EtlJob.runStage(spark,
       "extract_prep_load", opts + ("upload-limit" -> "0"), transport))
@@ -507,30 +505,11 @@ class EtlJobSpec extends SparkSpec {
     * job's long call site, the Spark method the program called. */
   private def jobCallSites(body: => Unit): Seq[String] = {
     val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    // as in SparkSpec.queriesRun: only the jobs between two marker jobs count
-    val (start, end) = (s"jobs_start_${System.nanoTime()}", s"jobs_end_${System.nanoTime()}")
-    @volatile var started = false
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
+    listening(new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.job.description")) match {
-          case Some(`start`) => started = true
-          case Some(`end`) => drained.countDown()
-          case _ => if (started) e.stageInfos.sortBy(_.stageId).lastOption
-            .foreach(st => sites.add(st.details.linesIterator.next()))
-        }
-    }
-    def marker(name: String): Unit = {
-      spark.sparkContext.setJobDescription(name)
-      try spark.range(1).collect() finally spark.sparkContext.setJobDescription(null)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      marker(start)
-      body
-      marker(end)
-      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
-    } finally spark.sparkContext.removeSparkListener(listener)
+        e.stageInfos.sortBy(_.stageId).lastOption
+          .foreach(st => sites.add(st.details.linesIterator.next()))
+    })(body)
     sites.asScala.toSeq
   }
 

@@ -295,17 +295,6 @@ abstract class LedgerContract(prefix: String) extends SparkSpec {
     assert(e.getMessage.contains("enrichable"))
   }
 
-  test("unfinished is the open rows plus the settled rows of their groups") {
-    val path = tmp()
-    val led = new Ledger(spark, path)
-    // a's group G1 was uploaded; the late record e re-opens it
-    led.init(df(Seq(done("a", "G1", uploaded = true), done("b", "G2", uploaded = true),
-      done("e", "G1"), rec("c"))))
-    assert(partRefs(path)("settled") == Seq("a", "b"))
-    assert(led.unfinished().select("manufacturer_ref").as[String].collect().sorted.toSeq ==
-      Seq("a", "c", "e"))
-  }
-
   test("a single-directory ledger of earlier versions fails fast at every entry point, naming the one-off rewrite") {
     val path = tmp()
     df(Seq(rec("a"), rec("b"))).write.parquet(path)
@@ -314,7 +303,6 @@ abstract class LedgerContract(prefix: String) extends SparkSpec {
     for (op <- Seq(
       () => led.exists,
       () => led.read(),
-      () => led.unfinished(),
       () => led.init(df(Seq(rec("z")))),
       () => led.append(df(Seq(rec("z")))),
       () => led.enrich("device_serial")(setSerials("a" -> "X")),

@@ -1,7 +1,14 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning,
+  UnknownPartitioning}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ReusedExchangeExec,
+  ShuffleExchangeExec, ShuffleExchangeLike}
+import org.apache.spark.sql.execution.joins.ShuffledJoin
+import org.apache.spark.sql.functions.col
 
 import graft.ops.Partitions
 
@@ -58,6 +65,44 @@ class PartitionsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       val one = answer(gate, 1)
       assert(one.nonEmpty, s"$gate returned no rows")
       assert(one == answer(gate, 7))
+    }
+  }
+
+  /** The partitioning of each exchange on each side of every shuffled join
+    * in `df`'s executed plan, `df` forced first. */
+  private def joinSideExchanges(df: DataFrame): Seq[Seq[Partitioning]] = {
+    df.collect()
+    collect(df.queryExecution.executedPlan) { case j: ShuffledJoin => j }
+      .flatMap(j => Seq(j.left, j.right)).map(side => collect(side) {
+        case e: ShuffleExchangeLike => e.outputPartitioning
+        case r: ReusedExchangeExec => r.outputPartitioning
+      })
+  }
+
+  // the premise of ops.withPersisted's contract, on the session the mains
+  // build (adaptive execution on): if a Spark upgrade flips either half,
+  // the checkpoints that stopped repartitioning their input must be revisited
+  test("a localCheckpoint keeps no partitioning; a persisted relation keeps it") {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      val keyed = spark.range(0, 2000)
+        .select((col("id") % 50).as("k"), col("id").as("v"))
+        .repartition(col("k"))
+      def selfJoin(df: DataFrame) = df.join(df.toDF("k", "w"), "k")
+      for (eager <- Seq(false, true)) {
+        val cp = keyed.localCheckpoint(eager)
+        assert(cp.queryExecution.executedPlan.outputPartitioning
+          .isInstanceOf[UnknownPartitioning], s"eager = $eager")
+        val sides = joinSideExchanges(selfJoin(cp))
+        assert(sides.size == 2 && sides.forall(side =>
+          side.size == 1 && side.head.isInstanceOf[HashPartitioning]),
+          s"eager = $eager: $sides")
+      }
+      graft.ops.withPersisted(keyed) { p =>
+        val joined = selfJoin(p)
+        assert(joinSideExchanges(joined) == Seq(Nil, Nil))
+        assert(collect(joined.queryExecution.executedPlan) {
+          case s: InMemoryTableScanExec => s }.size == 2)
+      }
     }
   }
 }

@@ -839,6 +839,16 @@ class PlanIntegritySpec extends SparkSpec {
         s"got $rddScans:\n$p")
   }
 
+  test("q273: no shuffle between the fingerprints and their checkpoint") {
+    // two shuffle stages: the doc-keyed repartition before hashing and the
+    // pair count (the self-join broadcasts at this scale). A checkpoint
+    // keeps no partitioning (ops.withPersisted), so a repartition on fp
+    // before it is a third stage whose layout no consumer reads
+    val stages = shuffleStagesRun(
+      SparkEntry.queries("q273_moss_matcher")(spark, sf).collect())
+    assert(stages == 2, s"shuffle stages: $stages")
+  }
+
   test("q281: the C4 rewrite is ROW-LOCAL — no join, no hash exchange, " +
     "only the ORDER BY's range partition") {
     val p = plan("q281_c4_line_filter")

@@ -2,8 +2,10 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -25,31 +27,45 @@ trait SparkSpec extends AnyFunSuite {
     }
   }
 
+  /** `body` with a listener registered by `add` and removed by `remove`.
+    * Listener events arrive asynchronously but in order, so the bus is
+    * drained before `add` (an event still queued from an earlier query must
+    * not count) and before `remove` (every event of `body` must). */
+  private def hearing[T](add: => Unit, remove: => Unit)(body: => T): T = {
+    Bridge.drainListenerBus(spark)
+    add
+    try { val out = body; Bridge.drainListenerBus(spark); out }
+    finally remove
+  }
+
+  /** `body`, with `listener` hearing exactly the Spark events it causes. */
+  def listening[T](listener: SparkListener)(body: => T): T =
+    hearing(spark.sparkContext.addSparkListener(listener),
+      spark.sparkContext.removeSparkListener(listener))(body)
+
   /** Every query `body` runs, in order. */
   def queriesRun(body: => Unit): Seq[QueryExecution] = {
     val runs = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
-    // listener events arrive asynchronously but in order, so `body`'s are
-    // exactly those between a start and an end marker query's: an event
-    // still queued from an earlier query must not count
-    val start = s"plans_start_${System.nanoTime()}"
-    val marker = s"plans_marker_${System.nanoTime()}"
-    @volatile var started = false
-    val drained = new java.util.concurrent.CountDownLatch(1)
     val listener = new QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        if (qe.analyzed.output.exists(_.name == start)) started = true
-        else if (qe.analyzed.output.exists(_.name == marker)) drained.countDown()
-        else if (started) runs.add(qe)
+        runs.add(qe)
       override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
-    spark.listenerManager.register(listener)
-    try {
-      spark.range(1).toDF(start).collect()
-      body
-      spark.range(1).toDF(marker).collect()
-      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
-    } finally spark.listenerManager.unregister(listener)
+    hearing(spark.listenerManager.register(listener),
+      spark.listenerManager.unregister(listener))(body)
     runs.asScala.toSeq
+  }
+
+  /** The shuffle map stages `body` runs: each completed stage that wrote
+    * shuffle output (a skipped stage, whose output is reused, runs none). */
+  def shuffleStagesRun(body: => Unit): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    listening(new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (e.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten > 0)
+          n.incrementAndGet()
+    })(body)
+    n.get
   }
 }
 

@@ -3,7 +3,6 @@ package graft
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{StructType, TimestampType}
 
 /** Every gate table read takes its schema from a footer read on the driver:
@@ -14,13 +13,9 @@ class TablesSpec extends SparkSpec {
   /** The Spark jobs started while `body` ran. */
   private def jobs(body: => Unit): Int = {
     val n = new AtomicInteger
-    val listener = new SparkListener {
+    listening(new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    Bridge.drainListenerBus(spark)
-    spark.sparkContext.addSparkListener(listener)
-    try { body; Bridge.drainListenerBus(spark) }
-    finally spark.sparkContext.removeSparkListener(listener)
+    })(body)
     n.get
   }
 

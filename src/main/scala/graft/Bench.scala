@@ -13,24 +13,15 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = Tables.cores
     val spark = Tables.session("graft-bench", cpus)
-    // extra confs for experiments (e.g. the AQE skew-join pass in
-    // SCALING.md): SPARK_GRAFT_CONF="k=v;k=v", runtime SQL confs only.
-    // Unset for the full-suite run of record.
-    sys.env.get("SPARK_GRAFT_CONF").toSeq
-      .flatMap(_.split(';')).map(_.trim).filter(_.contains('='))
-      .foreach { kv =>
-        // trim around '=' too: "k = v" must set k, not the silent no-op
-        // key "k " (Spark stores unknown keys verbatim)
-        val Array(k, v) = kv.split("=", 2).map(_.trim)
-        if (k.nonEmpty) spark.conf.set(k, v)
-      }
 
     def force(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
 
     // warmup: exercise scan+shuffle+codegen paths once
     try force(SparkEntry.queries("q12_tpch_q1")(spark, sfDir))
-    catch { case _: Throwable => () }
+    catch { case e: Throwable =>
+      System.err.println(s"[bench] warmup q12_tpch_q1 failed: ${e.getMessage}")
+    }
 
     // optional comma-separated substring filter for local iteration, e.g.
     // SPARK_GRAFT_ONLY=q21,q24 — the driver never sets it (full run).

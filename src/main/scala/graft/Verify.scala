@@ -1,5 +1,7 @@
 package graft
 import java.nio.file.{Files, Paths}
+import graft.connect.MiniJson
+import graft.connect.MiniJson.{JObj, JStr}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -31,20 +33,8 @@ object Verify {
       // dirs (stage/out/checkpoint) are dead — drop them now, not at exit
       TempDirs.sweep()
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = MiniJson.render(
+      JObj(SparkEntry.oracleSql.map { case (k, v) => k -> JStr(v) }))
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -545,8 +545,8 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"), col("n_inter"),
         col("cont_a"), col("cont_b"))
 
-  /** Scale path for [[embeddingNearDup]] (and its DEFAULT): candidates must
-    * ALSO collide in a `numPlanes`-bit random-hyperplane bucket, so block
+  /** Scale path for [[embeddingNearDupExact]]: candidates must ALSO
+    * collide in a `numPlanes`-bit random-hyperplane bucket, so block
     * size (and the quadratic pair count) shrinks ~2^numPlanes-fold at a
     * recall cost — measured in SCALING.md: the exact variant is the one
     * operator that scales quadratically with density.
@@ -728,22 +728,12 @@ object Dedup {
   /** Embedding near-duplicates: cosine above threshold, blocked by `blockCol`
     * (e.g. a label / coarse cluster) so comparisons stay bucket-local.
     *
-    * DEFAULT (`exact = false`) additionally sub-blocks each bucket by a
-    * `numPlanes`-bit hyperplane-LSH signature ([[embeddingNearDupLsh]]) —
-    * in-block comparison is quadratic, so at corpus scale the raw blocks
-    * are the failure mode, not the per-pair math. `exact = true` opts
-    * into the full in-block pairwise comparison (gate q27 pins it) —
-    * correct at any block size that fits the time budget, quadratic in
-    * the densest block.
+    * The full in-block pairwise comparison (gate q27 pins it): correct at
+    * any block size that fits the time budget, quadratic in the densest
+    * block. [[embeddingNearDupLsh]] sub-blocks each bucket by a
+    * hyperplane-LSH signature when the raw blocks are too dense.
     */
-  def embeddingNearDup(embs: DataFrame, idCol: String, vecCol: String,
-                       blockCol: String, minCosine: Double,
-                       exact: Boolean = false,
-                       numPlanes: Int = 8): DataFrame =
-    if (exact) embeddingNearDupExact(embs, idCol, vecCol, blockCol, minCosine)
-    else embeddingNearDupLsh(embs, idCol, vecCol, blockCol, minCosine, numPlanes)
-
-  private[ops] def embeddingNearDupExact(
+  def embeddingNearDupExact(
       embs: DataFrame, idCol: String, vecCol: String,
       blockCol: String, minCosine: Double): DataFrame = {
     // raw float vectors through the shuffle; native kernels widen per element

@@ -68,13 +68,12 @@ object Formats {
     * sides set `escape` to the quote char. NULL is written as `\N` and
     * the empty string as a quoted empty field, so the two survive the
     * trip DISTINCT (the default collapses both to empty). Embedded
-    * newlines ride quoted fields and need `multiLine=true` on read —
+    * newlines ride quoted fields, so the read is always multi-line —
     * which makes files NON-SPLITTABLE (one task per file); at 100 TB
     * either normalize newlines out before export or keep files small —
     * a documented trade, not a surprise.
     */
-  def csvRoundTrip(df: DataFrame, path: String,
-                   multiLine: Boolean = false): DataFrame = {
+  def csvRoundTrip(df: DataFrame, path: String): DataFrame = {
     df.write.mode("overwrite")
       .option("header", "true")
       .option("escape", "\"")
@@ -85,7 +84,7 @@ object Formats {
       .option("header", "true")
       .option("escape", "\"")
       .option("nullValue", "\\N")
-      .option("multiLine", multiLine.toString)
+      .option("multiline", "true")
       .csv(path)
   }
 

@@ -25,25 +25,6 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  /** PageRank with damping `dampNum/dampDen` over directed `edges`.
-    *
-    * Node set = nodes with at least one OUT-edge (pass a symmetrized edge
-    * list for undirected graphs — the gate does). Nodes with no in-edges
-    * keep the base (teleport) mass each round; mass lost to integral
-    * truncation and to dangling contributions is NOT redistributed, and the
-    * oracle mirrors exactly that.
-    *
-    * Output: (node, rank) with rank in `scale` units, unordered.
-    *
-    * `checkpointEvery`: eagerly localCheckpoint the rank relation every k
-    * rounds, truncating lineage so plan depth stays bounded at any
-    * iteration count (values are unchanged — checkpointing only cuts the
-    * recursive plan). `tolAbs >= 0` adds a convergence stop: after each
-    * round the total absolute rank change (in `scale` units, an exact
-    * integer) is measured, and iteration ends early once it is <= tolAbs;
-    * the per-round cost is one node-sized aggregate to a single driver
-    * scalar. Defaults leave both behaviors off for the gated 3-round plan.
-    */
   /** The per-iteration edge layout pageRank reuses across rounds:
     * edge-sized, ONE shuffle + sort lays the edges out by src, and the
     * persisted layout (partitioning AND ordering survive InMemoryRelation)
@@ -64,10 +45,26 @@ object Graph {
       .select(col("dst"), expr("rank div outdeg").as("contrib"))
       .groupBy("dst").agg(sum("contrib").as("mass"))
 
+  /** PageRank with damping `dampNum/dampDen` over directed `edges`.
+    *
+    * Node set = nodes with at least one OUT-edge (pass a symmetrized edge
+    * list for undirected graphs — the gate does). Nodes with no in-edges
+    * keep the base (teleport) mass each round; mass lost to integral
+    * truncation and to dangling contributions is NOT redistributed, and the
+    * oracle mirrors exactly that.
+    *
+    * Output: (node, rank) with rank in `scale` units, unordered.
+    *
+    * `checkpointEvery`: eagerly localCheckpoint the rank relation every k
+    * rounds, truncating lineage so plan depth stays bounded at any
+    * iteration count (values are unchanged — checkpointing only cuts the
+    * recursive plan). The loop always runs `iters` rounds; the gated
+    * 3-round plan never reaches the default checkpoint threshold.
+    */
   def pageRank(edges: DataFrame, srcCol: String = "src", dstCol: String = "dst",
                iters: Int = 3, scale: Long = 1000000000L,
                dampNum: Long = 85L, dampDen: Long = 100L,
-               checkpointEvery: Int = 8, tolAbs: Long = -1L): DataFrame = {
+               checkpointEvery: Int = 8): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
     require(checkpointEvery >= 1, "checkpointEvery must be >= 1")
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
@@ -80,10 +77,7 @@ object Graph {
         val base = (scale * (dampDen - dampNum) / dampDen) / n
         val nodes = deg.select(col("src").as("node"))
         var ranks = nodes.select(col("node"), lit(init).as("rank"))
-        var round = 0
-        var converged = false
-        while (round < iters && !converged) {
-          round += 1
+        for (round <- 1 to iters) {
           val contribs = prContribs(ewd, ranks)
           val next = nodes
             .join(contribs, col("node") === col("dst"), "left")
@@ -91,15 +85,7 @@ object Graph {
               (lit(base) + expr(s"(${dampNum}L * coalesce(mass, 0L)) div ${dampDen}L"))
                 .as("rank"))
           val cut = round % checkpointEvery == 0 && round < iters
-          val nextMat = if (cut || tolAbs >= 0L) next.localCheckpoint(true) else next
-          if (tolAbs >= 0L) {
-            val delta = nextMat
-              .join(ranks.select(col("node"), col("rank").as("_g_prev")), "node")
-              .agg(sum(abs(col("rank") - col("_g_prev"))).as("d"))
-              .head().getLong(0)
-            converged = delta <= tolAbs
-          }
-          ranks = nextMat
+          ranks = if (cut) next.localCheckpoint(true) else next
         }
         // the caller gets materialized node-sized ranks, not a lineage
         // through the edge-sized caches released on the way out

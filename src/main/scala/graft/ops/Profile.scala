@@ -11,11 +11,8 @@ import org.apache.spark.sql.functions._
   * aggregation, then `stack` unpivots the 1-row wide result into one row
   * per column (driver-side-free: the wide row is a single-row DataFrame).
   *
-  * Scale note: `exact = true` uses `count(distinct c)` per column, which
-  * plans an Expand of the scan ×(columns+1) — the right default for the
-  * oracle gate and for modest column lists. At full corpus width/scale,
-  * pass `exact = false` for `approx_count_distinct` (HLL++, one pass, no
-  * Expand) — same output schema, ±~2% distinct counts.
+  * Distinct counts are exact: `count(distinct c)` per column, which
+  * plans an Expand of the scan ×(columns+1).
   *
   * min/max stringify (`CAST AS STRING`) so heterogeneous column types
   * share one schema; keep double columns out of `cols` when oracle
@@ -28,7 +25,7 @@ object Profile {
     * unique (duplicates would alias-collide in the aggregate). */
   private val SafeName = "[A-Za-z_][A-Za-z0-9_]*".r
 
-  def profile(df: DataFrame, cols: Seq[String], exact: Boolean = true): DataFrame = {
+  def profile(df: DataFrame, cols: Seq[String]): DataFrame = {
     require(cols.nonEmpty, "profile needs at least one column")
     require(cols.distinct.size == cols.size,
       s"duplicate columns in profile list: ${cols.diff(cols.distinct).mkString(", ")}")
@@ -36,11 +33,9 @@ object Profile {
     require(unsafe.isEmpty,
       s"profile column names must be simple identifiers, got: ${unsafe.mkString(", ")}")
     val aggs = cols.flatMap { c =>
-      val nd = if (exact) countDistinct(col(c))
-               else approx_count_distinct(col(c))
       Seq(
         count(col(c)).as(s"__nn_$c"),
-        nd.as(s"__nd_$c"),
+        countDistinct(col(c)).as(s"__nd_$c"),
         min(col(c)).cast("string").as(s"__mn_$c"),
         max(col(c)).cast("string").as(s"__mx_$c"))
     }
@@ -454,12 +449,9 @@ object Profile {
     * an integer (floorPos, frac-ppm) pair, one final fixed-shape IEEE
     * interpolation between the two neighboring global order statistics.
     *
-    * Shape at 100 TB: one window per side — group-partitioned ranks
-    * (parallel) and the global rank+lead window (single total sort: the
-    * EXACT contrast form, same posture as q55/q05's exact twins;
-    * `gridPoints > 0` is the scale path — the global side collapses to
-    * a broadcast `approx_percentile` grid of that many points, same
-    * join shape, sketch-bounded rank error, no global sort) — then ONE
+    * Shape: one window per side — group-partitioned ranks (parallel)
+    * and the global rank+lead window (single total sort: the EXACT
+    * contrast form, same posture as q55/q05's exact twins) — then ONE
     * equi-join on the integer floor position. No correlated subqueries,
     * no collect.
     *
@@ -467,9 +459,7 @@ object Profile {
     * per input row.
     */
   def quantileNormalize(df: DataFrame, groupCol: String, valueCol: String,
-                        idCol: String, gridPoints: Int = 0): DataFrame = {
-    require(gridPoints == 0 || gridPoints >= 2,
-      s"gridPoints must be 0 (exact) or >= 2: $gridPoints")
+                        idCol: String): DataFrame = {
     val wS = org.apache.spark.sql.expressions.Window
       .partitionBy(col(groupCol)).orderBy(col("_v"), col(idCol))
     val wSn = org.apache.spark.sql.expressions.Window
@@ -490,35 +480,16 @@ object Profile {
       .withColumn("_ns", count(lit(1)).over(wSn).cast("long"))
       .withColumn("rank_ppm", when(col("_ns") === 1, lit(500000L))
         .otherwise(expr("1000000L * (_rn - 1) div (_ns - 1)")))
-    val glob =
-      if (gridPoints == 0) {
-        // EXACT: total global order (single-partition window — the
-        // deliberate contrast form the oracle gate pins)
-        val wG = org.apache.spark.sql.expressions.Window
-          .orderBy(col("_gv"), col("_gid"))
-        df.select(col(valueCol).cast("long").as("_gv"), col(idCol).as("_gid"))
-          .withColumn("_grn", row_number().over(wG).cast("long"))
-          .withColumn("_gnext", lead(col("_gv"), 1).over(wG))
-          .drop("_gid")
-      } else {
-        // SCALE PATH: the global side collapses to a gridPoints-row
-        // approx_percentile sketch (mergeable, one pass, no global sort);
-        // the join shape is unchanged — ranks land on grid positions
-        // instead of order statistics, with sketch-bounded rank error.
-        val fracs = (0 until gridPoints)
-          .map(i => i.toDouble / (gridPoints - 1)).mkString(", ")
-        df.select(col(valueCol).cast("long").as("_v0"))
-          .agg(expr(s"approx_percentile(_v0, array($fracs), 10000)")
-            .as("_grid"))
-          .select(posexplode(col("_grid")).as(Seq("_p0", "_gv")))
-          .select((col("_p0") + 1).cast("long").as("_grn"),
-            col("_gv").cast("long").as("_gv"))
-          .withColumn("_gnext", lead(col("_gv"), 1).over(
-            org.apache.spark.sql.expressions.Window.orderBy(col("_grn"))))
-      }
-    val ng =
-      if (gridPoints == 0) df.agg(count(lit(1)).cast("long").as("_ng"))
-      else df.sparkSession.range(1).select(lit(gridPoints.toLong).as("_ng"))
+    // total global order (single-partition window — the deliberate
+    // contrast form the oracle gate pins)
+    val wG = org.apache.spark.sql.expressions.Window
+      .orderBy(col("_gv"), col("_gid"))
+    val glob = df
+      .select(col(valueCol).cast("long").as("_gv"), col(idCol).as("_gid"))
+      .withColumn("_grn", row_number().over(wG).cast("long"))
+      .withColumn("_gnext", lead(col("_gv"), 1).over(wG))
+      .drop("_gid")
+    val ng = df.agg(count(lit(1)).cast("long").as("_ng"))
     src.crossJoin(broadcast(ng))
       .withColumn("_posNum", expr("1000000L + (_ng - 1) * rank_ppm"))
       .withColumn("_fpos", expr("_posNum div 1000000L"))
@@ -1086,8 +1057,8 @@ object Profile {
     * estimate itself is legitimately engine/merge-specific while the
     * |est − exact| ≤ bound·exact contract is not (the q204 posture).
     *
-    * `boundPpm` is the certified relative-error budget in ppm. HLL++ at
-    * rsd r has σ ≈ r·exact; the default 3·rsd budget is the standard 3σ
+    * The certified relative-error budget is 3·rsd (in ppm, 3e6·rsd).
+    * HLL++ at rsd r has σ ≈ r·exact, so that is the standard 3σ
     * envelope, PLUS an absolute slack of 4 so near-empty groups (exact
     * in the single digits, where "relative" error is quantized) don't
     * flap. The audit is the point: run it at sample scale to certify the
@@ -1099,10 +1070,9 @@ object Profile {
     * production path then skips by keeping only the HLL half).
     */
   def hllAudit(df: DataFrame, groupCol: String, valueCol: Column,
-               rsd: Double = 0.05, boundPpmOpt: Option[Long] = None): DataFrame = {
+               rsd: Double = 0.05): DataFrame = {
     require(rsd > 0 && rsd < 0.3, s"rsd out of (0, 0.3): $rsd")
-    val boundPpm = boundPpmOpt.getOrElse((3e6 * rsd).toLong)
-    require(boundPpm >= 0, s"boundPpm must be >= 0: $boundPpm")
+    val boundPpm = (3e6 * rsd).toLong
     df.groupBy(col(groupCol))
       .agg(countDistinct(valueCol).as("exact_n"),
         approx_count_distinct(valueCol, rsd).as("_est"))

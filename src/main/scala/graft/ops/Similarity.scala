@@ -29,20 +29,14 @@ object Similarity {
   /** Exact top-k neighbors for each query vector (queries ⊆ corpus shape:
     * both need (idCol, vecCol)). Output: query_id, neighbor_id, rank, cosine.
     *
-    * `broadcastQueries = false` drops the broadcast hint for query sets
-    * above the broadcast cap (corpus-vs-corpus): brute force has no
-    * equi-key, so the fallback is a distributed cartesian — every
-    * corpus partition streams past every query partition. That is the
-    * honest cost of EXACT all-pairs top-k; prefer [[lshTopK]] /
-    * [[ivfTopK]] (which keep an equi-key and shuffle instead) when the
-    * query side is large.
+    * The query side is always broadcast: brute force has no equi-key, so
+    * a query set above the broadcast cap is [[lshTopK]]'s job (it keeps
+    * the `sig` equi-key and can shuffle instead).
     */
   def bruteForceTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
-                     vecCol: String, k: Int,
-                     broadcastQueries: Boolean = true): DataFrame = {
-    val q0 = withNorm2(queries, idCol, vecCol)
-      .select(col(idCol).as("query_id"), col("dvec").as("q_vec"), col("n2s").as("q_n2s"))
-    val q = if (broadcastQueries) broadcast(q0) else q0
+                     vecCol: String, k: Int): DataFrame = {
+    val q = broadcast(withNorm2(queries, idCol, vecCol)
+      .select(col(idCol).as("query_id"), col("dvec").as("q_vec"), col("n2s").as("q_n2s")))
     val c = withNorm2(corpus, idCol, vecCol)
       .select(col(idCol).as("neighbor_id"), col("dvec").as("c_vec"), col("n2s").as("c_n2s"))
     val pairs = c.join(q) // hinted: query side small → broadcast NL join
@@ -73,15 +67,11 @@ object Similarity {
     * (n·k)-sized list equi-joined on the swapped id pair.
     */
   def mutualTopK(embs: DataFrame, idCol: String, vecCol: String,
-                 k: Int, broadcastQueries: Boolean = true): DataFrame = {
+                 k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
     val wq = Window.partitionBy(col("query_id"))
       .orderBy(col("rank"))
-    // broadcastQueries=false is the escape hatch when the corpus (which
-    // IS the query side here) exceeds the broadcast limit — without the
-    // pass-through, bruteForceTopK's non-broadcast path was unreachable
-    val tk = bruteForceTopK(embs, embs, idCol, vecCol, k + 1,
-      broadcastQueries)
+    val tk = bruteForceTopK(embs, embs, idCol, vecCol, k + 1)
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("_rk2", row_number().over(wq))
       .filter(col("_rk2") <= k)
@@ -139,15 +129,11 @@ object Similarity {
     * Scale: centroids broadcast twice (assignment + probe); the corpus
     * shuffles once on its centroid id — the partition IS the inverted list,
     * so a probe touches |corpus|·nProbe/C candidates instead of |corpus|.
-    */
-  /** `broadcastQueries = false`: the probe join routes through the existing
-    * `cent_id` equi-key as a shuffled join instead of broadcasting the
-    * query side — the corpus-vs-corpus path (gate q82 pins lshTopK's
-    * equivalent; same mechanism here).
+    * The query side is broadcast.
     */
   def ivfTopK(queries: DataFrame, corpus: DataFrame, centroids: DataFrame,
-              idCol: String, vecCol: String, k: Int, nProbe: Int,
-              broadcastQueries: Boolean = true): DataFrame = {
+              idCol: String, vecCol: String, k: Int,
+              nProbe: Int): DataFrame = {
     val cent = broadcast(centroids
       .select(col(idCol).as("cent_id"), col(vecCol).as("cent_vec"))
       .withColumn("cent_n2s", VectorFns.norm2Scaled(col("cent_vec"))))
@@ -185,10 +171,9 @@ object Similarity {
     val c = assign(withNorm2(corpus, idCol, vecCol)
       .select(col(idCol).as("neighbor_id"), col("dvec").as("neighbor_vec"),
         col("n2s").as("neighbor_n2s")), "neighbor", probes = 1)
-    val q0 = assign(withNorm2(queries, idCol, vecCol)
+    val q = broadcast(assign(withNorm2(queries, idCol, vecCol)
       .select(col(idCol).as("query_id"), col("dvec").as("query_vec"),
-        col("n2s").as("query_n2s")), "query", probes = nProbe)
-    val q = if (broadcastQueries) broadcast(q0) else q0
+        col("n2s").as("query_n2s")), "query", probes = nProbe))
     val pairs = c.join(q, "cent_id")
       .withColumn("cosine", VectorFns.cosineScaled(
         VectorFns.dotScaled(col("query_vec"), col("neighbor_vec")),

@@ -781,35 +781,15 @@ object TextAnalysis {
     * Uses the EXACT interpolated percentile (sort-based order statistic,
     * engine-portable — the approx sketch differs per engine), computed
     * once and broadcast as a one-row threshold relation: rows never
-    * leave executors, no driver collect, no correlated subquery.
-    *
-    * `keepAtOrAbove = false` flips the cut for "drop the top p" uses
-    * (e.g. truncating pathological outliers by length).
-    *
-    * SCALE PATH: the exact `percentile` aggregate buffers the full value
-    * multiset per partition before merging — fine at test scale, not at
-    * 100 TB. `approxAccuracy > 0` switches the threshold to Spark's
-    * `approx_percentile` t-digest-style sketch (bounded memory:
-    * O(accuracy) per partition, mergeable), whose rank error is at most
-    * 1/accuracy — at the 10000 default that is ±0.01% of corpus rank,
-    * far inside the noise of any quality-percentile cut. The sketch
-    * threshold is an actual corpus value (no interpolation), so the
-    * filter semantics are unchanged; only the cut point can differ by
-    * the rank tolerance. Exact stays the default because the oracle gate
-    * (q74) pins interpolated-percentile semantics cross-engine.
+    * leave executors, no driver collect, no correlated subquery. Keeps
+    * the rows at or above the threshold.
     */
-  def filterByPercentile(docs: DataFrame, valueCol: String, p: Double,
-                         keepAtOrAbove: Boolean = true,
-                         approxAccuracy: Int = 0): DataFrame = {
+  def filterByPercentile(docs: DataFrame, valueCol: String,
+                         p: Double): DataFrame = {
     require(p > 0 && p < 1, s"percentile must be in (0,1), got $p")
-    val thrExpr =
-      if (approxAccuracy > 0)
-        expr(s"approx_percentile($valueCol, ${p}d, $approxAccuracy)")
-      else expr(s"percentile($valueCol, ${p}d)")
-    val thr = broadcast(docs.agg(thrExpr.cast("double").as("__thr")))
-    val kept = docs.crossJoin(thr)
-    (if (keepAtOrAbove) kept.filter(col(valueCol) >= col("__thr"))
-     else kept.filter(col(valueCol) <= col("__thr"))).drop("__thr")
+    val thr = broadcast(docs.agg(
+      expr(s"percentile($valueCol, ${p}d)").cast("double").as("__thr")))
+    docs.crossJoin(thr).filter(col(valueCol) >= col("__thr")).drop("__thr")
   }
 
   def fingerprints(docs: DataFrame, prefixLen: Int = 64): DataFrame = {
@@ -844,21 +824,10 @@ object TextAnalysis {
     * contribute to ‖x‖², exactly as the oracle computes them); only the
     * pair-generation shuffle sheds the dead weight.
     *
-    * PREFIX FILTER (`prefixFilter = true`, default off): the
-    * AllPairs/PPJoin suffix bound — order each doc's terms by descending
-    * ŵ_x,i·M_i (ŵ = wi/‖x‖, M_i the corpus max of ŵ for term i); a
-    * partner sharing only terms past the point where the remaining
-    * Σ ŵ·M drops below `minCosine` is provably below threshold, so
-    * candidate generation joins each doc's PREFIX postings against full
-    * postings and candidates are re-verified over ALL shared pruned
-    * terms with the same BIGINT arithmetic — bit-identical answer
-    * (1e-6 slack, so double rounding can only LENGTHEN prefixes). OFF by
-    * default because it only pays on SKEWED weight distributions:
-    * measured at sf0.1 on hashed 3-gram shingles (near-uniform ŵ,
-    * prefixes ≈ full length) it is ~6x SLOWER than the direct join
-    * (12.4 s vs 2.0 s) — the right default here is the df trim + `maxDf`
-    * cap, with this switch for corpora whose per-doc mass concentrates
-    * in few terms (bag-of-words tf-idf, learned sparse vectors).
+    * Candidates come from one direct posting self-join, not an
+    * AllPairs/PPJoin prefix bound: on hashed 3-gram shingles the weights
+    * are near-uniform, prefixes cover almost every term, and the prefix
+    * path measured ~6x slower at sf0.1 (12.4 s vs 2.0 s).
     *
     * SHARED-BUILD CONTRACT (round-13, replaces the r12 persist): the
     * term-partitioned posting relation feeds both self-join sides AND
@@ -901,14 +870,9 @@ object TextAnalysis {
                         textCol: String = "text", shingleSize: Int = 3,
                         minCosine: Double = 0.5,
                         maxDf: Long = Long.MaxValue,
-                        prefixFilter: Boolean = false,
                         maxPairs: Int = 0,
                         sampleDen: Int = 1): DataFrame = {
     require(sampleDen >= 1, s"sampleDen must be >= 1: $sampleDen")
-    require(sampleDen == 1 || !prefixFilter,
-      "sampleDen > 1 is implemented for the direct-join path only " +
-        "(prefixFilter = false) — the prefix-bound path's per-doc " +
-        "prefixes assume the full posting universe")
     // the capped path computes a limit(maxPairs + 1) truncation sentinel —
     // Int.MaxValue would overflow it to a negative limit and die inside
     // Spark with an opaque AnalysisException instead of a loud contract
@@ -990,85 +954,42 @@ object TextAnalysis {
           .drop("_rn")
       }
     }
-    if (!prefixFilter) {
-      // direct posting self-join: one expansion join, dot accumulated
-      // in-place (the right shape when prefixes would cover most terms);
-      // both sides read the SAME persisted term-partitioned postings, so
-      // the join itself adds no exchange
-      if (sampleDen == 1) {
-        val a = w.select(col(idCol).as("doc_a"), col("term"),
-          col("wi").as("w_a"))
-        val b = w.select(col(idCol).as("doc_b"), col("term"),
-          col("wi").as("w_b"))
-        finish(a.join(b.hint("shuffle_hash"), Seq("term"))
-          .filter(col("doc_a") < col("doc_b"))
-          .groupBy(col("doc_a"), col("doc_b"))
-          .agg(sum(col("w_a") * col("w_b")).as("dot"),
-            count(lit(1)).as("n_common")))
-      } else {
-        // SAMPLED UNIVERSE: the probe side is the hash slice, the
-        // partner side the full postings — both map-side filters on the
-        // SAME persisted term-partitioned relation, so the join still
-        // adds no exchange. Each qualifying (pair, term) row must
-        // survive exactly once or the dot doubles: keep a row iff
-        // probe_id < partner_id OR the partner is NOT itself sampled
-        // (both-sampled pairs generate in both orientations; exactly the
-        // probe<partner one survives), then canonicalize to
-        // doc_a < doc_b. Row-local sha256 predicate, no extra shuffle.
-        def sampled(id: Column): Column =
-          pmod(graft.functions.TextFns.hash64(
-            concat(lit("cospairs:"), id.cast("string"))),
-            lit(sampleDen.toLong)) === 0
-        val a = w.filter(sampled(col(idCol)))
-          .select(col(idCol).as("_pa"), col("term"), col("wi").as("w_a"))
-        val b = w.select(col(idCol).as("_pb"), col("term"),
-          col("wi").as("w_b"))
-        finish(a.join(b.hint("shuffle_hash"), Seq("term"))
-          .filter(col("_pa") =!= col("_pb") &&
-            (col("_pa") < col("_pb") || !sampled(col("_pb"))))
-          .groupBy(least(col("_pa"), col("_pb")).as("doc_a"),
-            greatest(col("_pa"), col("_pb")).as("doc_b"))
-          .agg(sum(col("w_a") * col("w_b")).as("dot"),
-            count(lit(1)).as("n_common")))
-      }
-    } else {
-      // normalized weights for the bound: postings joined once to the
-      // doc-keyed norm table (this optional path accepts the shuffle)
-      val wn = w.join(norms, Seq(idCol))
-        .withColumn("nw", col("wi").cast("double") /
-          sqrt(col("n2").cast("double")))
-        .select(col(idCol), col("term"), col("wi"), col("nw"))
-      // M_i: corpus max normalized weight per term (posting-list sized,
-      // same shuffle key as the candidate join — never broadcast)
-      val mw = wn.groupBy(col("term")).agg(max(col("nw")).as("mxw"))
-      val ordW = Window.partitionBy(col(idCol))
-        .orderBy(col("contrib").desc, col("term"))
-      val pref = wn.join(mw, "term")
-        .withColumn("contrib", col("mxw") * col("nw"))
-        .withColumn("cum", sum(col("contrib")).over(
-          ordW.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .withColumn("tot",
-          sum(col("contrib")).over(Window.partitionBy(col(idCol))))
-        // keep position j iff the suffix INCLUDING j can still reach
-        // the threshold: s(j-1) = tot - cum + contrib >= t - slack
-        .filter(col("tot") - col("cum") + col("contrib") >=
-          lit(minCosine - 1e-6))
-        .select(col(idCol).as("doc_a"), col("term"))
-      val b = w.select(col(idCol).as("doc_b"), col("term"))
-      val cand = pref.repartition(nParts, col("term"))
-        .join(b.hint("shuffle_hash"), Seq("term"))
+    // direct posting self-join: one expansion join, dot accumulated
+    // in-place; both sides read the SAME term-partitioned postings, so
+    // the join itself adds no exchange
+    if (sampleDen == 1) {
+      val a = w.select(col(idCol).as("doc_a"), col("term"),
+        col("wi").as("w_a"))
+      val b = w.select(col(idCol).as("doc_b"), col("term"),
+        col("wi").as("w_b"))
+      finish(a.join(b.hint("shuffle_hash"), Seq("term"))
         .filter(col("doc_a") < col("doc_b"))
-        .select(col("doc_a"), col("doc_b")).distinct()
-      // verification: every candidate pair re-scored over ALL shared
-      // pruned terms — candidates are few (threshold-bounded), so the
-      // doc_a expansion is |x| rows per pair, immediately cut by the
-      // (doc_b, term) equi-join to the shared-term set
-      finish(cand
-        .join(w.select(col(idCol).as("doc_a"), col("term"),
-          col("wi").as("w_a")), Seq("doc_a"))
-        .join(w.select(col(idCol).as("doc_b"), col("term"),
-          col("wi").as("w_b")), Seq("doc_b", "term"))
         .groupBy(col("doc_a"), col("doc_b"))
+        .agg(sum(col("w_a") * col("w_b")).as("dot"),
+          count(lit(1)).as("n_common")))
+    } else {
+      // SAMPLED UNIVERSE: the probe side is the hash slice, the
+      // partner side the full postings — both map-side filters on the
+      // SAME term-partitioned relation, so the join still adds no
+      // exchange. Each qualifying (pair, term) row must survive exactly
+      // once or the dot doubles: keep a row iff probe_id < partner_id
+      // OR the partner is NOT itself sampled (both-sampled pairs
+      // generate in both orientations; exactly the probe<partner one
+      // survives), then canonicalize to doc_a < doc_b. Row-local sha256
+      // predicate, no extra shuffle.
+      def sampled(id: Column): Column =
+        pmod(graft.functions.TextFns.hash64(
+          concat(lit("cospairs:"), id.cast("string"))),
+          lit(sampleDen.toLong)) === 0
+      val a = w.filter(sampled(col(idCol)))
+        .select(col(idCol).as("_pa"), col("term"), col("wi").as("w_a"))
+      val b = w.select(col(idCol).as("_pb"), col("term"),
+        col("wi").as("w_b"))
+      finish(a.join(b.hint("shuffle_hash"), Seq("term"))
+        .filter(col("_pa") =!= col("_pb") &&
+          (col("_pa") < col("_pb") || !sampled(col("_pb"))))
+        .groupBy(least(col("_pa"), col("_pb")).as("doc_a"),
+          greatest(col("_pa"), col("_pb")).as("doc_b"))
         .agg(sum(col("w_a") * col("w_b")).as("dot"),
           count(lit(1)).as("n_common")))
     }
@@ -1222,24 +1143,20 @@ object TextAnalysis {
     * Scale order mirrors training: DISTINCT words fold through the merge
     * list ONCE (vocabulary-sized work — [[mergePair]]'s row-local fold per
     * merge, no shuffle), then the doc→word relation joins the segmentation
-    * back and explodes to one row per token. With `broadcastVocab` (the
-    * default) the corpus never shuffles — the encoded vocabulary ships to
-    * the scan; flip it off when the vocabulary outgrows the broadcast
-    * budget (Heaps'-law corpora with huge alphabets) and the join keys on
-    * `word` as a shuffle join instead.
+    * back and explodes to one row per token. The corpus never shuffles:
+    * the encoded vocabulary is broadcast to the scan.
     *
     * Single-char words are their own token (the training vocabulary only
     * holds length ≥ 2 words; a 1-symbol array can't merge, so folding it
     * is the identity and needs no special case).
     *
     * Output: (idCol, word_pos, token_pos, token) — document order is the
-    * EXPLICIT (word_pos, token_pos) pair, never row order (the shuffle
-    * join can't preserve one); sort on it for packing/id assignment,
-    * ignore it for counts.
+    * EXPLICIT (word_pos, token_pos) pair, never row order; sort on it
+    * for packing/id assignment, ignore it for counts.
     */
   def bpeEncode(docs: DataFrame, merges: Seq[(String, String)],
-                textCol: String = "text", idCol: String = "doc_id",
-                broadcastVocab: Boolean = true): DataFrame = {
+                textCol: String = "text",
+                idCol: String = "doc_id"): DataFrame = {
     val words = docs
       .select(col(idCol),
         posexplode(TextFns.words(col(textCol))).as(Seq("word_pos", "word")))
@@ -1251,12 +1168,10 @@ object TextAnalysis {
     val encoded = merges.foldLeft(vocab0) { case (v, (l, r)) =>
       v.withColumn("syms", mergePair(col("syms"), l, r))
     }
-    val seg = if (broadcastVocab) broadcast(encoded) else encoded
-    // document order is CARRIED, not assumed: the non-broadcast path
-    // shuffle-joins on `word`, which reorders rows, and even the
-    // broadcast path only preserves order incidentally — (word_pos,
-    // token_pos) is the explicit total order downstream packing needs
-    words.join(seg, "word")
+    // document order is CARRIED, not assumed: the broadcast join only
+    // preserves it incidentally — (word_pos, token_pos) is the explicit
+    // total order downstream packing needs
+    words.join(broadcast(encoded), "word")
       .select(col(idCol), col("word_pos"),
         posexplode(col("syms")).as(Seq("token_pos", "token")))
   }

@@ -239,8 +239,8 @@ object Extensions {
                   JOIN nrm nb ON doc_b = nb.vec_id
       WHERE CAST(d.dot_s AS DOUBLE) / (sqrt(CAST(na.n2s AS DOUBLE)) * sqrt(CAST(nb.n2s AS DOUBLE))) >= 0.3
       ORDER BY doc_a, doc_b"""),
-    (s, dir) => Dedup.embeddingNearDup(t(s, dir, "embeddings"),
-      "vec_id", "embedding", "label", minCosine = 0.3, exact = true)
+    (s, dir) => Dedup.embeddingNearDupExact(t(s, dir, "embeddings"),
+      "vec_id", "embedding", "label", minCosine = 0.3)
       .orderBy("doc_a", "doc_b"))
 
   private val q28 = Q("q28_text_langid",
@@ -5430,7 +5430,7 @@ object Extensions {
 
   private val q228 = Q("q228_csv_roundtrip",
     "RFC-4180 CSV round trip through the four classic mangles: commas " +
-      "and \"\"-escaped quotes in fields, embedded newlines (multiLine " +
+      "and \"\"-escaped quotes in fields, embedded newlines (multi-line " +
       "read — non-splittable files, the documented trade), NULL written " +
       "as \\N vs empty string as a quoted empty field (the default " +
       "collapses both); per-lang census with null/empty counts and a " +
@@ -5462,7 +5462,7 @@ object Extensions {
       Formats.csvRoundTrip(
           t(s, dir, "documents").select(col("doc_id"), col("lang"),
             payload.as("payload")),
-          path, multiLine = true)
+          path)
         .withColumn("_h", graft.functions.TextFns.hash64(
           coalesce(col("payload"), lit("<NULL>"))))
         .groupBy("lang")

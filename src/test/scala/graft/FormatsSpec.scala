@@ -114,14 +114,14 @@ class FormatsSpec extends SparkSpec {
     val rows = Seq(
       (1L, "a,b"),                  // comma
       (2L, "say \"hi\" now"),       // quotes → "" escaping on disk
-      (3L, "line1\nline2"),         // embedded newline (multiLine read)
+      (3L, "line1\nline2"),         // embedded newline (multi-line read)
       (4L, ""),                     // empty string — NOT null
       (5L, null.asInstanceOf[String]),
       (6L, "\\N")                   // literal backslash-N text ≠ null
     ).toDF("id", "v")
     val path = java.nio.file.Files.createTempDirectory("graft-csv")
       .toString + "/t"
-    val back = Formats.csvRoundTrip(rows, path, multiLine = true)
+    val back = Formats.csvRoundTrip(rows, path)
       .as[(Long, String)].collect().toMap
     assert(back(1L) == "a,b")
     assert(back(2L) == "say \"hi\" now")

@@ -991,22 +991,6 @@ class TextOpsSpec extends SparkSpec {
       s"sampled universe mismatch:\n got $got\n exp $expected")
   }
 
-  test("sparseCosinePairs: prefixFilter=true is answer-identical to the " +
-    "direct join (exact candidate superset + same verification math)") {
-    val docs = Seq(
-      (1L, "a b c d e f"), (2L, "a b c d e g"), (3L, "a b c x y z"),
-      (4L, "p q r s t u"), (5L, "p q r s t u"), (6L, "m n o p q r")
-    ).toDF("doc_id", "text")
-    def run(pf: Boolean) =
-      TextAnalysis.sparseCosinePairs(docs, minCosine = 0.3,
-          prefixFilter = pf)
-        .orderBy("doc_a", "doc_b")
-        .as[(Long, Long, Long, Double)].collect().toList
-    val direct = run(false)
-    assert(direct.nonEmpty, "fixture must produce pairs")
-    assert(run(true) == direct)
-  }
-
   test("bpePairStats: pair counts weight by word frequency; ties break on pair") {
     val docs = Seq((1L, "low low lower"), (2L, "lower low"))
       .toDF("doc_id", "text")
@@ -1059,24 +1043,21 @@ class TextOpsSpec extends SparkSpec {
   }
 
   test("bpeEncode applies trained merges in order; single chars are their " +
-    "own token; broadcast and shuffle paths agree") {
+    "own token") {
     val docs = Seq((1L, "abab abab ab"), (2L, "ab c abab")).toDF("doc_id", "text")
     val merges = TextAnalysis.bpeTrain(docs, rounds = 2)._2
       .orderBy("round").as[(Int, String, String, Long)].collect()
       .map(m => (m._2, m._3)).toSeq
     assert(merges == Seq(("a", "b"), ("ab", "ab")))
-    def run(bcast: Boolean) =
-      TextAnalysis.bpeEncode(docs, merges, broadcastVocab = bcast)
-        .as[(Long, Int, Int, String)].collect().toSeq
-        .sortBy(t => (t._1, t._2, t._3))
-    val got = run(bcast = true)
+    val got = TextAnalysis.bpeEncode(docs, merges)
+      .as[(Long, Int, Int, String)].collect().toSeq
+      .sortBy(t => (t._1, t._2, t._3))
     // doc 1: abab->[abab] x2, ab->[ab]; doc 2: ab->[ab], c->[c] (1-char
     // identity, never trained), abab->[abab] — and the carried
     // (word_pos, token_pos) order IS the document order
     assert(got == Seq(
       (1L, 0, 0, "abab"), (1L, 1, 0, "abab"), (1L, 2, 0, "ab"),
       (2L, 0, 0, "ab"), (2L, 1, 0, "c"), (2L, 2, 0, "abab")))
-    assert(run(bcast = false) == got, "shuffle-join path must agree")
   }
 
   test("hashedNgramShift: bigram census, zero-bigram docs kept, " +
@@ -1417,33 +1398,14 @@ class ProfileSpec extends SparkSpec {
     }
   }
 
-  test("filterByPercentile cuts at the exact corpus percentile, both directions") {
+  test("filterByPercentile keeps the rows at or above the exact corpus percentile") {
     val df = (1L to 100L).toDF("v") // p10 of 1..100 = 10.9 (interpolated)
     val kept = graft.ops.TextAnalysis.filterByPercentile(df, "v", 0.1)
       .as[Long].collect().sorted
     assert(kept.head == 11L && kept.length == 90)
-    val low = graft.ops.TextAnalysis.filterByPercentile(df, "v", 0.1,
-      keepAtOrAbove = false).as[Long].collect().sorted
-    assert(low.toSeq == (1L to 10L))
     intercept[IllegalArgumentException] {
       graft.ops.TextAnalysis.filterByPercentile(df, "v", 1.5)
     }
-  }
-
-  test("filterByPercentile approx path matches exact on the fixture") {
-    // the scale path (bounded-memory approx_percentile sketch): at
-    // accuracy 10000 on a 100-value fixture the rank error bound (1/acc)
-    // is far below one rank, so approx and exact keep identical row sets
-    // except at the interpolation point — p50 of 1..100 is 50.5 exact
-    // (between values) vs 50 approx (an actual corpus value), so compare
-    // at a percentile that lands ON a value
-    val df = (1L to 101L).toDF("v") // p50 of 1..101 = 51 exactly
-    val exact = graft.ops.TextAnalysis.filterByPercentile(df, "v", 0.5)
-      .as[Long].collect().sorted.toSeq
-    val approx = graft.ops.TextAnalysis.filterByPercentile(df, "v", 0.5,
-      approxAccuracy = 10000).as[Long].collect().sorted.toSeq
-    assert(approx == exact)
-    assert(exact.head == 51L && exact.length == 51)
   }
 
   test("profile counts rows, nulls, distincts, min/max per column") {
@@ -1456,18 +1418,6 @@ class ProfileSpec extends SparkSpec {
     assert(got == List(
       ("k", 4L, 3L, 1L, 2L, "1", "2"),
       ("s", 4L, 3L, 1L, 2L, "a", "b")))
-  }
-
-  test("approx variant keeps the exact schema and exact row/null counts") {
-    val df = (1L to 1000L).map(i => (i, s"v${i % 10}")).toDF("k", "s")
-    val got = Profile.profile(df, Seq("k", "s"), exact = false)
-      .orderBy("col_name")
-      .as[(String, Long, Long, Long, Long, String, String)].collect().toList
-    assert(got.map(_._1) == List("k", "s"))
-    assert(got.forall(r => r._2 == 1000L && r._4 == 0L))
-    val kDistinct = got.head._5
-    assert(math.abs(kDistinct - 1000L) <= 50L, s"HLL estimate off: $kDistinct")
-    assert(math.abs(got(1)._5 - 10L) <= 1L)
   }
 
   test("empty, duplicate, and non-identifier column lists are rejected") {
@@ -1555,31 +1505,6 @@ class ProfileSpec extends SparkSpec {
       (1L, "g", 10L, 0L, 10.0),
       (2L, "g", 20L, 500000L, 20.0),
       (3L, "g", 30L, 1000000L, 30.0)))
-  }
-
-  test("quantileNormalize grid path: endpoints exact, monotone, near the exact map") {
-    val df = (1L to 100L).map(i => ("g" + (i % 4), i, i * 7 % 101))
-      .toDF("src", "id", "v")
-    val exact = Profile.quantileNormalize(df, "src", "v", "id")
-      .select("id", "rank_ppm", "norm")
-      .as[(Long, Long, Double)].collect().sortBy(_._1)
-    val grid = Profile.quantileNormalize(df, "src", "v", "id", gridPoints = 101)
-      .select("id", "rank_ppm", "norm")
-      .as[(Long, Long, Double)].collect().sortBy(_._1)
-    assert(grid.map(_._2).toSeq == exact.map(_._2).toSeq,
-      "rank_ppm is sketch-independent")
-    val gmin = exact.map(_._3).min; val gmax = exact.map(_._3).max
-    assert(grid.forall(r => r._3 >= gmin - 1 && r._3 <= gmax + 1))
-    // per group: grid norm must be monotone in rank, like the exact map
-    grid.groupBy(g => g._1 % 4).foreach { case (_, rows) =>
-      val sorted = rows.sortBy(_._2).map(_._3)
-      assert(sorted.zip(sorted.tail).forall { case (a, b) => a <= b })
-    }
-    // dense grid on 100 values: stays close to the exact order statistics
-    val maxDiff = grid.zip(exact).map { case (g, e) => math.abs(g._3 - e._3) }.max
-    assert(maxDiff <= 5.0, s"grid drifted from exact by $maxDiff")
-    intercept[IllegalArgumentException](
-      Profile.quantileNormalize(df, "src", "v", "id", gridPoints = 1))
   }
 
   test("quantileNormalize: hand interpolation + singleton group pins to median") {

@@ -23,11 +23,12 @@ object Bench {
       System.err.println(s"[bench] warmup q12_tpch_q1 failed: ${e.getMessage}")
     }
 
-    // optional comma-separated substring filter for local iteration, e.g.
-    // SPARK_GRAFT_ONLY=q21,q24 — the driver never sets it (full run).
+    // optional comma-separated name-prefix filter for local iteration, the
+    // rule Verify's filter argument follows, e.g. SPARK_GRAFT_ONLY=q21_,q24_
+    // (a full run leaves it unset)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
     val selected = SparkEntry.queries.toSeq.sortBy(_._1).filter { case (n, _) =>
-      only.forall(_.exists(n.contains))
+      only.forall(_.exists(n.startsWith))
     }
 
     // Fixed per-query overhead floor: a do-nothing 32-task job through the

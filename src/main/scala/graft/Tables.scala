@@ -54,40 +54,34 @@ object Tables {
       case _ => df // already TimestampType (native micros, or a ScaleUp replica)
     }
 
-  /** Streaming twin of [[table]]: file streams need an explicit schema, and
-    * hard-coding one breaks silently when the driver regenerates testdata
-    * with a different `ts` physical type (an r6 lesson: LongType over a
-    * TIMESTAMP(MICROS) file reads raw micros, `div 1000` then lands every
-    * event in January 1970 — one giant window, exploded interval joins).
-    * Probe the real footer schema on the driver ([[ParquetFooters]]), stream
-    * with THAT, and normalize `ts` after load exactly like the batch path.
+  /** Streaming twin of [[table]], and the one file-stream reader: file
+    * streams need an explicit schema, and hard-coding one breaks silently
+    * when the testdata is regenerated with a different `ts` physical type
+    * (an r6 lesson: LongType over a TIMESTAMP(MICROS) file reads raw
+    * micros, `div 1000` then lands every event in January 1970 — one giant
+    * window, exploded interval joins). Probe the real footer schema on the
+    * driver ([[ParquetFooters]]), stream with THAT, and normalize `ts` after
+    * load exactly like the batch path.
     *
-    * The file source needs a directory: the driver's testdata keeps each
-    * table as a single FILE in `dir` (glob-filter it), while ScaleUp
-    * replicas write a DIRECTORY of part files (point at it directly — a
-    * leaf-name glob would match nothing inside and silently stream zero
-    * rows). Hadoop FS, not java.io.File, so hdfs:// and s3a:// layouts
-    * resolve the same way.
+    * The file source needs a directory: the shared testdata keeps each
+    * table as a single FILE (streamed through its parent dir, glob-filtered
+    * to its name), while ScaleUp replicas and staged inputs are a DIRECTORY
+    * of part files (streamed as it is — new files landing later are picked
+    * up by later triggers). Hadoop FS, not java.io.File, so hdfs:// and
+    * s3a:// layouts resolve the same way.
+    *
+    * `oneFilePerBatch` drains one file per micro-batch (the admission
+    * shapes' staged files); otherwise a drain takes everything present as
+    * one batch, which the ledger ingest needs to pick one survivor among
+    * copies in different files.
     */
-  def tableStream(spark: SparkSession, dir: String, leaf: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(dir, leaf)
+  def stream(spark: SparkSession, path: String,
+             oneFilePerBatch: Boolean = false): DataFrame = {
+    val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     val isDir = fs.exists(p) && fs.getFileStatus(p).isDirectory
-    val rawSchema = ParquetFooters.read(spark, p.toString).schema
-    val stream =
-      if (isDir) spark.readStream.schema(rawSchema).parquet(p.toString)
-      else spark.readStream.schema(rawSchema)
-        .option("pathGlobFilter", leaf).parquet(dir)
-    normalizeTs(stream, rawSchema)
-  }
-
-  /** Stream every parquet file under `dir` (no leaf glob — new files landing
-    * later are picked up by subsequent triggers), schema probed from the
-    * files already present. Used by StreamBench's stage-then-redeliver dirs.
-    */
-  def dirStream(spark: SparkSession, dir: String): DataFrame = {
     val rawSchema =
-      try ParquetFooters.read(spark, dir).schema
+      try ParquetFooters.read(spark, path).schema
       catch {
         // ONLY the empty-staging-dir case gets the staging hint; any other
         // AnalysisException (missing path, corrupt footer, permissions)
@@ -95,10 +89,16 @@ object Tables {
         case e: org.apache.spark.sql.AnalysisException
             if e.getCondition == "UNABLE_TO_INFER_SCHEMA" =>
           throw new IllegalArgumentException(
-            s"dirStream($dir): no parquet file present to probe the schema " +
+            s"stream($path): no parquet file present to probe the schema " +
               "from; stage at least one file before building the stream", e)
       }
-    normalizeTs(spark.readStream.schema(rawSchema).parquet(dir), rawSchema)
+    val reader = spark.readStream.schema(rawSchema)
+    val perBatch =
+      if (oneFilePerBatch) reader.option("maxFilesPerTrigger", 1) else reader
+    val stream =
+      if (isDir) perBatch.parquet(path)
+      else perBatch.option("pathGlobFilter", p.getName).parquet(p.getParent.toString)
+    normalizeTs(stream, rawSchema)
   }
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame =

@@ -10,7 +10,6 @@ import graft.Tables
 import graft.ops.withPersisted
 import graft.etl.Stages
 import graft.functions.Etl
-import graft.sources.ParquetFooters
 
 /** The flagship end-to-end pipeline query (SURVEY.md §7.2) plus incremental
   * upsert semantics, exercised through the real `graft.etl.Stages` library
@@ -211,7 +210,8 @@ object Pipeline {
         r.filter(col(key) % 2 === 1).repartitionByRange(4, col(key))
           .write.mode("overwrite").parquet(stage)
         body(provider => graft.streaming.Drain.eachBatch(
-          fileStream(t.sparkSession, stage), cp, provider) { batch =>
+          Tables.stream(t.sparkSession, stage, oneFilePerBatch = true), cp,
+          provider) { batch =>
           verdict(batch).write.mode("append").parquet(out)
         })
       })
@@ -228,16 +228,10 @@ object Pipeline {
     def prepare(t: DataFrame, src: String, cp: String,
                 ledger: graft.ledger.Ledger): () => Long = {
       rows(t).coalesce(1).write.parquet(src)
-      val schema = ParquetFooters.read(t.sparkSession, src).schema
       () => graft.streaming.IncrementalIngest.runIntoLedger(
-        t.sparkSession, src, schema, cp, ledger)
+        t.sparkSession, src, cp, ledger)
     }
   }
-
-  /** Stream the parquet files under `dir` one per micro-batch. */
-  private def fileStream(s: SparkSession, dir: String): DataFrame =
-    s.readStream.schema(ParquetFooters.read(s, dir).schema)
-      .option("maxFilesPerTrigger", 1).parquet(dir)
 
   /** Copy every parquet file in `dir` once more under a new name: an
     * at-least-once redelivery, which the file source sees as new input. */
@@ -261,7 +255,7 @@ object Pipeline {
       finish: DataFrame => DataFrame): Q =
     Q(shape.gates.head, doc, Some(oracle), (s, dir) => {
       val stream = shape.query(s, dir,
-        () => Tables.tableStream(s, dir, s"${shape.table}.parquet"))
+        () => Tables.stream(s, s"$dir/${shape.table}.parquet"))
       finish(graft.streaming.Drain.toMemory(stream,
         scratch(shape.gates.head, "cp"), shape.mode,
         if (shape.rocksDb) Some("rocksdb") else None)._1)
@@ -947,7 +941,8 @@ object Pipeline {
       docs.filter(col("doc_id") % 4 === 1).coalesce(1)
         .write.mode("overwrite").parquet(stage)
       def drain(census: DataFrame, batchNo: Long): Unit =
-        graft.streaming.Drain.eachBatch(fileStream(s, stage), cp) { batch =>
+        graft.streaming.Drain.eachBatch(
+          Tables.stream(s, stage, oneFilePerBatch = true), cp) { batch =>
           scoreCensus(census)(batch).withColumn("batch", lit(batchNo))
             .write.mode("append").parquet(out)
         }
@@ -1046,7 +1041,8 @@ object Pipeline {
           e.filter(col("vec_id") % 4 === 1).coalesce(1)
             .write.mode("overwrite").parquet(stage)
           def drain(idx: DataFrame, batchNo: Long): Unit =
-            graft.streaming.Drain.eachBatch(fileStream(s, stage), cp) { batch =>
+            graft.streaming.Drain.eachBatch(
+              Tables.stream(s, stage, oneFilePerBatch = true), cp) { batch =>
               semAdmit(cents, idx)(batch).withColumn("batch", lit(batchNo))
                 .write.mode("append").parquet(out)
             }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 import graft.functions.Etl
 
@@ -12,52 +11,33 @@ import graft.functions.Etl
   *  - the unscheduled DAG that "polls the data … and acts when new data is
   *    found" (README.md:124-128) becomes a file-arrival source + an
   *    AvailableNow [[Drain]] — one run drains exactly what is new;
-  *  - the ledger hash set (db.py:228-231) becomes `dropDuplicates("hash")`
-  *    state, checkpointed and unbounded — the reference never expires
-  *    hashes either; `dropDuplicatesWithinWatermark` is the opt-in bound;
+  *  - the ledger hash set (db.py:228-231) stays the ledger's: each
+  *    micro-batch goes through [[graft.ledger.Ledger.append]], whose hash
+  *    anti-join drops what the ledger already holds — unbounded, as the
+  *    reference never expires hashes either;
   *  - at-least-once redelivery of unready files (drm.py:62-66 → retry next
-  *    run) is the source's replay + idempotent dedup.
+  *    run) is the source's replay + that idempotent anti-join.
   */
 object IncrementalIngest {
 
-  /** Drain all currently-available files from `srcDir` into `outDir`,
-    * emitting each sha256 identity at most once across ALL runs sharing
-    * `checkpointDir`. Blocks until the drain completes; returns the rows
-    * it read.
+  /** Drain all currently-available files from `srcDir` straight INTO the
+    * ledger. A drain reads every new file as one micro-batch, so `append`
+    * picks one survivor among copies in different files; each micro-batch
+    * appends through [[graft.ledger.Ledger.append]] (the first one creates
+    * the ledger), which keeps `EtlJob`'s survivor per hash and whose
+    * anti-join makes redelivered batches idempotent — so the at-least-once
+    * `foreachBatch` sink composes to exactly-once ledger state (the
+    * streaming twin of the reference's poll→dedup→insert loop,
+    * dags/dreem.py:44-67 + db.py:76-86). The schema comes from a file
+    * already in `srcDir` ([[graft.Tables.stream]]). Returns the rows the
+    * drain read.
     */
-  def runAvailableNow(spark: SparkSession, srcDir: String, schema: StructType,
-                      checkpointDir: String, outDir: String): Long =
-    Drain.toFiles(dedupHashes(hashed(spark, srcDir, schema)),
-      checkpointDir, outDir)
-
-  /** Drain all currently-available files straight INTO the ledger: each
-    * micro-batch appends through [[graft.ledger.Ledger.append]] (the first
-    * one creates the ledger), which keeps `EtlJob`'s survivor per hash
-    * and whose anti-join makes redelivered batches idempotent — so the
-    * at-least-once `foreachBatch` sink composes to exactly-once ledger
-    * state (the streaming twin of the reference's poll→dedup→insert loop,
-    * dags/dreem.py:44-67 + db.py:76-86). Returns the rows the drain read.
-    */
-  def runIntoLedger(spark: SparkSession, srcDir: String, schema: StructType,
-                    checkpointDir: String,
+  def runIntoLedger(spark: SparkSession, srcDir: String, checkpointDir: String,
                     ledger: graft.ledger.Ledger): Long =
-    Drain.eachBatch(hashed(spark, srcDir, schema), checkpointDir)(ledger.append(_))
-
-  private def hashed(spark: SparkSession, srcDir: String,
-                     schema: StructType): DataFrame =
-    spark.readStream.schema(schema).parquet(srcDir)
+    Drain.eachBatch(graft.Tables.stream(spark, srcDir)
       .withColumn("hash",
-        Etl.recordHash(col("device_type"), col("manufacturer_ref")))
-
-  /** One record per non-null `hash`, across runs: the first to arrive,
-    * since the state outlives the batch. A record whose hash is null (a
-    * null device type or manufacturer ref) has no identity to repeat, so
-    * every one is kept — the ledger's rule (`LedgerStore.append`). The
-    * null-hash records bypass the state, at a second scan of each
-    * micro-batch. */
-  private def dedupHashes(stream: DataFrame): DataFrame =
-    stream.filter(col("hash").isNull)
-      .unionByName(stream.filter(col("hash").isNotNull).dropDuplicates("hash"))
+        Etl.recordHash(col("device_type"), col("manufacturer_ref"))),
+      checkpointDir)(ledger.append(_))
 
   /** Streaming corpus curation — the incremental form of the batch
     * curation chain (quality gate + content dedup): keep documents passing

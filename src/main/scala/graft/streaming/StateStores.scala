@@ -17,8 +17,8 @@ import org.apache.spark.sql.SparkSession
   *    memory stays bounded by the block cache while the key set grows on
   *    local SSD.
   *
-  * Orthogonal to the provider, `dropDuplicatesWithinWatermark` (exposed by
-  * IncrementalIngest's opt-in watermark path, pinned in StreamingSpec) is
+  * Orthogonal to the provider, `dropDuplicatesWithinWatermark` (run by
+  * q174's `Pipeline.dedupWatermark` shape, pinned in StreamingSpec) is
   * the semantic bound: keys older than the watermark are dropped from
   * state entirely, which caps growth regardless of where state lives.
   * At 100 TB use BOTH: RocksDB so the store scales past heap, and a

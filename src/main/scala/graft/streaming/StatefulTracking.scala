@@ -3,90 +3,19 @@ package graft.streaming
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
-  GroupStateTimeout, MapState, OutputMode, StatefulProcessor, TTLConfig,
-  TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{ExpiredTimerInfo, MapState,
+  OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues,
+  ValueState}
 
-/** Custom streaming state via `KeyValueGroupedDataset.mapGroupsWithState` —
-  * the per-key state machine the reference keeps in its Mongo ledger rows
-  * (SURVEY.md §1.2: "the record's null columns are a state machine"),
-  * maintained incrementally across micro-batches instead of re-scanned.
+/** Custom per-key streaming state via `KeyValueGroupedDataset
+  * .transformWithState` — the per-key state machine the reference keeps in
+  * its Mongo ledger rows (SURVEY.md §1.2: "the record's null columns are a
+  * state machine"), maintained incrementally across micro-batches instead
+  * of re-scanned. Each operator is a [[StatefulProcessor]] with typed
+  * ValueState/MapState and, where closure is event-time driven, timers;
+  * all of them need the RocksDB state store (`StateStores.RocksDb`).
   */
 object StatefulTracking {
-
-  /** Running per-device activity: total records seen and the latest event
-    * time, accumulated across ALL batches sharing a checkpoint.
-    */
-  final case class DeviceActivity(device_id: String, n_records: Long,
-                                  last_seen: Timestamp)
-
-  /** One input record: (device_id, event time). */
-  def trackDeviceActivity(spark: SparkSession,
-                          records: Dataset[(String, Timestamp)]): Dataset[DeviceActivity] = {
-    import spark.implicits._
-    records
-      .groupByKey(_._1)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout()) {
-        (dev: String, rows: Iterator[(String, Timestamp)],
-         state: GroupState[DeviceActivity]) =>
-          val batch = rows.toSeq
-          val prev = state.getOption.getOrElse(DeviceActivity(dev, 0L, null))
-          val lastSeen = (Option(prev.last_seen) ++ batch.map(_._2))
-            .maxBy(_.getTime)
-          val next = DeviceActivity(dev, prev.n_records + batch.size, lastSeen)
-          state.update(next)
-          next
-      }
-  }
-
-  /** Streaming EWMA state — O(1) per key where the batch operator
-    * (`EventAnalytics.ewmaCents`) holds the full timeline. */
-  final case class EwmaState(key: String, n_events: Long, ewma_cents: Long)
-
-  /** Incremental twin of `EventAnalytics.ewmaCents` (α = mix/den, exact
-    * integer fold e′ = ((den−mix)·e + mix·x) div den over cents): carries
-    * ONE running value per key across micro-batches, so unbounded-history
-    * keys that outgrow the batch operator's timeline-collect bound stream
-    * instead. Within a batch, rows fold in (ts, tie) order; determinism
-    * across a REPLAYED batch boundary holds because the fold is
-    * associative-free but checkpoint-replay re-delivers whole batches in
-    * order (exactly-once sink discipline, q134's posture).
-    *
-    * Input rows: (key, ts, tieBreak, cents).
-    */
-  def trackEwma(spark: SparkSession,
-                records: Dataset[(String, Timestamp, Long, Long)],
-                mix: Int = 1, den: Int = 4): Dataset[EwmaState] = {
-    require(den >= 2 && mix >= 1 && mix < den,
-      s"need 0 < mix/den < 1, got $mix/$den")
-    import spark.implicits._
-    val keep = den - mix
-    records
-      .groupByKey(_._1)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout()) {
-        (key: String, rows: Iterator[(String, Timestamp, Long, Long)],
-         state: GroupState[EwmaState]) =>
-          val ordered = rows.toSeq.sortBy(r => (r._2.getTime, r._3))
-          // the batch twin (EventAnalytics.ewmaCents) RAISES on negative
-          // cents because truncating division silently diverges from
-          // floor below zero — the streaming twin enforces the same
-          // contract instead of quietly drifting from it
-          ordered.find(_._4 < 0L).foreach(r =>
-            throw new IllegalArgumentException(
-              s"trackEwma: cents must be >= 0, got ${r._4} for key $key"))
-          val prev = state.getOption
-          val init = prev.map(_.ewma_cents)
-          val folded = ordered.foldLeft(init) {
-            case (None, r) => Some(r._4)
-            case (Some(e), r) => Some((keep * e + mix * r._4) / den)
-          }
-          val next = EwmaState(key,
-            prev.map(_.n_events).getOrElse(0L) + ordered.size,
-            folded.getOrElse(0L))
-          state.update(next)
-          next
-      }
-  }
 
   /** A closed gap-session, emitted exactly once when the event-time
     * watermark proves no future event can extend it. */
@@ -107,13 +36,11 @@ object StatefulTracking {
     cappedSessionsTws(spark, records, gapMs, capMs = Long.MaxValue)
 
   /** Session CLOSURE via `transformWithState` event-time TIMERS (Spark 4's
-    * successor to mapGroupsWithState): each key keeps one open-session
+    * successor to the GroupState API): each key keeps one open-session
     * ValueState and one timer at `last + gap`; when the watermark passes
     * the timer, the session emits and the state clears — push-based
     * closure, where the windowed form (`IncrementalIngest.sessionCounts`)
-    * re-aggregates and the mapGroupsWithState form has no event-time
-    * timers at all (only processing-time timeouts, which misfire on
-    * replay). Batch-internal gaps close inline as rows arrive.
+    * re-aggregates. Batch-internal gaps close inline as rows arrive.
     *
     * The HARD CAP (q254's rule, streamed): a session ALSO closes when a
     * new event would stretch it past `capMs` from its START — that

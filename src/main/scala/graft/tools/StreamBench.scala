@@ -113,7 +113,7 @@ object StreamBench {
         Files.createDirectories(dir.resolve("src"))
         Files.copy(Paths.get(sfDir, s"${s.table}.parquet"),
           dir.resolve("src").resolve("batch_000.parquet"))
-        val q = s.query(spark, sfDir, () => Tables.dirStream(spark, src))
+        val q = s.query(spark, sfDir, () => Tables.stream(spark, src))
         // an append-mode memory sink cannot restart from its checkpoint
         body(if (s.mode == "complete") p => Drain.toMemory(q, cp, s.mode, Some(p))._2
           else p => Drain.toFiles(q, cp, out, Some(p)))

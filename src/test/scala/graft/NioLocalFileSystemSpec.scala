@@ -151,7 +151,7 @@ class NioLocalFileSystemSpec extends SparkSpec {
       SparkEntry.queries("q33_streaming_ingest")(spark, sf)
         .write.format("noop").mode("overwrite").save()
       graft.streaming.Drain.toMemory(shape.query(spark, sf,
-        () => Tables.tableStream(spark, sf, s"${shape.table}.parquet")),
+        () => Tables.stream(spark, s"$sf/${shape.table}.parquet")),
         TempDirs.create("graft-forks-cp").toString, shape.mode, Some("rocksdb"))
       EtlJob.run(spark, opts, EtlJobSpecLive.transport())
     }

@@ -19,54 +19,36 @@ class StreamingSpec extends SparkSpec {
     StructField("manufacturer_ref", StringType),
     StructField("device_type", StringType)))
 
-  test("AvailableNow ingest dedups within and ACROSS runs (ledger state)") {
-    val base = Files.createTempDirectory("graft-stream").toString
-    val src = s"$base/src"; val out = s"$base/out"; val cp = s"$base/cp"
-    Seq(("a", "DRM"), ("b", "DRM"), ("a", "DRM"))
-      .toDF("manufacturer_ref", "device_type")
-      .coalesce(1).write.parquet(src)
-    IncrementalIngest.runAvailableNow(spark, src, schema, cp, out)
-    val run1 = spark.read.parquet(out)
-    assert(run1.select("manufacturer_ref").as[String].collect().toSet == Set("a", "b"))
-
-    // second "poll": b is a replay, c is new — only c flows through
-    Seq(("b", "DRM"), ("c", "DRM"))
-      .toDF("manufacturer_ref", "device_type")
-      .coalesce(1).write.mode("append").parquet(src)
-    IncrementalIngest.runAvailableNow(spark, src, schema, cp, out)
-    val run2 = spark.read.parquet(out)
-    assert(run2.count() == 3)
-    assert(run2.select("manufacturer_ref").as[String].collect().toSet
-      == Set("a", "b", "c"))
-  }
-
   test("RocksDB state store: same cross-run dedup semantics as HDFS-backed") {
     // the 100 TB posture (off-heap keyed state) must be a pure provider
     // swap — identical results, state survives across runs in the same
-    // checkpoint, and the running query really uses RocksDB
+    // checkpoint, and the running query really uses RocksDB. The stateful
+    // drain is q33's `dropDuplicates("hash")` shape, drained twice per
+    // provider on one checkpoint
     val base = Files.createTempDirectory("graft-stream-rocks").toString
-    val src = s"$base/src"; val out = s"$base/out"; val cp = s"$base/cp"
-    Seq(("a", "DRM"), ("b", "DRM"), ("a", "DRM"))
-      .toDF("manufacturer_ref", "device_type")
+    val src = s"$base/src"
+    val shape = graft.queries.Pipeline.ingestDedup
+    def drain(provider: String): Seq[(String, Long)] = {
+      val (out, _) = graft.streaming.Drain.toMemory(
+        shape.query(spark, base, () => Tables.stream(spark, src)),
+        s"$base/cp-$provider", shape.mode, Some(provider))
+      out.as[(String, Long)].collect().toSeq.sorted
+    }
+    Seq((1L, "a"), (2L, "a"), (1L, "a")).toDF("event_id", "event_type")
       .coalesce(1).write.parquet(src)
-    graft.streaming.StateStores.withProvider(spark, "rocksdb") {
-      IncrementalIngest.runAvailableNow(spark, src, schema, cp, out)
-    }
-    assert(spark.read.parquet(out).select("manufacturer_ref")
-      .as[String].collect().toSet == Set("a", "b"))
+    val run1 = Seq("hdfs", "rocksdb").map(drain)
+    assert(run1 == Seq.fill(2)(Seq(("a", 2L))))
 
-    Seq(("b", "DRM"), ("c", "DRM"))
-      .toDF("manufacturer_ref", "device_type")
+    // second poll: event 2 is a replay, 3 is new — only 3 is counted
+    Seq((2L, "a"), (3L, "b")).toDF("event_id", "event_type")
       .coalesce(1).write.mode("append").parquet(src)
-    graft.streaming.StateStores.withProvider(spark, "rocksdb") {
-      IncrementalIngest.runAvailableNow(spark, src, schema, cp, out)
-    }
-    assert(spark.read.parquet(out).count() == 3)
+    val run2 = Seq("hdfs", "rocksdb").map(drain)
+    assert(run2 == Seq.fill(2)(Seq(("a", 2L), ("b", 1L))))
 
     // provider evidence: RocksDB leaves its own state layout (per-store
     // .zip snapshots / changelog) under the checkpoint, distinct from the
     // HDFS-backed provider's .delta files
-    val stateDir = java.nio.file.Paths.get(cp, "state")
+    val stateDir = java.nio.file.Paths.get(s"$base/cp-rocksdb", "state")
     assert(Files.exists(stateDir))
     def walk(p: java.nio.file.Path): Seq[java.nio.file.Path] = {
       val s = java.nio.file.Files.walk(p)
@@ -92,7 +74,7 @@ class StreamingSpec extends SparkSpec {
     Seq(("a", "DRM"), ("b", "DRM"), ("a", "DRM"))
       .toDF("manufacturer_ref", "device_type")
       .coalesce(1).write.parquet(src)
-    IncrementalIngest.runIntoLedger(spark, src, schema, cp, ledger)
+    IncrementalIngest.runIntoLedger(spark, src, cp, ledger)
     assert(ledger.read().select("manufacturer_ref").as[String].collect().toSet
       == Set("a", "b"))
 
@@ -100,7 +82,7 @@ class StreamingSpec extends SparkSpec {
     Seq(("b", "DRM"), ("c", "DRM"))
       .toDF("manufacturer_ref", "device_type")
       .coalesce(1).write.mode("append").parquet(src)
-    IncrementalIngest.runIntoLedger(spark, src, schema, cp, ledger)
+    IncrementalIngest.runIntoLedger(spark, src, cp, ledger)
     assert(ledger.read().count() == 3)
     assert(ledger.read().select("manufacturer_ref").as[String].collect().toSet
       == Set("a", "b", "c"))
@@ -128,7 +110,7 @@ class StreamingSpec extends SparkSpec {
     // the width reaches EtlJob's batch; the drain runs its micro-batches at
     // its own state width whatever the session's
     for (parts <- Seq("1", "8")) withConf("spark.sql.shuffle.partitions" -> parts) {
-      IncrementalIngest.runIntoLedger(spark, src, records, s"$base/cp-$parts",
+      IncrementalIngest.runIntoLedger(spark, src, s"$base/cp-$parts",
         new graft.ledger.Ledger(spark, s"$base/stream-$parts"))
       EtlJob.runStage(spark, "download_metadata",
         Map("ledger" -> s"$base/batch-$parts", "incoming" -> src))
@@ -140,22 +122,17 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
-  test("null-hash records all land: both streaming ingests dedup only hashed records") {
+  test("null-hash records all land: the ledger ingest dedups only hashed records") {
     // a null manufacturer_ref hashes to null; the batch path (Ledger.append)
-    // keeps every such record, so the streaming paths must not fold them
+    // keeps every such record, so the streaming ingest must not fold them
     // into one
     val base = Files.createTempDirectory("graft-stream-nullhash").toString
     val src = s"$base/src"
     Seq[(String, String)](("a", "DRM"), (null, "DRM"), (null, "DRM"), ("a", "DRM"))
       .toDF("manufacturer_ref", "device_type")
       .coalesce(1).write.parquet(src)
-    IncrementalIngest.runAvailableNow(spark, src, schema, s"$base/cp", s"$base/out")
-    val out = spark.read.parquet(s"$base/out")
-    assert(out.count() == 3)
-    assert(out.filter($"manufacturer_ref".isNull).count() == 2)
-
     val ledger = new graft.ledger.Ledger(spark, s"$base/ledger")
-    IncrementalIngest.runIntoLedger(spark, src, schema, s"$base/cp-ledger", ledger)
+    IncrementalIngest.runIntoLedger(spark, src, s"$base/cp-ledger", ledger)
     assert(ledger.read().count() == 3)
     assert(ledger.read().filter($"hash".isNull).count() == 2)
   }
@@ -224,121 +201,6 @@ class StreamingSpec extends SparkSpec {
     drain()
     val run2 = spark.read.parquet(out)
     assert(run2.count() == 3, "only the new content may pass the second drain")
-  }
-
-  test("mapGroupsWithState accumulates per-device state across runs") {
-    val base = Files.createTempDirectory("graft-state").toString
-    def writeBatch(rows: Seq[(String, String)]): Unit =
-      rows.toDF("device_id", "s")
-        .withColumn("event_time", $"s".cast("timestamp")).drop("s")
-        .coalesce(1).write.mode("append").parquet(s"$base/src")
-    def runOnce(): Map[String, (Long, String)] = {
-      val stream = spark.readStream.schema(
-        StructType(Seq(StructField("device_id", StringType),
-          StructField("event_time", TimestampType)))).parquet(s"$base/src")
-        .as[(String, java.sql.Timestamp)]
-      val tracked = graft.streaming.StatefulTracking
-        .trackDeviceActivity(spark, stream)
-      val emitted = scala.collection.mutable.Map.empty[String, (Long, String)]
-      // memory sink cannot recover from a checkpoint; foreachBatch can
-      val q = tracked.toDF().writeStream
-        .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          df.select(col("device_id"), col("n_records"),
-            date_format(col("last_seen"), "yyyy-MM-dd HH:mm:ss"))
-            .collect().foreach(r => emitted.synchronized {
-              emitted(r.getString(0)) = (r.getLong(1), r.getString(2))
-            })
-          ()
-        }
-        .option("checkpointLocation", s"$base/cp")
-        .outputMode("update")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      try q.awaitTermination() finally q.stop()
-      emitted.toMap
-    }
-    writeBatch(Seq(("D1", "2024-01-01 10:00:00"), ("D1", "2024-01-01 11:00:00"),
-      ("D2", "2024-01-01 09:00:00")))
-    val r1 = runOnce()
-    assert(r1("D1") == ((2L, "2024-01-01 11:00:00")))
-    assert(r1("D2") == ((1L, "2024-01-01 09:00:00")))
-    // second drain: state picked up from the checkpoint, counts accumulate
-    writeBatch(Seq(("D1", "2024-01-01 12:00:00")))
-    val r2 = runOnce()
-    assert(r2("D1") == ((3L, "2024-01-01 12:00:00")))
-  }
-
-  test("trackEwma folds across runs and agrees with the batch operator") {
-    val base = Files.createTempDirectory("graft-ewma").toString
-    def writeBatch(rows: Seq[(String, String, Long, Long)]): Unit =
-      rows.toDF("k", "s", "tie", "cents")
-        .withColumn("ts", $"s".cast("timestamp")).drop("s")
-        .select("k", "ts", "tie", "cents")
-        .coalesce(1).write.mode("append").parquet(s"$base/src")
-    def runOnce(): Map[String, (Long, Long)] = {
-      val stream = spark.readStream.schema(
-        StructType(Seq(StructField("k", StringType),
-          StructField("ts", TimestampType), StructField("tie", LongType),
-          StructField("cents", LongType)))).parquet(s"$base/src")
-        .as[(String, java.sql.Timestamp, Long, Long)]
-      val tracked = graft.streaming.StatefulTracking.trackEwma(spark, stream)
-      val emitted = scala.collection.mutable.Map.empty[String, (Long, Long)]
-      val q = tracked.toDF().writeStream
-        .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          df.collect().foreach(r => emitted.synchronized {
-            emitted(r.getString(0)) = (r.getLong(1), r.getLong(2))
-          })
-          ()
-        }
-        .option("checkpointLocation", s"$base/cp")
-        .outputMode("update")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      try q.awaitTermination() finally q.stop()
-      emitted.toMap
-    }
-    // 100 → (300+200)/4=125 → (375+300)/4=168
-    writeBatch(Seq(("U1", "2024-01-01 10:00:00", 1L, 100L),
-      ("U1", "2024-01-01 10:01:00", 2L, 200L),
-      ("U1", "2024-01-01 10:02:00", 3L, 300L)))
-    assert(runOnce()("U1") == ((3L, 168L)))
-    // second run resumes from checkpoint state: (3*168+400)/4 = 226
-    writeBatch(Seq(("U1", "2024-01-01 10:03:00", 4L, 400L)))
-    assert(runOnce()("U1") == ((4L, 226L)))
-    // the batch operator over the SAME four events lands on the same value
-    val all = Seq(("U1", "2024-01-01 10:00:00", 1L, 1.00),
-      ("U1", "2024-01-01 10:01:00", 2L, 2.00),
-      ("U1", "2024-01-01 10:02:00", 3L, 3.00),
-      ("U1", "2024-01-01 10:03:00", 4L, 4.00))
-      .toDF("k", "s", "tie", "value")
-      .withColumn("ts", $"s".cast("timestamp")).drop("s")
-    val batch = graft.ops.EventAnalytics
-      .ewmaCents(all, "k", "ts", "tie", "value")
-      .select("ewma_cents").as[Long].collect().toSeq
-    assert(batch == Seq(226L))
-    // negative cents: the batch twin raises, so the streaming twin must
-    // too (a truncating fold below zero would silently drift from floor)
-    val base2 = Files.createTempDirectory("graft-ewma-neg").toString
-    Seq(("U2", "2024-01-01 10:00:00", 1L, -5L))
-      .toDF("k", "s", "tie", "cents")
-      .withColumn("ts", $"s".cast("timestamp")).drop("s")
-      .select("k", "ts", "tie", "cents")
-      .coalesce(1).write.mode("append").parquet(s"$base2/src")
-    val badStream = spark.readStream.schema(
-      StructType(Seq(StructField("k", StringType),
-        StructField("ts", TimestampType), StructField("tie", LongType),
-        StructField("cents", LongType)))).parquet(s"$base2/src")
-      .as[(String, java.sql.Timestamp, Long, Long)]
-    val badQ = graft.streaming.StatefulTracking.trackEwma(spark, badStream)
-      .toDF().writeStream
-      .format("noop")
-      .option("checkpointLocation", s"$base2/cp")
-      .outputMode("update")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      badQ.awaitTermination()
-    }
-    def messages(t: Throwable): Seq[String] =
-      if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
-    assert(messages(ex).exists(_.contains("trackEwma")))
   }
 
   test("dayDriftTws: MapState drift monitor emits a day exactly once, " +

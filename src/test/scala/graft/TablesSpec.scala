@@ -35,14 +35,14 @@ class TablesSpec extends SparkSpec {
     }
   }
 
-  test("tableStream and dirStream probe their schema with no Spark job") {
+  test("Tables.stream probes its schema with no Spark job") {
     val sf = "/root/testdata/sf0.001"
     val dir = TempDirs.create("graft-tables-dir")
     Tables.table(spark, sf, "orders").write.mode("overwrite").parquet(dir.toString)
     var schemas = Seq.empty[StructType]
     assert(jobs {
-      schemas = Seq(Tables.tableStream(spark, sf, "events.parquet").schema,
-        Tables.dirStream(spark, dir.toString).schema)
+      schemas = Seq(Tables.stream(spark, s"$sf/events.parquet").schema,
+        Tables.stream(spark, dir.toString).schema)
     } == 0)
     assert(schemas == Seq(Tables.events(spark, sf).schema,
       spark.read.parquet(dir.toString).schema))

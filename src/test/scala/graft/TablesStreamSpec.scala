@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
-/** Pins [[Tables.tableStream]]'s footer probe + `ts` normalization across the
+/** Pins [[Tables.stream]]'s footer probe + `ts` normalization across the
   * three physical types the driver's testdata has shipped between rounds
   * (see `Tables.normalizeTs`): TIMESTAMP(MICROS, adjustedToUTC=true),
   * TIMESTAMP(MICROS, adjustedToUTC=false) (NTZ), and nanos-as-INT64.
@@ -28,13 +28,13 @@ class TablesStreamSpec extends SparkSpec {
     "2021-11-28 13:14:15.123456",
     "2021-11-29 01:02:03.654321")
 
-  /** Drain a tableStream of the fixture dir and return (ts dataType, the
+  /** Drain a stream of the fixture dir's events.parquet and return (ts dataType, the
     * UTC-rendered instants). Rendering via date_format under the UTC session
     * timezone keeps the assertion independent of the JVM default zone.
     */
   private def drainTs(dir: String): (DataType, Seq[String]) = {
-    val df = Tables.tableStream(spark, dir, "events.parquet")
-    assert(df.isStreaming, "tableStream must return a streaming DataFrame")
+    val df = Tables.stream(spark, s"$dir/events.parquet")
+    assert(df.isStreaming, "stream must return a streaming DataFrame")
     val name = "ts_drift_" + math.abs(dir.hashCode).toString
     val cp = Files.createTempDirectory("graft-tsdrift-cp").toString
     val q = df.writeStream.format("memory").queryName(name)
@@ -53,7 +53,7 @@ class TablesStreamSpec extends SparkSpec {
     wallClock.zipWithIndex.toDF("s", "event_id")
 
   /** Write `df` as a DIRECTORY named events.parquet under a fresh dir —
-    * the ScaleUp-replica layout tableStream must point at directly.
+    * the ScaleUp-replica layout stream must point at directly.
     */
   private def writeDir(df: DataFrame): String = {
     val base = Files.createTempDirectory("graft-tsdrift").toString
@@ -62,7 +62,7 @@ class TablesStreamSpec extends SparkSpec {
   }
 
   /** Write `df` as a single bare FILE events.parquet — the driver-testdata
-    * layout tableStream must reach via the pathGlobFilter branch.
+    * layout stream must reach via the pathGlobFilter branch.
     */
   private def writeFile(df: DataFrame): String = {
     val staging = Files.createTempDirectory("graft-tsdrift-stage")
@@ -120,9 +120,9 @@ class TablesStreamSpec extends SparkSpec {
     assert(rendered(out) == wallClock.sorted)
   }
 
-  test("dirStream over an empty staging dir fails fast with the staging hint") {
+  test("stream over an empty staging dir fails fast with the staging hint") {
     val dir = Files.createTempDirectory("graft-tsdrift-empty").toString
-    val e = intercept[IllegalArgumentException] { Tables.dirStream(spark, dir) }
+    val e = intercept[IllegalArgumentException] { Tables.stream(spark, dir) }
     assert(e.getMessage.contains("stage at least one file"))
   }
 
@@ -130,8 +130,41 @@ class TablesStreamSpec extends SparkSpec {
     val dir = writeDir(src.select(
       (unix_micros(to_timestamp(col("s"))) * 1000L).as("ts"),
       col("event_id")))
-    val df = Tables.tableStream(spark, dir, "events.parquet")
+    val df = Tables.stream(spark, s"$dir/events.parquet")
     assert(df.schema.fieldNames.toSeq == Seq("ts", "event_id"))
     assert(df.schema("event_id").dataType == IntegerType)
+  }
+
+  test("oneFilePerBatch drains 4 staged files as 4 micro-batches, else as 1") {
+    val stage = Files.createTempDirectory("graft-stream-batches").toString
+    spark.range(0, 40).repartitionByRange(4, col("id"))
+      .write.mode("overwrite").parquet(stage)
+    /** The micro-batches that read input, from the query's progress. */
+    def batches(oneFilePerBatch: Boolean): Int = {
+      val q = Tables.stream(spark, stage, oneFilePerBatch).writeStream
+        .format("noop")
+        .option("checkpointLocation",
+          Files.createTempDirectory("graft-stream-batches-cp").toString)
+        .trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination()
+      val read = q.recentProgress.filter(_.numInputRows > 0)
+      assert(read.map(_.numInputRows).sum == 40L)
+      read.length
+    }
+    assert(batches(oneFilePerBatch = true) == 4)
+    assert(batches(oneFilePerBatch = false) == 1)
+
+    // the ledger ingest over a source that holds no file yet has no footer
+    // to take its schema from: it fails with the staging hint, before any
+    // query starts or any ledger is made
+    val base = Files.createTempDirectory("graft-stream-empty-src")
+    val src = Files.createDirectory(base.resolve("src")).toString
+    val ledger = base.resolve("ledger")
+    val e = intercept[IllegalArgumentException] {
+      graft.streaming.IncrementalIngest.runIntoLedger(spark, src,
+        base.resolve("cp").toString, new graft.ledger.Ledger(spark, ledger.toString))
+    }
+    assert(e.getMessage.contains("stage at least one file"))
+    assert(!Files.exists(ledger) && !Files.exists(base.resolve("cp")))
   }
 }
